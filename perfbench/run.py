@@ -59,6 +59,10 @@ def isolate(work: str) -> None:
     os.environ["SPARK_GRAFT_WAREHOUSE"] = os.path.join(work, "warehouse")
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_DRIVER_MEMORY"] = "2g"
+    # every JVM, the spark-submit launcher included: no /tmp/hsperfdata
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
+    )
     os.environ["TZ"] = "UTC"
     time.tzset()
 
@@ -249,9 +253,6 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark(
             "perfbench",
             extra_conf={
-                "spark.driver.extraJavaOptions": (
-                    f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
-                ),
                 "spark.ui.retainedJobs": "100000",
                 "spark.ui.retainedStages": "100000",
                 "spark.ui.showConsoleProgress": "false",
