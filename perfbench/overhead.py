@@ -1,7 +1,7 @@
 """Tracing overhead of one workload: the traced minus the untraced
 end-to-end numbers, from two runs with the same seed.
 
-    python3 perfbench/overhead.py --workload ingest_day --seed 1 --seconds 10
+    python3 perfbench/overhead.py --workload ingest_day --seed 1 --seconds 12
 """
 
 from __future__ import annotations
@@ -15,7 +15,8 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def metrics(args, trace: int) -> dict:
+def run(args, trace: int) -> tuple[dict, dict]:
+    """(detail line, metrics) of one run."""
     out = subprocess.run(
         [
             sys.executable, os.path.join(HERE, "run.py"),
@@ -24,18 +25,24 @@ def metrics(args, trace: int) -> dict:
         ],
         capture_output=True, text=True, check=True,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])["metrics"]
+    detail, result = out.stdout.strip().splitlines()[-2:]
+    return json.loads(detail), json.loads(result)["metrics"]
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seconds", type=float, default=12)
     args = ap.parse_args()
-    untraced, traced = metrics(args, 0), metrics(args, 1)
-    for name in ("cycle_s", "batch_p50_ms"):
-        u, t = untraced[name]["value"], traced[f"trace.{name}"]["value"]
+    (detail, untraced), (_, traced) = run(args, 0), run(args, 1)
+    pairs = {
+        "cpu_us_per_row": untraced["cpu_us_per_row"]["value"],
+        "cycle_s": detail["wall"]["cycle_s"],
+        "batch_p50_ms": detail["wall"]["batch_p50_ms"],
+    }
+    for name, u in pairs.items():
+        t = traced[f"trace.{name}"]["value"]
         print(json.dumps({
             "metric": name, "untraced": u, "traced": t,
             "overhead": t - u, "overhead_frac": (t - u) / u,

@@ -264,7 +264,10 @@ class StageAccounting:
         self._store = self.sc._jsc.sc().statusStore()
         self._empty = jvm.java.util.ArrayList
         self._no_quantiles = self.sc._gateway.new_array(jvm.double, 0)
+        # one count per Java class Spark generated and compiled
+        self._codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         self.last_job = self._jobs_since(-1)[1]
+        self.last_codegen = self._codegen.getCount()
 
     def _drain(self) -> None:
         self.sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
@@ -278,9 +281,11 @@ class StageAccounting:
 
     def take(self) -> dict:
         """Per-group and total stage metrics of the jobs that ran since
-        the last call."""
+        the last call, and the classes generated since then."""
         self._drain()
         jobs, self.last_job = self._jobs_since(self.last_job)
+        codegen = self._codegen.getCount()
+        compiled, self.last_codegen = codegen - self.last_codegen, codegen
         stages = {
             s["stageId"]: s
             for s in json.loads(
@@ -318,6 +323,7 @@ class StageAccounting:
 
         return {
             "jobs": len(jobs),
+            "codegen_compilations": compiled,
             "total": total(all_stages),
             "groups": {g: total(ids) for g, ids in groups.items()},
         }

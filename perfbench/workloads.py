@@ -3,10 +3,11 @@
 Each is a closed loop: every input exists before the timed part
 starts, and Spark pulls the next micro-batch when the last one ends.
 A workload generates its inputs from the seed without Spark
-(``generate``), lands its seed tables and warms the engine up
-(``setup``, counted in ``setup_s``), then runs timed repetitions
-(``repetition``), each followed by output checks against the
-independently computed expectations in ``inputs``.
+(``generate``), lands its seed tables (``setup``) and warms the engine
+up with at least one whole repetition (``warmup``), both counted in
+``setup_s``, then runs timed repetitions (``repetition``), each
+followed by output checks against the independently computed
+expectations in ``inputs``.
 """
 
 from __future__ import annotations
@@ -33,16 +34,66 @@ COLS = [
 
 @dataclass
 class Rep:
-    """One timed repetition: its wall time, the rows it landed or
-    rebuilt and the seconds they took, its batch latencies, the stream
-    progress records, and layer facts read after it."""
+    """One timed repetition: its wall time, the rows it landed and the
+    seconds they took, its batch latencies, its CPU seconds (JIT
+    compiler apart, see ``Stopwatch``), the stream progress records,
+    the Spark stage accounting of the timed part (see
+    ``tracing.StageAccounting``) and layer facts read after it."""
 
     cycle_s: float
     rows: int
     busy_s: float
     batches_ms: list[float]
+    cpu_s: float
+    jit_cpu_s: float
+    stages: dict = field(default_factory=dict)
     progress: list[dict] = field(default_factory=list)
     facts: dict[str, float] = field(default_factory=dict)
+
+
+def cpu_seconds(jvm_pid: int) -> tuple[float, float]:
+    """CPU seconds used so far by the Spark JVM and this (driver)
+    process, and the part of it the JVM's JIT compiler threads used."""
+    tick = os.sysconf("SC_CLK_TCK")
+
+    def stat(path: str) -> tuple[str, float]:
+        with open(path) as fh:
+            head, rest = fh.read().rsplit(")", 1)
+        f = rest.split()
+        return head.split("(", 1)[1], (int(f[11]) + int(f[12])) / tick
+
+    jit = 0.0
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            name, used = stat(f"/proc/{jvm_pid}/task/{tid}/stat")
+        except (FileNotFoundError, ProcessLookupError):
+            continue
+        if "CompilerThre" in name:
+            jit += used
+    me = os.times()
+    return stat(f"/proc/{jvm_pid}/stat")[1] + me.user + me.system, jit
+
+
+class Stopwatch:
+    """Wall seconds, and CPU seconds of the Spark JVM and this process
+    apart from the JIT compiler's, from construction until ``stop``.
+
+    The JIT compiler threads are left out because in a JVM started for
+    one run they are still compiling the engine's code (and the classes
+    Spark generates for every new plan) long after warm-up, by an
+    amount that varies from run to run more than the pipeline's own
+    work does. Their seconds are returned separately."""
+
+    def __init__(self, jvm_pid: int) -> None:
+        self.pid = jvm_pid
+        self.wall = time.perf_counter()
+        self.cpu, self.jit = cpu_seconds(jvm_pid)
+
+    def stop(self) -> tuple[float, float, float]:
+        """(wall seconds, CPU seconds without the JIT, JIT seconds)."""
+        cpu, jit = cpu_seconds(self.pid)
+        jit -= self.jit
+        return time.perf_counter() - self.wall, cpu - self.cpu - jit, jit
 
 
 class Checks:
@@ -71,6 +122,13 @@ class Workload:
         self.tracer = tracer
         self.checks = checks
         self.spark = None
+        self.stages = None  # tracing.StageAccounting, set once Spark is up
+
+    def setup(self) -> None:
+        """Land the workload's seed tables, if it has any."""
+
+    def warmup(self) -> None:
+        self.repetition()
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
@@ -81,6 +139,17 @@ class Workload:
         return p
 
     # -- shared steps -------------------------------------------------------
+
+    def start_clock(self) -> Stopwatch:
+        """Start timing; Spark jobs run before this (checks of the last
+        repetition) are left out of the stage accounting."""
+        self.stages.take()
+        return Stopwatch(self.spark.sparkContext._gateway.proc.pid)
+
+    def stop_clock(self, clock: Stopwatch) -> tuple[float, float, float, dict]:
+        """(wall s, CPU s without the JIT, JIT s, stage accounting)."""
+        wall, cpu, jit = clock.stop()
+        return wall, cpu, jit, self.stages.take()
 
     def stream(self, src: str, target: str, sink: str, tag: str) -> tuple[float, list[dict]]:
         """Drain ``src`` through ``start_ingest_stream`` into
@@ -167,17 +236,18 @@ class Workload:
 
 
 class IngestDay(Workload):
-    """One day of wire-JSON deliveries, one file per half hour (two
-    15-minute ticks), drained through the default lock sink into an
-    empty table."""
+    """One day of wire-JSON deliveries, one file per 90 minutes (six
+    15-minute ticks), a quarter of them delivered twice, drained
+    through the default lock sink into an empty table (five
+    micro-batches)."""
 
     name = "ingest_day"
-    METERS = 2000
+    METERS = 1000
 
     def generate(self) -> None:
         self.r = inputs.gen_readings(self.rng, self.METERS, 1)
         files, self.quarantined = inputs.day_deliveries(
-            self.rng, self.r, 0, ticks_per_file=2, redeliver_share=0.08,
+            self.rng, self.r, 0, ticks_per_file=6, redeliver_share=0.25,
             malformed_share=0.002,
         )
         src = inputs.write_deliveries(self.path("deliveries"), files)
@@ -186,12 +256,16 @@ class IngestDay(Workload):
         for f in src[:8]:
             shutil.copy2(f, warm)
 
-    def setup(self) -> None:
+    def warmup(self) -> None:
+        """A two-batch stream, then a whole repetition."""
         self.stream(self.path("warmup_deliveries"), self.fresh("warmup_fact"), "lock", "warmup")
+        self.repetition()
 
     def repetition(self) -> Rep:
         target = self.fresh("fact")
+        clock = self.start_clock()
         wall, progress = self.stream(self.path("deliveries"), target, "lock", "day")
+        _, cpu, jit, stages = self.stop_clock(clock)
         rows = self.r.n_meters * inputs.TICKS_PER_DAY
         facts = {
             "files_landed": len(glob.glob(os.path.join(target, "*", "*.parquet"))),
@@ -203,22 +277,27 @@ class IngestDay(Workload):
             rows=rows,
             busy_s=wall,
             batches_ms=[p["durationMs"]["triggerExecution"] for p in progress],
+            cpu_s=cpu,
+            jit_cpu_s=jit,
+            stages=stages,
             progress=progress,
             facts=facts,
         )
 
 
 class DailyCycle(Workload):
-    """A manifest table holds the previous day; the next day's hourly
+    """A manifest table holds the previous day; the next day's four-hour
     deliveries, carrying late readings of the previous day and
     redeliveries of readings that already landed, stream in through
-    the manifest sink, then both marts are rebuilt from the table."""
+    the manifest sink (two micro-batches), then both marts are rebuilt
+    from the table."""
 
     name = "daily_cycle"
-    METERS = 1000
+    METERS = 500
     LATE_SHARE = 0.03
     REDELIVER_SHARE = 0.02
-    WHOLE_HOURS_REDELIVERED = 2
+    OLD_FILES_REDELIVERED = 1
+    TICKS_PER_FILE = 16
 
     def generate(self) -> None:
         r = self.r = inputs.gen_readings(self.rng, self.METERS, 2)
@@ -241,27 +320,25 @@ class DailyCycle(Workload):
             )
         ]
         inputs.write_deliveries(self.path("seed"), [seed])
+        n_files = inputs.TICKS_PER_DAY // self.TICKS_PER_FILE
         extra: dict[int, list[str]] = {}
         for m, t in sorted(late) + redelivered:
-            f = int(self.rng.integers(24))
+            f = int(self.rng.integers(n_files))
             extra.setdefault(f, []).extend(inputs.reading_lines(r, t, [m]))
         files, _ = inputs.day_deliveries(
-            self.rng, r, 1, ticks_per_file=4, redeliver_share=0.08,
+            self.rng, r, 1, ticks_per_file=self.TICKS_PER_FILE, redeliver_share=0.17,
             malformed_share=0.002, extra_lines=extra,
         )
-        for h in self.rng.choice(24, self.WHOLE_HOURS_REDELIVERED, replace=False):
-            old = [line for t in range(4 * h, 4 * h + 4) for line in inputs.reading_lines(r, t)]
+        k = self.TICKS_PER_FILE
+        for f in self.rng.choice(n_files, self.OLD_FILES_REDELIVERED, replace=False):
+            old = [line for t in range(k * f, k * f + k) for line in inputs.reading_lines(r, t)]
             files.insert(int(self.rng.integers(len(files) + 1)), old)
         self.quarantined = inputs.quarantine_counts(files)
-        src = inputs.write_deliveries(self.path("deliveries"), files)
-        warm = self.path("warmup_deliveries")
-        os.makedirs(warm)
-        for f in src[:4]:
-            shutil.copy2(f, warm)
+        inputs.write_deliveries(self.path("deliveries"), files)
 
     def setup(self) -> None:
-        """Land the previous day through the batch ingest path (parse,
-        classify, split, manifest append), then warm up on a copy."""
+        """Land the previous day through the batch ingest path: parse,
+        classify, split, manifest append."""
         from smart_meter_data_pipeline_spark.sources.ingest import (
             classify,
             read_json_messages,
@@ -274,29 +351,20 @@ class DailyCycle(Workload):
         valid, _ = split_valid(classify(read_json_messages(self.spark, self.path("seed"))))
         table.idempotent_append(self.spark, valid)
         self.n_seed_commits = len(table.numbered_snapshot())
-        self.cycle("warmup", self.path("warmup_deliveries"))
 
-    def cycle(self, tag: str, src: str):
+    def repetition(self) -> Rep:
         from smart_meter_data_pipeline_spark.operators import meter_pipeline
         from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
 
-        target = self.fresh(f"fact_{tag}")
+        target = self.fresh("fact")
         shutil.copytree(self.pristine, target)
-        start = time.perf_counter()
-        stream_s, progress = self.stream(src, target, "manifest", tag)
+        clock = self.start_clock()
+        stream_s, progress = self.stream(self.path("deliveries"), target, "manifest", "day")
         billing, grid = meter_pipeline.build_all_marts(
             self.spark, ManifestTable(target).read(self.spark).select(*COLS), self.METERS
         )
-        wall = time.perf_counter() - start
-        self.checks.op(True, f"{tag}: rebuild")
-        return wall, stream_s, progress, target, billing, grid
-
-    def repetition(self) -> Rep:
-        from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
-
-        wall, stream_s, progress, target, billing, grid = self.cycle(
-            "day", self.path("deliveries")
-        )
+        wall, cpu, jit, stages = self.stop_clock(clock)
+        self.checks.op(True, "day: rebuild")
         table = ManifestTable(target)
         new = [c for _, c in table.numbered_snapshot()][self.n_seed_commits :]
         facts = {
@@ -315,6 +383,9 @@ class DailyCycle(Workload):
             rows=rows,
             busy_s=stream_s,
             batches_ms=[p["durationMs"]["triggerExecution"] for p in progress],
+            cpu_s=cpu,
+            jit_cpu_s=jit,
+            stages=stages,
             progress=progress,
             facts=facts,
         )
