@@ -1,7 +1,8 @@
 """Tracing overhead of one workload: the traced minus the untraced
-end-to-end numbers, from two runs with the same seed.
+end-to-end numbers, as medians over ``--pairs`` pairs of runs with the
+same seed, alternating which of the two runs first.
 
-    python3 perfbench/overhead.py --workload ingest_day --seed 1 --seconds 12
+    python3 perfbench/overhead.py --workload ingest_day --seed 1 --seconds 10 --pairs 3
 """
 
 from __future__ import annotations
@@ -9,14 +10,16 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+METRICS = ("cpu_us_per_row", "cycle_s", "batch_p50_ms")
 
 
-def run(args, trace: int) -> tuple[dict, dict]:
-    """(detail line, metrics) of one run."""
+def run(args, trace: int) -> dict[str, float]:
+    """The compared numbers of one run, by name."""
     out = subprocess.run(
         [
             sys.executable, os.path.join(HERE, "run.py"),
@@ -25,27 +28,35 @@ def run(args, trace: int) -> tuple[dict, dict]:
         ],
         capture_output=True, text=True, check=True,
     )
-    detail, result = out.stdout.strip().splitlines()[-2:]
-    return json.loads(detail), json.loads(result)["metrics"]
+    detail, result = (json.loads(line) for line in out.stdout.strip().splitlines()[-2:])
+    metrics = result["metrics"]
+    if trace:
+        return {name: metrics[f"trace.{name}"]["value"] for name in METRICS}
+    return {
+        "cpu_us_per_row": metrics["cpu_us_per_row"]["value"],
+        "cycle_s": detail["wall"]["cycle_s"],
+        "batch_p50_ms": detail["wall"]["batch_p50_ms"],
+    }
 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--pairs", type=int, default=3)
     args = ap.parse_args()
-    (detail, untraced), (_, traced) = run(args, 0), run(args, 1)
-    pairs = {
-        "cpu_us_per_row": untraced["cpu_us_per_row"]["value"],
-        "cycle_s": detail["wall"]["cycle_s"],
-        "batch_p50_ms": detail["wall"]["batch_p50_ms"],
-    }
-    for name, u in pairs.items():
-        t = traced[f"trace.{name}"]["value"]
+    runs: dict[int, list[dict]] = {0: [], 1: []}
+    for i in range(args.pairs):
+        for trace in (0, 1) if i % 2 == 0 else (1, 0):
+            runs[trace].append(run(args, trace))
+    for name in METRICS:
+        u = statistics.median(r[name] for r in runs[0])
+        t = statistics.median(r[name] for r in runs[1])
         print(json.dumps({
             "metric": name, "untraced": u, "traced": t,
             "overhead": t - u, "overhead_frac": (t - u) / u,
+            "pairs": args.pairs,
         }))
     return 0
 

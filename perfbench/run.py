@@ -1,6 +1,6 @@
 """Smart-meter pipeline benchmark: one workload per run.
 
-    python3 perfbench/run.py --workload ingest_day --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload ingest_day --seed 1 --seconds 10 --trace 0
 
 Runs from the root of a checkout on ``local[<nproc>]`` in one process.
 Inputs are generated from ``--seed`` before the Spark session starts;
@@ -231,7 +231,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
+    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
@@ -250,7 +250,7 @@ def main(argv: list[str] | None = None) -> int:
     from tracing import StageAccounting, Tracer
 
     from smart_meter_data_pipeline_spark.session import get_spark
-    from workloads import WORKLOADS, Checks
+    from workloads import WORKLOADS, Checks, cpu_seconds
 
     if args.workload not in WORKLOADS:
         ap.error(f"--workload must be one of {sorted(WORKLOADS)}")
@@ -271,6 +271,7 @@ def main(argv: list[str] | None = None) -> int:
     }
     try:
         t0 = time.perf_counter()
+        before = os.times()
         spark = get_spark(
             "perfbench",
             extra_conf={
@@ -289,7 +290,9 @@ def main(argv: list[str] | None = None) -> int:
         workload.stages = StageAccounting(spark)
         workload.setup()
         workload.warmup()
-        setup_s = time.perf_counter() - t0
+        setup_wall_s = time.perf_counter() - t0
+        cpu, jit = cpu_seconds(spark.sparkContext._gateway.proc.pid)
+        setup_s = cpu - jit - before.user - before.system
 
         deadline = time.perf_counter() + args.seconds
         while True:
@@ -328,6 +331,7 @@ def main(argv: list[str] | None = None) -> int:
         context=context,
         workload=args.workload,
         session_s=session_s,
+        setup_wall_s=setup_wall_s,
         jvm_peak_rss_mb=rss_mb,
         wall=wall,
         failed_checks=checks.failed,

@@ -52,15 +52,18 @@ class Rep:
 
 
 def cpu_seconds(jvm_pid: int) -> tuple[float, float]:
-    """CPU seconds used so far by the Spark JVM and this (driver)
+    """CPU seconds used so far by the Spark JVM (with the processes it
+    started and waited for, such as the launcher) and this (driver)
     process, and the part of it the JVM's JIT compiler threads used."""
     tick = os.sysconf("SC_CLK_TCK")
 
-    def stat(path: str) -> tuple[str, float]:
+    def stat(path: str, fields: int = 2) -> tuple[str, float]:
+        """Thread or process name, and its user + system time (plus
+        its waited-for children's with ``fields=4``)."""
         with open(path) as fh:
             head, rest = fh.read().rsplit(")", 1)
         f = rest.split()
-        return head.split("(", 1)[1], (int(f[11]) + int(f[12])) / tick
+        return head.split("(", 1)[1], sum(int(x) for x in f[11 : 11 + fields]) / tick
 
     jit = 0.0
     for tid in os.listdir(f"/proc/{jvm_pid}/task"):
@@ -71,7 +74,7 @@ def cpu_seconds(jvm_pid: int) -> tuple[float, float]:
         if "CompilerThre" in name:
             jit += used
     me = os.times()
-    return stat(f"/proc/{jvm_pid}/stat")[1] + me.user + me.system, jit
+    return stat(f"/proc/{jvm_pid}/stat", 4)[1] + me.user + me.system, jit
 
 
 class Stopwatch:
