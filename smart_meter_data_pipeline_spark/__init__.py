@@ -10,8 +10,8 @@ TimescaleDB → dbt), re-expressed idiomatically on Apache Spark:
   merge replaces manual offset commit + ``ON CONFLICT DO NOTHING``),
 - Parquet columnar storage partitioned by date (replaces TimescaleDB
   1-day hypertable chunks + columnar compression),
-- beyond-reference LLM-data-pipeline operators (dedup, similarity
-  search, text analysis, multimodal columns) designed for 100 TB scale.
+- beyond-reference LLM-data-pipeline operators (dedup, text analysis,
+  multimodal columns) designed for 100 TB scale.
 
 See SURVEY.md for the full operator inventory this package covers.
 """

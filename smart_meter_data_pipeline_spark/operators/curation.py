@@ -1383,9 +1383,8 @@ def doc_maxcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy maximum-coverage selection (the submodular coreset
     classic, 1−1/e guarantee): pick {MAXCOVER_K} documents one at a
     time, each maximizing the number of distinct char-shingles NOT
-    covered by the already-chosen docs — the lexical-coverage
-    companion to embedding_kcenter_coreset's feature-space diversity
-    (instruction-set curation runs both). Ties to the lowest doc_id.
+    covered by the already-chosen docs — lexical-coverage
+    diversity selection. Ties to the lowest doc_id.
     Output: selection order, doc_id, marginal gain, cumulative
     coverage.
 

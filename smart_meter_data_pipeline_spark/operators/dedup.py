@@ -2375,8 +2375,8 @@ register("dedup_fellegi_sunter", _fs_oracle())(dedup_fellegi_sunter)
 
 
 def dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measure-don't-guess for the dedup pipeline — the
-    ``ann_recall_report`` of near-duplicate detection: the banded
+    """Measure-don't-guess for the dedup pipeline — the recall
+    report of near-duplicate detection: the banded
     MinHash-LSH pair set is scored against the exact n-gram Jaccard
     ground truth (full outer join on the pair key), emitting
     tp/fp/fn and integer milli precision/recall. A recall drop here

@@ -20,10 +20,10 @@ from smart_meter_data_pipeline_spark.operators.common import dsum
 from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     N_METERS,
     N_TICKS,
-    _readings_cte,
     _u,
     gen_meter_readings,
 )
+from smart_meter_data_pipeline_spark.operators.meter_queries import _readings_cte
 from smart_meter_data_pipeline_spark.plans.registry import register
 from smart_meter_data_pipeline_spark.sources.readers import load_table
 
@@ -408,7 +408,7 @@ def meter_quality_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from smart_meter_data_pipeline_spark.operators.meter_pipeline import (  # noqa: E402
+from smart_meter_data_pipeline_spark.operators.meter_queries import (  # noqa: E402
     _dim_meters_sql,
 )
 

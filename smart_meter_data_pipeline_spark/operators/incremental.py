@@ -186,7 +186,7 @@ def batch_billing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _billing_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
+    from smart_meter_data_pipeline_spark.operators.meter_queries import (
         _BILLING_SQL,
     )
 

@@ -138,16 +138,13 @@ _PRIORITY = [
     "basket_part_pairs",
     "nation_trade_reciprocity",
     "tpch_promo_revenue",
-    "ann_lsh_multiprobe",
     "corpus_dedup_rate_by_source",
     "corpus_heavy_hitters",
     "dedup_cluster_size_dist",
     "dedup_incremental",
     "dedup_method_agreement",
-    "dedup_semantic",
     "dedup_threshold_sweep",
     "doc_tfidf_keywords",
-    "embedding_jl_projection",
     "event_value_hist_quantiles",
     "events_burstiness",
     "events_drift_report",
@@ -165,7 +162,6 @@ _PRIORITY = [
     "mixture_rebalance",
     "nation_daily_peak_hour",
     "nation_trade_balance",
-    "pagerank_trade_graph",
     "part_supplier_hhi",
     "referential_integrity_audit",
     "stream_drift_report",
@@ -183,7 +179,6 @@ _PRIORITY = [
     "tpch_top_supplier",
     "user_value_trend",
     "vocab_oov_rate",
-    "embedding_centroid_outliers",
     "doc_vocab_growth",
     "manifest_cow_roundtrip",
     "manifest_optimize_roundtrip",
@@ -195,7 +190,6 @@ _PRIORITY = [
     "tpch_disjunctive_revenue",
     "tpch_supplier_part_variety",
     "tpch_small_qty_revenue",
-    "ann_pq_topk",
     "approx_sketch_check",
     "corpus_quality_report",
     "customer_value_gini",
@@ -203,7 +197,6 @@ _PRIORITY = [
     "dedup_minhash_lsh",
     "dedup_ngram_containment",
     "dedup_ngram_jaccard",
-    "dedup_semantic_served",
     "dim_scd2_history",
     "doc_bm25_mlt",
     "doc_chunk_overlap",
@@ -232,8 +225,6 @@ _PRIORITY = [
     "supplier_revenue_pareto",
     "tpch_order_count_dist",
     "tpch_sales_opportunity",
-    "trade_triangles",
-    "ann_topk_cosine",
     "batch_billing_incremental",
     "corpus_shard_manifest",
     "corpus_token_freq",
@@ -245,9 +236,6 @@ _PRIORITY = [
     "doc_ngram_novelty",
     "doc_pii_scrub",
     "doc_span_dedup",
-    "embedding_dim_stats",
-    "embedding_normalize_quantize",
-    "kmeans_embeddings",
     "multimodal_features",
     "multimodal_resize",
     "nation_revenue",
@@ -265,9 +253,6 @@ _PRIORITY = [
     "stream_dq_monitor",
     "stream_cusum_changepoint",
     "dq_expectations_report",
-    "embedding_power_iteration",
-    "embedding_class_separation",
-    "trade_kcore",
     "tpch_lone_late_supplier",
     "tpch_idle_rich_customers",
     "tpch_forecast_revenue",
@@ -308,16 +293,11 @@ _PRIORITY = [
     "daily_customer_billing",
     "hourly_nation_load",
     "stream_static_join",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_lsh_buckets",
-    "ann_lsh_topk",
     "corpus_build_pipeline",
     "cumulative_user_value",
     "customers_with_error",
     "customers_without_purchase",
     "daily_user_rollup",
-    "dedup_embedding_cosine",
     "dedup_keep_best",
     "event_type_pivot",
     "event_value_percentiles",
@@ -330,14 +310,12 @@ _PRIORITY = [
     "events_range_pairs",
     "events_rollup",
     "events_sessionized",
-    "kmeans_fixed_rounds",
     "meter_billing_daily",
     "meter_dims",
     # (r12-evaluated) r12's remaining changed/new rows, fresh as of
     # r12 (the rest of the r12 window sits in the sections below or
     # was promoted to the r13-changed head):
     "manifest_retention_delete",
-    "ann_ivf_sq8_recall",
     "meter_gap_interpolate",
     # (r12-evaluated, ex r10-new tail) first driver rows r12:
     "meter_grid_ramp_rates",
@@ -346,13 +324,9 @@ _PRIORITY = [
     "events_forecast_model_select",
     "nation_revenue_concentration",
     "sample_neyman_allocation",
-    "trade_modularity",
     "corpus_pack_boundary_report",
-    "ann_filtered_topk",
-    "ann_filtered_ivf_recall",
     # (r12-evaluated, ex r11-new) first driver rows r12:
     "manifest_upsert_partial_roundtrip",
-    "ann_filtered_ivf_labelaware",
     "stream_upsert_if_newer",
     "manifest_upsert_if_newer_roundtrip",
     "manifest_branch_wap",
@@ -365,7 +339,6 @@ _PRIORITY = [
     "events_dp_release",
     "meter_tou_billing",
     "events_dr_baseline",
-    "embedding_sq_recall",
     "dedup_clusters_star",
     "manifest_retention_mor_roundtrip",
     "stream_bottomk_sample",
@@ -375,14 +348,11 @@ _PRIORITY = [
     "events_randomized_response",
     "meter_rollover_correction",
     "manifest_cdc_replica_roundtrip",
-    "train_hard_negatives",
     # (r9-evaluated) round-9 driver window — 50/50 hash-match
     "manifest_asof_read",
-    "trade_label_propagation",
     "events_markov_stationary",
     "doc_lm_commonness",
     "doc_hashed_ngram_score",
-    "embedding_pair_sim_hist",
     "doc_winnowing",
     "tpch_important_parts",
     "tpch_min_cost_supplier",
@@ -391,7 +361,6 @@ _PRIORITY = [
     "orders_cohort_ltv",
     "corpus_countmin_estimate",
     "events_key_skew_report",
-    "ann_recall_report",
     "quality_filter_ablation",
     "tpch_late_by_priority",
     "orders_open_backlog",
@@ -403,7 +372,6 @@ _PRIORITY = [
     "events_ks_distance",
     "events_daily_metrics_long",
     "doc_char_ngram_diversity",
-    "kmeans_silhouette",
     "multimodal_dup_groups",
     "events_type_crosscorr",
     "events_value_equidepth_bins",
@@ -413,9 +381,7 @@ _PRIORITY = [
     "corpus_token_collocation",
     "tpch_product_profit",
     "events_user_streaks",
-    "embedding_kcenter_coreset",
     "doc_maxcover_selection",
-    "trade_degree_distribution",
     "events_hll_registers",
     "stream_hll_registers",
     "events_hll_daily_rollup",
@@ -423,7 +389,6 @@ _PRIORITY = [
     "customer_value_migration",
     "orders_dow_uniformity_chi2",
     "part_price_size_skyline",
-    "trade_graph_densification",
     "events_welch_ttest",
     "orders_cumulative_customers",
     "corpus_tokenizer_fertility",
@@ -437,15 +402,12 @@ _PRIORITY = [
     "events_user_archetypes",
     "orders_growth_accounting",
     "manifest_tag_read",
-    "cluster_topic_words",
     "lineitem_bloom_semijoin",
     "dedup_prefix_filter_join",
-    "embedding_matryoshka_recall",
     "events_k_anonymity",
     "manifest_clone_roundtrip",
     "train_split_leakage_safe",
     "events_ab_assignment_srm",
-    "doc_rank_fusion",
     "events_type_hour_independence_chi2",
     "events_outlier_ensemble",
     "events_encoding_advisor",
@@ -459,7 +421,6 @@ _PRIORITY = [
     "manifest_mor_roundtrip",
     "train_kfold_assign",
     "events_l_diversity",
-    "trade_common_neighbors",
     "sample_reservoir_per_key",
     "doc_lix_readability",
     "events_bot_score",
@@ -472,16 +433,13 @@ _PRIORITY = [
     "stream_jsonl_sink_roundtrip",
     "meter_peak_shaving",
     "events_haar_energy",
-    "trade_hits_scores",
     "events_spc_xbar_r",
     "corpus_kmv_distinct",
     "events_attribution_position",
-    "embedding_knn_loo_accuracy",
     "nation_product_complexity",
     # (r11-evaluated) round-11 driver window — 50/50 hash-match
     # (minus the three promoted into (r12-changed) above)
     "lineitem_leadtime_anova",
-    "trade_personalized_pagerank",
     "tpch_nation_yoy_growth",
     "events_rolling_active_users",
     "corpus_bigram_coverage",
@@ -492,14 +450,12 @@ _PRIORITY = [
     "events_dow_hour_matrix",
     "orders_seasonal_index",
     "doc_length_magnitude_profile",
-    "trade_assortativity",
     "corpus_dsir_sample",
     "doc_suffix_dup",
     "multimodal_vad_segments",
     "events_range_join_bucketized",
     "events_holt_forecast",
     "stream_holt_forecast",
-    "embedding_mmr_select",
     "dedup_fellegi_sunter",
     "events_t_closeness",
     "manifest_zorder_roundtrip",
@@ -515,7 +471,6 @@ _PRIORITY = [
     "stream_hll_sliding_distinct",
     "events_theil_sen_slope",
     "train_epoch_shuffle_plan",
-    "ann_ivf_incremental",
     "events_holt_winters_forecast",
     "events_stl_decompose",
     "events_conversion_lag",
@@ -534,19 +489,17 @@ def load_all() -> None:
 
     Import order does NOT control registration order (modules import
     each other, so e.g. importing ``stream_queries`` first would still
-    register ``meter_pipeline``'s queries before its own); the explicit
+    register ``meter_queries``'s queries before its own); the explicit
     reorder below does.
     """
     from smart_meter_data_pipeline_spark.operators import (  # noqa: F401
         curation,
         events_pipeline,
         extended,
-        graph,
-        meter_pipeline,
+        meter_queries,
         tpch,
         dedup,
         text,
-        similarity,
         multimodal,
         incremental,
         skew,

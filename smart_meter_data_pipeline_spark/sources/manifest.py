@@ -3031,11 +3031,13 @@ def apply_tombstones(
             # the range/bloom pruning, the affected-detection
             # semi-join and the survivor anti-join — and is reused
             # across origin groups — where before every consumer
-            # re-read the key parquet from scratch.
-            tkeys = [
-                table._tombstone_keys(spark, t).persist() for t in pending
-            ]
+            # re-read the key parquet from scratch. The list is built
+            # inside the try so a failure partway through still
+            # unpersists the frames persisted before it.
+            tkeys: list[DataFrame] = []
             try:
+                for t in pending:
+                    tkeys.append(table._tombstone_keys(spark, t).persist())
                 for i, grp in sorted(groups.items()):
                     tombs = pending[i:]
                     # File skipping: keep a file only if its recorded

@@ -32,10 +32,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from smart_meter_data_pipeline_spark.operators.common import dsum
-from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-    _readings_cte,
-    gen_meter_readings,
-)
+from smart_meter_data_pipeline_spark.operators.meter_pipeline import gen_meter_readings
+from smart_meter_data_pipeline_spark.operators.meter_queries import _readings_cte
 from smart_meter_data_pipeline_spark.plans.registry import register
 from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
     start_ingest_stream,
@@ -304,7 +302,7 @@ def _run_stateful_deltas(spark: SparkSession) -> DataFrame:
 
 
 def _stateful_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import _stg_cte
+    from smart_meter_data_pipeline_spark.operators.meter_queries import _stg_cte
 
     return f"""{_stg_cte()}
 SELECT CAST(date_trunc('day', reading_timestamp) AS DATE) AS billing_date,
@@ -512,7 +510,7 @@ def stream_billing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_billing_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
+    from smart_meter_data_pipeline_spark.operators.meter_queries import (
         _BILLING_SQL,
     )
 
@@ -555,7 +553,7 @@ def stream_grid_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_grid_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
+    from smart_meter_data_pipeline_spark.operators.meter_queries import (
         _GRID_LOAD_SQL,
     )
 
@@ -1882,10 +1880,6 @@ def stream_restatement_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _restatement_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        _readings_cte,
-    )
-
     return f"""WITH {_readings_cte()}
 SELECT reading_timestamp, meter_id,
        CAST(CASE WHEN meter_id % 7 = 3
@@ -2054,10 +2048,6 @@ def stream_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _branch_wap_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        _readings_cte,
-    )
-
     return f"""WITH {_readings_cte()}
 SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
        reading_production_milliwatts, status
@@ -2158,10 +2148,6 @@ def stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _catalog_txn_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        _readings_cte,
-    )
-
     return f"""WITH {_readings_cte()}
 SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
        reading_production_milliwatts, status
@@ -3237,7 +3223,6 @@ def stream_hll_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _register_stream_hll_sliding() -> None:
     # the batch twin's oracle registers on stats_sketch import — pull
     # it in explicitly so THIS module is import-order independent
-    # (bench.py imports streaming without the full operator package)
     from smart_meter_data_pipeline_spark.operators import (  # noqa: F401
         stats_sketch as _sk,
     )
@@ -3345,7 +3330,7 @@ def stream_grid_ramp_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Closure rule: the per-group function touches only pandas (state
     carries the last hour as epoch micros + the last net kWh)."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
+    from smart_meter_data_pipeline_spark.operators.meter_queries import (
         meter_grid_load_q,
     )
 
@@ -3459,7 +3444,7 @@ def stream_grid_ramp_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _register_stream_grid_ramp() -> None:
     from smart_meter_data_pipeline_spark.operators import (  # noqa: F401
-        meter_pipeline as _mp,
+        meter_queries as _mq,
     )
     from smart_meter_data_pipeline_spark.plans.registry import ORACLES
 
@@ -3679,10 +3664,6 @@ def stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_stream_index_maintenance() -> None:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        _readings_cte,
-    )
-
     register(
         "stream_index_maintenance",
         f"""WITH {_readings_cte()}
@@ -3902,10 +3883,6 @@ def stream_catalog_restatement(
 
 
 def _catalog_restatement_oracle() -> str:
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        _readings_cte,
-    )
-
     return f"""WITH {_readings_cte()}
 SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
        CASE WHEN meter_id % 5 = 2 THEN 'C' ELSE status END AS status,

@@ -10,7 +10,7 @@ def test_cli_list(capsys):
     out = capsys.readouterr().out.strip().splitlines()
     assert len(out) >= 70
     names = {line.split("\t")[0] for line in out}
-    assert {"daily_customer_billing", "ann_pq_topk"} <= names
+    assert {"daily_customer_billing", "manifest_cow_roundtrip"} <= names
 
 
 def test_cli_unknown_query(capsys):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from smart_meter_data_pipeline_spark.operators import dedup, multimodal, similarity
+from smart_meter_data_pipeline_spark.operators import dedup, multimodal
 from smart_meter_data_pipeline_spark.operators.text import shingles
 from smart_meter_data_pipeline_spark.sources.readers import load_table
 
@@ -46,31 +46,6 @@ def test_simhash_near_pairs_cover_planted_dups(spark, sf_dir):
     assert len(found) < n_docs * (n_docs - 1) / 4
 
 
-def test_ann_lsh_candidates_subset_of_bruteforce(spark, sf_dir):
-    """Bucket-restricted ANN returns a subset of the brute-force
-    ranking universe, with identical cosines for shared pairs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 3)
-    lsh = similarity.ann_search_lsh(emb, queries, k=5)
-    brute = similarity.ann_topk_cosine(spark, sf_dir)
-    lsh_rows = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in lsh.collect()}
-    brute_rows = {
-        (r["query_id"], r["neighbor_id"]): r["cosine"] for r in brute.collect()
-    }
-    assert lsh_rows, "bucketed search should return candidates"
-    for key, cos in lsh_rows.items():
-        if key in brute_rows:
-            assert abs(brute_rows[key] - cos) < 1e-9
-
-
-def test_embedding_cosine_dups_threshold(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    dups = similarity.embedding_cosine_dups(emb, threshold=0.5)
-    for r in dups.collect():
-        assert r["cosine"] >= 0.5
-        assert r["vec_a"] < r["vec_b"]
-
-
 def test_multimodal_byte_sum_and_stub(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(20)
     feats = multimodal.extract_features(multimodal.with_binary_content(docs))
@@ -92,47 +67,6 @@ def test_shingles_cover_text(spark, sf_dir):
     row = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).first()
     assert row["n"] > 0
     assert sh.filter(F.length("shingle") != 12).count() == 0
-
-
-def test_ivf_cells_partition_corpus(spark, sf_dir):
-    """Every vector lands in exactly one IVF cell, cells are centroid
-    ids from the seed rule, and the cell count is capped at IVF_NLIST
-    (constant in corpus size — the 100 TB requirement)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cells = similarity.ivf_cell_assignments(emb)
-    n = emb.count()
-    assert cells.count() == n
-    assert cells.select("vec_id").distinct().count() == n
-    s = similarity.IVF_SEED_STRIDE
-    bad = cells.filter(
-        (F.col("cell_id") % s != s % 7)
-        | (F.col("cell_id") >= s * similarity.IVF_NLIST)
-    ).count()
-    assert bad == 0
-    assert cells.select("cell_id").distinct().count() <= similarity.IVF_NLIST
-
-
-def test_ivf_topk_cosines_match_bruteforce(spark, sf_dir):
-    """IVF-flat results carry exact cosines: every (query, neighbor)
-    pair IVF returns that also appears in the brute-force top-k must
-    agree on cosine; ranks are 1..k without gaps per query."""
-    ivf = similarity.ann_ivf_topk(spark, sf_dir)
-    brute = similarity.ann_topk_cosine(spark, sf_dir)
-    ivf_rows = {(r["query_id"], r["neighbor_id"]): r["cosine"] for r in ivf.collect()}
-    brute_rows = {
-        (r["query_id"], r["neighbor_id"]): r["cosine"] for r in brute.collect()
-    }
-    assert ivf_rows, "IVF search should return results"
-    for key, cos in ivf_rows.items():
-        if key in brute_rows:
-            assert abs(brute_rows[key] - cos) < 1e-9
-    ranks: dict[int, list[int]] = {}
-    for (qid, _), _cos in ivf_rows.items():
-        ranks.setdefault(qid, [])
-    for r in similarity.ann_ivf_topk(spark, sf_dir).collect():
-        ranks[r["query_id"]].append(r["rank"])
-    for qid, rs in ranks.items():
-        assert sorted(rs) == list(range(1, len(rs) + 1)), qid
 
 
 def test_resize_fixed_output_contract(spark, sf_dir):
@@ -242,24 +176,6 @@ def test_shard_manifest_balance(spark, sf_dir):
         assert 0.5 * uniform < r["n_docs"] < 2.0 * uniform, r
 
 
-def test_kmeans_inertia_decreases(spark, sf_dir):
-    """Lloyd's iterations must not increase total inertia, every vector
-    must be assigned, and every cluster must be non-empty."""
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        kmeans_embeddings,
-    )
-    from smart_meter_data_pipeline_spark.sources.readers import load_table
-
-    total = load_table(spark, sf_dir, "embeddings").count()
-    inertias = []
-    for iters in (1, 3):
-        rows = kmeans_embeddings(spark, sf_dir, n_iters=iters).collect()
-        assert sum(r["n_members"] for r in rows) == total
-        assert all(r["n_members"] > 0 for r in rows)
-        inertias.append(sum(r["inertia"] for r in rows))
-    assert inertias[1] <= inertias[0] + 1e-9
-
-
 def test_pii_scrub_planted(spark):
     """The scrub expression must mask planted emails/phones/IPs and
     leave clean text untouched."""
@@ -366,40 +282,6 @@ def test_span_dedup_invariants(spark, sf_dir):
     assert bad.count() == 0
 
 
-def test_lsh_planes_scale_with_corpus(spark, sf_dir):
-    """The adaptive plane count must equal the documented policy —
-    max(4, ceil_log2(ceil(N / LSH_TARGET_OCCUPANCY))) — computed with
-    exact integer math (bucket ids then fit in 2^planes), and an
-    explicit n_planes must still be honored."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    occ = similarity.LSH_TARGET_OCCUPANCY
-    q = (n + occ - 1) // occ
-    p = max(4, (q - 1).bit_length())
-    assign = similarity.lsh_bucket_assignments(emb)
-    mx = assign.agg(F.max("bucket_id")).first()[0]
-    assert 0 <= mx < 2**p
-    # with >= p-1 planes some high bit should actually be set, or the
-    # formula is vacuous at this corpus size
-    assert mx >= 2 ** (p - 1), (mx, p)
-    pinned = similarity.lsh_bucket_assignments(emb, n_planes=3)
-    assert pinned.agg(F.max("bucket_id")).first()[0] < 8
-
-
-def test_lsh_planes_floor_on_degenerate_corpora(spark):
-    """The adaptive plane formula must be total: an empty (or tiny)
-    corpus gets the documented floor of 4 planes, not the 64 that
-    bin(-1)'s two's-complement rendering would produce."""
-    empty = spark.createDataFrame(
-        [], "vec_id long, label string, embedding array<float>"
-    )
-    assert similarity._adaptive_planes(empty).count() == 4
-    one = spark.createDataFrame(
-        [(0, "a", [1.0, 2.0])], "vec_id long, label string, embedding array<float>"
-    )
-    assert similarity._adaptive_planes(one).count() == 4
-
-
 def test_keep_best_one_winner_per_cluster(spark, sf_dir):
     """dedup_keep_best: every cluster keeps exactly one member, every
     corpus doc appears exactly once, and the winner has the cluster's
@@ -461,23 +343,6 @@ def test_pair_jaccard_hot_shingle_df_bounded(spark):
     assert capped < uncapped / 2
 
 
-@pytest.mark.slow
-def test_ivfpq_index_parquet_roundtrip(spark, sf_dir, tmp_path):
-    """build → save → load → search must equal the in-session search:
-    the persisted index is a drop-in replacement (the production
-    amortization path for the expensive train/encode/assign build)."""
-    built = similarity.ivfpq_build_index(spark, sf_dir)
-    similarity.ivfpq_save_index(built, str(tmp_path / "ivfpq"))
-    loaded = similarity.ivfpq_load_index(spark, str(tmp_path / "ivfpq"))
-    for a, b in zip(built, loaded):
-        assert dict(a.dtypes) == dict(b.dtypes)
-    fresh = similarity.ann_ivfpq_topk(spark, sf_dir, index=built).collect()
-    reloaded = similarity.ann_ivfpq_topk(spark, sf_dir, index=loaded).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(map(tuple, fresh)) == sorted(map(tuple, reloaded))
-    assert len(fresh) > 0
-
-
 def test_bm25_mlt_ranking_contract(spark, sf_dir):
     """BM25 MLT: per query, ranks are 1..k contiguous, scores
     non-increasing along rank, no self-matches, all scores positive
@@ -517,74 +382,6 @@ def test_temperature_sample_flattens_sources(spark, sf_dir):
     assert probs == sorted(probs, reverse=True)
 
 
-@pytest.mark.slow
-def test_ivfpq_incremental_encode_matches_batch(spark, sf_dir):
-    """Fold-in equality: building an index on a base corpus and
-    incrementing it with held-out vectors must produce bit-identical
-    codes and cell distances to batch-encoding the enlarged corpus
-    against the SAME (base-trained) codebook/centroids — encoding is
-    pointwise, so the append path may not drift. Search over the
-    incremented index must be able to return appended vectors."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Hold out vectors that are never PQ or IVF seeds, so base-corpus
-    # training sees every seed and stays deterministic.
-    s = similarity.IVF_SEED_STRIDE
-    holdout = (F.col("vec_id") % s == (s % 7) + 1) & (
-        F.col("vec_id") % similarity.PQ_STRIDE != 0
-    ) & (F.col("vec_id") >= similarity.N_QUERIES)
-    base, inc = emb.filter(~holdout), emb.filter(holdout)
-    n_inc = inc.count()
-    assert n_inc > 0
-
-    el_b = similarity._normalize_el(base).localCheckpoint(eager=True)
-    enc_b, dt_b = similarity._pq_encode_tables(el_b)
-    cd_b = similarity._ivfpq_coarse_dists(el_b)
-    index_b = (el_b, enc_b.localCheckpoint(eager=True),
-               dt_b.localCheckpoint(eager=True), cd_b)
-    el2, enc2, dt2, cd2 = similarity.ivfpq_encode_increment(index_b, inc)
-
-    # Batch reference: enlarged corpus encoded against the base-trained
-    # codebook/centroids.
-    codebook = similarity._pq_train_codebook(el_b)
-    cent = similarity._trained_coarse_centroids(el_b)
-    el_full = similarity._normalize_el(emb)
-    enc_ref, _ = similarity._pq_encode_tables(el_full, codebook)
-    inc_ids = {r["vec_id"] for r in inc.select("vec_id").collect()}
-    got_codes = {
-        (r["vec_id"], r["m"]): r["code"]
-        for r in enc2.collect() if r["vec_id"] in inc_ids
-    }
-    ref_codes = {
-        (r["vec_id"], r["m"]): r["code"]
-        for r in enc_ref.collect() if r["vec_id"] in inc_ids
-    }
-    assert got_codes == ref_codes and got_codes
-    cd_ref = similarity._coarse_dists_to(el_full, cent)
-    got_cd = {(r["vec_id"], r["cell_id"]): r["d"]
-              for r in cd2.collect() if r["vec_id"] in inc_ids}
-    ref_cd = {(r["vec_id"], r["cell_id"]): r["d"]
-              for r in cd_ref.collect() if r["vec_id"] in inc_ids}
-    assert got_cd == ref_cd and got_cd
-
-    # Appended vectors are fully in the serving universe: exactly one
-    # best cell each (same argmin rule), and search over the
-    # incremented index still returns a full, well-formed top-k.
-    cells2 = (
-        cd2.groupBy("vec_id")
-        .agg(F.min(F.struct("d", "cell_id")).alias("s"))
-        .select("vec_id")
-    )
-    assigned = {r["vec_id"] for r in cells2.collect()}
-    assert inc_ids <= assigned
-    out = similarity.ann_ivfpq_topk(
-        spark, sf_dir, nprobe=8, index=(el2, enc2, dt2, cd2)
-    ).collect()
-    per_q: dict[int, int] = {}
-    for r in out:
-        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-    assert per_q and all(v == similarity.TOP_K for v in per_q.values())
-
-
 def test_scd2_history_invariants(spark, sf_dir):
     """SCD2 merge: every customer has exactly one current row; changed
     customers carry exactly two rows (closed + open) with contiguous
@@ -612,30 +409,6 @@ def test_scd2_history_invariants(spark, sf_dir):
         else:
             assert len(rs) == 1, ck
     assert 0 < n_changed < n_cust
-
-
-def test_semantic_dedup_invariants(spark, sf_dir):
-    """SemDeDup keep-rule invariants: the lowest vec_id in every
-    cluster always survives (it has no lower-id neighbor by
-    construction); every document appears exactly once; both kept and
-    dropped rows exist so the oracle hash check has teeth."""
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        dedup_semantic,
-    )
-
-    rows = dedup_semantic(spark, sf_dir).collect()
-    n_vecs = load_table(spark, sf_dir, "embeddings").count()
-    assert len(rows) == n_vecs
-    assert len({r["vec_id"] for r in rows}) == n_vecs
-    by_cluster: dict[int, list] = {}
-    for r in rows:
-        by_cluster.setdefault(r["cluster_id"], []).append(r)
-    for cid, rs in by_cluster.items():
-        leader = min(rs, key=lambda r: r["vec_id"])
-        assert leader["kept"] == 1, cid
-        assert leader["n_close_prior"] == 0, cid
-    kept_vals = {r["kept"] for r in rows}
-    assert kept_vals == {0, 1}
 
 
 def test_minhash_index_roundtrip_and_incremental_verdicts(spark, sf_dir, tmp_path):
@@ -705,74 +478,6 @@ def test_mixture_rebalance_hits_targets(spark, sf_dir):
         # expected emitted = target*N; realized within the coin margin
         assert abs(r["n_emitted"] - r["target_share"] * n_total) <= r["n_docs"]
         assert abs(r["achieved_share"] - r["n_emitted"] / tot_emitted) < 1e-8
-
-
-def test_jl_projection_preserves_distances_in_expectation(spark, sf_dir):
-    """Deterministic JL: exact shape (n_vecs x JL_DIM), and pairwise
-    distance ratios centered near 1 (measured 0.21-2.35, mean 0.97 at
-    k=16 — bounds pinned with margin; the projection is hash-derived,
-    so these numbers are reproducible, not flaky)."""
-    import numpy as np
-
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        JL_DIM,
-        embedding_jl_projection,
-    )
-
-    emb = {
-        r["vec_id"]: np.array(r["embedding"], dtype=float)
-        for r in load_table(spark, sf_dir, "embeddings").collect()
-    }
-    rows = embedding_jl_projection(spark, sf_dir).collect()
-    assert len(rows) == len(emb) * JL_DIM
-    proj = {}
-    for r in rows:
-        proj.setdefault(r["vec_id"], {})[r["j"]] = r["coord"]
-    pv = {k: np.array([v[j] for j in range(JL_DIM)]) for k, v in proj.items()}
-    ids = sorted(emb)[:40]
-    ratios = []
-    for i in range(len(ids)):
-        for k in range(i + 1, len(ids)):
-            a, b = ids[i], ids[k]
-            d0 = float(np.linalg.norm(emb[a] - emb[b]))
-            d1 = float(np.linalg.norm(pv[a] - pv[b]))
-            if d0 > 1e-9:
-                ratios.append(d1 / d0)
-    mean = sum(ratios) / len(ratios)
-    assert 0.8 < mean < 1.2
-    assert all(0.1 < r < 3.0 for r in ratios)
-
-
-def test_semantic_serve_from_persisted_assignment(spark, sf_dir, tmp_path):
-    """dedup_semantic_serve against a parquet-persisted Lloyd
-    assignment is ROW-IDENTICAL to the full pipeline — the assignment
-    is the only clustering output the prune consumes, so persisting it
-    amortizes the dominant (Lloyd) cost across serve runs."""
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        dedup_semantic,
-        dedup_semantic_serve,
-        semantic_save_assignment,
-    )
-
-    path = str(tmp_path / "semantic_assignment")
-    semantic_save_assignment(spark, sf_dir, path)
-    full = dedup_semantic(spark, sf_dir)
-    served = dedup_semantic_serve(spark, sf_dir, path)
-    assert served.exceptAll(full).count() == 0
-    assert full.exceptAll(served).count() == 0
-
-
-def test_coarse_iters_for_nprobe_dial():
-    """Dial-tuned coarse training adopted from the round-6 sweep:
-    tight probes train one Lloyd round, wide probes keep untrained
-    seeds (recall crossover measured at sf0.1, re-swept every bench
-    run)."""
-    from smart_meter_data_pipeline_spark.operators import similarity as s
-
-    assert s.coarse_iters_for_nprobe(1) == s.COARSE_TRAIN_ITERS
-    assert s.coarse_iters_for_nprobe(4) == s.COARSE_TRAIN_ITERS
-    assert s.coarse_iters_for_nprobe(8) == 0
-    assert s.coarse_iters_for_nprobe(16) == 0
 
 
 def test_phash_block_quantized_bit_stays_discriminative(spark, sf_dir):

@@ -109,6 +109,30 @@ def test_apply_is_logically_neutral_and_unblocks(spark, table):
     assert apply_tombstones(table, spark)["applied_tombstones"] == 0
 
 
+def test_apply_unpersists_key_frames_when_a_key_read_fails(
+    spark, table, monkeypatch
+):
+    """A failure while building the per-tombstone key frames must not
+    leave the frames persisted before it in the session's cache."""
+    table.delete_keys_mor(spark, _keys(spark, 3))
+    table.delete_keys_mor(spark, _keys(spark, 5))
+    built = []
+    real = table._tombstone_keys
+
+    def failing_second(spark_, t):
+        if built:
+            raise OSError("key parquet unreadable")
+        built.append(real(spark_, t))
+        return built[-1]
+
+    monkeypatch.setattr(table, "_tombstone_keys", failing_second)
+    with pytest.raises(OSError, match="key parquet unreadable"):
+        apply_tombstones(table, spark)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert len(built) == 1
+    assert cache.lookupCachedData(built[0]._jdf).isEmpty()
+
+
 def test_apply_skips_disjoint_files_by_stats(spark, tmp_path):
     """A narrow-key tombstone must rewrite only the files whose
     recorded meter_id range can contain it."""

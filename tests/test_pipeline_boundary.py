@@ -1,0 +1,79 @@
+"""The pipeline's import boundary and the ``__spark_entry__`` contract.
+
+The ingest → staging → marts path must load without the query
+registry: importing it registers nothing and pulls in no
+``plans`` module. The registry side is checked here too: every name in
+``registry._PRIORITY`` is registered after ``load_all()``, and
+``__spark_entry__.entry`` returns the ``daily_customer_billing`` frame.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+PIPELINE_MODULES = [
+    "session",
+    "streaming.ingest_stream",
+    "sources.ingest",
+    "sources.manifest",
+    "sources.txn",
+    "operators.meter_pipeline",
+]
+
+_PROBE = """
+import importlib, json, sys
+P = "smart_meter_data_pipeline_spark"
+for m in sys.argv[1:]:
+    importlib.import_module(f"{P}.{m}")
+print(json.dumps(sorted(n for n in sys.modules if n.startswith(P))))
+"""
+
+
+def test_pipeline_imports_load_no_registry():
+    out = subprocess.run(
+        [sys.executable, "-c", _PROBE, *PIPELINE_MODULES],
+        cwd=ROOT,
+        env={**os.environ, "PYTHONPATH": ROOT},
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    )
+    loaded = json.loads(out.stdout.splitlines()[-1])
+    assert "smart_meter_data_pipeline_spark.operators.meter_pipeline" in loaded
+    # no plans module means no registry, hence no registered query
+    plans = [n for n in loaded if n.startswith("smart_meter_data_pipeline_spark.plans")]
+    assert plans == []
+    assert "smart_meter_data_pipeline_spark.operators.meter_queries" not in loaded
+
+
+def test_every_priority_name_is_registered():
+    from smart_meter_data_pipeline_spark.plans import registry
+
+    registry.load_all()
+    missing = [n for n in registry._PRIORITY if n not in registry.QUERIES]
+    assert missing == []
+    assert len(set(registry._PRIORITY)) == len(registry._PRIORITY)
+
+
+def test_entry_returns_daily_customer_billing(spark, monkeypatch):
+    import __spark_entry__
+    from smart_meter_data_pipeline_spark.plans import registry
+
+    registry.load_all()
+    real = registry.QUERIES["daily_customer_billing"]
+    returned = []
+
+    def recording(spark_, sf_dir):
+        returned.append(real(spark_, sf_dir))
+        return returned[-1]
+
+    monkeypatch.setitem(registry.QUERIES, "daily_customer_billing", recording)
+    df = __spark_entry__.entry(spark)
+    assert len(returned) == 1 and df is returned[0]
+    assert df.count() > 0

@@ -15,8 +15,6 @@ import pytest
 from smart_meter_data_pipeline_spark.operators import (
     events_pipeline,
     extended,
-    graph,
-    similarity,
     text,
     tpch,
 )
@@ -71,14 +69,6 @@ def test_hourly_nation_load_hints_only_bounded_dims(spark, sf_dir):
         assert p.count("SortMergeJoin") >= 1   # the customer join
 
 
-def test_ann_brute_force_broadcasts_queries(spark, sf_dir):
-    """The brute-force ANN baseline broadcasts the tiny query side; the
-    corpus side must never be materialized into a cartesian product."""
-    p = _plan(similarity.ann_topk_cosine(spark, sf_dir))
-    assert "BroadcastExchange" in p
-    assert "CartesianProduct" not in p
-
-
 @pytest.mark.parametrize(
     "fn",
     [
@@ -90,7 +80,6 @@ def test_ann_brute_force_broadcasts_queries(spark, sf_dir):
         events_pipeline.hourly_nation_load,
         text.doc_token_stats,
         text.doc_ngram_novelty,
-        similarity.ann_topk_cosine,
         extended.events_range_frame,
         extended.events_asof_orders,
     ],
@@ -190,29 +179,6 @@ def test_tpch_top_supplier_max_is_broadcast_not_window(spark, sf_dir):
     assert "BroadcastExchange" in p
     assert "Window" not in p
     assert "CartesianProduct" not in p
-
-
-def test_dedup_semantic_no_cartesian_and_no_python(spark, sf_dir):
-    """SemDeDup's intra-cluster pair stage must stay an equi-join on
-    cluster_id — never a cartesian pair enumeration (the hinted
-    broadcasts of the bounded centroid set are the only nested-loop
-    sites) — and all arithmetic stays JVM-side decimal."""
-    p = _plan(similarity.dedup_semantic(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_pagerank_rounds_are_joins_not_cartesian(spark, sf_dir):
-    """PageRank's per-round message passing must stay keyed equi-joins
-    of the edge list against the rank vector (Pregel-as-joins); the
-    only nested-loop joins are 1-row scalar broadcasts (node count)."""
-    from smart_meter_data_pipeline_spark.operators.graph import (
-        pagerank_trade_graph,
-    )
-
-    p = _plan(pagerank_trade_graph(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 def test_hist_quantiles_scans_only_value_and_combines(spark, sf_dir):
@@ -402,17 +368,6 @@ def test_disjunctive_revenue_single_join_no_branch_union(spark, sf_dir):
     assert "Union" not in p
 
 
-def test_trade_triangles_edges_deduped_before_self_join(spark, sf_dir):
-    """Triangle counting must self-join the DEDUPED edge list (25²
-    nation pairs max), never raw lineitem fan-out, and the existence
-    check must be a semi join."""
-    from smart_meter_data_pipeline_spark.operators import graph
-
-    p = _plan(graph.trade_triangles(spark, sf_dir))
-    assert "LeftSemi" in p
-    assert "CartesianProduct" not in p
-
-
 def test_doc_prefix_dup_is_single_window_no_self_join(spark, sf_dir):
     """The prefix-dup pass must stay one window over the prefix key —
     one shuffle, no pair join, no Python."""
@@ -494,39 +449,13 @@ def test_fact_scale_tables_never_force_broadcast(spark, sf_dir):
         (tpch.tpch_supplier_part_variety, 1),
         (tpch.tpch_small_qty_revenue, 1),  # li⋈part; threshold rollup may hint
         (tpch.basket_part_pairs, 3),       # self-join + 2 part-freq joins
-        # round-9 additions: the last two customer-broadcast stragglers
+        # round-9 addition: a customer-broadcast straggler
         (extended.nation_daily_peak_hour, 1),  # events⋈customer
-        (graph.trade_triangles, 2),            # li⋈orders, orders⋈customer
     ]
     with _no_auto_broadcast(spark):
         for fn, floor in cases:
             p = _plan(fn(spark, sf_dir))
             assert p.count("SortMergeJoin") >= floor, fn.__name__
-
-
-def test_centroid_outliers_topk_never_single_partition_sorts_corpus(
-    spark, sf_dir
-):
-    """The global top-k must plan as TakeOrderedAndProject (per
-    partition local top-k, driver merge of <=k rows each) — never a
-    row_number window that funnels every per-vector row through one
-    task. The rank window that remains runs over the <=k-row limit
-    result, so no Window may appear BELOW the take-ordered node."""
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        embedding_centroid_outliers,
-    )
-
-    p = _plan(embedding_centroid_outliers(spark, sf_dir))
-    assert "TakeOrderedAndProject" in p
-    # In the formatted tree parents print first at smaller indent: the
-    # Window must be an ANCESTOR of (i.e. consume) the take-ordered
-    # node, never sit beneath it on the corpus side.
-    tree = p.split("\n\n")[0]
-    wline = next(l for l in tree.splitlines() if "Window (" in l)
-    tline = next(
-        l for l in tree.splitlines() if "TakeOrderedAndProject (" in l
-    )
-    assert wline.index("Window") < tline.index("TakeOrderedAndProject")
 
 
 def test_vocab_growth_linear_no_theta_join(spark, sf_dir):
@@ -550,42 +479,6 @@ def test_lone_late_supplier_no_fact_self_join(spark, sf_dir):
     assert "TakeOrderedAndProject" in p
     assert "CartesianProduct" not in p
     assert p.count("HashAggregate") >= 4  # two partial+final rollups
-
-
-def test_kcore_final_plan_is_flat_and_rounds_are_semi_joins(
-    spark, sf_dir
-):
-    """Two properties of the fixed-round peel: (a) per-round
-    checkpointing flattens lineage, so the FINAL plan is just the
-    last edge snapshot + one two-level degree aggregation (no
-    3-round join tower for the scheduler to replay); (b) the round
-    body itself filters edges with LEFT-SEMI joins against the
-    surviving-node set — pinned on an inline replica of one round
-    since the executed rounds are invisible post-checkpoint."""
-    from pyspark.sql import functions as F
-
-    from smart_meter_data_pipeline_spark.operators import graph
-
-    p = _plan(graph.trade_kcore(spark, sf_dir))
-    assert "ExistingRDD" in p  # checkpointed edges, not a join tower
-    assert p.count("HashAggregate") >= 2
-    assert "CartesianProduct" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-    edges = spark.createDataFrame([(2, 3), (4, 3)], ["u", "v"])
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    keep = deg.filter(F.col("deg") >= 2).select("node")
-    round_plan = _plan(
-        edges.join(keep, edges.u == keep.node, "left_semi").join(
-            keep, edges.v == keep.node, "left_semi"
-        )
-    )
-    assert "LeftSemi" in round_plan
 
 
 def test_sax_windows_partition_by_user_day(spark, sf_dir):
@@ -631,19 +524,6 @@ def test_idle_rich_customers_anti_join_with_pushed_filter(spark, sf_dir):
     assert "LeftAnti" in p
     assert "o_totalprice" in p[p.index("Scan parquet"):]
     assert "BroadcastExchange" in p
-    assert "CartesianProduct" not in p
-
-
-def test_power_iteration_rounds_are_keyed_joins(spark, sf_dir):
-    """Power iteration must stay Pregel-as-joins with a broadcast
-    dim-sized w: the final round's plan shows the checkpointed corpus
-    (flat lineage), keyed aggregations, broadcast exchanges for w/m,
-    and no Python eval or cartesian blowup beyond the 1-row norm
-    attach."""
-    p = _plan(similarity.embedding_power_iteration(spark, sf_dir))
-    assert "ExistingRDD" in p  # checkpointed exploded corpus + w
-    assert "BroadcastExchange" in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "CartesianProduct" not in p
 
 
@@ -754,7 +634,7 @@ def test_countmin_single_corpus_scan(spark, sf_dir):
 
 
 def test_new_rollups_no_cartesian_no_python(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators import curation, graph
+    from smart_meter_data_pipeline_spark.operators import curation
 
     for fn in (
         tpch.orders_cohort_ltv,
@@ -767,7 +647,6 @@ def test_new_rollups_no_cartesian_no_python(spark, sf_dir):
         extended.events_daily_metrics_long,
         curation.quality_filter_ablation,
         curation.source_lang_simpson,
-        graph.trade_label_propagation,
         text.doc_lm_commonness,
         text.doc_hashed_ngram_score,
         text.doc_char_ngram_diversity,
@@ -806,16 +685,6 @@ def test_prefix_filter_join_no_cartesian_no_python(spark, sf_dir):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
-def test_matryoshka_windows_partition_by_query(spark, sf_dir):
-    """Both rankings partition by query_id — no global single-partition
-    sort funnels the corpus through one task."""
-    from smart_meter_data_pipeline_spark.operators import similarity
-
-    p = _plan(similarity.embedding_matryoshka_recall(spark, sf_dir))
-    assert "Exchange SinglePartition" not in p.split("AdaptiveSparkPlan")[0]
-    assert "CartesianProduct" not in p
 
 
 def test_k_anonymity_two_rollups_one_scan(spark, sf_dir):
@@ -933,18 +802,6 @@ def test_kfold_and_l_diversity_single_scan_no_join(spark, sf_dir):
         assert "Exchange SinglePartition" not in p, fn.__name__
 
 
-def test_common_neighbors_capped_equi_join_take_ordered(spark, sf_dir):
-    """Candidate pairs come from a customer-key equi-join over the
-    hub-capped edge list; the final cut is TakeOrdered."""
-    from smart_meter_data_pipeline_spark.operators import graph
-
-    p = _plan(graph.trade_common_neighbors(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "TakeOrderedAndProject" in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
 def test_reservoir_window_partitioned_lix_pure_scan(spark, sf_dir):
     from smart_meter_data_pipeline_spark.operators import curation
 
@@ -999,25 +856,6 @@ def test_haar_levels_run_on_checkpointed_rollup(spark, sf_dir):
     assert "ExistingRDD" in p
     assert p.count("Scan parquet  (") == 0
     assert "CartesianProduct" not in p
-
-
-def test_knn_loo_registered_plan_has_no_all_pairs_self_join(spark, sf_dir):
-    """Round-9 ask: the shipped LOO eval must route a FIXED query
-    sample through the IVF index. With auto-broadcast off, an
-    all-pairs formulation surfaces as a CartesianProduct (or a
-    nested-loop join whose only condition is the <> inequality);
-    the scale-safe plan instead carries the corpus⋈probes candidate
-    join as an equi-join on cell_id, and its only nested-loop joins
-    are the two hinted broadcasts of the bounded centroid set."""
-    p = _plan(similarity.embedding_knn_loo_accuracy(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "cell_id" in p  # the equi-join key survives into the plan
-    # both nested-loop sites are the hinted centroid broadcasts (<=64
-    # rows by construction); an all-pairs corpus join would add a third.
-    # Count tree nodes only (formatted explain repeats each node in the
-    # details section).
-    tree = p.split("\n\n")[0]
-    assert tree.count("BroadcastNestedLoopJoin") <= 2
 
 
 def test_range_join_bucketized_is_equi_join_not_nested_loop(spark, sf_dir):
@@ -1152,9 +990,9 @@ def test_tou_billing_two_level_agg_no_global_window(spark, sf_dir):
     shuffle: no single-partition exchange (a global window over the
     fact would funnel every meter through one task), no cartesian,
     no Python in the hot path."""
-    from smart_meter_data_pipeline_spark.operators import meter_pipeline
+    from smart_meter_data_pipeline_spark.operators import meter_queries
 
-    p = _plan(meter_pipeline.meter_tou_billing(spark, sf_dir))
+    p = _plan(meter_queries.meter_tou_billing(spark, sf_dir))
     assert "Exchange SinglePartition" not in p
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p
@@ -1169,30 +1007,6 @@ def test_dr_baseline_fact_collapses_before_join(spark, sf_dir):
     p = _plan(events_pipeline.events_dr_baseline(spark, sf_dir))
     assert p.count("Scan parquet  (") == 0
     assert "Exchange SinglePartition" not in p
-
-
-def test_sq_recall_broadcasts_scales_and_queries(spark, sf_dir):
-    """SQ8 scoring must broadcast the 1-row scales array and the tiny
-    query side — the corpus never shuffles for the join — and stay
-    JVM-side (quantize/dot are transform/aggregate exprs, no Python)."""
-    p = _plan(similarity.embedding_sq_recall(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p
-    assert "Exchange SinglePartition" not in p
-    assert "BatchEvalPython" not in p
-
-
-def test_ivf_sq8_broadcasts_probes_no_python(spark, sf_dir):
-    """The combined IVF x SQ8 rung: centroids/probes/scales ride
-    broadcasts, candidates come from an equi-join on cell_id (never a
-    cartesian against the corpus), ranking partitions per query —
-    no single-partition exchange, no Python in the hot path."""
-    from smart_meter_data_pipeline_spark.operators import similarity
-
-    p = _plan(similarity.ann_ivf_sq8_recall(spark, sf_dir))
-    assert "CartesianProduct" not in p
-    assert "Exchange SinglePartition" not in p
-    assert "BatchEvalPython" not in p
 
 
 def test_gap_interpolate_windows_stay_per_meter(spark, sf_dir):

@@ -334,50 +334,6 @@ def test_shard_pack_partitions_exactly_and_bounds_overflow(
 
 
 @given(
-    edges=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=12),
-            st.integers(min_value=13, max_value=25),
-        ),
-        min_size=1,
-        max_size=60,
-    ),
-    k=st.integers(min_value=1, max_value=4),
-)
-@settings(**_SETTINGS)
-@pytest.mark.slow
-def test_kcore_peel_round_invariants(spark, edges, k):
-    """One peel round on an arbitrary bipartite edge list: the
-    surviving edge set (a) is a subset of the input, (b) contains
-    only edges whose BOTH endpoints met the degree threshold in the
-    INPUT graph — exactly the fixed-round semantics trade_kcore
-    unrolls."""
-    uniq = sorted(set(edges))
-    df = spark.createDataFrame(uniq, "u long, v long")
-    deg = (
-        df.select(F.col("u").alias("node"))
-        .unionAll(df.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    keep = deg.filter(F.col("deg") >= k).select("node")
-    out = (
-        df.join(keep, df.u == keep.node, "left_semi")
-        .join(keep, df.v == keep.node, "left_semi")
-        .collect()
-    )
-    got = {(r["u"], r["v"]) for r in out}
-    from collections import Counter
-
-    d = Counter()
-    for u, v in uniq:
-        d[u] += 1
-        d[v] += 1
-    expect = {(u, v) for u, v in uniq if d[u] >= k and d[v] >= k}
-    assert got == expect
-
-
-@given(
     vals=st.lists(
         st.floats(
             min_value=-1e6,

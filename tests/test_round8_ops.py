@@ -1,8 +1,7 @@
 """Invariant tests for the round-8 late additions: winnowing density
-bounds, count-min's never-underestimate guarantee, label-propagation
-well-formedness + determinism, edit-distance verify bounds, Markov
-stationary mass conservation, and the skew report's order-statistic
-ordering. These pin ALGORITHM properties the oracle hash can't express
+bounds, count-min's never-underestimate guarantee, edit-distance
+verify bounds, Markov stationary mass conservation, and the skew
+report's order-statistic ordering. These pin ALGORITHM properties the oracle hash can't express
 (the hash proves engine agreement, not that the algorithm satisfies
 its own contract)."""
 
@@ -20,9 +19,6 @@ from smart_meter_data_pipeline_spark.operators.dedup import (
 from smart_meter_data_pipeline_spark.operators.extended import (
     events_key_skew_report,
     events_markov_stationary,
-)
-from smart_meter_data_pipeline_spark.operators.graph import (
-    trade_label_propagation,
 )
 from smart_meter_data_pipeline_spark.operators.text import (
     WINNOW_W,
@@ -66,34 +62,6 @@ def test_countmin_never_underestimates(spark, sf_dir):
     for r in rows:
         assert r["cms_estimate"] >= r["exact_count"] > 0
         assert r["overestimate"] == r["cms_estimate"] - r["exact_count"]
-
-
-def test_label_propagation_well_formed_and_deterministic(spark, sf_dir):
-    """Communities must be labeled by real node ids, sizes must sum to
-    the node count and agree with the per-label row counts, and two
-    runs must produce identical assignments (the deterministic
-    tie-break is the point of the min-label rule)."""
-    df = trade_label_propagation(spark, sf_dir)
-    rows = df.collect()
-    assert rows
-    nodes = {
-        (2 * r["node_id"] if r["node_type"] == "customer" else 2 * r["node_id"] + 1)
-        for r in rows
-    }
-    labels = {r["community_id"] for r in rows}
-    assert labels <= nodes  # every label is a live node's id
-    from collections import Counter
-
-    per_label = Counter(r["community_id"] for r in rows)
-    for r in rows:
-        assert r["community_size"] == per_label[r["community_id"]]
-    again = sorted(
-        (r["node_type"], r["node_id"], r["community_id"])
-        for r in trade_label_propagation(spark, sf_dir).collect()
-    )
-    assert again == sorted(
-        (r["node_type"], r["node_id"], r["community_id"]) for r in rows
-    )
 
 
 def test_edit_distance_pairs_bounds(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Invariant tests for the second wave of late round-8 operators:
-recall bounds, silhouette range, triplet distinctness, KS range,
+triplet distinctness, KS range,
 equi-depth bin monotonicity/population balance, backlog conservation,
 cross-correlation range, and the delivery-variance identity."""
 
@@ -14,32 +14,10 @@ from smart_meter_data_pipeline_spark.operators.extended import (
 from smart_meter_data_pipeline_spark.operators.dedup import (
     train_contrastive_triplets,
 )
-from smart_meter_data_pipeline_spark.operators.similarity import (
-    ann_recall_report,
-    kmeans_silhouette,
-)
 from smart_meter_data_pipeline_spark.operators.tpch import (
     orders_open_backlog,
     supplier_delivery_consistency,
 )
-
-
-def test_recall_report_bounds(spark, sf_dir):
-    rows = ann_recall_report(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["n_hits"] <= min(r["k_brute"], r["k_lsh"])
-        assert 0 <= r["recall_micro"] <= 1_000_000
-
-
-def test_silhouette_range_and_membership(spark, sf_dir):
-    rows = kmeans_silhouette(spark, sf_dir).collect()
-    assert rows
-    total = sum(r["n_members"] for r in rows)
-    n_vec = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    assert total == n_vec  # every vector scored exactly once
-    for r in rows:
-        assert 0 <= r["mean_silhouette_milli"] <= 1000
 
 
 def test_triplets_are_distinct_and_resolved(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Invariant tests for the third wave of late round-8 operators: HLL
 register bounds, min-merge signature bounds, chi-square accounting,
-densification conservation, migration-matrix accounting, Welch t
+migration-matrix accounting, Welch t
 finiteness, and price-index sanity."""
 
 from __future__ import annotations
@@ -12,9 +12,6 @@ from smart_meter_data_pipeline_spark.operators.extended import (
     HLL_RHO_NIBBLES,
     events_hll_registers,
     events_welch_ttest,
-)
-from smart_meter_data_pipeline_spark.operators.graph import (
-    trade_graph_densification,
 )
 from smart_meter_data_pipeline_spark.operators.tpch import (
     BASE_YEAR,
@@ -50,16 +47,6 @@ def test_chi2_accounting(spark, sf_dir):
     assert all(r["chi2_total_milli"] == total for r in rows)
     assert sum(r["chi2_contrib_milli"] for r in rows) == total
     assert all(r["chi2_contrib_milli"] >= 0 for r in rows)
-
-
-def test_densification_conserves(spark, sf_dir):
-    rows = trade_graph_densification(spark, sf_dir).collect()
-    assert rows
-    rows.sort(key=lambda r: r["m"])
-    for r in rows:
-        assert r["n_new_edges"] + r["n_repeat_edges"] == r["n_active_edges"]
-    # the first month has no history: everything is new
-    assert rows[0]["n_repeat_edges"] == 0
 
 
 def test_migration_matrix_accounts_for_every_customer(spark, sf_dir):

@@ -171,26 +171,6 @@ def test_l_diversity_accounts_for_every_row(spark, sf_dir):
         assert r["distinct_sensitive"] <= 5
 
 
-def test_common_neighbors_scores_consistent(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.graph import (
-        LINKPRED_TOP_K,
-        RA_SCALE,
-        trade_common_neighbors,
-    )
-
-    rows = trade_common_neighbors(spark, sf_dir).collect()
-    assert 0 < len(rows) <= LINKPRED_TOP_K
-    for r in rows:
-        assert r["s_a"] < r["s_b"]
-        assert 1 <= r["common"] <= min(r["deg_a"], r["deg_b"])
-        # each shared customer contributes at most RA_SCALE (deg>=1)
-        assert 0 < r["ra_micro"] <= r["common"] * RA_SCALE
-        assert 0 <= r["jaccard_milli"] <= 1000
-    # ranking respects the declared total order
-    keys = [(-r["common"], -r["ra_micro"], r["s_a"], r["s_b"]) for r in rows]
-    assert keys == sorted(keys)
-
-
 def test_reservoir_per_key_exact_k_and_uniformish(spark, sf_dir):
     from smart_meter_data_pipeline_spark.operators.curation import (
         RESERVOIR_K,
@@ -339,18 +319,6 @@ def test_did_identity_and_mde_positive(spark, sf_dir):
         assert x["sum_y2_cents"] * (x["n_users"] + mde["A"]["n_users"]) >= 0
 
 
-def test_assortativity_in_range_and_disassortative(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.graph import (
-        trade_assortativity,
-    )
-
-    r = trade_assortativity(spark, sf_dir).collect()[0]
-    assert r["assortativity"] is not None
-    assert -1.0 <= r["assortativity"] <= 1.0
-    assert r["n_edge_instances"] > 0
-    assert r["deg_sq_sum"] >= r["deg_sum"]
-
-
 def test_vad_segments_are_maximal_runs(spark, sf_dir):
     from smart_meter_data_pipeline_spark.operators.multimodal import (
         multimodal_vad_segments,
@@ -399,30 +367,6 @@ def test_haar_energy_parseval_consistent(spark, sf_dir):
             assert r["detail_energy"] >= 0
     # detail energy exists somewhere (the series is not constant)
     assert sum(r["detail_energy"] for r in rows) > 0
-
-
-def test_hits_scores_normalized_and_ranked(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.graph import (
-        HITS_SCALE,
-        HITS_TOP_K,
-        trade_hits_scores,
-    )
-
-    rows = trade_hits_scores(spark, sf_dir).collect()
-    by_role = {}
-    for r in rows:
-        by_role.setdefault(r["role"], []).append(r)
-    assert set(by_role) == {"hub", "authority"}
-    for role, rs in by_role.items():
-        # a side smaller than K (tiny SFs) yields its full node set
-        assert 0 < len(rs) <= HITS_TOP_K
-        scores = [r["score_micro"] for r in rs]
-        # max-normalized: the top score is exactly the scale
-        assert scores[0] <= HITS_SCALE
-        assert max(scores) == HITS_SCALE
-        assert all(0 < s <= HITS_SCALE for s in scores)
-        keys = [(-r["score_micro"], r["node_id"]) for r in rs]
-        assert keys == sorted(keys)
 
 
 def test_spc_flags_rare_and_integer_consistent(spark, sf_dir):
@@ -523,32 +467,3 @@ def test_anova_decomposition_consistent(spark, sf_dir):
     expect_f = (r0["ssb_days2"] / (k - 1)) / (r0["ssw_days2"] / (n - k))
     assert abs(f - expect_f) < 1e-6
 
-
-def test_ppr_concentrates_on_seed_neighborhood(spark, sf_dir):
-    """PPR mass must concentrate near the seed nation's suppliers:
-    every returned node has positive rank, seeds' suppliers appear,
-    and the ranking respects the declared total order."""
-    from smart_meter_data_pipeline_spark.operators.graph import (
-        PPR_SEED_NATION,
-        PPR_TOP_K,
-        trade_personalized_pagerank,
-    )
-    from pyspark.sql import functions as F
-
-    rows = trade_personalized_pagerank(spark, sf_dir).collect()
-    assert 0 < len(rows) <= PPR_TOP_K
-    assert all(r["rank_micro"] > 0 for r in rows)
-    keys = [
-        (-r["rank_micro"], r["node_type"], r["node_id"]) for r in rows
-    ]
-    assert keys == sorted(keys)
-    seed_supps = {
-        r["s_suppkey"]
-        for r in load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_nationkey") == PPR_SEED_NATION)
-        .collect()
-    }
-    top_suppliers = {
-        r["node_id"] for r in rows if r["node_type"] == "supplier"
-    }
-    assert top_suppliers & seed_supps, "no seed supplier in the top-k"

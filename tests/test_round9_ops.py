@@ -1,59 +1,13 @@
-"""Round-9 additions: the scale-safe kNN-LOO eval and its brute twin."""
+"""Round-9 additions: Holt forecast and Fellegi-Sunter linkage."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
-
-from smart_meter_data_pipeline_spark.operators import similarity
-from tests.oracle import assert_parity, run_oracle
-
-
-@pytest.mark.slow
-def test_knn_loo_brute_matches_its_oracle(spark, sf_dir):
-    """The exhaustive O(n²) LOO eval is no longer registered (its plan
-    is not scale-safe) but stays the ground-truth cross-check: it must
-    still hash-match its DuckDB twin."""
-    df = similarity.embedding_knn_loo_brute(spark, sf_dir)
-    oracle = run_oracle(similarity._KNN_LOO_BRUTE_ORACLE, sf_dir)
-    assert_parity(df, oracle, "embedding_knn_loo_brute")
-
-
-def test_knn_loo_registered_covers_every_label(spark, sf_dir):
-    """The fixed query sample must be label-diverse enough to grade
-    every class: the registered IVF-sampled eval should emit one row
-    per label present in the table, with sane integer accuracies."""
-    out = {
-        r["true_label"]: r
-        for r in similarity.embedding_knn_loo_accuracy(spark, sf_dir).collect()
-    }
-    labels = {
-        r[0]
-        for r in similarity.load_table(spark, sf_dir, "embeddings")
-        .select("label")
-        .distinct()
-        .collect()
-    }
-    assert set(out) == labels
-    for r in out.values():
-        assert 0 <= r["n_correct"] <= r["n"]
-        assert 0 <= r["accuracy_milli"] <= 1000
-
-
-def test_knn_loo_sample_is_constant_bounded(spark, sf_dir):
-    """The query side must be a fixed-size sample (<= KNN_LOO_NQ) at
-    ANY corpus scale — the property that keeps the probe set
-    broadcastable at 100 TB."""
-    emb = similarity.load_table(spark, sf_dir, "embeddings")
-    n_q = emb.filter(similarity._knn_loo_query_pred()).count()
-    assert 0 < n_q <= similarity.KNN_LOO_NQ
 
 
 def test_round9_new_plans_no_cartesian(spark, sf_dir):
     """The round-9 operators must never degrade to a cartesian
-    product; MMR's only nested-loop joins are the 1-row query / 10-row
-    candidate broadcasts."""
+    product."""
     import contextlib
     import io
 
@@ -67,7 +21,6 @@ def test_round9_new_plans_no_cartesian(spark, sf_dir):
 
     for fn in (
         extended.events_holt_forecast,
-        similarity.embedding_mmr_select,
         dedup.dedup_fellegi_sunter,
     ):
         assert "CartesianProduct" not in plan(fn(spark, sf_dir)), fn.__name__

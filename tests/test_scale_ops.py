@@ -159,20 +159,6 @@ def test_prefix_filter_join_exact_recall(spark, sf_dir):
     assert got  # planted near-dups must surface at the test SF
 
 
-def test_matryoshka_recall_bounds(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        N_QUERIES,
-        TOP_K,
-        embedding_matryoshka_recall,
-    )
-
-    rows = embedding_matryoshka_recall(spark, sf_dir).collect()
-    assert len(rows) == N_QUERIES
-    for r in rows:
-        assert 0 <= r["n_common"] <= TOP_K
-        assert r["recall_milli"] == (1000 * r["n_common"]) // TOP_K
-
-
 def test_k_anonymity_accounting(spark, sf_dir):
     from smart_meter_data_pipeline_spark.operators.curation import (
         K_ANONYMITY,
@@ -221,31 +207,6 @@ def test_ab_srm_accounting(spark, sf_dir):
     assert len(chi2) == 1  # same global statistic on both rows
     n_a = next(r["n_users"] for r in rows if r["arm"] == "A")
     assert chi2.pop() == (1_000_000 * (2 * n_a - n_users) ** 2) // n_users
-
-
-def test_rank_fusion_union_and_monotonic(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.similarity import (
-        FUSION_TOP_K,
-        RRF_K,
-        doc_rank_fusion,
-    )
-
-    rows = doc_rank_fusion(spark, sf_dir).collect()
-    assert rows
-    by_q: dict = {}
-    for r in rows:
-        assert r["in_bm25"] or r["in_ann"]  # fused docs come from a list
-        assert 1 <= r["fused_rank"] <= FUSION_TOP_K
-        # both-list docs can reach 2/(K+1); single-list caps at 1/(K+1)
-        cap = (2 if (r["in_bm25"] and r["in_ann"]) else 1) * (
-            1_000_000 // (RRF_K + 1)
-        )
-        assert 0 < r["rrf_micro"] <= cap
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rs in by_q.items():
-        rs.sort(key=lambda r: r["fused_rank"])
-        scores = [r["rrf_micro"] for r in rs]
-        assert scores == sorted(scores, reverse=True)
 
 
 def test_independence_chi2_reference_value(spark, sf_dir):

@@ -638,7 +638,15 @@ def test_read_where_in_selectivity_bypass(spark, tmp_path, monkeypatch):
         analyze_table,
     )
 
-    t, df = _tbl(spark, tmp_path)
+    # The bypass compares the estimate with the live file count, which
+    # follows the session's shuffle partitions; other tests (the CLI's
+    # get_spark) may have changed them, so pin the fixture's value.
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        t, df = _tbl(spark, tmp_path)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     refresh_index(t, spark, "meter_id")
     analyze_table(t, spark, columns=["meter_id"])
     calls = []

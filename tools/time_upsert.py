@@ -1,7 +1,7 @@
-"""Isolated timing of the manifest CoW-upsert legs (bench.py's setup,
-reduced): land the simulated day in a manifest table, restate 10% of
-meters (manifest_upsert_10pct shape), then the clustered narrow
-restatement. Prints per-leg seconds."""
+"""Isolated timing of the manifest CoW-upsert legs: land the simulated
+day in a manifest table, restate 10% of meters (manifest_upsert_10pct
+shape), then the clustered narrow restatement. Prints per-leg
+seconds."""
 
 from __future__ import annotations
 
