@@ -6,8 +6,11 @@ TimescaleDB → dbt), re-expressed idiomatically on Apache Spark:
 
 - DataFrame / Spark SQL for all query processing (Catalyst optimizes;
   no hand-built executor),
-- Structured Streaming for the ingest path (checkpointing + idempotent
-  merge replaces manual offset commit + ``ON CONFLICT DO NOTHING``),
+- Structured Streaming for the ingest path (checkpointing + an
+  idempotent ``foreachBatch`` append replaces manual offset commit +
+  ``ON CONFLICT DO NOTHING``), through one of two sinks: a
+  flock-serialized parquet append on POSIX storage, or the manifest
+  commit log on object stores,
 - Parquet columnar storage partitioned by date (replaces TimescaleDB
   1-day hypertable chunks + columnar compression),
 - beyond-reference LLM-data-pipeline operators (dedup, text analysis,

@@ -1626,9 +1626,8 @@ def user_value_rank_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note (rebuilt round 10): NTILE is a global CONSTRUCT but no
     longer a global WINDOW — the row number comes from the
     range-partitioned two-pass prefix sum
-    (:func:`common.distributed_row_number`, the orders_rfm_segments
-    machinery), and NTILE / PERCENT_RANK / CUME_DIST are closed forms
-    of (row_number, n): exact engine NTILE semantics via
+    (:func:`common.distributed_row_number`), and NTILE / PERCENT_RANK /
+    CUME_DIST are closed forms of (row_number, n): exact engine NTILE semantics via
     :func:`common.ntile_sql`, ``(r−1)/(n−1)`` and ``r/n`` for the
     rank fractions (the ordering is TOTAL — user_id tiebreak — so
     rank == row_number and every engine agrees). Zero Exchange
@@ -4400,8 +4399,8 @@ def events_type_hour_independence_chi2(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Pearson chi-square test of INDEPENDENCE between event type and
-    hour-of-day — the two-way companion of the one-way uniformity
-    test (orders_dow_uniformity_chi2): does traffic mix shift by hour
+    hour-of-day — the two-way companion of a one-way uniformity
+    test: does traffic mix shift by hour
     (chi2 ≫ critical at df=(r−1)(c−1)) or is the type share
     hour-invariant? Uses the algebraic identity
     chi2 = n·(Σ_ij n_ij²/(r_i·c_j) − 1), whose per-cell ratio is

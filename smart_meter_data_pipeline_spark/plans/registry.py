@@ -135,9 +135,6 @@ _PRIORITY = [
     "user_retention_sets",
     "user_weekly_wow_change",
     "validation_summary",
-    "basket_part_pairs",
-    "nation_trade_reciprocity",
-    "tpch_promo_revenue",
     "corpus_dedup_rate_by_source",
     "corpus_heavy_hitters",
     "dedup_cluster_size_dist",
@@ -161,8 +158,6 @@ _PRIORITY = [
     "meter_sim_source_scan",
     "mixture_rebalance",
     "nation_daily_peak_hour",
-    "nation_trade_balance",
-    "part_supplier_hhi",
     "referential_integrity_audit",
     "stream_drift_report",
     "stream_full_outer_interval_join",
@@ -174,25 +169,13 @@ _PRIORITY = [
     "stream_semi_interval_join",
     "stream_sessionized_timeout",
     "stream_topk_users",
-    "tpch_large_orders",
-    "tpch_priority_checks",
-    "tpch_top_supplier",
     "user_value_trend",
     "vocab_oov_rate",
     "doc_vocab_growth",
     "manifest_cow_roundtrip",
     "manifest_optimize_roundtrip",
-    "stream_restatement_upsert",
-    "tpch_volume_shipping",
-    "tpch_returned_items",
-    "tpch_market_share",
-    "nation_self_sufficiency",
-    "tpch_disjunctive_revenue",
-    "tpch_supplier_part_variety",
-    "tpch_small_qty_revenue",
     "approx_sketch_check",
     "corpus_quality_report",
-    "customer_value_gini",
     "dedup_clusters",
     "dedup_minhash_lsh",
     "dedup_ngram_containment",
@@ -217,14 +200,9 @@ _PRIORITY = [
     "first_last_readings",
     "meter_quality_incidents",
     "missing_readings",
-    "orders_gap_stats",
-    "part_brand_price_dispersion",
     "source_temperature_sample",
     "stream_score_zscore",
     "stream_sliding_windows",
-    "supplier_revenue_pareto",
-    "tpch_order_count_dist",
-    "tpch_sales_opportunity",
     "batch_billing_incremental",
     "corpus_shard_manifest",
     "corpus_token_freq",
@@ -238,14 +216,10 @@ _PRIORITY = [
     "doc_span_dedup",
     "multimodal_features",
     "multimodal_resize",
-    "nation_revenue",
-    "orders_above_customer_avg",
     "pack_training_sequences",
-    "pricing_summary",
     "quality_filter_chain",
     "sample_stratified",
     "source_quota_cap",
-    "top_revenue_orders",
     "train_val_test_split",
     "manifest_restore_roundtrip",
     "manifest_change_feed",
@@ -253,9 +227,6 @@ _PRIORITY = [
     "stream_dq_monitor",
     "stream_cusum_changepoint",
     "dq_expectations_report",
-    "tpch_lone_late_supplier",
-    "tpch_idle_rich_customers",
-    "tpch_forecast_revenue",
     "events_mad_outliers",
     "events_exact_median_2pass",
     "events_sax_symbols",
@@ -266,20 +237,17 @@ _PRIORITY = [
     "doc_bigram_fluency",
     "corpus_bpe_merge_candidates",
     "multimodal_shard_pack",
-    "orders_gap_survival",
     "nation_load_duration_curve",
     # (r13-evaluated) round-13 driver window — 50/50 hash-match
     # (minus the two promoted into (r14-changed) above):
     "manifest_index_point_read",
     "stream_dr_baseline",
-    "stream_index_maintenance",
     "manifest_index_gc_roundtrip",
     "manifest_delete_by_value",
     "corpus_text_index_search",
     "stream_text_index_maintenance",
     "catalog_multi_table_txn",
     "catalog_branch_wap",
-    "stream_catalog_txn",
     "catalog_tag_read",
     "manifest_skipping_read",
     "manifest_bloom_read",
@@ -322,19 +290,15 @@ _PRIORITY = [
     "stream_grid_ramp_rates",
     "manifest_consistent_snapshot",
     "events_forecast_model_select",
-    "nation_revenue_concentration",
     "sample_neyman_allocation",
     "corpus_pack_boundary_report",
     # (r12-evaluated, ex r11-new) first driver rows r12:
     "manifest_upsert_partial_roundtrip",
-    "stream_upsert_if_newer",
     "manifest_upsert_if_newer_roundtrip",
     "manifest_branch_wap",
-    "stream_branch_wap",
     "manifest_hilbert_roundtrip",
     "manifest_identity_append",
     "events_ols_trend",
-    "part_croston_forecast",
     "multimodal_dup_scenes",
     "events_dp_release",
     "meter_tou_billing",
@@ -354,53 +318,35 @@ _PRIORITY = [
     "doc_lm_commonness",
     "doc_hashed_ngram_score",
     "doc_winnowing",
-    "tpch_important_parts",
-    "tpch_min_cost_supplier",
     "dedup_edit_distance",
     "events_motif_vcp",
-    "orders_cohort_ltv",
     "corpus_countmin_estimate",
     "events_key_skew_report",
     "quality_filter_ablation",
-    "tpch_late_by_priority",
-    "orders_open_backlog",
-    "region_nation_revenue_share",
     "train_contrastive_triplets",
     "stream_motif_vcp",
     "source_lang_simpson",
-    "nation_repeat_customer_rate",
     "events_ks_distance",
     "events_daily_metrics_long",
     "doc_char_ngram_diversity",
     "multimodal_dup_groups",
     "events_type_crosscorr",
     "events_value_equidepth_bins",
-    "supplier_delivery_consistency",
     "events_attribution_last_touch",
-    "lineitem_price_index",
     "corpus_token_collocation",
-    "tpch_product_profit",
     "events_user_streaks",
     "doc_maxcover_selection",
     "events_hll_registers",
     "stream_hll_registers",
     "events_hll_daily_rollup",
     "corpus_source_minhash_jaccard",
-    "customer_value_migration",
-    "orders_dow_uniformity_chi2",
-    "part_price_size_skyline",
     "events_welch_ttest",
-    "orders_cumulative_customers",
     "corpus_tokenizer_fertility",
     # (r10-evaluated) round-10 driver window — 50/50 hash-match
-    "orders_rfm_segments",
-    "part_abc_analysis",
-    "customer_rfm_segments",
     "user_value_rank_bands",
     "meter_load_factor",
     "meter_diversity_factor",
     "events_user_archetypes",
-    "orders_growth_accounting",
     "manifest_tag_read",
     "lineitem_bloom_semijoin",
     "dedup_prefix_filter_join",
@@ -429,18 +375,14 @@ _PRIORITY = [
     "events_cuped_adjustment",
     "events_diff_in_diff",
     "events_ab_mde",
-    "part_demand_curve",
     "stream_jsonl_sink_roundtrip",
     "meter_peak_shaving",
     "events_haar_energy",
     "events_spc_xbar_r",
     "corpus_kmv_distinct",
     "events_attribution_position",
-    "nation_product_complexity",
     # (r11-evaluated) round-11 driver window — 50/50 hash-match
     # (minus the three promoted into (r12-changed) above)
-    "lineitem_leadtime_anova",
-    "tpch_nation_yoy_growth",
     "events_rolling_active_users",
     "corpus_bigram_coverage",
     "nation_peak_coincidence",
@@ -448,7 +390,6 @@ _PRIORITY = [
     "corpus_zipf_check",
     "events_user_type_gini",
     "events_dow_hour_matrix",
-    "orders_seasonal_index",
     "doc_length_magnitude_profile",
     "corpus_dsir_sample",
     "doc_suffix_dup",
@@ -497,7 +438,6 @@ def load_all() -> None:
         events_pipeline,
         extended,
         meter_queries,
-        tpch,
         dedup,
         text,
         multimodal,

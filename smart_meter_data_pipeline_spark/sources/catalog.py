@@ -442,8 +442,8 @@ def optimize_catalog_table(
     cluster_by: list[str] | None = None,
 ) -> dict:
     """OPTIMIZE for a CATALOG table (round 13) — the small-file
-    compaction the chain-resolved world was missing: the streaming
-    ``catalog_txn`` sink lands one file set per micro-batch, and at a
+    compaction the chain-resolved world was missing: a streaming
+    transaction sink lands one file set per micro-batch, and at a
     100 TB catalog those accumulate just like manifest micro-batch
     ingest. Live files under ``small_file_bytes`` are read once,
     rewritten right-sized (optionally range-clustered on

@@ -165,7 +165,7 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
     MATCHED THEN INSERT`` with the same partition-pruning predicate, and
     the table format's log replaces the filesystem lock. For object
     stores, where no filesystem mutex exists, use
-    :func:`~..sources.manifest.idempotent_append_manifest` — the same
+    :meth:`~..sources.manifest.ManifestTable.idempotent_append` — the same
     guarantee through an optimistic commit log instead of a lock.
     """
     from smart_meter_data_pipeline_spark.sources.txn import table_lock

@@ -2545,15 +2545,6 @@ class ManifestTable:
         return fresh, fresh.count()
 
 
-def idempotent_append_manifest(
-    spark: SparkSession, batch: DataFrame, table_dir: str
-) -> int:
-    """Function-style entry point mirroring
-    :func:`~.ingest.idempotent_append`, but through the commit log —
-    use this form when the target is an object store."""
-    return ManifestTable(table_dir).idempotent_append(spark, batch)
-
-
 def compact_log(table: ManifestTable, keep_last: int = 10) -> int:
     """Log compaction — the Delta-checkpoint move that keeps commit
     metadata BOUNDED: all commits except the newest ``keep_last`` are

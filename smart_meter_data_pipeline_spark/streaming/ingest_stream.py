@@ -37,6 +37,7 @@ from smart_meter_data_pipeline_spark.sources.ingest import (
     idempotent_append,
     split_valid,
 )
+from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
 
 
 def read_message_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -51,6 +52,9 @@ def read_message_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
+SINKS = ("lock", "manifest")
+
+
 def start_ingest_stream(
     spark: SparkSession,
     source_dir: str,
@@ -59,16 +63,17 @@ def start_ingest_stream(
     available_now: bool = True,
     quarantine_target: str | None = None,
     sink: str = "lock",
-    version_col: str = "reading_consumption_milliwatts",
-    branch: str | None = None,
-    index_column: str | None = None,
 ) -> StreamingQuery:
     """readStream → classify → observe → foreachBatch idempotent append.
 
     Invalid messages are not dropped: with ``quarantine_target`` they
-    are appended (with ``batch_id``) to a quarantine table — the
-    streaming twin of the batch path's quarantine DataFrame. Either
-    way, per-batch consumed/rejected counts are attached with
+    land in a quarantine table — the streaming twin of the batch
+    path's quarantine DataFrame. Each micro-batch overwrites its own
+    directory ``query_id=<stream id>/batch_id=<n>``, so a batch
+    replayed after a crash rewrites its rows instead of adding them
+    again, and streams sharing the target keep apart; reading the
+    target as parquet yields ``query_id`` and ``batch_id`` columns.
+    Either way, per-batch consumed/rejected counts are attached with
     ``observe("ingest", ...)`` so they surface in every progress event
     (``observedMetrics``; the reference counts failures in its stats
     loop, consumer/meter_consumer.py:282-283).
@@ -77,62 +82,10 @@ def start_ingest_stream(
 
     - ``"lock"``: flock-serialized anti-join append (POSIX path).
     - ``"manifest"``: put-if-absent commit log (object-store path).
-    - ``"manifest_upsert"``: streaming MERGE — each micro-batch is
-      applied as a copy-on-write upsert (``ManifestTable.upsert``),
-      the sink for RESTATEMENT feeds where re-reads carry corrected
-      values instead of duplicates (insert-only dedup would drop
-      them). Within a batch the latest ``arrived_at`` per PK wins.
-      Replays converge to the same row values (a retried batch
-      rewrites matched rows to the identical post-image), so the
-      exactly-once guarantee holds in effect for all three.
-    - ``"manifest_upsert_if_newer"``: ordering-GUARDED streaming
-      MERGE (``ManifestTable.upsert_if_newer`` on ``version_col``) —
-      the sink for feeds that can arrive OUT OF ORDER across
-      micro-batches (replayed partitions, late redeliveries): a
-      batch row older than the landed row by ``version_col`` is
-      dropped, never regressing newer data — the guarantee plain
-      last-write-wins upsert cannot give once batch order stops
-      matching event order. The default version column is the
-      cumulative consumption register, monotone per meter by
-      construction (meters never run backwards), so a stale baseline
-      replayed AFTER a correction is rejected on value; CDC feeds
-      with an explicit sequence pass it as ``version_col``. Within a
-      batch the largest version per PK wins.
 
-    ``branch`` routes every manifest-family sink's commits into the
-    named BRANCH of the target table (streaming Write-Audit-Publish:
-    the stream lands on an audit branch, main serves untouched until
-    ``fast_forward`` squash-publishes the drained result). Requires a
-    manifest sink; the flock path has no branch concept."""
-    if index_column is not None and (
-        branch is not None
-        or sink
-        not in ("manifest", "manifest_upsert", "manifest_upsert_if_newer")
-    ):
-        raise ValueError(
-            "index_column requires a table-level manifest sink on "
-            f"main (got sink={sink!r}, branch={branch!r}) — the "
-            "posting index lives on the main table and an audit "
-            "branch's files are not visible to it until publish"
-        )
-    if branch is not None and sink not in (
-        "manifest",
-        "manifest_upsert",
-        "manifest_upsert_if_newer",
-        "catalog_txn",
-    ):
-        raise ValueError(
-            f"branch={branch!r} requires a manifest-family sink, "
-            f"got sink={sink!r}"
-        )
-
-    def _open_target(session):
-        from smart_meter_data_pipeline_spark.sources.manifest import (
-            ManifestTable,
-        )
-
-        t = ManifestTable(target)
-        return t.branch(branch) if branch is not None else t
+    Any other value raises ``ValueError`` before a query starts."""
+    if sink not in SINKS:
+        raise ValueError(f"sink must be one of {SINKS}, got {sink!r}")
 
     classified = classify(read_message_stream(spark, source_dir)).observe(
         "ingest",
@@ -146,109 +99,20 @@ def start_ingest_stream(
         # consumed/rejected counts aren't double-counted per pass.
         batch_df.persist()
         try:
+            session = batch_df.sparkSession
             valid, quarantine = split_valid(batch_df)
-            if sink == "manifest_upsert":
-                from pyspark.sql import Window
-
-                from smart_meter_data_pipeline_spark.sources.manifest import (
-                    PK,
-                    ManifestTable,
-                )
-
-                w = Window.partitionBy(*PK).orderBy(
-                    F.col("arrived_at").desc(),
-                    F.col("reading_consumption_milliwatts").desc(),
-                )
-                latest = (
-                    valid.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-                _open_target(batch_df.sparkSession).upsert(
-                    batch_df.sparkSession, latest
-                )
-            elif sink == "manifest_upsert_if_newer":
-                from pyspark.sql import Window
-
-                from smart_meter_data_pipeline_spark.sources.manifest import (
-                    PK,
-                    ManifestTable,
-                )
-
-                w = Window.partitionBy(*PK).orderBy(
-                    F.col(version_col).desc(),
-                    F.col("arrived_at").desc(),
-                )
-                latest = (
-                    valid.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-                _open_target(batch_df.sparkSession).upsert_if_newer(
-                    batch_df.sparkSession, latest, version_col
-                )
-            elif sink == "catalog_txn":
-                # multi-table exactly-once: the batch's fact rows AND
-                # its per-batch ingest-stats row land in ONE catalog
-                # commit, so a replayed batch can neither double-count
-                # stats nor leave stats and data disagreeing — the
-                # metrics-drift problem separate metric sinks have.
-                from smart_meter_data_pipeline_spark.sources.catalog import (
-                    Catalog,
-                )
-
-                session = batch_df.sparkSession
-                cat = Catalog(target)
-                base = (
-                    cat.branch(branch) if branch is not None else cat
-                )
-                txn = base.txn()
-                txn.append(session, "fact", valid)
-                stats_df = session.createDataFrame(
-                    [
-                        (
-                            int(batch_id),
-                            batch_df.count(),
-                            quarantine.count(),
-                        )
-                    ],
-                    "batch_id bigint, consumed bigint, rejected bigint",
-                )
-                txn.append(
-                    session, "ingest_stats", stats_df, pk=["batch_id"]
-                )
-                txn.commit()
-            elif sink == "manifest":
-                _open_target(batch_df.sparkSession).idempotent_append(
-                    batch_df.sparkSession, valid
-                )
+            if sink == "manifest":
+                ManifestTable(target).idempotent_append(session, valid)
             else:
-                idempotent_append(batch_df.sparkSession, valid, target)
-            if index_column is not None:
-                # per-batch secondary-index maintenance: the refresh
-                # is incremental (only this batch's new files scan)
-                # and pk-idempotent, so a replayed batch re-lands
-                # nothing — and a crash BETWEEN commit and refresh
-                # just leaves the index stale, which the read path
-                # serves correctly anyway (unindexed files are read
-                # unconditionally; sources/index.py soundness rule)
-                from smart_meter_data_pipeline_spark.sources.index import (
-                    refresh_index,
-                )
-                from smart_meter_data_pipeline_spark.sources.manifest import (
-                    ManifestTable,
-                )
-
-                refresh_index(
-                    ManifestTable(target),
-                    batch_df.sparkSession,
-                    index_column,
-                )
+                idempotent_append(session, valid, target)
             if quarantine_target is not None:
-                (
-                    quarantine.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("append")
-                    .parquet(quarantine_target)
+                # the checkpoint's query id survives restarts, so a
+                # replayed batch finds the directory it wrote before
+                query_id = session.sparkContext.getLocalProperty(
+                    "sql.streaming.queryId"
+                )
+                quarantine.write.mode("overwrite").parquet(
+                    f"{quarantine_target}/query_id={query_id}/batch_id={batch_id}"
                 )
         finally:
             batch_df.unpersist()

@@ -1817,352 +1817,6 @@ register("stream_meter_sim_totals", _meter_sim_totals_oracle())(
 )
 
 
-def stream_restatement_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MERGE under the hash gate: a baseline delivery and a
-    RESTATEMENT delivery (meters ≡3 mod 7 re-read at +10007
-    milliwatts) drain through the ``manifest_upsert`` foreachBatch
-    sink into one manifest table; the final table must hold exactly
-    one row per PK with the corrected post-image — an insert-only
-    dedup sink would have dropped every correction as a duplicate.
-
-    Last-write-wins is deterministic even when both deliveries land
-    in one micro-batch: the within-batch reducer orders by
-    (arrived_at, consumption) DESC and the restated value is strictly
-    larger. The oracle applies the restatement as a CASE over the
-    generator CTE — any lost correction, duplicate PK, or row the
-    MERGE misrouted breaks the hash."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="smart_meter_restate_")
-    src = os.path.join(workdir, "messages")
-    target = os.path.join(workdir, "fact")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(src)
-    try:
-        readings = gen_meter_readings(spark)
-        _wire_format(readings).select("value").coalesce(4).write.mode(
-            "overwrite"
-        ).text(os.path.join(src, "d1"))
-        restated = readings.filter(F.col("meter_id") % 7 == 3).withColumn(
-            "reading_consumption_milliwatts",
-            F.col("reading_consumption_milliwatts") + F.lit(10007),
-        )
-        _wire_format(restated).select("value").coalesce(2).write.mode(
-            "overwrite"
-        ).text(os.path.join(src, "d2"))
-        q = start_ingest_stream(
-            spark,
-            os.path.join(src, "*", "*.txt"),
-            target,
-            ckpt,
-            available_now=True,
-            sink="manifest_upsert",
-        )
-        q.awaitTermination()
-        final = ManifestTable(target).read(spark).select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _restatement_oracle() -> str:
-    return f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id,
-       CAST(CASE WHEN meter_id % 7 = 3
-                 THEN reading_consumption_milliwatts + 10007
-                 ELSE reading_consumption_milliwatts END AS INT)
-           AS reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings"""
-
-
-register("stream_restatement_upsert", _restatement_oracle())(
-    stream_restatement_upsert
-)
-
-
-def stream_upsert_if_newer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ordering-guarded streaming MERGE under the hash gate — the
-    OUT-OF-ORDER delivery the plain last-write-wins sink gets wrong:
-    the CORRECTED re-reads (meters ≡3 mod 7 at +10007) arrive in the
-    FIRST drain, the full stale baseline replays in a SECOND drain
-    over the same checkpoint (a replayed partition / late
-    redelivery). ``sink="manifest_upsert_if_newer"`` guards every
-    merge on the cumulative consumption register (monotone per meter
-    — meters never run backwards), so the stale baseline rows for
-    corrected meters are DROPPED on value while every other meter
-    inserts normally; ``manifest_upsert`` in this delivery order
-    would regress the corrections. Same oracle as
-    ``stream_restatement_upsert``: the end state must be identical
-    whichever order the deliveries arrived in."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="smart_meter_ifnewer_")
-    src = os.path.join(workdir, "messages")
-    target = os.path.join(workdir, "fact")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(src)
-    try:
-        readings = gen_meter_readings(spark)
-        restated = readings.filter(F.col("meter_id") % 7 == 3).withColumn(
-            "reading_consumption_milliwatts",
-            F.col("reading_consumption_milliwatts") + F.lit(10007),
-        )
-        glob = os.path.join(src, "*", "*.txt")
-        # drain 1: ONLY the corrections
-        _wire_format(restated).select("value").coalesce(2).write.mode(
-            "overwrite"
-        ).text(os.path.join(src, "d_fix"))
-        q = start_ingest_stream(
-            spark, glob, target, ckpt,
-            available_now=True, sink="manifest_upsert_if_newer",
-        )
-        q.awaitTermination()
-        # drain 2: the stale full baseline replays AFTER the fix
-        _wire_format(readings).select("value").coalesce(4).write.mode(
-            "overwrite"
-        ).text(os.path.join(src, "d_stale"))
-        q2 = start_ingest_stream(
-            spark, glob, target, ckpt,
-            available_now=True, sink="manifest_upsert_if_newer",
-        )
-        q2.awaitTermination()
-        final = ManifestTable(target).read(spark).select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register("stream_upsert_if_newer", _restatement_oracle())(
-    stream_upsert_if_newer
-)
-
-
-def stream_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Write-Audit-Publish: the checkpointed ingest stream
-    drains into a manifest BRANCH (``start_ingest_stream(...,
-    branch="staging")``) while main keeps serving the untouched
-    baseline; after the drain passes its audit, ``fast_forward``
-    squash-publishes the whole streamed day as ONE atomic main commit
-    (sources/manifest.py ManifestBranch — the Iceberg WAP pattern a
-    continuously-ingesting 100 TB table uses to gate bad feeds out of
-    the serving path). The feed is delivered TWICE (full redelivery
-    of the same day — at-least-once), so the branch's anti-join dedup
-    across its frozen-prefix + branch view is exercised too; main
-    isolation is asserted mid-flight, and the hash is over the main
-    read after publish."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="smart_meter_swap_")
-    src = os.path.join(workdir, "messages")
-    target = os.path.join(workdir, "fact")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(src)
-    try:
-        readings = gen_meter_readings(spark)
-        t = ManifestTable(target)
-        t.idempotent_append(spark, readings)
-        n_base = readings.count()
-        t.create_branch("staging")
-        next_day = (
-            readings.filter(F.col("meter_id") % 5 == 2)
-            .withColumn(
-                "reading_timestamp",
-                F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-            )
-            .withColumn(
-                "reading_consumption_milliwatts",
-                (
-                    F.col("reading_consumption_milliwatts") + F.lit(333)
-                ).cast("int"),
-            )
-        )
-        for d in ("d1", "d1_redelivery"):
-            _wire_format(next_day).select("value").coalesce(2).write.mode(
-                "overwrite"
-            ).text(os.path.join(src, d))
-        q = start_ingest_stream(
-            spark,
-            os.path.join(src, "*", "*.txt"),
-            target,
-            ckpt,
-            available_now=True,
-            sink="manifest",
-            branch="staging",
-        )
-        q.awaitTermination()
-        if t.read(spark).count() != n_base:
-            raise AssertionError(
-                "streamed branch commits leaked into main before publish"
-            )
-        b = t.branch("staging")
-        res = b.fast_forward()
-        if res.get("published") != 1:
-            raise AssertionError(f"fast_forward did not publish: {res}")
-        final = t.read(spark).select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _branch_wap_oracle() -> str:
-    return f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings
-UNION ALL
-SELECT reading_timestamp + INTERVAL 1 DAY, meter_id,
-       CAST(reading_consumption_milliwatts + 333 AS INT),
-       reading_production_milliwatts, status
-FROM readings
-WHERE meter_id % 5 = 2"""
-
-
-register("stream_branch_wap", _branch_wap_oracle())(stream_branch_wap)
-
-
-def stream_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MULTI-TABLE exactly-once: each micro-batch commits
-    its fact rows AND its per-batch ingest-stats row in ONE catalog
-    transaction (``sink="catalog_txn"`` → sources/catalog.py), so the
-    metrics table can never drift from the data table — the failure
-    mode of every separate-metrics-sink design under replay (the
-    reference keeps its stats in the consumer process,
-    consumer/meter_consumer.py's stats loop; an object-store
-    deployment needs them durable AND consistent). The feed is
-    delivered twice (full redelivery), then a second day arrives in a
-    second drain over the same checkpoint. In-query asserts:
-    Σconsumed over the stats table equals exactly the messages
-    DELIVERED (counting the redelivery — at-least-once input,
-    exactly-once effect), Σrejected = 0, and every catalog commit
-    touched fact and stats TOGETHER or stats alone (a fully-duplicate
-    batch still records its stats row) — never fact alone. The hash
-    is over the fact table at the final catalog state."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.sources.catalog import Catalog
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="smart_meter_cattxn_")
-    src = os.path.join(workdir, "messages")
-    target = os.path.join(workdir, "cat")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(src)
-    try:
-        readings = gen_meter_readings(spark)
-        n_day = readings.count()
-        glob = os.path.join(src, "*", "*.txt")
-        for d in ("d1", "d1_redelivery"):
-            _wire_format(readings).select("value").coalesce(2).write.mode(
-                "overwrite"
-            ).text(os.path.join(src, d))
-        q = start_ingest_stream(
-            spark, glob, target, ckpt,
-            available_now=True, sink="catalog_txn",
-        )
-        q.awaitTermination()
-        day2 = readings.filter(F.col("meter_id") % 6 == 5).withColumn(
-            "reading_timestamp",
-            F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-        )
-        _wire_format(day2).select("value").coalesce(2).write.mode(
-            "overwrite"
-        ).text(os.path.join(src, "d2"))
-        q2 = start_ingest_stream(
-            spark, glob, target, ckpt,
-            available_now=True, sink="catalog_txn",
-        )
-        q2.awaitTermination()
-        cat = Catalog(target)
-        n_day2 = day2.count()
-        stats = cat.read(spark, "ingest_stats").collect()
-        delivered = 2 * n_day + n_day2
-        if sum(r["consumed"] for r in stats) != delivered:
-            raise AssertionError(
-                f"stats drifted: consumed "
-                f"{sum(r['consumed'] for r in stats)} != {delivered}"
-            )
-        if sum(r["rejected"] for r in stats) != 0:
-            raise AssertionError("unexpected rejects")
-        for _, c in cat.numbered_snapshot():
-            touched = set(c.get("tables", {}))
-            if touched not in ({"fact", "ingest_stats"}, {"ingest_stats"}):
-                raise AssertionError(
-                    f"non-atomic commit touched {touched}"
-                )
-        final = cat.read(spark, "fact").select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _catalog_txn_oracle() -> str:
-    return f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings
-UNION ALL
-SELECT reading_timestamp + INTERVAL 1 DAY, meter_id,
-       reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings
-WHERE meter_id % 6 = 5"""
-
-
-register("stream_catalog_txn", _catalog_txn_oracle())(stream_catalog_txn)
-
-
 DQ_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 DQ_VALUE_LO, DQ_VALUE_HI = 0.0, 1000.0
 
@@ -3589,99 +3243,11 @@ def _register_stream_dr_baseline() -> None:
 _register_stream_dr_baseline()
 
 
-def stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SECONDARY-INDEX maintenance: two time-split
-    deliveries drain through the manifest sink with
-    ``index_column="meter_id"`` — every micro-batch commit is
-    followed by an incremental posting-index refresh (only that
-    batch's files scan; pk-idempotent, so replays re-land nothing;
-    a crash between commit and refresh merely leaves the index
-    stale, which the read path serves correctly by reading unindexed
-    files unconditionally). After the drain the index must be FRESH
-    (zero unindexed files, asserted) and a point read served through
-    it hash-equals the relational filter — the streaming half of the
-    Hyperspace story: the index keeps up with ingest instead of
-    being rebuilt nightly."""
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.sources.index import (
-        index_point_read,
-    )
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="smart_meter_idx_stream_")
-    src = os.path.join(workdir, "messages")
-    target = os.path.join(workdir, "fact")
-    ckpt = os.path.join(workdir, "ckpt")
-    os.makedirs(src)
-    try:
-        readings = gen_meter_readings(spark)
-        cut = F.lit("2024-01-01 12:00:00").cast("timestamp")
-        _wire_format(
-            readings.filter(F.col("reading_timestamp") < cut)
-        ).select("value").coalesce(2).write.mode("overwrite").text(
-            os.path.join(src, "d1")
-        )
-        _wire_format(
-            readings.filter(F.col("reading_timestamp") >= cut)
-        ).select("value").coalesce(2).write.mode("overwrite").text(
-            os.path.join(src, "d2")
-        )
-        q = start_ingest_stream(
-            spark,
-            os.path.join(src, "*", "*.txt"),
-            target,
-            ckpt,
-            available_now=True,
-            sink="manifest",
-            index_column="meter_id",
-        )
-        q.awaitTermination()
-        from smart_meter_data_pipeline_spark.sources.manifest import (
-            ManifestTable,
-        )
-
-        out, rep = index_point_read(
-            ManifestTable(target), spark, "meter_id", [17, 91]
-        )
-        if rep["files_unindexed"] != 0:
-            raise AssertionError(
-                f"index stale after full drain: {rep}"
-            )
-        final = out.select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _register_stream_index_maintenance() -> None:
-    register(
-        "stream_index_maintenance",
-        f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings WHERE meter_id IN (17, 91)""",
-    )(stream_index_maintenance)
-
-
-_register_stream_index_maintenance()
-
-
 def stream_text_index_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Streaming INVERTED-TEXT-INDEX maintenance — the corpus twin of
-    ``stream_index_maintenance``: the documents table arrives as a
-    two-chunk file stream (maxFilesPerTrigger=1, so the drain runs
+    """Streaming INVERTED-TEXT-INDEX maintenance: the documents table
+    arrives as a two-chunk file stream (maxFilesPerTrigger=1, so the drain runs
     two micro-batches), each batch lands in the manifest table
     through the pk-idempotent sink and is followed by an INCREMENTAL
     ``refresh_text_index`` (only that batch's files tokenize; posting

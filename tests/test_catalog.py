@@ -247,44 +247,6 @@ def test_catalog_branch_guards(spark, cat):
 
 
 @pytest.mark.slow
-def test_streaming_catalog_txn_keeps_stats_consistent(spark, cat, tmp_path):
-    """The catalog_txn sink: a replayed drain can neither double-count
-    the stats table nor leave it disagreeing with the fact table."""
-    import json
-
-    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        gen_meter_readings,
-    )
-    from smart_meter_data_pipeline_spark.streaming.ingest_stream import (
-        start_ingest_stream,
-    )
-    from smart_meter_data_pipeline_spark.streaming.stream_queries import (
-        _wire_format,
-    )
-
-    src = tmp_path / "msgs"
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    readings = gen_meter_readings(spark, n_meters=20, n_ticks=8)
-    wire = _wire_format(readings).select("value")
-    wire.coalesce(2).write.mode("overwrite").text(str(src / "d1"))
-    wire.coalesce(2).write.mode("overwrite").text(str(src / "d1_redo"))
-    q = start_ingest_stream(
-        spark, str(src / "*" / "*.txt"), cat.root, ckpt,
-        available_now=True, sink="catalog_txn",
-    )
-    q.awaitTermination()
-    assert cat.read(spark, "fact").count() == 20 * 8
-    stats = cat.read(spark, "ingest_stats").collect()
-    assert sum(r["consumed"] for r in stats) == 2 * 20 * 8
-    # every commit pairs fact with stats (or stats alone on a
-    # fully-duplicate batch) — never fact alone
-    for _, c in cat.numbered_snapshot():
-        touched = set(c.get("tables", {}))
-        assert touched in ({"fact", "ingest_stats"}, {"ingest_stats"})
-
-
-@pytest.mark.slow
 def test_compact_catalog_preserves_contents_and_clamps_at_branch(
     spark, cat
 ):

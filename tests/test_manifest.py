@@ -88,8 +88,8 @@ def test_concurrent_writers_manifest_no_duplicates(spark, table_dir):
 
     def run(name, b):
         barrier.wait()
-        written[name] = manifest.idempotent_append_manifest(
-            spark, b, table_dir
+        written[name] = manifest.ManifestTable(table_dir).idempotent_append(
+            spark, b
         )
 
     t1 = threading.Thread(target=run, args=("a", b1))

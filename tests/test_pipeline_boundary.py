@@ -1,10 +1,11 @@
 """The pipeline's import boundary and the ``__spark_entry__`` contract.
 
 The ingest → staging → marts path must load without the query
-registry: importing it registers nothing and pulls in no
-``plans`` module. The registry side is checked here too: every name in
-``registry._PRIORITY`` is registered after ``load_all()``, and
-``__spark_entry__.entry`` returns the ``daily_customer_billing`` frame.
+registry: importing it registers nothing and pulls in no ``plans``
+module, nor the table reader, catalog or index modules. The registry
+side is checked here too: every name in ``registry._PRIORITY`` is
+registered after ``load_all()``, and ``__spark_entry__.entry`` returns
+the ``daily_customer_billing`` frame.
 """
 
 from __future__ import annotations
@@ -50,6 +51,10 @@ def test_pipeline_imports_load_no_registry():
     plans = [n for n in loaded if n.startswith("smart_meter_data_pipeline_spark.plans")]
     assert plans == []
     assert "smart_meter_data_pipeline_spark.operators.meter_queries" not in loaded
+    # the two sinks need neither the batch table reader nor the catalog
+    # and index machinery that sits on top of the manifest table
+    for module in ("sources.readers", "sources.catalog", "sources.index"):
+        assert f"smart_meter_data_pipeline_spark.{module}" not in loaded
 
 
 def test_every_priority_name_is_registered():

@@ -1,7 +1,6 @@
 """Invariant tests for the second wave of late round-8 operators:
-triplet distinctness, KS range,
-equi-depth bin monotonicity/population balance, backlog conservation,
-cross-correlation range, and the delivery-variance identity."""
+triplet distinctness, KS range, equi-depth bin monotonicity/population
+balance, and cross-correlation range."""
 
 from __future__ import annotations
 
@@ -13,10 +12,6 @@ from smart_meter_data_pipeline_spark.operators.extended import (
 )
 from smart_meter_data_pipeline_spark.operators.dedup import (
     train_contrastive_triplets,
-)
-from smart_meter_data_pipeline_spark.operators.tpch import (
-    orders_open_backlog,
-    supplier_delivery_consistency,
 )
 
 
@@ -64,18 +59,6 @@ def test_equidepth_bins_monotone_and_balanced(spark, sf_dir):
             )  # loose: a single hot value may own a full bin
 
 
-def test_backlog_conserves_orders(spark, sf_dir):
-    rows = orders_open_backlog(spark, sf_dir).collect()
-    assert rows
-    rows.sort(key=lambda r: r["day"])
-    assert sum(r["net_change"] for r in rows) == 0  # every order closes
-    running = 0
-    for r in rows:
-        running += r["net_change"]
-        assert running == r["open_backlog"]
-        assert running >= 0
-
-
 def test_crosscorr_range_and_pairs(spark, sf_dir):
     rows = events_type_crosscorr(spark, sf_dir).collect()
     assert rows
@@ -83,46 +66,3 @@ def test_crosscorr_range_and_pairs(spark, sf_dir):
         assert r["type_a"] < r["type_b"]
         if r["crosscorr"] is not None:
             assert -1.0 <= r["crosscorr"] <= 1.0
-
-
-def test_delivery_variance_nonnegative_identity(spark, sf_dir):
-    rows = supplier_delivery_consistency(spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        # int-division variance surrogate may undershoot by < 2 milli,
-        # never go below -2 (floor error bound), and mean is in-range
-        assert r["var_delay_milli"] >= -2
-        assert 0 <= r["mean_delay_milli"] <= 400_000  # <= 400 days
-        assert r["n_lines"] > 0
-
-
-def test_skyline_equals_bruteforce(spark, sf_dir):
-    """The band-parallel skyline must equal the O(n^2) definition:
-    a (price, size) point survives iff no other point has
-    price <= p AND size >= s with strict inequality somewhere."""
-    from smart_meter_data_pipeline_spark.operators.tpch import (
-        part_price_size_skyline,
-    )
-
-    got = {
-        (r["price_cents"], r["p_size"])
-        for r in part_price_size_skyline(spark, sf_dir).collect()
-    }
-    import duckdb
-
-    pts = duckdb.connect().execute(
-        f"""
-        SELECT DISTINCT
-               CAST(CAST(p_retailprice AS DECIMAL(25,6)) * 100 AS BIGINT),
-               p_size
-        FROM read_parquet('{sf_dir}/part.parquet')
-        """
-    ).fetchall()
-    expect = set()
-    for p, s in pts:
-        dominated = any(
-            p2 <= p and s2 >= s and (p2 < p or s2 > s) for p2, s2 in pts
-        )
-        if not dominated:
-            expect.add((p, s))
-    assert got == expect and got

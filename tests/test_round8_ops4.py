@@ -426,44 +426,3 @@ def test_ushape_credits_conserve_exactly(spark, sf_dir):
     assert sum(r["credit_milli"] for r in rows) == 1000 * n_purchases
     assert all(r["touch"] != "purchase" for r in rows)
     assert 0 <= sum(r["share_micro"] for r in rows) <= 1_000_000
-
-
-def test_eci_reflections_bounded(spark, sf_dir):
-    from smart_meter_data_pipeline_spark.operators.tpch import (
-        ECI_SCALE,
-        nation_product_complexity,
-    )
-
-    rows = nation_product_complexity(spark, sf_dir).collect()
-    assert rows
-    max_div = max(r["diversity"] for r in rows)
-    for r in rows:
-        assert r["diversity"] >= 1
-        # kc1 is a mean UBIQUITY (micro): 1..|nations| scaled
-        assert ECI_SCALE <= r["kc1_micro"] <= len(rows) * ECI_SCALE
-        # kc2 is a mean DIVERSITY (micro): 1..max diversity scaled
-        assert ECI_SCALE <= r["kc2_micro"] <= max_div * ECI_SCALE
-
-
-def test_anova_decomposition_consistent(spark, sf_dir):
-    """SSB + SSW must reconstruct the (floored) total sum of squares
-    and F must be the declared ratio of the integer pieces."""
-    from smart_meter_data_pipeline_spark.operators.tpch import (
-        lineitem_leadtime_anova,
-    )
-
-    rows = lineitem_leadtime_anova(spark, sf_dir).collect()
-    assert len(rows) == 5  # the five TPC-H priorities
-    ssb = {r["ssb_days2"] for r in rows}
-    ssw = {r["ssw_days2"] for r in rows}
-    fs = {r["f_stat"] for r in rows}
-    assert len(ssb) == 1 and len(ssw) == 1 and len(fs) == 1  # pooled
-    assert ssb.pop() >= 0 and ssw.pop() > 0
-    f = fs.pop()
-    assert f is not None and f >= 0
-    n = sum(r["n_lineitems"] for r in rows)
-    r0 = rows[0]
-    k = len(rows)
-    expect_f = (r0["ssb_days2"] / (k - 1)) / (r0["ssw_days2"] / (n - k))
-    assert abs(f - expect_f) < 1e-6
-

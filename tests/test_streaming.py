@@ -295,219 +295,93 @@ def test_stream_foreachbatch_manifest_sink_exactly_once(spark, tmp_path):
     assert on_disk == committed
 
 
-@pytest.mark.slow
-def test_stream_restatement_upsert_sink(spark, tmp_path):
-    """Streaming MERGE: a restatement feed (same PKs, corrected
-    values) drains through foreachBatch → ManifestTable.upsert.
-    Delivery 1 inserts the baseline; delivery 2 re-states a subset
-    with corrected consumption — an insert-only dedup sink would DROP
-    those corrections as duplicates; the upsert sink must apply them
-    as the post-image while leaving untouched meters alone."""
+def _write_deliveries(src, n_files: int, n_meters: int) -> None:
+    """``n_files`` delivery files, file i holding tick i of every meter
+    plus one malformed and one bad-status message."""
+    import json
+
+    os.makedirs(src)
+    for i in range(n_files):
+        ts = f"2024-01-01T{i:02d}:15:00"
+        lines = [
+            json.dumps(
+                {
+                    "meter_id": m,
+                    "reading_timestamp": ts,
+                    "reading_consumption_milliwatts": 1000 * i + m,
+                    "status": "V",
+                }
+            )
+            for m in range(1, n_meters + 1)
+        ]
+        lines += [
+            "{broken json",
+            json.dumps({"meter_id": 1, "reading_timestamp": ts, "status": "X"}),
+        ]
+        with open(src / f"f{i}.txt", "w") as f:
+            f.write("\n".join(lines) + "\n")
+
+
+@pytest.mark.parametrize("sink", ["lock", "manifest"])
+def test_stream_replayed_batch_lands_facts_and_quarantine_once(
+    spark, tmp_path, sink
+):
+    """A crash after a micro-batch's writes but before its checkpoint
+    commit replays that batch on restart. Replaying it must leave the
+    fact table and the quarantine table as they were. The crash is
+    simulated by deleting the checkpoint's last commit file."""
     from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
 
     src = tmp_path / "msgs"
-    target = str(tmp_path / "fact_upsert")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    readings = gen_meter_readings(spark, n_meters=10, n_ticks=4)  # 40 rows
-    _wire_format(readings).select("value").coalesce(1).write.text(
-        str(src / "d1")
-    )
-    q = start_ingest_stream(
-        spark, str(src / "*" / "*.txt"), target, ckpt,
-        available_now=True, sink="manifest_upsert",
-    )
-    q.awaitTermination()
-    t = ManifestTable(target)
-    assert t.read(spark).count() == 40
+    target = str(tmp_path / "fact")
+    quarantine = str(tmp_path / "quarantine")
+    ckpt = tmp_path / "ckpt"
+    _write_deliveries(src, n_files=8, n_meters=10)  # 4 files per batch
 
-    restated = readings.filter(F.col("meter_id") <= 5).withColumn(
-        "reading_consumption_milliwatts",
-        F.col("reading_consumption_milliwatts") + F.lit(999_983),
-    )
-    _wire_format(restated).select("value").coalesce(1).write.text(
-        str(src / "d2")
-    )
-    q2 = start_ingest_stream(
-        spark, str(src / "*" / "*.txt"), target, ckpt,
-        available_now=True, sink="manifest_upsert",
-    )
-    q2.awaitTermination()
-
-    fact = t.read(spark)
-    assert fact.count() == 40  # restatement adds no rows
-    assert (
-        fact.select("reading_timestamp", "meter_id").distinct().count() == 40
-    )
-    # corrected meters carry the post-image, others the original
-    expected = readings.withColumn(
-        "expect_mw",
-        F.when(
-            F.col("meter_id") <= 5,
-            F.col("reading_consumption_milliwatts") + F.lit(999_983),
-        ).otherwise(F.col("reading_consumption_milliwatts")),
-    ).select("reading_timestamp", "meter_id", "expect_mw")
-    mismatches = (
-        fact.join(expected, ["reading_timestamp", "meter_id"])
-        .filter(
-            F.col("reading_consumption_milliwatts") != F.col("expect_mw")
-        )
-        .count()
-    )
-    assert mismatches == 0
-    # the restatement landed as ONE copy-on-write commit
-    assert any(c.get("removed") for c in t.snapshot())
-
-
-@pytest.mark.slow
-def test_stream_upsert_if_newer_out_of_order_batches(spark, tmp_path):
-    """Ordering-guarded streaming MERGE: corrections arrive in batch 1,
-    the STALE baseline replays in batch 2 (out-of-order delivery).
-    The guarded sink drops the stale rows on the monotone register
-    value and keeps the corrections; the plain last-write-wins upsert
-    sink, fed the identical sequence, REGRESSES them — the contrast
-    that motivates the sink. A third drain replaying the corrections
-    is an idempotent no-op in effect."""
-    from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
-
-    readings = gen_meter_readings(spark, n_meters=10, n_ticks=4)  # 40 rows
-    corrected = readings.filter(F.col("meter_id") <= 5).withColumn(
-        "reading_consumption_milliwatts",
-        F.col("reading_consumption_milliwatts") + F.lit(999_983),
-    )
-
-    def run(name, sink):
-        src = tmp_path / f"msgs_{name}"
-        target = str(tmp_path / f"fact_{name}")
-        ckpt = str(tmp_path / f"ckpt_{name}")
-        os.makedirs(src)
-        glob = str(src / "*" / "*.txt")
-        _wire_format(corrected).select("value").coalesce(1).write.text(
-            str(src / "d_fix")
-        )
+    def drain_and_count():
         start_ingest_stream(
-            spark, glob, target, ckpt, available_now=True, sink=sink
+            spark,
+            str(src / "*.txt"),
+            target,
+            str(ckpt),
+            quarantine_target=quarantine,
+            sink=sink,
         ).awaitTermination()
-        _wire_format(readings).select("value").coalesce(1).write.text(
-            str(src / "d_stale")
+        fact = (
+            ManifestTable(target).read(spark)
+            if sink == "manifest"
+            else spark.read.parquet(target)
         )
-        start_ingest_stream(
-            spark, glob, target, ckpt, available_now=True, sink=sink
-        ).awaitTermination()
-        return ManifestTable(target), src, glob, target, ckpt
+        reasons = {
+            r["reject_reason"]: r["count"]
+            for r in spark.read.parquet(quarantine)
+            .groupBy("reject_reason")
+            .count()
+            .collect()
+        }
+        return fact.count(), reasons
 
-    t, src, glob, target, ckpt = run("guarded", "manifest_upsert_if_newer")
-    fact = t.read(spark)
-    assert fact.count() == 40
-    n_regressed = (
-        fact.filter(F.col("meter_id") <= 5)
-        .join(
-            corrected.select(
-                "reading_timestamp",
-                "meter_id",
-                F.col("reading_consumption_milliwatts").alias("want"),
-            ),
-            ["reading_timestamp", "meter_id"],
-        )
-        .filter(F.col("reading_consumption_milliwatts") != F.col("want"))
-        .count()
-    )
-    assert n_regressed == 0  # guard held: stale replay dropped
-
-    # idempotent replay of the corrections: same end state
-    _wire_format(corrected).select("value").coalesce(1).write.text(
-        str(src / "d_fix_replay")
-    )
-    start_ingest_stream(
-        spark, glob, target, ckpt,
-        available_now=True, sink="manifest_upsert_if_newer",
-    ).awaitTermination()
-    fact2 = ManifestTable(target).read(spark)
-    assert fact2.count() == 40
-    assert (
-        fact2.join(
-            fact.select(
-                "reading_timestamp",
-                "meter_id",
-                F.col("reading_consumption_milliwatts").alias("before"),
-            ),
-            ["reading_timestamp", "meter_id"],
-        )
-        .filter(F.col("reading_consumption_milliwatts") != F.col("before"))
-        .count()
-        == 0
-    )
-
-    # the CONTRAST: plain last-write-wins regresses in this order
-    t_plain, *_ = run("plain", "manifest_upsert")
-    regressed_plain = (
-        t_plain.read(spark)
-        .filter(F.col("meter_id") <= 5)
-        .join(
-            corrected.select(
-                "reading_timestamp",
-                "meter_id",
-                F.col("reading_consumption_milliwatts").alias("want"),
-            ),
-            ["reading_timestamp", "meter_id"],
-        )
-        .filter(F.col("reading_consumption_milliwatts") != F.col("want"))
-        .count()
-    )
-    assert regressed_plain == 20  # every corrected row regressed
+    first = drain_and_count()
+    assert first == (80, {"malformed_json": 8, "bad_status": 8})
+    assert sorted(os.listdir(ckpt / "commits")) == [".0.crc", ".1.crc", "0", "1"]
+    os.remove(ckpt / "commits" / "1")
+    os.remove(ckpt / "commits" / ".1.crc")
+    assert drain_and_count() == first
+    assert os.path.exists(ckpt / "commits" / "1")  # the batch ran again
 
 
-def test_stream_branch_sink_isolates_until_publish(spark, tmp_path):
-    """Streaming WAP: micro-batches routed onto a branch never touch
-    the main log; after fast_forward main holds baseline + streamed
-    day exactly once (redelivered feed dedups on the branch)."""
-    from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
-
-    src = tmp_path / "msgs"
-    target = str(tmp_path / "fact_manifest")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-    baseline = gen_meter_readings(spark, n_meters=20, n_ticks=8)
-    t = ManifestTable(target)
-    t.idempotent_append(spark, baseline)
-    t.create_branch("staging")
-    next_day = baseline.withColumn(
-        "reading_timestamp",
-        F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-    )
-    wire = _wire_format(next_day).select("value")
-    wire.coalesce(2).write.mode("overwrite").text(str(src / "d1"))
-    wire.coalesce(2).write.mode("overwrite").text(str(src / "d1_redo"))
-
-    q = start_ingest_stream(
-        spark, str(src / "*" / "*.txt"), target, ckpt,
-        available_now=True, sink="manifest", branch="staging",
-    )
-    q.awaitTermination()
-
-    assert t.read(spark).count() == 20 * 8  # main untouched
-    b = t.branch("staging")
-    assert b.read(spark).count() == 20 * 8 * 2  # streamed day landed once
-    assert b.fast_forward()["published"] == 1
-    assert t.read(spark).count() == 20 * 8 * 2
-    assert (
-        t.read(spark)
-        .select("reading_timestamp", "meter_id")
-        .distinct()
-        .count()
-        == 20 * 8 * 2
-    )
-
-
-def test_stream_branch_requires_manifest_sink(spark, tmp_path):
-    import pytest
-
-    with pytest.raises(ValueError, match="manifest-family sink"):
+def test_stream_rejects_unknown_sink(spark, tmp_path):
+    """A mistyped sink fails before any query starts, instead of
+    falling through to the lock sink."""
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match="'lock', 'manifest'"):
         start_ingest_stream(
             spark,
             str(tmp_path / "nope" / "*.txt"),
             str(tmp_path / "t"),
             str(tmp_path / "c"),
-            sink="lock",
-            branch="staging",
+            sink="manifets",
         )
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(tmp_path / "t")
+    assert not os.path.exists(tmp_path / "c")
