@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -154,7 +154,8 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
        batch's dates),
     3. append, partitioned by date.
 
-    Returns the number of rows written.
+    Steps 1-3 run as one write job. Returns the number of rows
+    written, observed on that write.
 
     Concurrency: the existing-keys scan and the append run inside an
     exclusive :func:`~..sources.txn.table_lock`, serializing writers the
@@ -171,37 +172,35 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
     from smart_meter_data_pipeline_spark.sources.txn import table_lock
 
     pk = ["reading_timestamp", "meter_id"]
-    # Persist: the batch is consumed up to three times (dates scan,
-    # count, write) — without this every action would re-read the
-    # source (and inflate streaming numInputRows metrics). Persisting
-    # BEFORE taking the lock keeps source-read time out of the critical
-    # section.
-    in_batch = batch.dropDuplicates(pk).persist()
-    try:
-        in_batch.count()  # materialize outside the lock
-        with table_lock(target):
-            fresh = in_batch
-            if any(
-                name.startswith("reading_date=") for name in os.listdir(target)
-            ):
-                dates = [
-                    r["reading_date"]
-                    for r in in_batch.select("reading_date").distinct().collect()
-                ]
-                existing = (
-                    spark.read.parquet(target)
-                    .filter(F.col("reading_date").isin(dates))
-                    .select(*pk)
-                )
-                fresh = in_batch.join(existing, pk, "left_anti")
-            n = fresh.count()
-            if n:
-                fresh.write.mode("append").partitionBy("reading_date").parquet(
-                    target
-                )
-        return n
-    finally:
-        in_batch.unpersist()
+    # The batch's dates, collected outside the lock: over a persisted
+    # micro-batch this is also the job that fills the cache, so the
+    # source is read before the critical section starts.
+    dates = [
+        r["reading_date"]
+        for r in batch.select("reading_date").distinct().collect()
+    ]
+    if not dates:
+        return 0
+    with table_lock(target):
+        fresh = batch.dropDuplicates(pk)
+        if any(name.startswith("reading_date=") for name in os.listdir(target)):
+            existing = (
+                spark.read.parquet(target)
+                .filter(F.col("reading_date").isin(dates))
+                .select(*pk)
+            )
+            fresh = fresh.join(existing, pk, "left_anti")
+        # One write job: the existing keys are scanned once, and the
+        # row count comes from the written frame itself. Unnamed, so
+        # concurrent writers in one session never share a metric name.
+        written = Observation()
+        (
+            fresh.observe(written, F.count(F.lit(1)).alias("n"))
+            .write.mode("append")
+            .partitionBy("reading_date")
+            .parquet(target)
+        )
+        return written.get["n"]
 
 
 def ingest_batch(
@@ -210,12 +209,20 @@ def ingest_batch(
     """Full batch ingest: classify → split → idempotent append.
     Returns counters (mirrors the consumer's consumed/processed/failed
     stats, consumer/meter_consumer.py:324-329)."""
-    classified = classify(messages)
-    valid, quarantine = split_valid(classified)
-    written = idempotent_append(spark, valid, target)
-    n_invalid = quarantine.count()
-    return {
-        "consumed": classified.count(),
-        "written": written,
-        "quarantined": n_invalid,
-    }
+    # Persisted once: the append and the counters below reuse it
+    # instead of re-reading the messages.
+    classified = classify(messages).persist()
+    try:
+        valid, _ = split_valid(classified)
+        written = idempotent_append(spark, valid, target)
+        counts = classified.agg(
+            F.count(F.lit(1)).alias("consumed"),
+            F.count("reject_reason").alias("quarantined"),
+        ).first()
+        return {
+            "consumed": counts["consumed"],
+            "written": written,
+            "quarantined": counts["quarantined"],
+        }
+    finally:
+        classified.unpersist()

@@ -1598,123 +1598,111 @@ class ManifestTable:
         failing is the only way to miss concurrent content, and that
         failure routes into revalidation below."""
         self._check_constraints(batch)
-        in_batch = batch.dropDuplicates(pk).persist()
-        try:
-            # Dateless tables (dimensions — no reading_timestamp):
-            # None disables date pruning, so validation anti-joins
-            # against ALL files (the safe direction) and the commit
-            # records no dates. Batch count and distinct dates come
-            # from ONE per-date rollup job (r14, guide §1.2) instead
-            # of a count action plus a separate distinct collect.
-            if "reading_timestamp" in in_batch.columns:
-                per_date = (
-                    in_batch.groupBy(
-                        F.to_date("reading_timestamp").alias("d")
-                    )
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                n_batch = sum(r["n"] for r in per_date)
-                batch_dates = {str(r["d"]) for r in per_date}
-            else:
-                n_batch = in_batch.count()
-                batch_dates = None
-            if n_batch == 0:
+        # Dateless tables (dimensions — no reading_timestamp): None
+        # disables date pruning, so validation anti-joins against ALL
+        # files (the safe direction) and the commit records no dates.
+        # The dates come from one job over the caller's batch; over a
+        # persisted micro-batch it is also the job that fills the cache.
+        batch_dates = None
+        if "reading_timestamp" in batch.columns:
+            batch_dates = {
+                str(r["d"])
+                for r in batch.select(F.to_date("reading_timestamp").alias("d"))
+                .distinct()
+                .collect()
+            }
+            if not batch_dates:
                 return 0
-            numbered = self.numbered_snapshot()
-            commits = [c for _, c in numbered]
-            self._check_schema_compat(in_batch, commits)
-            fresh, n = self._anti_join(
-                spark, in_batch, numbered, batch_dates, pk, n_batch
-            )
-            staged: list[str] = []
-            # Fence by NUMBER, not position: compaction leaves gaps in
-            # the numbering, so len() could alias an old slot and let
-            # an unvalidated concurrent commit slip under the publish.
-            validated_through = self._fence(numbered)
-            for _ in range(max_retries):
+        in_batch = batch.dropDuplicates(pk)
+        numbered = self.numbered_snapshot()
+        self._check_schema_compat(in_batch, [c for _, c in numbered])
+        fresh = self._anti_join(spark, in_batch, numbered, batch_dates, pk)
+        staged: list[str] = []
+        # Fence by NUMBER, not position: compaction leaves gaps in
+        # the numbering, so len() could alias an old slot and let
+        # an unvalidated concurrent commit slip under the publish.
+        validated_through = self._fence(numbered)
+        for _ in range(max_retries):
+            if not staged:
+                if cluster_by:
+                    # write-time clustering (round 12): the
+                    # dedup/anti-join shuffles hash-partition the
+                    # batch, so without this the staged files each
+                    # span the whole key range and the per-file
+                    # stats prune nothing. Range-repartition +
+                    # sort as the LAST op before staging, so each
+                    # file covers a narrow slice — the incremental
+                    # OPTIMIZE (cluster_by=...) that costs one
+                    # extra batch-sized shuffle instead of a
+                    # table-sized rewrite later.
+                    fresh = fresh.repartitionByRange(
+                        *([cluster_partitions] if cluster_partitions else []),
+                        *cluster_by,
+                    ).sortWithinPartitions(*cluster_by)
+                # One write job dedups, validates and stages; the row
+                # count is read back from the staged files' footers.
+                staged = self._stage(fresh)
+                stats = self._file_stats(staged)
+                n = sum(st["#rows"] for st in stats.values())
                 if n == 0:
                     self._discard_stage(staged)
                     return 0
-                if not staged:
-                    if cluster_by:
-                        # write-time clustering (round 12): the
-                        # dedup/anti-join shuffles hash-partition the
-                        # batch, so without this the staged files each
-                        # span the whole key range and the per-file
-                        # stats prune nothing. Range-repartition +
-                        # sort as the LAST op before staging, so each
-                        # file covers a narrow slice — the incremental
-                        # OPTIMIZE (cluster_by=...) that costs one
-                        # extra batch-sized shuffle instead of a
-                        # table-sized rewrite later.
-                        fresh = fresh.repartitionByRange(
-                            *(
-                                [cluster_partitions]
-                                if cluster_partitions
-                                else []
-                            ),
-                            *cluster_by,
-                        ).sortWithinPartitions(*cluster_by)
-                    fresh = fresh.persist()
-                    staged = self._stage(fresh)
-                if self._pre_publish_hook is not None:
-                    self._pre_publish_hook()
-                payload = json.dumps(
-                    {
-                        "version": validated_through,
-                        "added": staged,
-                        "count": n,
-                        "dates": sorted(batch_dates or []),
-                        "schema": in_batch.schema.json(),
-                        "stats": self._file_stats(staged),
-                        "blooms": self._file_blooms(staged),
-                        "committed_at": time.time(),
-                    }
-                ).encode()
-                if _put_if_absent(self._commit_path(validated_through), payload):
-                    fresh.unpersist()
-                    return n
-                # Lost the race: validate only against the commits we
-                # lost to. If their key sets can't overlap ours (date
-                # pruning, then an actual key check), recommit the SAME
-                # staged files at the next number — no rewrite. The new
-                # fence comes from THIS listing (fence invariant above).
-                numbered = self.numbered_snapshot()
-                new_commits = [
-                    c for num, c in numbered if num >= validated_through
-                ]
-                overlap_files = self._files(new_commits, batch_dates)
-                validated_through = self._fence(numbered)
-                if overlap_files:
-                    clash = (
-                        fresh.join(
-                            spark.read.parquet(*overlap_files).select(*pk),
-                            pk,
-                            "left_semi",
-                        ).limit(1).count()
+                # A write task that got no rows still leaves a 0-row
+                # file; it holds nothing, so it is never committed.
+                for rel in [f for f in staged if stats[f]["#rows"] == 0]:
+                    del stats[rel]
+                    head, name = os.path.split(os.path.join(self.data_dir, rel))
+                    os.remove(os.path.join(head, name))
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(head, f".{name}.crc"))
+                staged = list(stats)
+            if self._pre_publish_hook is not None:
+                self._pre_publish_hook()
+            payload = json.dumps(
+                {
+                    "version": validated_through,
+                    "added": staged,
+                    "count": n,
+                    "dates": sorted(batch_dates or []),
+                    "schema": in_batch.schema.json(),
+                    "stats": stats,
+                    "blooms": self._file_blooms(staged),
+                    "committed_at": time.time(),
+                }
+            ).encode()
+            if _put_if_absent(self._commit_path(validated_through), payload):
+                return n
+            # Lost the race: validate only against the commits we
+            # lost to. If their key sets can't overlap ours (date
+            # pruning, then an actual key check of the staged files),
+            # recommit the SAME staged files at the next number — no
+            # rewrite. The new fence comes from THIS listing (fence
+            # invariant above).
+            numbered = self.numbered_snapshot()
+            new_commits = [c for num, c in numbered if num >= validated_through]
+            overlap_files = self._files(new_commits, batch_dates)
+            validated_through = self._fence(numbered)
+            if overlap_files:
+                staged_keys = spark.read.parquet(
+                    *[os.path.join(self.data_dir, f) for f in staged]
+                ).select(*pk)
+                theirs = spark.read.parquet(*overlap_files).select(*pk)
+                if staged_keys.join(theirs, pk, "left_semi").limit(1).count():
+                    # Genuine conflict: our staged rows now contain
+                    # duplicates. Re-anti-join and re-stage against
+                    # one fresh listing (validation + fence).
+                    self._discard_stage(staged)
+                    numbered = self.numbered_snapshot()
+                    validated_through = self._fence(numbered)
+                    fresh = self._anti_join(
+                        spark, in_batch, numbered, batch_dates, pk
                     )
-                    if clash:
-                        # Genuine conflict: our staged rows now contain
-                        # duplicates. Re-anti-join and re-stage against
-                        # one fresh listing (validation + fence).
-                        self._discard_stage(staged)
-                        fresh.unpersist()
-                        numbered = self.numbered_snapshot()
-                        commits = [c for _, c in numbered]
-                        validated_through = self._fence(numbered)
-                        fresh, n = self._anti_join(
-                            spark, in_batch, numbered, batch_dates, pk,
-                            n_batch,
-                        )
-                        staged = []
-            self._discard_stage(staged)
-            raise CommitConflictError(
-                f"gave up after {max_retries} commit attempts on "
-                f"{self.table_dir}"
-            )
-        finally:
-            in_batch.unpersist()
+                    staged = []
+        self._discard_stage(staged)
+        raise CommitConflictError(
+            f"gave up after {max_retries} commit attempts on "
+            f"{self.table_dir}"
+        )
 
     def _check_schema_compat(
         self, batch: DataFrame, commits: list[dict]
@@ -2515,34 +2503,29 @@ class ManifestTable:
         spark: SparkSession,
         in_batch: DataFrame,
         numbered: list[tuple[int, dict]],
-        batch_dates: set[str],
+        batch_dates: set[str] | None,
         pk: list[str],
-        n_batch: int | None = None,
-    ) -> tuple[DataFrame, int]:
+    ) -> DataFrame:
+        """``in_batch`` minus the keys of the live files on its dates,
+        as a lazy frame: the caller's write is the one job that runs
+        it."""
         files = self._files([c for _, c in numbered], batch_dates)
         if not files:
-            # Nothing to validate against: fresh == in_batch, whose
-            # count the caller already paid for (r15, guide §1.2) —
-            # skip the recount job on every first append.
-            if n_batch is not None:
-                return in_batch, n_batch
-            fresh = in_batch
-        else:
-            # Tombstone-aware: a key deleted by a pending merge-on-read
-            # tombstone must be re-insertable — validating against the
-            # raw files would see the dead row and drop the re-insert.
-            # Read under the evolved commit schema (as read() does):
-            # with schema=None, tombstone origin groups that straddle a
-            # schema-evolution boundary would infer DIFFERENT per-group
-            # schemas and the strict unionByName inside would raise.
-            existing = self._read_files_with_tombstones(
-                spark,
-                numbered,
-                files,
-                self._evolved_schema([c for _, c in numbered]),
-            ).select(*pk)
-            fresh = in_batch.join(existing, pk, "left_anti")
-        return fresh, fresh.count()
+            return in_batch
+        # Tombstone-aware: a key deleted by a pending merge-on-read
+        # tombstone must be re-insertable — validating against the
+        # raw files would see the dead row and drop the re-insert.
+        # Read under the evolved commit schema (as read() does):
+        # with schema=None, tombstone origin groups that straddle a
+        # schema-evolution boundary would infer DIFFERENT per-group
+        # schemas and the strict unionByName inside would raise.
+        existing = self._read_files_with_tombstones(
+            spark,
+            numbered,
+            files,
+            self._evolved_schema([c for _, c in numbered]),
+        ).select(*pk)
+        return in_batch.join(existing, pk, "left_anti")
 
 
 def compact_log(table: ManifestTable, keep_last: int = 10) -> int:
@@ -3535,7 +3518,9 @@ def delete_where(
     MoR tombstones abort (raw-file reads); a lost put-if-absent
     discards the stage and reruns. Bounds as ints or timestamps
     (open ends allowed). Returns
-    ``{"files_dropped", "files_rewritten", "rows_deleted"}``.
+    ``{"files_dropped", "files_rewritten", "rows_deleted"}``, plus
+    ``"keys_tombstoned"`` in ``mode="mor"`` (also when it does
+    nothing).
 
     Classification is STATS-FIRST (round 11): when the commit log
     already records ``column``'s [min, max, null_count] and the
@@ -3660,6 +3645,7 @@ def delete_where(
                 "files_dropped": 0,
                 "files_rewritten": 0,
                 "rows_deleted": 0,
+                **({"keys_tombstoned": 0} if mode == "mor" else {}),
             }
         ev_schema = table._evolved_schema(commits)
         if mode == "mor":

@@ -94,9 +94,11 @@ def start_ingest_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Persist: the batch feeds two sinks (fact + quarantine); the
-        # cache also pins the observe() node to a single execution, so
-        # consumed/rejected counts aren't double-counted per pass.
+        # The only persist of the micro-batch: the sink's date job
+        # fills the cache, and the sink's write and the quarantine
+        # write read it. The cache also pins the observe() node to a
+        # single execution, so consumed/rejected counts aren't
+        # double-counted per pass.
         batch_df.persist()
         try:
             session = batch_df.sparkSession

@@ -92,6 +92,21 @@ def test_redelivery_idempotent(spark, tmp_target):
     assert fact.select("reading_timestamp", "meter_id").distinct().count() == 8
 
 
+def test_replayed_batch_returns_zero_and_adds_no_file(spark, tmp_target):
+    """Tier-1 twin of the replay above: the same batch offered again
+    writes nothing, not even an empty data file."""
+    import glob
+
+    msgs = [json.dumps(dict(GOOD, meter_id=i)) for i in range(1, 6)]
+    first = ingest.ingest_batch(spark, _messages_df(spark, msgs), tmp_target)
+    files = sorted(glob.glob(f"{tmp_target}/*/*.parquet"))
+    replay = ingest.ingest_batch(spark, _messages_df(spark, msgs), tmp_target)
+    assert first["written"] == 5
+    assert replay["written"] == 0
+    assert sorted(glob.glob(f"{tmp_target}/*/*.parquet")) == files
+    assert spark.read.parquet(tmp_target).count() == 5
+
+
 def test_in_batch_duplicates_deduped(spark, tmp_target):
     dup = [json.dumps(GOOD), json.dumps(GOOD), json.dumps(GOOD)]
     stats = ingest.ingest_batch(spark, _messages_df(spark, dup), tmp_target)
@@ -128,6 +143,38 @@ def test_concurrent_writers_no_duplicates(spark, tmp_target):
     assert fact.count() == 150
     assert fact.select("reading_timestamp", "meter_id").distinct().count() == 150
     assert written["a"] + written["b"] == 150
+
+
+def test_two_writers_overlapping_batches_land_each_key_once(spark, tmp_target):
+    """Tier-1 twin of the concurrent-writer test above, on smaller
+    batches: each key lands once, and the counts the two writers
+    return sum to the rows landed."""
+    import threading
+
+    def batch(lo, hi):
+        msgs = [json.dumps(dict(GOOD, meter_id=i)) for i in range(lo, hi)]
+        valid, _ = ingest.split_valid(ingest.classify(_messages_df(spark, msgs)))
+        return valid
+
+    batches = {"a": batch(1, 21), "b": batch(11, 31)}  # overlap: 11-20
+    barrier = threading.Barrier(2)
+    written = {}
+
+    def run(name):
+        barrier.wait(timeout=60)
+        written[name] = ingest.idempotent_append(spark, batches[name], tmp_target)
+
+    threads = [threading.Thread(target=run, args=(name,)) for name in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+
+    fact = spark.read.parquet(tmp_target)
+    assert fact.count() == 30
+    assert fact.select("reading_timestamp", "meter_id").distinct().count() == 30
+    assert written["a"] + written["b"] == 30
 
 
 def test_table_lock_timeout_and_release(tmp_path):

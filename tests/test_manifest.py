@@ -111,6 +111,33 @@ def test_concurrent_writers_manifest_no_duplicates(spark, table_dir):
     assert len(added) == len(set(added))
 
 
+def test_small_appends_commit_no_empty_files(spark, table_dir):
+    """A write task that gets no rows still leaves a 0-row parquet
+    file (most tasks do when a small batch keeps its shuffle
+    partitions); the append drops it before publishing, so every
+    committed file holds rows and no other file stays behind."""
+    t = manifest.ManifestTable(table_dir)
+    assert t.idempotent_append(spark, _valid_batch(spark, 1, 2)) == 1
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert t.idempotent_append(spark, _valid_batch(spark, 1, 4)) == 2
+    finally:
+        spark.conf.set(key, prev)
+    commits = t.snapshot()
+    stats = {f: s for c in commits for f, s in c["stats"].items()}
+    assert sorted(stats) == sorted(f for c in commits for f in c["added"])
+    assert all(s["#rows"] > 0 for s in stats.values())
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), t.data_dir)
+        for d, _, files in os.walk(t.data_dir)
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert on_disk == set(stats)
+
+
 def test_date_pruned_validation(spark, table_dir):
     """Commits whose dates don't overlap the batch are skipped by the
     existing-keys scan (the manifest's partition pruning)."""

@@ -346,7 +346,7 @@ def test_upsert_losing_race_to_mor_tombstone_raises_on_retry(spark, table):
     assert df.count() == 90
 
 
-def test_optimize_zorder_losing_race_to_mor_tombstone_raises(spark, table):
+def test_optimize_zorder_losing_race_to_mor_tombstone_raises(spark, tmp_path):
     """VERDICT r9 #8: OPTIMIZE (including the Z-order rewrite) reads
     data files RAW, so a MoR tombstone landing between its listing and
     its put-if-absent publish must force the retry loop to revalidate
@@ -354,6 +354,11 @@ def test_optimize_zorder_losing_race_to_mor_tombstone_raises(spark, table):
     bump the packed files' origin commit past the tombstone's upto
     fence and resurrect the deleted rows. Deterministic twin of the
     CoW-upsert race above, for the OPTIMIZE path."""
+    # OPTIMIZE packs only two or more small files, and one small append
+    # stages one file: land the fixture's rows in two appends.
+    table = ManifestTable(str(tmp_path / "tbl"))
+    for half in (_rows()[:50], _rows()[50:]):
+        table.idempotent_append(spark, _mk(spark, half))
     fired = {"n": 0}
 
     def hook():

@@ -18,9 +18,8 @@ from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
 TS = dt.datetime(2024, 1, 1)
 
 
-def _tbl(spark, tmp_path, n=4000, meters=800, parts=8):
-    t = ManifestTable(str(tmp_path / "t"))
-    df = spark.range(n).select(
+def _readings(spark, n=4000, meters=800):
+    return spark.range(n).select(
         (F.col("id") % meters).alias("meter_id"),
         F.expr(
             "timestampadd(MINUTE, CAST(id AS INT),"
@@ -28,6 +27,11 @@ def _tbl(spark, tmp_path, n=4000, meters=800, parts=8):
         ).alias("reading_timestamp"),
         (F.col("id") * 3).alias("v"),
     )
+
+
+def _tbl(spark, tmp_path, n=4000, meters=800, parts=8):
+    t = ManifestTable(str(tmp_path / "t"))
+    df = _readings(spark, n, meters)
     t.idempotent_append(spark, df.repartition(parts))
     return t, df
 
@@ -185,7 +189,7 @@ def test_plain_read_where_in_consults_posting_index(spark, tmp_path):
     it (vacuum keeps postings for currently-live files only)."""
     t = ManifestTable(str(tmp_path / "t"))
     # 2 rows per account: the 2-account probe touches <= 4 of the 8
-    # hash-spread files, so posting pruning is observable
+    # time-range files, so posting pruning is observable
     df = spark.range(4000).select(
         (F.col("id") % 2000).alias("meter_id"),
         F.expr(
@@ -197,7 +201,9 @@ def test_plain_read_where_in_consults_posting_index(spark, tmp_path):
             F.lpad((F.col("id") % 2000).cast("string"), 5, "0"),
         ).alias("account_code"),
     )
-    t.idempotent_append(spark, df.repartition(16))
+    t.idempotent_append(
+        spark, df, cluster_by=["reading_timestamp"], cluster_partitions=8
+    )
     n_live = len(t._files(t.snapshot()))
     refresh_index(t, spark, "account_code")
     probe = ["AC00017", "AC00091"]
@@ -582,7 +588,9 @@ def test_index_df_cap_high_occupancy_value(spark, tmp_path):
         .otherwise(F.concat(F.lit("rare_"), F.col("id")))
         .alias("tag"),
     )
-    t.idempotent_append(spark, df.repartition(8))
+    t.idempotent_append(
+        spark, df, cluster_by=["reading_timestamp"], cluster_partitions=8
+    )
     refresh_index(t, spark, "tag")
     out, rep = index_point_read(t, spark, "tag", ["hot"])
     assert out.count() == 800
@@ -638,15 +646,13 @@ def test_read_where_in_selectivity_bypass(spark, tmp_path, monkeypatch):
         analyze_table,
     )
 
-    # The bypass compares the estimate with the live file count, which
-    # follows the session's shuffle partitions; other tests (the CLI's
-    # get_spark) may have changed them, so pin the fixture's value.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        t, df = _tbl(spark, tmp_path)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # The bypass compares the estimate with the files left after zone
+    # maps: eight appends of meter_id % 8 give eight files that each
+    # span the whole meter_id range, so zone maps keep all eight.
+    t = ManifestTable(str(tmp_path / "t"))
+    df = _readings(spark)
+    for r in range(8):
+        t.idempotent_append(spark, df.filter(F.col("meter_id") % 8 == r))
     refresh_index(t, spark, "meter_id")
     analyze_table(t, spark, columns=["meter_id"])
     calls = []
