@@ -13,6 +13,14 @@ the 100 TB design point:
   must not drift with the host timezone.
 - Arrow enabled: every Python-boundary transfer (createDataFrame,
   toPandas, pandas UDFs) is columnar-batched.
+- Generated-code cache sized to the pipeline, so each generated class
+  is compiled once per JVM: a daily cycle (stream, manifest sink, both
+  marts) with its seed landing and output checks touches about 128
+  cache entries, and Spark's default cache of 100 would evict and
+  recompile most of them every cycle. The cap is 1000, not unbounded:
+  ``arrived_at`` is a per-micro-batch literal, so a running stream adds
+  one class per micro-batch. A static conf: it holds only if
+  ``get_spark`` starts the JVM's first session.
 """
 
 from __future__ import annotations
@@ -29,7 +37,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's standard config."""
+    """Build (or reuse) a SparkSession with the engine's standard config.
+
+    Static confs (the warehouse dir, the codegen cache size) take
+    effect only when this call creates the JVM's first session; a call
+    that reuses a running session keeps the values it started with."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -61,6 +73,12 @@ def get_spark(
             ),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # Static conf (see the module docstring). Spark's codegen cache
+        # evicts in LRU order; the daily cycle's working set is about 128
+        # entries, over the default 100. Bounded, because each
+        # micro-batch inlines its own ``arrived_at`` timestamp and so
+        # adds one class for as long as the stream runs.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

@@ -370,6 +370,58 @@ def test_stream_replayed_batch_lands_facts_and_quarantine_once(
     assert os.path.exists(ckpt / "commits" / "1")  # the batch ran again
 
 
+@pytest.mark.parametrize("sink", ["lock", "manifest"])
+def test_stream_stamps_one_arrived_at_per_micro_batch(spark, tmp_path, sink):
+    """Every valid row of a micro-batch carries the same ``arrived_at``
+    and the next micro-batch carries another, as the reference stamps
+    each consumed batch once (consumer/meter_consumer.py:116). Each
+    drain below takes one micro-batch of four files, ticks 0-3 and
+    then ticks 4-7."""
+    import json
+
+    from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+
+    src = tmp_path / "msgs"
+    target = str(tmp_path / "fact")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+    for first_tick in (0, 4):
+        for i in range(first_tick, first_tick + 4):
+            lines = [
+                json.dumps(
+                    {
+                        "meter_id": m,
+                        "reading_timestamp": f"2024-01-01T{i:02d}:15:00",
+                        "reading_consumption_milliwatts": 1000 * i + m,
+                        "status": "V",
+                    }
+                )
+                for m in range(1, 6)
+            ]
+            (src / f"f{i}.txt").write_text("\n".join(lines) + "\n")
+        start_ingest_stream(
+            spark, str(src / "*.txt"), target, ckpt, sink=sink
+        ).awaitTermination()
+
+    fact = (
+        ManifestTable(target).read(spark)
+        if sink == "manifest"
+        else spark.read.parquet(target)
+    )
+    assert fact.count() == 40
+    stamps = {
+        r["second"]: r["stamps"]
+        for r in fact.groupBy(
+            (F.hour("reading_timestamp") >= 4).alias("second")
+        )
+        .agg(F.collect_set("arrived_at").alias("stamps"))
+        .collect()
+    }
+    assert len(stamps[False]) == 1
+    assert len(stamps[True]) == 1
+    assert stamps[False] != stamps[True]
+
+
 def test_stream_rejects_unknown_sink(spark, tmp_path):
     """A mistyped sink fails before any query starts, instead of
     falling through to the lock sink."""
