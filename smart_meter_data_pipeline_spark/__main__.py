@@ -16,7 +16,6 @@ the reference's assorted entry points (producer loop, consumer loop,
     python -m smart_meter_data_pipeline_spark tags <table_dir>
     python -m smart_meter_data_pipeline_spark untag <table_dir> <name>
     python -m smart_meter_data_pipeline_spark clone <table_dir> <target_dir>
-    python -m smart_meter_data_pipeline_spark reorg <table_dir>
 
 ``run`` executes any registered query (the full SURVEY §2 + LLM-ops
 registry); ``marts`` is the ``dbt run`` twin (rebuild staging + both
@@ -165,13 +164,6 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     clone.add_argument("table_dir", help="source ManifestTable directory")
     clone.add_argument("target_dir", help="empty clone target directory")
-
-    reorg = sub.add_parser(
-        "reorg",
-        help="apply pending merge-on-read tombstones as physical "
-        "rewrites (REORG TABLE ... APPLY; needs a Spark session)",
-    )
-    reorg.add_argument("table_dir", help="ManifestTable directory")
     return p
 
 
@@ -241,10 +233,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "clone":
             try:
                 c = mf.shallow_clone(t, args.target_dir)
-            except (ValueError, mf.PendingTombstonesError) as e:
-                # pending merge-on-read tombstones block physical
-                # copies (a RuntimeError, not ValueError) — same clean
-                # stderr + exit-2 path, pointing at `reorg`
+            except ValueError as e:
                 print(str(e), file=sys.stderr)
                 return 2
             print(
@@ -259,30 +248,9 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         try:
             res = mf.restore_version(t, args.version)
-        except (ValueError, mf.PendingTombstonesError) as e:
+        except ValueError as e:
             print(str(e), file=sys.stderr)
             return 2
-        print(json.dumps(res))
-        return 0
-
-    if args.cmd == "reorg":
-        import os
-
-        from smart_meter_data_pipeline_spark.sources import manifest as mf
-
-        commits_dir = os.path.join(args.table_dir, mf.COMMITS_DIRNAME)
-        if not os.path.isdir(commits_dir):
-            print(
-                f"not a manifest table (no {mf.COMMITS_DIRNAME}/ dir): "
-                f"{args.table_dir}",
-                file=sys.stderr,
-            )
-            return 2
-        from smart_meter_data_pipeline_spark.session import get_spark
-
-        res = mf.apply_tombstones(
-            mf.ManifestTable(args.table_dir), get_spark("smart-meter-reorg")
-        )
         print(json.dumps(res))
         return 0
 

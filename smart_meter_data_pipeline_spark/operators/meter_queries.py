@@ -1186,87 +1186,6 @@ FROM fact f JOIN dim d USING (meter_id)""",
 )(catalog_branch_wap)
 
 
-def manifest_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read deletes under the oracle gate — the
-    deletion-vector lifecycle end to end: append the generator day,
-    tombstone meters ≡5 (mod 11) WITHOUT touching a data file
-    (:meth:`ManifestTable.delete_keys_mor`), re-append the ≡5 (mod 22)
-    half of the deleted keys (the tombstone-aware validation must
-    accept them and the read must show them — re-inserts outrank
-    older tombstones by commit origin), tombstone meters ≡3 (mod 13)
-    on top (two pending tombstones with different epochs), read the
-    logical view, then :func:`apply_tombstones` and assert the
-    physical rewrite changed NOTHING logically (row count preserved,
-    zero pending left) before returning the final read. The DuckDB
-    twin states the same end set relationally, so the hash gate
-    certifies tombstone suppression, re-insert visibility, epoch
-    ordering, and apply-neutrality in one row (sources/manifest.py;
-    reference parity: extends the PK sink of
-    consumer/meter_consumer.py:104-114 with the Delta DV / Iceberg
-    merge-on-read delete shape)."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        apply_tombstones,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_mor_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        readings = gen_meter_readings(spark)
-        t.idempotent_append(spark, readings)
-        doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
-            "reading_timestamp", "meter_id"
-        )
-        t.delete_keys_mor(spark, doomed)
-        reinserted = readings.filter(F.col("meter_id") % 22 == 5)
-        n_back = t.idempotent_append(spark, reinserted)
-        if n_back == 0:
-            raise AssertionError(
-                "tombstone-aware append validation rejected the "
-                "re-insert of deleted keys"
-            )
-        t.delete_keys_mor(
-            spark,
-            readings.filter(F.col("meter_id") % 13 == 3).select(
-                "reading_timestamp", "meter_id"
-            ),
-        )
-        pre_n = t.read(spark).count()
-        apply_tombstones(t, spark)
-        if t._pending_tombstones(t.numbered_snapshot()):
-            raise AssertionError("tombstones still pending after apply")
-        final = t.read(spark)
-        if final.count() != pre_n:
-            raise AssertionError(
-                "apply_tombstones changed the logical row count"
-            )
-        return final.select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_mor_roundtrip",
-    f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id,
-       reading_consumption_milliwatts,
-       reading_production_milliwatts, status
-FROM readings
-WHERE (meter_id % 11 <> 5 OR meter_id % 22 = 5)
-  AND meter_id % 13 <> 3""",
-)(manifest_mor_roundtrip)
-
-
 def manifest_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE under the oracle gate: land the generator day as many
     small commits (micro-batch ingest shape), bin-pack the files with
@@ -1603,6 +1522,16 @@ SELECT * FROM readings""",
 )(manifest_asof_read)
 
 
+def _append_as_two_files(table, spark: SparkSession, df: DataFrame) -> None:
+    """Land ``df`` in two appends (even and odd meters). OPTIMIZE packs
+    only two or more small files, and one append of a day stages one
+    file."""
+    for parity in (0, 1):
+        table.idempotent_append(
+            spark, df.filter(F.col("meter_id") % 2 == parity)
+        )
+
+
 def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-path zone-map data skipping under the oracle gate: land
     the generator day, OPTIMIZE ZORDER on the PK so per-file
@@ -1642,7 +1571,7 @@ def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(workdir, "fact"), stats_columns=pk
         )
         readings = gen_meter_readings(spark)
-        t.idempotent_append(spark, readings)
+        _append_as_two_files(t, spark, readings)
         optimize_table(
             t, spark, target_partitions=16, cluster_by=pk, zorder=True
         )
@@ -2059,7 +1988,7 @@ def manifest_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = tempfile.mkdtemp(prefix="manifest_ret_q_")
     try:
         t = ManifestTable(os.path.join(workdir, "fact"))
-        t.idempotent_append(spark, gen_meter_readings(spark))
+        _append_as_two_files(t, spark, gen_meter_readings(spark))
         optimize_table(
             t,
             spark,
@@ -3066,76 +2995,6 @@ FROM per_meter
 )(meter_tou_billing)
 
 
-def manifest_retention_mor_roundtrip(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Merge-on-read retention DELETE under the oracle gate — the
-    sweep for UNCLUSTERED tables, where ``delete_where``'s CoW mode
-    degenerates to rewriting everything (every hash-layout file
-    straddles the cutoff): land the generator day unclustered, then
-    ``delete_where(..., mode="mor")`` on the first six hours and
-    assert ZERO files dropped or rewritten — the whole delete is one
-    atomic metadata commit carrying the matching pk tuples as a keyed
-    tombstone. The tombstone-taxed read is hash-checked against the
-    relational filter, then ``apply_tombstones`` reconciles the debt
-    and the reconciled read must stay identical (asserted in-query) —
-    the full delete → read-tax → reorg lifecycle under one oracle
-    (sources/manifest.py delete_where mode="mor")."""
-    import datetime as _dt
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        apply_tombstones,
-        delete_where,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_ret_mor_q_")
-    try:
-        t = ManifestTable(
-            os.path.join(workdir, "fact"),
-            stats_columns=["reading_timestamp"],
-        )
-        readings = gen_meter_readings(spark)
-        t.idempotent_append(spark, readings)
-        res = delete_where(
-            t,
-            spark,
-            "reading_timestamp",
-            hi=_dt.datetime(2024, 1, 1, 5, 59, 59),
-            mode="mor",
-        )
-        if res["files_rewritten"] != 0:
-            raise AssertionError(f"MoR delete rewrote files: {res}")
-        if res["keys_tombstoned"] == 0:
-            raise AssertionError(f"nothing tombstoned: {res}")
-        taxed = t.read(spark).localCheckpoint(eager=True)
-        reorg = apply_tombstones(t, spark)
-        if reorg["rows_deleted"] != res["keys_tombstoned"]:
-            raise AssertionError(
-                f"reorg reconciled {reorg} but the delete tombstoned "
-                f"{res['keys_tombstoned']} keys"
-            )
-        reconciled = t.read(spark)
-        if reconciled.count() != taxed.count():
-            raise AssertionError(
-                "reconciled read diverged from the tombstone-taxed one"
-            )
-        return reconciled.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_retention_mor_roundtrip",
-    f"""WITH {_readings_cte()}
-SELECT * FROM readings
-WHERE reading_timestamp > TIMESTAMP '2024-01-01 05:59:59'""",
-)(manifest_retention_mor_roundtrip)
-
-
 def manifest_vacuum_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3510,7 +3369,7 @@ def manifest_index_point_read(
             F.lit("AC"), F.lpad(F.col("meter_id").cast("string"), 5, "0")
         )
         day1 = gen_meter_readings(spark).withColumn("account_code", acct)
-        t.idempotent_append(spark, day1)
+        _append_as_two_files(t, spark, day1)
         optimize_table(
             t, spark, target_partitions=16, cluster_by=["meter_id"]
         )
@@ -3579,9 +3438,8 @@ def manifest_index_gc_roundtrip(
     restated account, one untouched — is served through the cleaned
     index with zero unindexed files and hash-checked against the
     relational filter. sources/index.py:vacuum_index rides the
-    posting table's own delete_keys_mor + apply_tombstones, so the
-    GC is itself the manifest mutation protocol, not a bespoke
-    rewrite."""
+    posting table's own copy-on-write delete_keys, so the GC is
+    itself the manifest mutation protocol, not a bespoke rewrite."""
     import os
     import shutil
     import tempfile
@@ -3642,87 +3500,6 @@ def manifest_index_gc_roundtrip(
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-
-
-def manifest_delete_by_value(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Index-accelerated DELETE under the oracle gate (round 12,
-    sources/index.py:delete_values_mor) — the right-to-be-forgotten
-    sweep on a NON-pk, non-clustered-key column: erase two accounts
-    from the generator day where the candidate scan is POSTING-EXACT
-    (opens only the files that contain the accounts — asserted
-    in-query), the matching pk tuples land as one merge-on-read
-    tombstone (zero data files rewritten — asserted from the commit
-    log), and ``apply_tombstones`` reconciles the debt before the
-    final read. One hash over the final table proves the erase:
-    every other account's rows intact, the erased accounts gone.
-    The reference gets DELETE WHERE from Postgres for free; this is
-    that statement rebuilt for immutable parquet with the index
-    supplying the candidate set."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.index import (
-        delete_values_mor,
-        refresh_index,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        apply_tombstones,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_del_val_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        acct = F.concat(
-            F.lit("AC"), F.lpad(F.col("meter_id").cast("string"), 5, "0")
-        )
-        day1 = gen_meter_readings(spark).withColumn("account_code", acct)
-        t.idempotent_append(
-            spark,
-            day1,
-            cluster_by=["account_code"],
-            cluster_partitions=16,
-        )
-        refresh_index(t, spark, "account_code", posting_partitions=8)
-        n, rep = delete_values_mor(
-            t, spark, "account_code", ["AC00017", "AC00091"]
-        )
-        if n != 2 * N_TICKS:
-            raise AssertionError(
-                f"deleted {n} keys, wanted {2 * N_TICKS}"
-            )
-        if not (0 < rep["files_read"] < rep["files_live"]):
-            raise AssertionError(
-                f"candidate scan was not posting-pruned: {rep}"
-            )
-        delete_commit = t.snapshot()[-1]
-        if delete_commit.get("added") and not delete_commit.get(
-            "tombstones"
-        ):
-            raise AssertionError(
-                "delete commit rewrote data files — expected a "
-                "metadata-only MoR tombstone"
-            )
-        apply_tombstones(t, spark)
-        return t.read(spark).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_delete_by_value",
-    f"""WITH {_readings_cte()},
-tagged AS (
-  SELECT *, 'AC' || lpad(CAST(meter_id AS VARCHAR), 5, '0')
-           AS account_code
-  FROM readings
-)
-SELECT * FROM tagged
-WHERE account_code NOT IN ('AC00017', 'AC00091')""",
-)(manifest_delete_by_value)
 
 
 register(

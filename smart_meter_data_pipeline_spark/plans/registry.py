@@ -243,7 +243,6 @@ _PRIORITY = [
     "manifest_index_point_read",
     "stream_dr_baseline",
     "manifest_index_gc_roundtrip",
-    "manifest_delete_by_value",
     "corpus_text_index_search",
     "stream_text_index_maintenance",
     "catalog_multi_table_txn",
@@ -304,7 +303,6 @@ _PRIORITY = [
     "meter_tou_billing",
     "events_dr_baseline",
     "dedup_clusters_star",
-    "manifest_retention_mor_roundtrip",
     "stream_bottomk_sample",
     "manifest_vacuum_roundtrip",
     "doc_hashed_features",
@@ -364,7 +362,6 @@ _PRIORITY = [
     "events_mann_whitney_u",
     "dedup_sorted_neighborhood",
     "corpus_inverted_index",
-    "manifest_mor_roundtrip",
     "train_kfold_assign",
     "events_l_diversity",
     "sample_reservoir_per_key",

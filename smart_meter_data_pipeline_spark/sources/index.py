@@ -23,12 +23,6 @@ OPTIMIZATION, never a correctness filter):
 - Copy-on-write rewrites produce NEW files with origin numbers past
   any older refresh, so a stale posting at a removed file is ignored
   (∩ live) and the rewritten rows are still found (> indexed_upto).
-- Candidate files are read through the table's merge-on-read
-  tombstone reconciliation (``_read_files_with_tombstones``), so a
-  pending ``delete_keys_mor`` / ``delete_where(mode="mor")`` is
-  anti-joined onto exactly the rows it governs — the indexed read
-  equals ``read().filter(...)`` under EVERY mutation kind, not just
-  copy-on-write ones.
 - The row filter always applies on top, so the pruned read equals
   the plain ``read().filter(...)`` whatever the refresh lag.
 
@@ -420,10 +414,7 @@ def index_point_read(
     row is touched; the postings collect is bounded by the files that
     actually contain the looked-up values — the point-lookup regime
     the index exists for; a huge IN-list belongs on the zone-map path
-    instead. Candidate data files are read with pending merge-on-read
-    tombstones reconciled, so the result equals
-    ``read().filter(col.isin(values))`` even mid-``delete_keys_mor``
-    lifecycle."""
+    instead."""
     numbered = table.numbered_snapshot()
     if not numbered:
         return None, {"files_live": 0, "files_read": 0}
@@ -440,9 +431,9 @@ def index_point_read(
             else None
         )
         return empty, report
-    df = table._read_files_with_tombstones(
-        spark, numbered, candidates, schema
-    ).filter(F.col(column).isin(vals))
+    df = table._read_files(spark, candidates, schema).filter(
+        F.col(column).isin(vals)
+    )
     return df, report
 
 
@@ -460,8 +451,7 @@ def text_index_search(
     a document that contains every token must itself contain every
     token, so the intersection is still a sound superset (and far
     tighter). Unindexed files are always candidates (the staleness
-    rule), candidates are read with pending MoR tombstones
-    reconciled, and the row-level token predicate applies on top, so
+    rule), and the row-level token predicate applies on top, so
     the result equals the plain whitespace-token filter at any
     refresh lag. ``df_cap`` overrides the default 90%-occupancy
     document-frequency cap (serving a capped token as "all indexed
@@ -561,9 +551,7 @@ def text_index_search(
     pred = conds[0]
     for c in conds[1:]:
         pred = (pred | c) if mode == "any" else (pred & c)
-    df = table._read_files_with_tombstones(
-        spark, numbered, candidates, schema
-    ).filter(pred)
+    df = table._read_files(spark, candidates, schema).filter(pred)
     return df, report
 
 
@@ -581,15 +569,11 @@ def vacuum_index(
 
     Implemented with the posting table's OWN mutation machinery: the
     stale postings anti-join ``(postings ⟕̸ live rel_files)`` runs
-    distributed, lands as a merge-on-read tombstone, and
-    ``apply_tombstones`` settles it into rewrites immediately (one
-    maintenance call = clean posting files, no read tax left). The
-    live-file frame is metadata-sized — the commit log already holds
-    the file list driver-side. Returns ``{"postings_removed": n}``."""
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        apply_tombstones,
-    )
-
+    distributed and a copy-on-write ``delete_keys`` rewrites the
+    posting files that hold them (one maintenance call = clean
+    posting files). The live-file frame is metadata-sized — the
+    commit log already holds the file list driver-side. Returns
+    ``{"postings_removed": n}``."""
     numbered = table.numbered_snapshot()
     idx = _index_table(table, index_name or column)
     idx_df = idx.read(spark)
@@ -605,9 +589,8 @@ def vacuum_index(
     stale = idx_df.join(
         F.broadcast(live_df), "rel_file", "left_anti"
     ).select("v", "rel_file")
-    n = idx.delete_keys_mor(spark, stale, pk=["v", "rel_file"])
+    n = idx.delete_keys(spark, stale, pk=["v", "rel_file"])
     if n:
-        apply_tombstones(idx, spark)
         # Stamp the chain head this vacuum's live set came from: a
         # reader on an OLDER snapshot may hold files whose postings
         # were just GC'd, and nothing else advances the index meta on
@@ -732,33 +715,3 @@ def maintain_index(
     )
     return {"refresh": ref, "vacuum": gc, "optimize": opt}
 
-
-def delete_values_mor(
-    table: ManifestTable,
-    spark: SparkSession,
-    column: str,
-    values: list,
-    pk: list[str] | None = None,
-) -> tuple[int, dict]:
-    """DELETE WHERE ``column IN (values)`` served through the posting
-    index — the right-to-be-forgotten sweep on a NON-clustered,
-    non-pk column (erase an account from a 100 TB fact table): the
-    candidate scan is posting-exact (opens only files that contain
-    the values, plus any unindexed tail), the matching rows' pk
-    tuples land as a merge-on-read tombstone (one metadata commit,
-    zero data files rewritten), and ``apply_tombstones`` reconciles
-    later, exactly the ``delete_keys_mor`` lifecycle. Soundness is
-    the index read's: candidates over-approximate the files holding
-    the values, the row filter picks the true matches, and the
-    tombstone governs by pk with the origin-number rule, so rows
-    (re-)inserted after the delete survive it — standard
-    statement-snapshot DELETE semantics. Returns ``(n_keys,
-    candidate_report)``."""
-    from smart_meter_data_pipeline_spark.sources.manifest import PK
-
-    pk = list(pk) if pk else list(PK)
-    df, rep = index_point_read(table, spark, column, values)
-    if df is None:
-        return 0, rep
-    n = table.delete_keys_mor(spark, df.select(*pk), pk=pk)
-    return n, rep

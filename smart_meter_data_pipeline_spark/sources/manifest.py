@@ -38,6 +38,9 @@ matched rows, and one commit atomically lists the rewrites as
 ``added`` and the originals as ``removed``. Data files are never
 modified IN PLACE, so historical versions stay readable; removed
 files become vacuumable once compaction nets them out of the log.
+Copy-on-write is the only way rows leave the table, so the live files
+ARE the table: every read, and the append's existing-keys scan, is a
+plain parquet read of them under the commit schema.
 """
 
 from __future__ import annotations
@@ -72,13 +75,6 @@ class _SnapshotAdvancedError(RuntimeError):
     re-derive (re-enrich / re-filter) against the new image and try
     again. Never escapes the public API: :meth:`upsert_partial` and
     :meth:`upsert_if_newer` catch it inside their own retry loops."""
-
-
-class PendingTombstonesError(RuntimeError):
-    """Raised when a physical-rewrite operation (CoW mutation,
-    OPTIMIZE, RESTORE) runs over unapplied merge-on-read tombstones —
-    those paths read data files raw and would resurrect
-    logically-deleted rows. Run :func:`apply_tombstones` first."""
 
 
 def _put_if_absent(path: str, payload: bytes) -> bool:
@@ -159,8 +155,8 @@ class ManifestTable:
         # commit channel as the blooms (one membership-index map per
         # file, value type selects the encoding: hex bitmap = bloom,
         # list = dictionary), so every metadata carry-through path —
-        # log compaction, clone, branch publish, MoR reorg, retention
-        # rewrite — preserves it with zero extra code.
+        # log compaction, clone, branch publish, retention rewrite —
+        # preserves it with zero extra code.
         self.dict_columns = list(dict_columns) if dict_columns else []
         self.commits_dir = os.path.join(table_dir, COMMITS_DIRNAME)
         self.data_dir = os.path.join(table_dir, DATA_DIRNAME)
@@ -276,7 +272,9 @@ class ManifestTable:
     @staticmethod
     def _read_log(log_dir: str) -> list[tuple[int, dict]]:
         """Read one numbered commit-log directory (the main log or a
-        branch log — same file format, same immutability rules)."""
+        branch log — same file format, same immutability rules), and
+        refuse it if it holds unapplied merge-on-read tombstones
+        (:meth:`_refuse_pending_tombstones`)."""
         for attempt in range(40):
             try:
                 names = sorted(
@@ -288,7 +286,7 @@ class ManifestTable:
                 for n in names:
                     with open(os.path.join(log_dir, n)) as fh:
                         out.append((int(n[: -len(".json")]), json.load(fh)))
-                return out
+                break
             except FileNotFoundError:
                 # Momentarily missing dir (the non-renameat2 compaction
                 # fallback is between its two renames), or a listed
@@ -299,6 +297,32 @@ class ManifestTable:
                 if attempt == 39:
                     raise
                 time.sleep(0.05)
+        ManifestTable._refuse_pending_tombstones(out, f"commit log {log_dir}")
+        return out
+
+    @staticmethod
+    def _refuse_pending_tombstones(
+        numbered: list[tuple[int, dict]], where: str
+    ) -> None:
+        """Raise ``ValueError`` when ``numbered`` holds a merge-on-read
+        tombstone an older version of this module wrote and never
+        applied (a ``tombstones`` record whose ``upto`` is above the
+        highest ``mor_applied_upto``): the rows it deleted are still in
+        the live files, and a plain read would return them."""
+        applied = max(
+            (c.get("mor_applied_upto", -1) for _, c in numbered), default=-1
+        )
+        if any(
+            t["upto"] > applied
+            for _, c in numbered
+            for t in c.get("tombstones", ())
+        ):
+            raise ValueError(
+                f"{where} holds merge-on-read tombstones that "
+                "were never applied; this version reads data files as they "
+                "are and would return the rows they deleted. Apply them with "
+                "the version that wrote them (its apply_tombstones) first."
+            )
 
     def next_commit_number(self) -> int:
         """max existing number + 1 — MONOTONE across compactions
@@ -791,12 +815,7 @@ class ManifestTable:
                 # legacy table without recorded schemas: derive it
                 # from one original file; the row filter empties it
                 files = self._files(commits)[:1]
-        # Pending merge-on-read tombstones (delete_keys_mor) anti-join
-        # onto exactly the files they govern; a tombstone-free table
-        # takes the plain one-reader path inside.
-        df = self._read_files_with_tombstones(
-            spark, numbered, files, schema
-        )
+        df = self._read_files(spark, files, schema)
         for f in row_filters:
             df = df.filter(f)
         return df
@@ -828,6 +847,33 @@ class ManifestTable:
         if not fields:
             return None
         return StructType(list(fields.values()))
+
+    def _file_origins(
+        self, numbered: list[tuple[int, dict]]
+    ) -> dict[str, int]:
+        """{absolute live file path: the NUMBER of the commit that
+        added it}. The secondary index (sources/index.py) uses it for
+        freshness: a live file whose origin is past the index's last
+        refresh has no postings yet, so index reads open it
+        unconditionally. A file merged by log compaction takes the
+        merged base's number."""
+        origins: dict[str, int] = {}
+        for num, c in numbered:
+            for f in c.get("removed", []):
+                origins.pop(os.path.join(self.data_dir, f), None)
+            for f in c["added"]:
+                origins[os.path.join(self.data_dir, f)] = num
+        return origins
+
+    @staticmethod
+    def _read_files(
+        spark: SparkSession, files: list[str], schema
+    ) -> DataFrame:
+        """``files`` as one parquet read under ``schema``, the commit
+        log's evolved schema (None, on a log that recorded no schema,
+        lets Spark infer it from the files)."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*files)
 
     def _prune_by_posting_index(
         self,
@@ -975,10 +1021,7 @@ class ManifestTable:
         # whichever file Spark samples — non-deterministically dropping
         # later-added columns from the change feed.
         schema = self._evolved_schema(commits[: v_to + 1])
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*files)
+        return self._read_files(spark, files, schema)
 
     def change_feed(
         self,
@@ -1006,15 +1049,7 @@ class ManifestTable:
         table (everything is an insert). Returns None when the
         snapshots share every file. Complements :meth:`diff` (the
         cheaper post-image/file-level feed) — use this one when the
-        consumer needs deletes and pre-images.
-
-        Merge-on-read divergence (documented): a pending tombstone
-        (:meth:`delete_keys_mor`) moves no files, so its logical
-        deletes enter this feed only when :func:`apply_tombstones`
-        rewrites the governed files (whose commit's file difference
-        then yields exactly those delete rows). Consumers needing
-        delete latency below the apply cadence should read the
-        tombstone commits' ``removed_dates`` directly."""
+        consumer needs deletes and pre-images."""
         commits = self.snapshot()
         if not (-1 <= v_from <= v_to < len(commits)):
             raise ValueError(
@@ -1034,10 +1069,7 @@ class ManifestTable:
             if not files:
                 return None
             schema = self._evolved_schema(commits[: upto + 1])
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            return reader.parquet(*files)
+            return self._read_files(spark, files, schema)
 
         pre = _read(pre_files, v_from if v_from >= 0 else v_to)
         post = _read(post_files, v_to)
@@ -1123,43 +1155,6 @@ class ManifestTable:
         ]
 
     STATS_COLUMN = "meter_id"
-
-    def _footer_rows(self, rel_files: list[str]) -> int:
-        """Σ ``num_rows`` over the files' parquet FOOTERS — the
-        driver-side (~1ms/file, no Spark job) way to count rows of a
-        known file list. Exact: the footer row count is authoritative
-        for an immutable file. Used where a count action would re-scan
-        data purely for bookkeeping (r14, guide §1.2)."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.read_metadata(os.path.join(self.data_dir, f)).num_rows
-            for f in rel_files
-        )
-
-    def _recorded_rows(
-        self, commits: list[dict], rel_files: list[str]
-    ) -> int:
-        """Σ rows over ``rel_files`` from the commit log's recorded
-        per-file ``"#rows"`` stats (r15, VERDICT r14 #7) — zero I/O
-        for any file committed since stats tracking; only files with
-        no usable record (legacy ``[min, max]`` entries, pre-stats
-        commits) fall back to one footer read each. Exact either way:
-        the recorded count came from the same immutable footer."""
-        recorded: dict[str, object] = {}
-        for c in commits:
-            recorded.update(c.get("stats", {}))
-        total = 0
-        missing: list[str] = []
-        for rel in rel_files:
-            e = recorded.get(rel)
-            if isinstance(e, dict) and isinstance(e.get("#rows"), int):
-                total += e["#rows"]
-            else:
-                missing.append(rel)
-        if missing:
-            total += self._footer_rows(missing)
-        return total
 
     def _file_stats(self, rel_files: list[str]) -> dict:
         """Per-file ``{column: [min, max, null_count], "#rows": n}``
@@ -1984,211 +1979,6 @@ class ManifestTable:
             f"attempts on {self.table_dir}"
         )
 
-    # -- merge-on-read mutations ---------------------------------------------
-
-    @staticmethod
-    def _mor_high_water(commits: list[dict]) -> int:
-        """Largest commit number whose tombstones have been physically
-        applied (−1 when none): tombstone records at or below it are
-        inert — their logical deletes are baked into rewritten files."""
-        return max(
-            (c.get("mor_applied_upto", -1) for c in commits), default=-1
-        )
-
-    def _pending_tombstones(
-        self, numbered: list[tuple[int, dict]]
-    ) -> list[dict]:
-        """Unapplied tombstone records, ascending by ``upto`` (the
-        commit number the delete landed at — the record is
-        self-describing so log compaction can carry it into the merged
-        base without losing its position in time)."""
-        high = self._mor_high_water([c for _, c in numbered])
-        out = [
-            t
-            for _, c in numbered
-            for t in c.get("tombstones", [])
-            if t["upto"] > high
-        ]
-        return sorted(out, key=lambda t: t["upto"])
-
-    def _file_origins(
-        self, numbered: list[tuple[int, dict]]
-    ) -> dict[str, int]:
-        """{absolute live file path: the commit NUMBER whose commit
-        first added it}. A tombstone applies to a file iff the file's
-        origin is <= the tombstone's ``upto`` — rows (re-)written
-        AFTER the delete survive it, which is what makes
-        re-inserting a deleted key, CoW rewrites, and OPTIMIZE all
-        compose with pending tombstones. Log compaction preserves
-        origins through the merged base's ``added_numbers`` map."""
-        origins: dict[str, int] = {}
-        for num, c in numbered:
-            for f in c.get("removed", []):
-                origins.pop(os.path.join(self.data_dir, f), None)
-            recorded = c.get("added_numbers", {})
-            for f in c["added"]:
-                origins[os.path.join(self.data_dir, f)] = recorded.get(
-                    f, num
-                )
-        return origins
-
-    def _tombstone_keys(self, spark: SparkSession, t: dict) -> DataFrame:
-        return spark.read.parquet(
-            *(os.path.join(self.data_dir, r) for r in t["rels"])
-        )
-
-    def _read_files_with_tombstones(
-        self,
-        spark: SparkSession,
-        numbered: list[tuple[int, dict]],
-        files: list[str],
-        schema,
-    ) -> DataFrame:
-        """Read ``files`` with every pending tombstone anti-joined onto
-        exactly the rows it governs: files are grouped by which SUFFIX
-        of the (upto-ascending) tombstone list applies to their origin
-        number, each group is read once and anti-joined with its
-        suffix, and the groups union back. With no pending tombstones
-        this is a plain parquet read."""
-        import bisect
-
-        def _reader():
-            r = spark.read
-            return r.schema(schema) if schema is not None else r
-
-        pending = self._pending_tombstones(numbered)
-        if not pending:
-            return _reader().parquet(*files)
-        origins = self._file_origins(numbered)
-        uptos = [t["upto"] for t in pending]
-        groups: dict[int, list[str]] = {}
-        for f in files:
-            i = bisect.bisect_left(uptos, origins.get(f, -1))
-            groups.setdefault(i, []).append(f)
-        parts = []
-        for i, grp in sorted(groups.items()):
-            df = _reader().parquet(*grp)
-            for t in pending[i:]:
-                df = df.join(
-                    self._tombstone_keys(spark, t), t["pk"], "left_anti"
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def delete_keys_mor(
-        self,
-        spark: SparkSession,
-        keys: DataFrame,
-        pk: list[str] = PK,
-        max_retries: int = 5,
-    ) -> int:
-        """Merge-on-read DELETE — the deletion-vector shape (Delta DVs
-        / Iceberg merge-on-read deletes), keyed on ``pk`` rather than
-        row positions (a manifest of immutable parquet files has no
-        stable row ordinals to point at). The delete stages only the
-        KEY TUPLES and publishes one metadata commit; no data file is
-        read or rewritten, so deleting a handful of rows from a 100 TB
-        table costs O(|keys|) regardless of table size — the whole
-        point of merge-on-read. Readers anti-join pending tombstones
-        onto exactly the files the delete governs (origin number <=
-        the tombstone's commit number), so later re-inserts of a
-        deleted key are visible, and :func:`apply_tombstones`
-        reconciles the debt into real rewrites when the read-side tax
-        is no longer worth it (the Delta ``REORG TABLE APPLY``
-        lifecycle). Copy-on-write mutations, OPTIMIZE and RESTORE
-        refuse to run over pending tombstones (apply first) — they
-        read files raw and would resurrect logically-deleted rows.
-
-        Returns the number of distinct key tuples recorded."""
-        in_keys = keys.select(*pk).dropDuplicates(pk).persist()
-        try:
-            # key count + distinct dates from ONE per-date rollup job
-            # (r14, guide §1.2) — was a count action plus a separate
-            # distinct collect over the same frame.
-            if "reading_timestamp" in in_keys.columns:
-                per_date = (
-                    in_keys.groupBy(
-                        F.to_date("reading_timestamp").alias("d")
-                    )
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                n_keys = sum(r["n"] for r in per_date)
-                key_dates = {str(r["d"]) for r in per_date}
-            else:
-                n_keys = in_keys.count()
-                key_dates = None  # timestamp-free pk: dates unknowable
-            if n_keys == 0:
-                return 0
-            staged = self._stage(in_keys)
-            for _ in range(max_retries):
-                numbered = self.numbered_snapshot()
-                commits = [c for _, c in numbered]
-                fence = self._fence(numbered)
-                tbl_schema = self._evolved_schema(commits)
-                if tbl_schema is not None:
-                    missing = [
-                        c
-                        for c in pk
-                        if c not in {f.name for f in tbl_schema.fields}
-                    ]
-                    if missing:
-                        self._discard_stage_all(staged)
-                        raise ValueError(
-                            f"tombstone pk columns {missing} do not "
-                            "exist in the table schema"
-                        )
-                payload = json.dumps(
-                    {
-                        "version": fence,
-                        "added": [],
-                        "removed": [],
-                        "count": 0,
-                        "dates": [],
-                        "stats": {},
-                        # CDC metadata: the delete logically changed
-                        # these dates even though no file moved. A
-                        # timestamp-free pk can't name them — over-
-                        # approximate with every commit date so an
-                        # incremental consumer re-reads more, never
-                        # misses the change.
-                        "removed_dates": (
-                            sorted(key_dates)
-                            if key_dates is not None
-                            else sorted(
-                                {
-                                    d
-                                    for c in commits
-                                    for d in c.get("dates", [])
-                                }
-                            )
-                        ),
-                        "batch_dates": [],
-                        "tombstones": [
-                            {"upto": fence, "rels": staged, "pk": list(pk)}
-                        ],
-                        "schema": None,
-                        "committed_at": time.time(),
-                    }
-                ).encode()
-                if self._pre_publish_hook is not None:
-                    self._pre_publish_hook()
-                if _put_if_absent(self._commit_path(fence), payload):
-                    return n_keys
-                # Lost the race: the staged keys are still valid (a
-                # tombstone validates against nothing — it only needs
-                # a fresh fence), so retry with the same stage.
-            self._discard_stage_all(staged)
-            raise CommitConflictError(
-                f"gave up after {max_retries} tombstone attempts on "
-                f"{self.table_dir}"
-            )
-        finally:
-            in_keys.unpersist()
-
     def _cow_mutation(
         self,
         spark: SparkSession,
@@ -2255,12 +2045,6 @@ class ManifestTable:
                         f"{self.table_dir} advanced past fence "
                         f"{expected_fence} (now {fence})"
                     )
-                if self._pending_tombstones(numbered):
-                    raise PendingTombstonesError(
-                        f"{self.table_dir} has pending merge-on-read "
-                        "tombstones; run apply_tombstones() before "
-                        "copy-on-write mutations"
-                    )
                 self._check_schema_compat(in_keys, commits)
                 if batch is not None:
                     # MERGE "UPDATE SET *" contract: matched rows are
@@ -2319,12 +2103,9 @@ class ManifestTable:
                 removed_rel: list[str] = []
                 n_matched = 0
                 if cand:
-                    cand_reader = spark.read
-                    if ev_schema is not None:
-                        cand_reader = cand_reader.schema(ev_schema)
-                    tagged = cand_reader.parquet(*cand).withColumn(
-                        "_file", F.input_file_name()
-                    )
+                    tagged = self._read_files(
+                        spark, cand, ev_schema
+                    ).withColumn("_file", F.input_file_name())
                     # No broadcast hint: a restatement batch can be
                     # arbitrarily large — let AQE pick broadcast when
                     # the key set is small and shuffle when it isn't.
@@ -2509,21 +2290,13 @@ class ManifestTable:
         """``in_batch`` minus the keys of the live files on its dates,
         as a lazy frame: the caller's write is the one job that runs
         it."""
-        files = self._files([c for _, c in numbered], batch_dates)
+        commits = [c for _, c in numbered]
+        files = self._files(commits, batch_dates)
         if not files:
             return in_batch
-        # Tombstone-aware: a key deleted by a pending merge-on-read
-        # tombstone must be re-insertable — validating against the
-        # raw files would see the dead row and drop the re-insert.
-        # Read under the evolved commit schema (as read() does):
-        # with schema=None, tombstone origin groups that straddle a
-        # schema-evolution boundary would infer DIFFERENT per-group
-        # schemas and the strict unionByName inside would raise.
-        existing = self._read_files_with_tombstones(
-            spark,
-            numbered,
-            files,
-            self._evolved_schema([c for _, c in numbered]),
+        # Read under the evolved commit schema, as read() does.
+        existing = self._read_files(
+            spark, files, self._evolved_schema(commits)
         ).select(*pk)
         return in_batch.join(existing, pk, "left_anti")
 
@@ -2653,37 +2426,6 @@ def compact_log(table: ManifestTable, keep_last: int = 10) -> int:
             # (the same granularity loss Delta log cleanup accepts).
             "committed_at": base[-1][1].get("committed_at"),
         }
-        # Merge-on-read bookkeeping survives compaction: the applied
-        # high-water and any still-pending tombstone records carry
-        # over verbatim (records are self-describing via their
-        # original ``upto`` numbers), and — whenever pending
-        # tombstones exist anywhere in the log — the base records each
-        # merged file's ORIGINAL commit number so tombstone
-        # applicability (origin <= upto) keeps meaning "rows written
-        # before the delete", not "rows that happen to sit in the
-        # base".
-        merged_high = max(
-            (c.get("mor_applied_upto", -1) for _, c in base), default=-1
-        )
-        if merged_high >= 0:
-            merged["mor_applied_upto"] = merged_high
-        full_high = ManifestTable._mor_high_water([c for _, c in numbered])
-        kept_tombs = sorted(
-            (
-                t
-                for _, c in base
-                for t in c.get("tombstones", [])
-                if t["upto"] > full_high
-            ),
-            key=lambda t: t["upto"],
-        )
-        if kept_tombs:
-            merged["tombstones"] = kept_tombs
-        if table._pending_tombstones(numbered):
-            merged["added_numbers"] = {
-                os.path.relpath(p, table.data_dir): n
-                for p, n in table._file_origins(base).items()
-            }
         tmp = table._commit_path(base_num) + f".compacting.{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(merged, fh)
@@ -2863,11 +2605,6 @@ def optimize_table(
             numbered = table.numbered_snapshot()
             commits = [c for _, c in numbered]
             fence = table._fence(numbered)
-            if table._pending_tombstones(numbered):
-                raise PendingTombstonesError(
-                    f"{table.table_dir} has pending merge-on-read "
-                    "tombstones; run apply_tombstones() before OPTIMIZE"
-                )
             live = table._files(commits)
             small = [
                 f
@@ -2886,10 +2623,7 @@ def optimize_table(
                 1, total // small_file_bytes
             )
             schema = table._evolved_schema(commits)
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            src_df = reader.parquet(*small)
+            src_df = table._read_files(spark, small, schema)
             if cluster_by and (zorder or hilbert) and len(cluster_by) >= 2:
                 curve = _hilbert_column if hilbert else _zorder_column
                 zcol = curve(spark, src_df, cluster_by)
@@ -2950,230 +2684,6 @@ def optimize_table(
         )
 
 
-def apply_tombstones(
-    table: ManifestTable, spark: SparkSession, max_retries: int = 5
-) -> dict:
-    """Reconcile every pending merge-on-read tombstone into physical
-    rewrites — Delta's ``REORG TABLE ... APPLY (PURGE)``: files that
-    actually CONTAIN governed keys are rewritten minus the matches
-    (stats-skipped and semi-join-detected, so untouched files stay
-    untouched), and one commit swaps them in and advances the
-    ``mor_applied_upto`` high-water, after which the tombstone records
-    are inert and their key files vacuumable.
-
-    All pending tombstones are applied in ONE pass with the same
-    origin-suffix grouping the read path uses — applying them one at a
-    time would bump rewritten files' origins past the remaining
-    tombstones and resurrect rows. Logical table content is unchanged
-    (read() before == read() after), which the manifest_mor_roundtrip
-    driver query certifies under the hash gate.
-
-    Returns ``{"applied_tombstones": n, "files_rewritten": m,
-    "files_created": k, "rows_deleted": d}``."""
-    import bisect
-
-    from smart_meter_data_pipeline_spark.sources.txn import table_lock
-
-    with table_lock(table.table_dir):
-        for _ in range(max_retries):
-            numbered = table.numbered_snapshot()
-            commits = [c for _, c in numbered]
-            fence = table._fence(numbered)
-            pending = table._pending_tombstones(numbered)
-            if not pending:
-                return {
-                    "applied_tombstones": 0,
-                    "files_rewritten": 0,
-                    "files_created": 0,
-                    "rows_deleted": 0,
-                }
-            origins = table._file_origins(numbered)
-            live = table._files(commits)
-            ev_schema = table._evolved_schema(commits)
-            uptos = [t["upto"] for t in pending]
-            groups: dict[int, list[str]] = {}
-            for f in live:
-                i = bisect.bisect_left(uptos, origins.get(f, -1))
-                if i < len(pending):
-                    groups.setdefault(i, []).append(f)
-            staged_all: list[str] = []
-            removed_rel: list[str] = []
-            staged_stats: dict[str, dict] = {}
-            n_deleted = 0
-            # Each tombstone's key frame is built ONCE per attempt and
-            # persisted (r15, VERDICT r14 #4): the same frame feeds
-            # the range/bloom pruning, the affected-detection
-            # semi-join and the survivor anti-join — and is reused
-            # across origin groups — where before every consumer
-            # re-read the key parquet from scratch. The list is built
-            # inside the try so a failure partway through still
-            # unpersists the frames persisted before it.
-            tkeys: list[DataFrame] = []
-            try:
-                for t in pending:
-                    tkeys.append(table._tombstone_keys(spark, t).persist())
-                for i, grp in sorted(groups.items()):
-                    tombs = pending[i:]
-                    # File skipping: keep a file only if its recorded
-                    # stats intersect at least one applicable
-                    # tombstone's key range — a narrow-key delete
-                    # rewrites only its range.
-                    cand: set[str] = set()
-                    for j, t in enumerate(tombs, start=i):
-                        keys = tkeys[j]
-                        # pk-only pruning (round-9 fix, same rule as
-                        # the CoW path): the anti-join matches on the
-                        # tombstone's recorded pk — extra key-frame
-                        # columns must not skip files
-                        t_pk = set(t.get("pk", []))
-                        stat_cols = [
-                            c
-                            for c in table.stats_columns
-                            if c in t_pk and c in keys.columns
-                        ]
-                        if not stat_cols:
-                            cand.update(grp)
-                            continue
-                        ranges = table._batch_key_ranges(keys, stat_cols)
-                        pruned = table._prune_by_stats(
-                            grp, commits, ranges
-                        )
-                        pruned = table._prune_candidates_by_bloom(
-                            pruned,
-                            commits,
-                            keys.select(
-                                *[c for c in keys.columns if c in t_pk]
-                            ),
-                        )
-                        cand.update(pruned)
-                    if not cand:
-                        continue
-                    reader = spark.read
-                    if ev_schema is not None:
-                        reader = reader.schema(ev_schema)
-                    tagged = reader.parquet(*sorted(cand)).withColumn(
-                        "_file", F.input_file_name()
-                    )
-                    affected = None
-                    for j, t in enumerate(tombs, start=i):
-                        m = tagged.join(
-                            tkeys[j], t["pk"], "left_semi"
-                        ).select("_file")
-                        affected = (
-                            m
-                            if affected is None
-                            else affected.unionByName(m)
-                        )
-                    affected_uris = [
-                        r["_file"] for r in affected.distinct().collect()
-                    ]
-                    if not affected_uris:
-                        continue
-                    # rows_deleted bookkeeping without data scans:
-                    # n_before from the commit log's recorded "#rows"
-                    # stats (r15 — footer fallback only for statless
-                    # files), n_after from the staged survivors'
-                    # footer stats, which the commit payload needs
-                    # anyway (computed once here, reused there).
-                    grp_removed = sorted(
-                        table._rel(u) for u in affected_uris
-                    )
-                    n_before = table._recorded_rows(commits, grp_removed)
-                    survivors = tagged.filter(
-                        F.col("_file").isin(affected_uris)
-                    )
-                    for j, t in enumerate(tombs, start=i):
-                        survivors = survivors.join(
-                            tkeys[j], t["pk"], "left_anti"
-                        )
-                    survivors = survivors.drop("_file")
-                    staged = table._stage(survivors)
-                    staged_all += staged
-                    removed_rel += grp_removed
-                    st = table._file_stats(staged)
-                    staged_stats.update(st)
-                    n_after = sum(v["#rows"] for v in st.values())
-                    n_deleted += n_before - n_after
-            finally:
-                for k in tkeys:
-                    k.unpersist()
-            if staged_all and "reading_timestamp" in (
-                f.name for f in (ev_schema.fields if ev_schema else [])
-            ):
-                # count from the staged footers' stats (already read
-                # for the commit payload — zero extra I/O); the scan
-                # below reads ONLY the timestamp column for the dates
-                # set (r15 — was count + collect_set over a full scan).
-                n_staged = sum(
-                    v["#rows"] for v in staged_stats.values()
-                )
-                added_dates = sorted(
-                    r["d"]
-                    for r in spark.read.parquet(
-                        *(
-                            os.path.join(table.data_dir, f)
-                            for f in staged_all
-                        )
-                    )
-                    .select(
-                        F.to_date("reading_timestamp")
-                        .cast("string")
-                        .alias("d")
-                    )
-                    .where(F.col("d").isNotNull())
-                    .distinct()
-                    .collect()
-                )
-            elif staged_all:
-                n_staged = sum(
-                    v["#rows"] for v in staged_stats.values()
-                )
-                # no timestamp column to derive dates from: record the
-                # union of all commit dates (over-approximation is safe
-                # for add-side pruning)
-                added_dates = sorted(
-                    {d for c in commits for d in c.get("dates", [])}
-                )
-            else:
-                n_staged, added_dates = 0, []
-            payload = json.dumps(
-                {
-                    "version": fence,
-                    "added": staged_all,
-                    "removed": sorted(removed_rel),
-                    "count": n_staged,
-                    "dates": added_dates,
-                    # per-group footer stats, computed once in the
-                    # rewrite loop (r15 — was a second footer pass
-                    # over every staged file here)
-                    "stats": staged_stats,
-                    "blooms": table._file_blooms(staged_all),
-                    # Logical content is unchanged by the apply — the
-                    # deletes were already visible via the tombstones —
-                    # so no removed_dates/batch_dates for CDC.
-                    "removed_dates": [],
-                    "batch_dates": [],
-                    "schema": ev_schema.json() if ev_schema else None,
-                    "mor_applied_upto": uptos[-1],
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if table._pre_publish_hook is not None:
-                table._pre_publish_hook()
-            if _put_if_absent(table._commit_path(fence), payload):
-                return {
-                    "applied_tombstones": len(pending),
-                    "files_rewritten": len(removed_rel),
-                    "files_created": len(staged_all),
-                    "rows_deleted": n_deleted,
-                }
-            table._discard_stage_all(staged_all)
-        raise CommitConflictError(
-            f"apply_tombstones gave up after {max_retries} attempts on "
-            f"{table.table_dir}"
-        )
-
-
 def restore_version(table: ManifestTable, version: int) -> dict:
     """RESTORE TABLE ... TO VERSION — roll the table's LIVE state back
     to what ``version`` saw, as ONE new commit and ZERO data movement:
@@ -3206,11 +2716,6 @@ def restore_version(table: ManifestTable, version: int) -> dict:
         for _ in range(5):
             numbered = table.numbered_snapshot()
             commits = [c for _, c in numbered]
-            if table._pending_tombstones(numbered):
-                raise PendingTombstonesError(
-                    f"{table.table_dir} has pending merge-on-read "
-                    "tombstones; run apply_tombstones() before RESTORE"
-                )
             if not (0 <= version < len(commits)):
                 raise ValueError(
                     f"version {version} out of range: table has "
@@ -3335,35 +2840,12 @@ def vacuum_unreferenced(
     with table_lock(table.table_dir):
         commits_all = table.snapshot()
         referenced = {f for c in commits_all for f in c["added"]}
-        # Pending merge-on-read tombstone key files are live metadata
-        # (readers anti-join them every read); applied ones are inert
-        # and sweepable like any other unreferenced stage.
-        high = ManifestTable._mor_high_water(commits_all)
-        referenced |= {
-            r
-            for c in commits_all
-            for t in c.get("tombstones", [])
-            if t["upto"] > high
-            for r in t["rels"]
-        }
         # Branch logs are GC roots: a branch's commits reference data
         # files no main commit names (shared data dir — the point of
-        # metadata-only branching). Each branch view computes its OWN
-        # MoR high-water — branch commit numbers exceed main's, so
-        # folding them into one pool would wrongly raise main's
-        # high-water and sweep still-pending main tombstone keys.
+        # metadata-only branching).
         for b in table.list_branches():
             bv = table.branch(b["name"]).numbered_snapshot()
-            b_commits = [c for _, c in bv]
-            referenced |= {f for c in b_commits for f in c["added"]}
-            b_high = ManifestTable._mor_high_water(b_commits)
-            referenced |= {
-                r
-                for c in b_commits
-                for t in c.get("tombstones", [])
-                if t["upto"] > b_high
-                for r in t["rels"]
-            }
+            referenced |= {f for _, c in bv for f in c["added"]}
         removed = 0
         would: list[str] = []
         now = time.time()
@@ -3494,8 +2976,6 @@ def delete_where(
     lo=None,
     hi=None,
     max_retries: int = 20,
-    mode: str = "cow",
-    pk: list[str] = PK,
 ) -> dict:
     """Range DELETE with whole-file drops — the retention /
     right-to-be-forgotten sweep (``DELETE WHERE ts < cutoff``) priced
@@ -3514,13 +2994,10 @@ def delete_where(
       DELETE's three-valued WHERE never matches NULL).
 
     Same optimistic protocol as the key mutations: one listing
-    supplies the validated file set and the publish fence; pending
-    MoR tombstones abort (raw-file reads); a lost put-if-absent
-    discards the stage and reruns. Bounds as ints or timestamps
-    (open ends allowed). Returns
-    ``{"files_dropped", "files_rewritten", "rows_deleted"}``, plus
-    ``"keys_tombstoned"`` in ``mode="mor"`` (also when it does
-    nothing).
+    supplies the validated file set and the publish fence; a lost
+    put-if-absent discards the stage and reruns. Bounds as ints or
+    timestamps (open ends allowed). Returns
+    ``{"files_dropped", "files_rewritten", "rows_deleted"}``.
 
     Classification is STATS-FIRST (round 11): when the commit log
     already records ``column``'s [min, max, null_count] and the
@@ -3533,22 +3010,7 @@ def delete_where(
     cannot classify (legacy commits without null counts, statless
     columns) fall back to footer reads run DISTRIBUTED as a Spark
     job — the driver collects one bounded classification tuple per
-    file, never the footers themselves.
-
-    ``mode="mor"`` (round 11) changes how STRADDLERS are settled:
-    instead of a copy-on-write rewrite, the matching rows' pk tuples
-    are staged as a standard keyed tombstone, published in the SAME
-    commit as the whole-file drops — one atomic metadata commit,
-    zero data files rewritten. This is the retention sweep for
-    UNCLUSTERED tables, where every file straddles the cutoff and
-    CoW mode would rewrite the whole table: cost is one predicate
-    scan of the straddlers (key projection only), and
-    :func:`apply_tombstones` reconciles the read tax later, exactly
-    the ``delete_keys_mor`` lifecycle. Both modes abort on pending
-    tombstones (the straddler scan reads files raw, and the drop
-    accounting assumes no logically-deleted rows)."""
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+    file, never the footers themselves."""
     lo_i = table._stat_int(lo) if lo is not None else -(2**62)
     hi_i = table._stat_int(hi) if hi is not None else 2**62
     if (lo is not None and lo_i is None) or (
@@ -3566,12 +3028,6 @@ def delete_where(
         numbered = table.numbered_snapshot()
         commits = [c for _, c in numbered]
         fence = table._fence(numbered)
-        if table._pending_tombstones(numbered):
-            raise PendingTombstonesError(
-                f"{table.table_dir} has pending merge-on-read "
-                "tombstones; run apply_tombstones() before "
-                "copy-on-write mutations"
-            )
         live = table._files(commits)
         recorded: dict[str, object] = {}
         for c in commits:
@@ -3645,96 +3101,14 @@ def delete_where(
                 "files_dropped": 0,
                 "files_rewritten": 0,
                 "rows_deleted": 0,
-                **({"keys_tombstoned": 0} if mode == "mor" else {}),
             }
         ev_schema = table._evolved_schema(commits)
-        if mode == "mor":
-            if ev_schema is not None:
-                missing = [
-                    c
-                    for c in pk
-                    if c not in {f.name for f in ev_schema.fields}
-                ]
-                if missing:
-                    raise ValueError(
-                        f"tombstone pk columns {missing} do not "
-                        "exist in the table schema"
-                    )
-            staged_keys: list[str] = []
-            n_del_keys = 0
-            if rewrite:
-                reader = spark.read
-                if ev_schema is not None:
-                    reader = reader.schema(ev_schema)
-                src = reader.parquet(*rewrite)
-                cond = F.lit(True)
-                if lo is not None:
-                    cond = cond & (F.col(column) >= F.lit(lo))
-                if hi is not None:
-                    cond = cond & (F.col(column) <= F.lit(hi))
-                matching = (
-                    src.filter(cond).select(*pk).dropDuplicates(pk)
-                )
-                n_del_keys = matching.count()
-                if n_del_keys:
-                    staged_keys = table._stage(matching)
-            if not dropped and not n_del_keys:
-                return {
-                    "files_dropped": 0,
-                    "files_rewritten": 0,
-                    "rows_deleted": 0,
-                    "keys_tombstoned": 0,
-                }
-            if table._pre_publish_hook is not None:
-                table._pre_publish_hook()
-            payload = json.dumps(
-                {
-                    "version": fence,
-                    "added": [],
-                    "removed": sorted(
-                        os.path.relpath(f, table.data_dir)
-                        for f in dropped
-                    ),
-                    "count": 0,
-                    "dates": [],
-                    "stats": {},
-                    "blooms": {},
-                    "removed_dates": sorted(
-                        {d for c in commits for d in c.get("dates", [])}
-                    ),
-                    "tombstones": (
-                        [
-                            {
-                                "upto": fence,
-                                "rels": staged_keys,
-                                "pk": list(pk),
-                            }
-                        ]
-                        if staged_keys
-                        else []
-                    ),
-                    "schema": None,
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if _put_if_absent(table._commit_path(fence), payload):
-                return {
-                    "files_dropped": len(dropped),
-                    "files_rewritten": 0,
-                    "rows_deleted": dropped_rows + n_del_keys,
-                    "keys_tombstoned": n_del_keys,
-                }
-            table._discard_stage_all(staged_keys)
-            continue
         staged: list[str] = []
         n_rewrite_orig = 0
         n_survivors = 0
         added_dates: list[str] = []
         if rewrite:
-            reader = spark.read
-            if ev_schema is not None:
-                reader = reader.schema(ev_schema)
-            src = reader.parquet(*rewrite)
+            src = table._read_files(spark, rewrite, ev_schema)
             n_rewrite_orig = src.count()
             cond = F.lit(True)
             if lo is not None:
@@ -4073,10 +3447,7 @@ def analyze_incremental(
     if fresh:
         return prof
     v_from = prof["version"]
-    if any(
-        c.get("removed") or c.get("tombstones")
-        for c in commits[v_from + 1 :]
-    ):
+    if any(c.get("removed") for c in commits[v_from + 1 :]):
         return analyze_table(table, spark, exact_ndv=prof["exact_ndv"])
     delta = table.diff(spark, v_from, latest)
     if delta is None:
@@ -4476,13 +3847,6 @@ def shallow_clone(source: ManifestTable, target_dir: str) -> ManifestTable:
     numbered = source.numbered_snapshot()
     if not numbered:
         raise ValueError(f"cannot clone an empty table: {source.table_dir}")
-    if source._pending_tombstones(numbered):
-        raise PendingTombstonesError(
-            f"{source.table_dir} has pending merge-on-read tombstones; "
-            "run apply_tombstones() before cloning (the clone's base "
-            "commit references raw files and would resurrect "
-            "logically-deleted rows)"
-        )
     commits = [c for _, c in numbered]
     live_abs = source._files(commits)
 
@@ -4577,7 +3941,13 @@ class ManifestBranch(ManifestTable):
             for n, c in self._read_log(self._parent.commits_dir)
             if n <= self.base_number
         ]
-        return main + self._read_log(self.commits_dir)
+        view = main + self._read_log(self.commits_dir)
+        # main may have applied, after the base, a tombstone that the
+        # frozen prefix still holds
+        self._refuse_pending_tombstones(
+            view, f"branch {self.branch_name!r} of {self.table_dir}"
+        )
+        return view
 
     def next_commit_number(self) -> int:
         return self._fence(self.numbered_snapshot())
@@ -4609,17 +3979,8 @@ class ManifestBranch(ManifestTable):
         branch-evolved schema, and dropped-type tombstones. Per-commit
         branch granularity is deliberately not replayed — a squash has
         no partial-publish state, which is what makes the publish
-        atomic on an object store. Pending merge-on-read tombstones
-        anywhere in the branch view must be reorganized first (same
-        rule as clone)."""
+        atomic on an object store."""
         numbered_view = self.numbered_snapshot()
-        if self._pending_tombstones(numbered_view):
-            raise PendingTombstonesError(
-                f"branch {self.branch_name!r} has pending merge-on-read "
-                "tombstones; run apply_tombstones() on the branch before "
-                "fast_forward (the squash commit must not resurrect "
-                "logically-deleted rows)"
-            )
         bc = [c for _, c in self._read_log(self.commits_dir)]
         if not bc:
             return {"published": 0}

@@ -160,54 +160,18 @@ def test_cli_clone(spark, tmp_path, capsys):
     assert main(["clone", str(tmp_path / "nope"), str(tmp_path / "c2")]) == 2
 
 
-def test_cli_reorg(spark, tmp_path, capsys):
-    import json as _json
-
-    from pyspark.sql import functions as F
-
-    from tests.test_manifest import _valid_batch
-    from smart_meter_data_pipeline_spark.sources import manifest as mf
-
-    tdir = str(tmp_path / "fact_mor")
-    t = mf.ManifestTable(tdir)
-    batch = _valid_batch(spark, 1, 21)
-    t.idempotent_append(spark, batch)
-    t.delete_keys_mor(
-        spark, batch.limit(3).select("reading_timestamp", "meter_id")
-    )
-    n_logical = t.read(spark).count()
-
-    assert main(["reorg", tdir]) == 0
-    res = _json.loads(capsys.readouterr().out.strip())
-    assert res["applied_tombstones"] == 1
-    assert res["rows_deleted"] == 3
-    assert t.read(spark).count() == n_logical
-    assert t._pending_tombstones(t.numbered_snapshot()) == []
-
-    # idempotent second run, bad path refused
-    assert main(["reorg", tdir]) == 0
-    assert _json.loads(capsys.readouterr().out.strip())[
-        "applied_tombstones"
-    ] == 0
-    assert main(["reorg", str(tmp_path / "nope")]) == 2
-
-
 def test_cli_clone_restore_pending_tombstones_exit_2(spark, tmp_path, capsys):
-    """Round-9 advisory (low): clone/restore against a table with
-    pending merge-on-read tombstones must take the clean stderr +
-    exit-2 path (PendingTombstonesError is a RuntimeError, which the
-    ValueError-only handlers let escape as a raw traceback)."""
-    from pyspark.sql import functions as F
-
-    from tests.test_manifest import _valid_batch
+    """Clone and restore of a table an older version left with an
+    unapplied merge-on-read tombstone take the clean stderr + exit-2
+    path instead of copying or reverting rows that were deleted."""
+    from tests.test_manifest import _valid_batch, _write_pending_tombstone
     from smart_meter_data_pipeline_spark.sources import manifest as mf
 
     tdir = str(tmp_path / "fact_pend")
     t = mf.ManifestTable(tdir)
     t.idempotent_append(spark, _valid_batch(spark, 1, 21))
-    t.delete_keys_mor(
-        spark,
-        _valid_batch(spark, 1, 6).select("reading_timestamp", "meter_id"),
+    _write_pending_tombstone(
+        t, _valid_batch(spark, 1, 6).select("reading_timestamp", "meter_id")
     )
 
     assert main(["clone", tdir, str(tmp_path / "fact_pend_clone")]) == 2

@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
 
 import pytest
 
@@ -29,6 +30,29 @@ def _valid_batch(spark, lo, hi):
     raw = spark.createDataFrame([(m,) for m in msgs], ["value"])
     valid, _ = ingest.split_valid(ingest.classify(ingest.parse_messages(raw)))
     return valid
+
+
+def _write_pending_tombstone(table, keys) -> int:
+    """Hand-write the commit an older version's merge-on-read delete
+    published: ``keys`` staged as a key file and named by a
+    ``tombstones`` record, no data file touched. Returns its number."""
+    n = table.next_commit_number()
+    record = {"upto": n, "rels": table._stage(keys), "pk": keys.columns}
+    with open(table._commit_path(n), "w") as fh:
+        json.dump(
+            {
+                "version": n,
+                "added": [],
+                "removed": [],
+                "count": 0,
+                "dates": [],
+                "tombstones": [record],
+                "schema": None,
+                "committed_at": time.time(),
+            },
+            fh,
+        )
+    return n
 
 
 @pytest.fixture
@@ -54,6 +78,54 @@ def test_put_if_absent_one_winner(tmp_path):
         assert fh.read() == f"writer-{wins[0]}"
     # no temp litter
     assert os.listdir(os.path.dirname(path)) == ["commit.json"]
+
+
+def test_log_with_pending_tombstones_is_refused(spark, table_dir):
+    """A table an older version left with an unapplied merge-on-read
+    tombstone still holds the deleted rows in its live files. Reading
+    them as they are would bring those rows back, so both the read and
+    the append refuse the table and nothing is written. Once the log
+    records the tombstone as applied, the table reads again; a branch
+    based before that apply is still refused."""
+    t = manifest.ManifestTable(table_dir)
+    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
+    doomed = _valid_batch(spark, 0, 3).select("reading_timestamp", "meter_id")
+    n = _write_pending_tombstone(t, doomed)
+    with pytest.raises(ValueError, match="never applied"):
+        t.read(spark)
+    with pytest.raises(ValueError, match="never applied"):
+        t.idempotent_append(spark, _valid_batch(spark, 10, 12))
+    assert len(os.listdir(t.commits_dir)) == 2
+    # the apply that older version ran: the live file rewritten minus
+    # the keys, in a commit that marks the tombstone applied
+    with open(t._commit_path(0)) as fh:
+        first = json.load(fh)
+    survivors = spark.read.parquet(
+        *(os.path.join(t.data_dir, f) for f in first["added"])
+    ).join(doomed, manifest.PK, "left_anti")
+    rewritten = t._stage(survivors)
+    with open(t._commit_path(n + 1), "w") as fh:
+        json.dump(
+            dict(
+                first,
+                version=n + 1,
+                added=rewritten,
+                removed=first["added"],
+                count=7,
+                stats=t._file_stats(rewritten),
+                mor_applied_upto=n,
+            ),
+            fh,
+        )
+    got = t.read(spark)
+    assert got.count() == 7
+    assert got.filter("meter_id < 3").count() == 0
+    # a branch based between the delete and its apply still sees the
+    # tombstone pending
+    t.create_branch("before_apply", version=n)
+    with pytest.raises(ValueError, match="never applied"):
+        t.branch("before_apply").read(spark)
+    assert t.idempotent_append(spark, _valid_batch(spark, 10, 12)) == 2
 
 
 def test_append_read_roundtrip_and_idempotency(spark, table_dir):
@@ -1823,38 +1895,6 @@ def test_upsert_never_prunes_by_non_pk_stats_or_bloom(spark, tmp_path):
         ], kwargs
 
 
-def test_mor_apply_never_prunes_by_non_pk_stats(spark, tmp_path):
-    """Same pk-only rule on the tombstone-apply path: a key frame
-    carrying a non-PK stats column must not skip files that hold
-    matching PKs with other values."""
-    import datetime as dt
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        apply_tombstones,
-    )
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "reading_timestamp timestamp, meter_id bigint, v bigint"
-        )
-
-    base = dt.datetime(2024, 1, 1)
-    t = manifest.ManifestTable(str(tmp_path / "t_mor"), stats_columns=["v"])
-    t.idempotent_append(
-        spark,
-        mk(
-            [(base + dt.timedelta(minutes=i), i, 10 + i) for i in range(5)]
-        ).repartition(1),
-    )
-    # tombstone keys carry a v value disjoint from the file's v range;
-    # the delete must still happen (match is by PK)
-    t.delete_keys_mor(spark, mk([(base, 0, 99999)]))
-    assert t.read(spark).filter("meter_id = 0").count() == 0
-    apply_tombstones(t, spark)
-    assert t.read(spark).filter("meter_id = 0").count() == 0
-    assert t.read(spark).count() == 4
-
-
 def test_table_config_persists_across_bare_reopen(spark, tmp_path):
     """stats/bloom columns and CHECK constraints are table properties:
     configured once, a bare ManifestTable(dir) reopen (a maintenance
@@ -2074,21 +2114,8 @@ def test_read_where_non_stats_column_filters_but_keeps_all_files(spark, tmp_path
     )["files_read"] == 3
 
 
-def test_read_where_applies_pending_mor_tombstones(spark, tmp_path):
-    """A zone-map read must still anti-join pending MoR tombstones:
-    deleted keys stay invisible inside the kept files."""
-    t = _skip_table(spark, tmp_path, ["meter_id"])
-    doomed = t.read(spark).filter("meter_id BETWEEN 30 AND 34").select(
-        "reading_timestamp", "meter_id"
-    )
-    assert t.delete_keys_mor(spark, doomed) == 5
-    got = t.read(spark, where={"meter_id": (25, 44)})
-    assert got.count() == 15
-    assert got.filter("meter_id BETWEEN 30 AND 34").count() == 0
-
-
 def test_cow_mutations_on_dateless_tables(spark, tmp_path):
-    """upsert / delete_where(mode='cow') on a table WITHOUT
+    """upsert / delete_where on a table WITHOUT
     reading_timestamp: the stage-stats aggregation must not assume
     the date column exists (round-12 latent bug — found by the text
     index's docs table, which is (doc_id, text))."""
@@ -2105,7 +2132,7 @@ def test_cow_mutations_on_dateless_tables(spark, tmp_path):
     t.upsert(spark, up, pk=["k"])
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got[0] == 1000 and got[50] == 100 and len(got) == 100
-    rep = manifest.delete_where(t, spark, "k", lo=90, pk=["k"])
+    rep = manifest.delete_where(t, spark, "k", lo=90)
     assert rep["rows_deleted"] == 10
     assert t.read(spark).count() == 90
 
@@ -2157,9 +2184,7 @@ def test_string_zone_maps_prune_and_stay_exact(spark, tmp_path):
     with pytest.raises(ValueError, match="delete_where bounds"):
         manifest.delete_where(t, spark, "code", lo="AC00100")
     # numeric retention on a table CARRYING string stats still works
-    rep3 = manifest.delete_where(
-        t, spark, "meter_id", hi=99, pk=["meter_id"]
-    )
+    rep3 = manifest.delete_where(t, spark, "meter_id", hi=99)
     assert rep3["rows_deleted"] == 100
     assert t.read(spark).count() == 700
 
@@ -2526,8 +2551,8 @@ def test_delete_where_null_rows_survive(spark, tmp_path):
 
 @pytest.mark.slow
 def test_delete_where_guards_and_race(spark, tmp_path):
-    """Pending MoR tombstones abort; a competing append between
-    listing and publish forces a clean retry that still lands."""
+    """A competing append between listing and publish forces a clean
+    retry that still lands."""
     import datetime as dt
 
     rows = [
@@ -2538,12 +2563,6 @@ def test_delete_where_guards_and_race(spark, tmp_path):
     )
     t = manifest.ManifestTable(str(tmp_path / "race_tbl"))
     t.idempotent_append(spark, df)
-    t.delete_keys_mor(
-        spark, df.filter("meter_id = 1").select("reading_timestamp", "meter_id")
-    )
-    with pytest.raises(manifest.PendingTombstonesError):
-        manifest.delete_where(t, spark, "meter_id", lo=0, hi=5)
-    manifest.apply_tombstones(t, spark)
 
     competing = spark.createDataFrame(
         [(dt.datetime(2024, 3, 2), 900, 1.0)],
@@ -2563,7 +2582,7 @@ def test_delete_where_guards_and_race(spark, tmp_path):
         res = manifest.delete_where(t, spark, "meter_id", lo=0, hi=9)
     finally:
         t._pre_publish_hook = None
-    assert res["rows_deleted"] == 9  # meter 1 already MoR-deleted
+    assert res["rows_deleted"] == 10
     got = t.read(spark)
     assert got.filter("meter_id <= 9").count() == 0
     assert got.filter("meter_id = 900").count() == 1
@@ -3360,19 +3379,20 @@ def test_branch_schema_evolution_rides_the_squash(spark, table_dir):
 
 
 def test_branch_pending_tombstones_block_fast_forward(spark, table_dir):
+    """A branch log holding an unapplied merge-on-read tombstone from
+    an older version is refused like a main log: the publish fails
+    before anything lands on main."""
     t = manifest.ManifestTable(table_dir)
     t.idempotent_append(spark, _valid_batch(spark, 0, 10))
     t.create_branch("b")
     b = t.branch("b")
-    b.delete_keys_mor(
-        spark,
-        _valid_batch(spark, 0, 3).select("reading_timestamp", "meter_id"),
+    _write_pending_tombstone(
+        b, _valid_batch(spark, 0, 3).select("reading_timestamp", "meter_id")
     )
-    with pytest.raises(manifest.PendingTombstonesError):
+    with pytest.raises(ValueError, match="never applied"):
         b.fast_forward()
-    manifest.apply_tombstones(b, spark)
-    b.fast_forward()
-    assert t.read(spark).count() == 7
+    assert len(t.snapshot()) == 1
+    assert t.read(spark).count() == 10
 
 
 # -- identity columns ----------------------------------------------------
@@ -3476,120 +3496,6 @@ def test_identity_ranges_disjoint_across_branch_and_main(spark, table_dir):
     assert len(main_ids) == 15 and len(branch_ids) == 15
     assert not (branch_ids - main_ids) & (main_ids - branch_ids)
     assert t.identity_high_water() == 20
-
-
-@pytest.mark.slow
-def test_delete_where_mor_tombstones_straddlers_one_commit(
-    spark, tmp_path
-):
-    """mode='mor': whole-file drops and the straddlers' keyed
-    tombstone land in ONE atomic commit; zero files rewritten; the
-    taxed read equals the relational filter; apply_tombstones
-    reconciles without changing membership; re-inserting a deleted
-    key AFTER the sweep survives it (origin > upto)."""
-    import datetime as dt
-
-    t = manifest.ManifestTable(str(tmp_path / "mor_ret"))
-    for h in range(8):
-        rows = [
-            (dt.datetime(2024, 3, 1, h, m, 0), h * 100 + m, 1.0)
-            for m in range(30)
-        ]
-        t.idempotent_append(
-            spark,
-            spark.createDataFrame(
-                rows,
-                "reading_timestamp timestamp, meter_id bigint, v double",
-            ).repartition(1),
-        )
-    live_before = set(t._files(t.snapshot()))
-    n_commits_before = len(t.snapshot())
-    res = manifest.delete_where(
-        t,
-        spark,
-        "reading_timestamp",
-        hi=dt.datetime(2024, 3, 1, 3, 14, 59),
-        mode="mor",
-    )
-    assert res == {
-        "files_dropped": 3,
-        "files_rewritten": 0,
-        "rows_deleted": 3 * 30 + 15,
-        "keys_tombstoned": 15,
-    }
-    # exactly ONE commit carries both the drops and the tombstone
-    assert len(t.snapshot()) == n_commits_before + 1
-    last = t.snapshot()[-1]
-    assert len(last["removed"]) == 3
-    assert len(last["tombstones"]) == 1
-    df = t.read(spark)
-    assert df.count() == 8 * 30 - res["rows_deleted"]
-    assert (
-        df.filter(
-            "reading_timestamp < timestamp'2024-03-01 03:15:00'"
-        ).count()
-        == 0
-    )
-    # the straddler file was NOT rewritten (still live, same path)
-    live_after = set(t._files(t.snapshot()))
-    assert len(live_before & live_after) == 5  # straddler + 4 disjoint
-    # a deleted key re-inserted after the sweep survives it
-    reinsert = spark.createDataFrame(
-        [(dt.datetime(2024, 3, 1, 3, 0, 0), 300, 9.0)],
-        "reading_timestamp timestamp, meter_id bigint, v double",
-    )
-    t.idempotent_append(spark, reinsert)
-    assert (
-        t.read(spark)
-        .filter("meter_id = 300 AND v = 9.0")
-        .count()
-        == 1
-    )
-    n_logical = t.read(spark).count()
-    r = manifest.apply_tombstones(t, spark)
-    assert r["rows_deleted"] == 15
-    assert t.read(spark).count() == n_logical
-
-
-def test_delete_where_mor_guards(spark, tmp_path):
-    """Unknown mode and a pk column missing from the table schema
-    both refuse before anything stages; a pure no-op commits
-    nothing."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    t = manifest.ManifestTable(str(tmp_path / "mor_guard"))
-    t.idempotent_append(
-        spark,
-        spark.createDataFrame(
-            [(dt.datetime(2024, 3, 1, 0, 0, 0), 1, 1.0)],
-            "reading_timestamp timestamp, meter_id bigint, v double",
-        ),
-    )
-    with _pytest.raises(ValueError, match="mode must be"):
-        manifest.delete_where(
-            t, spark, "meter_id", lo=0, mode="positional"
-        )
-    with _pytest.raises(ValueError, match="do not exist"):
-        manifest.delete_where(
-            t,
-            spark,
-            "meter_id",
-            lo=0,
-            mode="mor",
-            pk=["reading_timestamp", "no_such_col"],
-        )
-    n_commits = len(t.snapshot())
-    assert manifest.delete_where(
-        t, spark, "meter_id", lo=10_000, mode="mor"
-    ) == {
-        "files_dropped": 0,
-        "files_rewritten": 0,
-        "rows_deleted": 0,
-        "keys_tombstoned": 0,
-    }
-    assert len(t.snapshot()) == n_commits
 
 
 def test_analyze_mcv_skew_aware_estimates(spark, tmp_path):

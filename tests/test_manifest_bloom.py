@@ -9,7 +9,6 @@ import datetime as dt
 
 from smart_meter_data_pipeline_spark.sources.manifest import (
     ManifestTable,
-    apply_tombstones,
     compact_log,
     shallow_clone,
 )
@@ -72,7 +71,6 @@ def test_blooms_recorded_and_prune_point_lookups(spark, tmp_path):
     assert len(kept_missing) <= 1  # at most an FP
 
 
-@pytest.mark.slow
 def test_bloom_pruned_cow_delete_correct_and_bounded(spark, tmp_path):
     t = _interleaved_table(spark, tmp_path)
     n_before = t.read(spark).count()
@@ -101,19 +99,6 @@ def test_bloom_survives_compaction_and_clone(spark, tmp_path):
     ckept = clone._prune_by_bloom(cfiles, ccommits, {"meter_id": [4]})
     assert 1 <= len(ckept) < 4
     assert clone.bloom_columns == ["meter_id"]
-
-
-def test_bloom_prunes_mor_apply_candidates(spark, tmp_path):
-    t = _interleaved_table(spark, tmp_path)
-    keys = t.read(spark).filter("meter_id = 9").select(
-        "reading_timestamp", "meter_id"
-    )
-    t.delete_keys_mor(spark, keys)
-    n_logical = t.read(spark).count()
-    res = apply_tombstones(t, spark)
-    assert res["rows_deleted"] == 1
-    assert res["files_rewritten"] == 1
-    assert t.read(spark).count() == n_logical
 
 
 def test_bloom_off_by_default_and_optional(spark, tmp_path):

@@ -108,50 +108,6 @@ def test_index_refresh_is_idempotent(spark, tmp_path):
     }
 
 
-@pytest.mark.slow
-def test_index_point_read_respects_mor_tombstones(spark, tmp_path):
-    """Pending merge-on-read deletes must be invisible through the
-    index: the indexed read equals read().filter(...) mid-lifecycle
-    (the round-11 advice bug — raw candidate reads resurrected
-    logically deleted rows)."""
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        apply_tombstones,
-        delete_where,
-    )
-
-    t, df = _tbl(spark, tmp_path)
-    refresh_index(t, spark, "meter_id")
-    doomed = df.filter(
-        (F.col("meter_id") == 17) & (F.col("v") < 3000)
-    ).select("meter_id", "reading_timestamp")
-    n_del = t.delete_keys_mor(
-        spark, doomed, pk=["meter_id", "reading_timestamp"]
-    )
-    assert n_del > 0
-    out, rep = index_point_read(t, spark, "meter_id", [17, 91])
-    truth = t.read(spark).filter(F.col("meter_id").isin([17, 91]))
-    assert out.count() == truth.count() == 10 - n_del
-    assert out.filter(
-        (F.col("meter_id") == 17) & (F.col("v") < 3000)
-    ).count() == 0
-    # settle the debt, then a retention MoR delete through the other
-    # entry point — still invisible through the index
-    apply_tombstones(t, spark)
-    rep2 = delete_where(
-        t,
-        spark,
-        "v",
-        lo=9000,
-        mode="mor",
-        pk=["meter_id", "reading_timestamp"],
-    )
-    assert rep2["rows_deleted"] > 0
-    out2, _ = index_point_read(t, spark, "meter_id", [17, 91])
-    truth2 = t.read(spark).filter(F.col("meter_id").isin([17, 91]))
-    assert out2.count() == truth2.count()
-    assert out2.filter(F.col("v") >= 9000).count() == 0
-
-
 def test_index_prunes_its_own_posting_files(spark, tmp_path):
     """The posting table is itself zone-map-pruned (round 12): a
     string-valued point lookup opens a strict subset of posting
@@ -345,57 +301,6 @@ def test_text_index_modes_skipping_staleness(spark, tmp_path):
     assert out4.count() == 10
 
 
-def test_delete_values_mor_posting_exact(spark, tmp_path):
-    """Index-served DELETE by a non-pk value: candidate scan is
-    posting-exact, the tombstone is O(matching keys), rows re-inserted
-    after the delete survive it."""
-    from smart_meter_data_pipeline_spark.sources.index import (
-        delete_values_mor,
-        refresh_index,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        apply_tombstones,
-    )
-
-    t = ManifestTable(str(tmp_path / "t"))
-    df = spark.range(2000).select(
-        (F.col("id") % 500).alias("meter_id"),
-        F.expr(
-            "timestampadd(MINUTE, CAST(id AS INT),"
-            " timestamp'2024-01-01 00:00:00')"
-        ).alias("reading_timestamp"),
-        F.concat(
-            F.lit("AC"),
-            F.lpad((F.col("id") % 500).cast("string"), 5, "0"),
-        ).alias("account_code"),
-    )
-    t.idempotent_append(
-        spark, df, cluster_by=["account_code"], cluster_partitions=8
-    )
-    refresh_index(t, spark, "account_code", posting_partitions=4)
-    n, rep = delete_values_mor(
-        t, spark, "account_code", ["AC00017", "AC00091"]
-    )
-    assert n == 8  # 4 rows per account x 2 accounts
-    assert rep["files_read"] < rep["files_live"]
-    got = t.read(spark)
-    assert got.count() == 1992
-    assert got.filter(
-        F.col("account_code").isin(["AC00017", "AC00091"])
-    ).count() == 0
-    # re-insert one deleted account AFTER the delete: survives it
-    back = df.filter(F.col("account_code") == "AC00017").withColumn(
-        "reading_timestamp",
-        F.expr("timestampadd(DAY, 30, reading_timestamp)"),
-    )
-    t.idempotent_append(spark, back)
-    assert t.read(spark).filter(
-        F.col("account_code") == "AC00017"
-    ).count() == 4
-    apply_tombstones(t, spark)
-    assert t.read(spark).count() == 1996
-
-
 def test_concurrent_refresh_index_stays_exact(spark, tmp_path):
     """Two racing refreshes: posting appends are pk-idempotent and the
     meta advance is atomic, so whatever interleaving wins, the lookup
@@ -429,41 +334,6 @@ def test_concurrent_refresh_index_stays_exact(spark, tmp_path):
     out, rep = index_point_read(t, spark, "meter_id", [17])
     assert out.count() == 5
     assert rep["files_unindexed"] == 0
-
-
-def test_read_where_in_index_composes_with_mor(spark, tmp_path):
-    """Composition of the two round-12 read-path features: a plain
-    read(where_in=) on an indexed column, WITH a pending MoR delete —
-    the posting prune and the tombstone anti-join must both apply,
-    and the result equals the unpruned filter."""
-    t = ManifestTable(str(tmp_path / "t"))
-    df = spark.range(4000).select(
-        (F.col("id") % 2000).alias("meter_id"),
-        F.expr(
-            "timestampadd(MINUTE, CAST(id AS INT),"
-            " timestamp'2024-01-01 00:00:00')"
-        ).alias("reading_timestamp"),
-        F.concat(
-            F.lit("AC"),
-            F.lpad((F.col("id") % 2000).cast("string"), 5, "0"),
-        ).alias("account_code"),
-    )
-    t.idempotent_append(spark, df.repartition(16))
-    refresh_index(t, spark, "account_code")
-    probe = ["AC00017", "AC00091"]
-    doomed = df.filter(
-        (F.col("account_code") == "AC00017")
-        & (F.col("meter_id") == 17)
-    ).select("meter_id", "reading_timestamp").limit(1)
-    assert t.delete_keys_mor(
-        spark, doomed, pk=["meter_id", "reading_timestamp"]
-    ) == 1
-    got = t.read(spark, where_in={"account_code": probe})
-    want = t.read(spark).filter(F.col("account_code").isin(probe))
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    assert got.count() == 3  # 2 rows/account x 2 - 1 deleted
 
 
 def test_text_search_any_with_absent_token(spark, tmp_path):
@@ -812,9 +682,7 @@ def test_maintain_index_vacuums_after_metadata_only_retention(
         cluster_partitions=6,
     )
     maintain_index(spark=spark, table=t, column="meter_id")
-    delete_where(
-        t, spark, "v", hi=999, pk=["reading_timestamp", "meter_id"]
-    )
+    delete_where(t, spark, "v", hi=999)
     m = maintain_index(spark=spark, table=t, column="meter_id")
     assert m["refresh"]["files_indexed"] == 0
     assert m["vacuum"]["postings_removed"] > 0

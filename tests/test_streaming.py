@@ -370,6 +370,93 @@ def test_stream_replayed_batch_lands_facts_and_quarantine_once(
     assert os.path.exists(ckpt / "commits" / "1")  # the batch ran again
 
 
+def test_stream_manifest_sink_killed_between_stage_and_publish(
+    spark, tmp_path, monkeypatch
+):
+    """The manifest sink dies after staging its first micro-batch's
+    files and before publishing their commit. The restart from the
+    same checkpoint replays that micro-batch, and the table ends
+    exactly right: every distinct valid reading once, each quarantine
+    reason counted once per rejected message, and the orphaned stage
+    never visible to a read."""
+    from pyspark.errors import StreamingQueryException
+
+    from smart_meter_data_pipeline_spark.sources import manifest
+
+    src = tmp_path / "msgs"
+    target = str(tmp_path / "fact")
+    quarantine = str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    _write_deliveries(src, n_files=8, n_meters=10)  # 4 files per batch
+    # Redeliveries: file 0 repeats its own first reading, and file i of
+    # the second micro-batch repeats the first reading of file i - 4.
+    firsts = [
+        (src / f"f{i}.txt").read_text().splitlines()[0] for i in range(4)
+    ]
+    for i in (0, 4, 5, 6, 7):
+        with open(src / f"f{i}.txt", "a") as f:
+            f.write(firsts[i % 4] + "\n")
+
+    def drain():
+        start_ingest_stream(
+            spark,
+            str(src / "*.txt"),
+            target,
+            ckpt,
+            quarantine_target=quarantine,
+            sink="manifest",
+        ).awaitTermination()
+
+    real_put = manifest._put_if_absent
+    calls = []
+
+    def dies_on_first_publish(path, payload):
+        calls.append(path)
+        if len(calls) == 1:
+            raise RuntimeError("killed between stage and publish")
+        return real_put(path, payload)
+
+    monkeypatch.setattr(manifest, "_put_if_absent", dies_on_first_publish)
+    with pytest.raises(StreamingQueryException, match="killed between"):
+        drain()
+    t = manifest.ManifestTable(target)
+    assert t.snapshot() == []
+    orphans = {
+        os.path.relpath(os.path.join(d, f), t.data_dir)
+        for d, _, files in os.walk(t.data_dir)
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert orphans  # staged, never published
+    assert not os.path.exists(quarantine)
+
+    drain()
+    got = sorted(
+        tuple(r)
+        for r in t.read(spark)
+        .select(
+            F.hour("reading_timestamp"),
+            "meter_id",
+            "reading_consumption_milliwatts",
+        )
+        .collect()
+    )
+    assert got == [
+        (i, m, 1000 * i + m) for i in range(8) for m in range(1, 11)
+    ]
+    commits = t.snapshot()
+    assert sum(c["count"] for c in commits) == 80
+    assert not orphans & {f for c in commits for f in c["added"]}
+    reasons = {
+        r["reject_reason"]: r["count"]
+        for r in spark.read.parquet(quarantine)
+        .groupBy("reject_reason")
+        .count()
+        .collect()
+    }
+    assert reasons == {"malformed_json": 8, "bad_status": 8}
+
+
 @pytest.mark.parametrize("sink", ["lock", "manifest"])
 def test_stream_stamps_one_arrived_at_per_micro_batch(spark, tmp_path, sink):
     """Every valid row of a micro-batch carries the same ``arrived_at``
