@@ -7,11 +7,11 @@ land together (the reference's Postgres sink gets this for free from
 DB transactions — consumer/meter_consumer.py writes fact rows inside
 one txn; an object-store deployment does not). The catalog closes the
 gap by making the CATALOG the log: a numbered chain of catalog
-commits, each embedding the full per-table commit payloads (added
-files / counts / dates / schema / per-file stats — the same shape as
-manifest commits), decided by the same single put-if-absent
-primitive. Readers resolve every table's state through the catalog
-chain ONLY, so:
+commits, each embedding one table commit record per touched table
+(the record format in :mod:`.manifest`'s docstring, written by the
+same builder and published by the same writer, ``_publish``).
+Readers resolve every table's state through the catalog chain ONLY,
+so:
 
 - One catalog commit touching N tables is atomic across all N —
   there is no intermediate state where the fact shows and the dim
@@ -30,8 +30,8 @@ chain ONLY, so:
 Scope (round 13): transactional APPENDs (the multi-table ingest
 case) AND copy-on-write MUTATIONS — :meth:`CatalogTxn.upsert` /
 :meth:`CatalogTxn.delete_where` stage rewrites exactly like the
-manifest CoW engine, the payload carries ``removed`` alongside
-``added``, and one catalog commit lands a fact restatement and its
+manifest CoW engine, the record lists ``removed`` files, and one
+catalog commit lands a fact restatement and its
 dimension update atomically (the reference's "every batch is a
 Postgres txn" property — consumer/meter_consumer.py:132-135 — for
 coupled multi-table changes). Conflict rule at the fence: a txn
@@ -60,7 +60,9 @@ from smart_meter_data_pipeline_spark.sources.manifest import (
     PK,
     CommitConflictError,
     ManifestTable,
+    _publish,
     _put_if_absent,
+    _record,
 )
 
 CATALOG_DIRNAME = "_catalog"
@@ -74,6 +76,10 @@ class Catalog:
         self.root = root
         self.commits_dir = os.path.join(root, CATALOG_DIRNAME)
         os.makedirs(self.commits_dir, exist_ok=True)
+        # test seam fired before every catalog-wide publish (optimize,
+        # compaction, branch fast-forward), same contract as
+        # ManifestTable._pre_publish_hook
+        self._pre_publish_hook = None
 
     # -- chain -------------------------------------------------------------
 
@@ -492,47 +498,22 @@ def optimize_catalog_table(
         else:
             packed = src_df.repartition(int(n_out))
         staged = t._stage(packed)
-        sdf = spark.read.parquet(
-            *(os.path.join(t.data_dir, f) for f in staged)
+        count, dates = t._count_and_dates(spark, staged)
+        fence = ManifestTable._fence(numbered)
+        record = _record(
+            t,
+            staged,
+            removed=sorted(os.path.relpath(f, t.data_dir) for f in small),
+            count=count,
+            dates=dates,
+            schema=schema,
         )
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if "reading_timestamp" in sdf.columns:
-            aggs.append(
-                F.collect_set(
-                    F.to_date("reading_timestamp").cast("string")
-                ).alias("ds")
-            )
-        row = sdf.agg(*aggs).collect()[0]
-        payload = json.dumps(
-            {
-                "version": ManifestTable._fence(numbered),
-                "tables": {
-                    name: {
-                        "added": staged,
-                        "removed": sorted(
-                            os.path.relpath(f, t.data_dir)
-                            for f in small
-                        ),
-                        "count": row["n"],
-                        "dates": (
-                            sorted(row["ds"])
-                            if "ds" in row.__fields__
-                            else []
-                        ),
-                        "schema": (
-                            schema.json()
-                            if schema is not None
-                            else None
-                        ),
-                        "stats": t._file_stats(staged),
-                    }
-                },
-                "optimize": True,
-                "committed_at": time.time(),
-            }
-        ).encode()
-        if _put_if_absent(
-            cat._commit_path(ManifestTable._fence(numbered)), payload
+        if _publish(
+            cat._commit_path(fence),
+            fence,
+            cat._pre_publish_hook,
+            tables={name: record},
+            optimize=True,
         ):
             return {
                 "files_rewritten": len(small),
@@ -548,24 +529,20 @@ def optimize_catalog_table(
 def _squash_payloads(payloads: list[dict]) -> dict:
     """Replay a table's per-commit payloads into ONE payload — the
     shared merge behind :func:`compact_catalog` and
-    :meth:`CatalogBranch.fast_forward`. With append-only payloads
-    this was plain concatenation; with mutations (round 13) it is a
-    replay: a ``removed`` entry drops the file (and its stats) if a
-    prior payload in the window added it, else it CARRIES THROUGH to
-    the squashed ``removed`` (a branch mutation can remove a file
-    main's prefix added — the squash commit must still remove it).
-    ``count`` is recomputed from the SURVIVING files' footer stats
+    :meth:`CatalogBranch.fast_forward`. A ``removed`` entry drops the
+    file if a prior payload in the window added it, else it CARRIES
+    THROUGH to the squashed ``removed`` (a branch mutation can remove a
+    file main's prefix added — the squash commit must still remove
+    it). ``count`` is recomputed from the SURVIVING files' footer stats
     (``"#rows"``) when every survivor carries them — the concatenated
     sum double-counts after a delete→optimize→compact lifecycle
-    (optimize's payload re-counts the rows it rewrote), and a
-    consumer trusting ``count`` would see inflated totals. Survivors
-    without row stats (legacy payloads) fall back to the concatenated
-    sum, flagged ``count_is_upper_bound`` so no consumer mistakes it
-    for live rows. The last schema wins, dates/stats union over
-    SURVIVING files."""
+    (optimize's payload re-counts the rows it rewrote), and a consumer
+    trusting ``count`` would see inflated totals. Survivors without row
+    stats (legacy payloads) fall back to the concatenated sum, flagged
+    ``count_is_upper_bound`` so no consumer mistakes it for live rows.
+    The last schema wins; dates union over the window."""
     added: dict[str, None] = {}
     removed: list[str] = []
-    stats: dict = {}
     dates: set = set()
     count = 0
     schema = None
@@ -573,7 +550,6 @@ def _squash_payloads(payloads: list[dict]) -> dict:
         for r in p.get("removed", []):
             if r in added:
                 added.pop(r)
-                stats.pop(r, None)
             else:
                 removed.append(r)
         for f in p["added"]:
@@ -581,20 +557,19 @@ def _squash_payloads(payloads: list[dict]) -> dict:
         count += p["count"]
         dates |= set(p.get("dates", []))
         schema = p.get("schema") or schema
-        stats.update(p.get("stats", {}))
-    surviving_stats = {f: s for f, s in stats.items() if f in added}
+    out = _record(
+        None,
+        carried=list(added),
+        carry_from=payloads,
+        removed=removed,
+        count=count,
+        dates=dates,
+        schema=schema,
+    )
     rows = [
         s.get("#rows") if isinstance(s, dict) else None
-        for s in (surviving_stats.get(f) for f in added)
+        for s in (out["stats"].get(f) for f in added)
     ]
-    out = {
-        "added": list(added),
-        "removed": removed,
-        "count": count,
-        "dates": sorted(dates),
-        "schema": schema,
-        "stats": surviving_stats,
-    }
     if all(r is not None for r in rows):
         out["count"] = sum(rows)
     else:
@@ -646,31 +621,36 @@ def compact_catalog(cat: Catalog, keep_last: int = 10) -> int:
     if cut < 2:
         return 0
     base = numbered[:cut]
-    by_table: dict[str, list[dict]] = {}
-    for _, c in base:
+    by_table: dict[str, list[tuple[int, dict]]] = {}
+    for num, c in base:
         for name, p in c.get("tables", {}).items():
-            by_table.setdefault(name, []).append(p)
+            by_table.setdefault(name, []).append((num, p))
     # Replay-merge (not concatenation): a CoW mutation in the merged
     # prefix removes files an earlier commit added — the base must
     # hold the NET file set or readers would resurrect deleted rows.
-    merged = {
-        name: _squash_payloads(ps) for name, ps in by_table.items()
-    }
+    merged = {}
+    for name, numbered in by_table.items():
+        t = cat.table_handle(name)
+        merged[name] = _squash_payloads([p for _, p in numbered])
+        # each merged file keeps the number of the catalog commit that
+        # added it, for the index's freshness rule (as compact_log)
+        merged[name]["added_numbers"] = {
+            os.path.relpath(f, t.data_dir): n
+            for f, n in t._file_origins(numbered).items()
+        }
     base_num = base[0][0]
-    payload = {
-        "version": base_num,
-        "tables": merged,
-        "compacted_from": cut,
-        "committed_at": base[-1][1].get("committed_at"),
-    }
     # unique per writer, not per process (two THREADS share a pid —
     # the round-12 index-refresh race class), though compaction also
     # serializes under the chain lock
     tmp = cat._commit_path(base_num) + f".compacting.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _publish(
+        tmp,
+        base_num,
+        cat._pre_publish_hook,
+        committed_at=base[-1][1].get("committed_at"),
+        tables=merged,
+        compacted_from=cut,
+    )
     os.replace(tmp, cat._commit_path(base_num))
     for num, _ in base[1:]:
         try:
@@ -745,51 +725,24 @@ class CatalogTxn:
         removals of chain files publish in ``removed``. Dates and
         count are recomputed from the payload's current staged files
         (one bounded agg — txn-sized, never table-sized)."""
-        prior = self._payloads.get(name) or {
-            "added": [],
-            "removed": [],
-            "count": 0,
-            "dates": [],
-            "schema": None,
-            "stats": {},
-        }
-        prior_added = list(prior["added"])
-        prior_stats = dict(prior["stats"])
-        removed_chain: list[str] = []
+        prior = self._payloads.get(name, {})
+        prior_added = prior.get("added", [])
         for r in removed:
             if r in prior_added:
-                prior_added.remove(r)
-                prior_stats.pop(r, None)
                 t._discard_stage([r])
-            else:
-                removed_chain.append(r)
-        added = prior_added + staged
-        stats = {**prior_stats, **t._file_stats(staged)}
-        count, dates = 0, []
-        if added:
-            sdf = spark.read.parquet(
-                *(os.path.join(t.data_dir, f) for f in added)
-            )
-            aggs = [F.count(F.lit(1)).alias("n")]
-            if "reading_timestamp" in sdf.columns:
-                aggs.append(
-                    F.collect_set(
-                        F.to_date("reading_timestamp").cast("string")
-                    ).alias("ds")
-                )
-            row = sdf.agg(*aggs).collect()[0]
-            count = row["n"]
-            dates = sorted(row["ds"]) if "ds" in row.__fields__ else []
-        self._payloads[name] = {
-            "added": added,
-            "removed": sorted(
-                set(prior.get("removed", [])) | set(removed_chain)
-            ),
-            "count": count,
-            "dates": dates,
-            "schema": schema_json or prior.get("schema"),
-            "stats": stats,
-        }
+        removed_chain = {r for r in removed if r not in prior_added}
+        kept = [f for f in prior_added if f not in removed]
+        count, dates = t._count_and_dates(spark, kept + staged)
+        self._payloads[name] = _record(
+            t,
+            staged,
+            carried=kept,
+            carry_from=[prior],
+            removed=sorted(set(prior.get("removed", [])) | removed_chain),
+            count=count,
+            dates=dates,
+            schema=schema_json or prior.get("schema"),
+        )
 
     def append(
         self,
@@ -1181,16 +1134,12 @@ class CatalogTxn:
                 self._revalidate(numbered[validated_len:])
                 validated_len = len(numbered)
             fence = ManifestTable._fence(numbered)
-            payload = json.dumps(
-                {
-                    "version": fence,
-                    "tables": self._payloads,
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if self._pre_publish_hook is not None:
-                self._pre_publish_hook()
-            if _put_if_absent(self.cat._commit_path(fence), payload):
+            if _publish(
+                self.cat._commit_path(fence),
+                fence,
+                self._pre_publish_hook,
+                tables=self._payloads,
+            ):
                 self._committed = True
                 return len(self._payloads)
             numbered = self.cat.numbered_snapshot()
@@ -1218,8 +1167,8 @@ class CatalogBranch(Catalog):
     bytes the catalog holds.
 
     :meth:`fast_forward` publishes the branch's whole multi-table
-    change-set as ONE main catalog commit (append-only squash: the
-    per-table payloads concatenate), giving catalog-level
+    change-set as ONE main catalog commit (a per-table replay squash,
+    :func:`_squash_payloads`), giving catalog-level
     Write-Audit-Publish: an audit campaign spanning fact AND
     dimension changes serves from the branch, main stays pinned, and
     the publish is atomic across every touched table."""
@@ -1268,14 +1217,7 @@ class CatalogBranch(Catalog):
         # prefix added — _squash_payloads carries those removals
         # through to the squash commit instead of dropping them
         merged = {
-            name: _squash_payloads(ps)
-            for name, ps in by_table.items()
-        }
-        payload = {
-            "tables": merged,
-            "committed_at": time.time(),
-            "fast_forward_of": self.branch_name,
-            "squashed_from": len(bc),
+            name: _squash_payloads(ps) for name, ps in by_table.items()
         }
         for _ in range(max_retries):
             main_numbered = self._parent.numbered_snapshot()
@@ -1287,10 +1229,13 @@ class CatalogBranch(Catalog):
                     f"branch base is {self.base_number} — main "
                     "advanced since the fork"
                 )
-            payload["version"] = fence
-            if _put_if_absent(
+            if _publish(
                 self._parent._commit_path(fence),
-                json.dumps(payload).encode(),
+                fence,
+                self._pre_publish_hook,
+                tables=merged,
+                fast_forward_of=self.branch_name,
+                squashed_from=len(bc),
             ):
                 self._parent.delete_branch(self.branch_name)
                 return {"published": 1, "squashed_from": len(bc)}

@@ -21,11 +21,43 @@ by a single **put-if-absent** primitive.
   generation-0 precondition, on Azure an ETag condition. Nothing else
   in the protocol touches the namespace, which is the whole point.
 
-Each commit records the distinct ``reading_date`` values of the rows
-it adds, so the existing-keys scan prunes to commits whose dates
-overlap the incoming batch — the manifest equivalent of partition
-pruning (Delta's per-file ``partitionValues``), keeping the key scan
-proportional to the batch's time range on a 100 TB table.
+**The commit record.** Every commit is one JSON object, built by
+:func:`_record` and stamped, hooked and put by
+:func:`_publish`, the one writer of table, branch and catalog commits:
+
+- ``version``, ``committed_at``: the commit number and publish time
+  (a compaction base keeps its last merged commit's time).
+- ``added``, ``removed``: the data files the commit adds and removes,
+  relative to the data dir (``removed`` is empty for appends,
+  compaction bases and clones).
+- ``count``: rows the added files hold; 0 for RESTORE, DROP COLUMN
+  and a clone; a compaction base or branch squash sums its commits'.
+- ``dates``: distinct dates of the added rows' ``reading_timestamp``
+  (empty means unknown), so the existing-keys scan prunes to commits
+  whose dates overlap the batch — the manifest's partition pruning
+  (Delta's per-file ``partitionValues``). OPTIMIZE, RESTORE, clones,
+  compaction bases and squashes over-approximate with their source
+  commits' dates.
+- ``schema``: the table's read schema as JSON after the commit, or null.
+- ``stats``, ``blooms``: per added file, footer zone maps and
+  membership indexes (:meth:`ManifestTable._file_stats`,
+  :meth:`ManifestTable._file_blooms`) — read from the footers of newly
+  staged files, carried from earlier commits for files already in the
+  log (compaction, clone, branch squash).
+- Writers' own keys: ``removed_dates`` (copy-on-write mutations,
+  ``delete_where``, RESTORE) and ``batch_dates`` (mutations, RESTORE)
+  for change feeds; ``optimize``; ``restore_of``; ``drop_columns`` and
+  ``dropped_types`` (DROP COLUMN; compaction bases and squashes carry
+  ``dropped_types``); ``compacted_from`` and ``added_numbers`` (a
+  compaction base's merged-commit count and each file's own commit
+  number); ``cloned_from``; ``fast_forward_of`` and ``squashed_from``.
+
+A catalog commit (:mod:`.catalog`) holds ``version``, ``committed_at``
+and ``tables``, one such record per touched table without its own
+``version``/``committed_at``, plus ``optimize``, ``compacted_from`` or
+``fast_forward_of``/``squashed_from``. A squashed table record whose
+files lack row counts adds ``count_is_upper_bound``, and a compaction
+base's table records add ``added_numbers``.
 
 The reference's guarantee being reproduced is the same PRIMARY KEY
 ``ON CONFLICT DO NOTHING`` (consumer/meter_consumer.py:104-114); this
@@ -105,6 +137,82 @@ def _put_if_absent(path: str, payload: bytes) -> bool:
             os.unlink(tmp)
 
 
+def _publish(
+    path: str,
+    version: int,
+    hook=None,
+    committed_at: float | None = None,
+    **fields,
+) -> bool:
+    """The one commit writer: stamp ``fields`` (a record from
+    :func:`_record`, or a catalog commit's ``tables``)
+    with ``version`` and ``committed_at`` (now unless given), fire the
+    writer's pending pre-publish ``hook``, and put the commit at
+    ``path`` if absent. False means another writer holds ``path``."""
+    if hook is not None:
+        hook()
+    commit = {
+        "version": version,
+        **fields,
+        "committed_at": time.time() if committed_at is None else committed_at,
+    }
+    return _put_if_absent(path, json.dumps(commit).encode())
+
+
+def _record(
+    table: "ManifestTable | None",
+    staged: list[str] = (),
+    *,
+    stats: dict | None = None,
+    carried: list[str] = (),
+    carry_from: list[dict] = (),
+    carry_dir: str | None = None,
+    removed: list[str] = (),
+    count: int = 0,
+    dates=(),
+    schema=None,
+    **extra,
+) -> dict:
+    """One table commit record (the module docstring's format), adding
+    ``carried`` then ``staged`` files. Newly ``staged`` files, in
+    ``table``'s data dir, get ``stats`` (read from their footers unless
+    the caller already did) and ``blooms`` from their footers;
+    ``carried`` files, already in the log, keep the entries
+    ``carry_from`` recorded for them, the latest winning. ``carry_dir``
+    is the data dir those commits name files against (default: the
+    names are ``table``'s own). ``table`` may be None when nothing is
+    staged. ``schema`` is a StructType or its JSON; ``extra`` holds the
+    writer's own keys."""
+    old_stats: dict = {}
+    old_blooms: dict = {}
+    for c in carry_from:
+        old_stats.update(c.get("stats") or {})
+        old_blooms.update(c.get("blooms") or {})
+    keys = {
+        f: f
+        if carry_dir is None
+        else os.path.relpath(os.path.join(table.data_dir, f), carry_dir)
+        for f in carried
+    }
+    rec_stats = {f: old_stats[k] for f, k in keys.items() if k in old_stats}
+    rec_blooms = {f: old_blooms[k] for f, k in keys.items() if k in old_blooms}
+    if staged:
+        rec_stats.update(table._file_stats(staged) if stats is None else stats)
+        rec_blooms.update(table._file_blooms(staged))
+    if schema is not None and not isinstance(schema, str):
+        schema = schema.json()
+    return {
+        "added": [*carried, *staged],
+        "removed": list(removed),
+        "count": count,
+        "dates": sorted(dates),
+        "schema": schema,
+        "stats": rec_stats,
+        "blooms": rec_blooms,
+        **extra,
+    }
+
+
 class ManifestTable:
     """A parquet table whose visible contents are decided by the
     commit log, with a PK-idempotent optimistic append."""
@@ -154,9 +262,7 @@ class ManifestTable:
         # dictionary is disjoint from the lookup set. Rides the SAME
         # commit channel as the blooms (one membership-index map per
         # file, value type selects the encoding: hex bitmap = bloom,
-        # list = dictionary), so every metadata carry-through path —
-        # log compaction, clone, branch publish, retention rewrite —
-        # preserves it with zero extra code.
+        # list = dictionary), so _record carries it like a bloom.
         self.dict_columns = list(dict_columns) if dict_columns else []
         self.commits_dir = os.path.join(table_dir, COMMITS_DIRNAME)
         self.data_dir = os.path.join(table_dir, DATA_DIRNAME)
@@ -214,10 +320,11 @@ class ManifestTable:
                 json.dump({**persisted, **want}, fh)
             os.replace(tmp, cfg_path)
         os.makedirs(self.refs_dir, exist_ok=True)
-        # Test seam: invoked between validation/staging and the
-        # publish attempt, so tests can deterministically land a
-        # competing commit in the exact window the optimistic
-        # protocol must survive. Never set in production.
+        # Test seam: _publish invokes it before every commit this
+        # handle publishes (between validation/staging and the put),
+        # so tests can land a competing commit, or kill the writer,
+        # in the exact window the optimistic protocol must survive.
+        # Never set in production.
         self._pre_publish_hook = None
 
     def _recover_interrupted_compaction(self) -> None:
@@ -855,14 +962,15 @@ class ManifestTable:
         added it}. The secondary index (sources/index.py) uses it for
         freshness: a live file whose origin is past the index's last
         refresh has no postings yet, so index reads open it
-        unconditionally. A file merged by log compaction takes the
-        merged base's number."""
+        unconditionally. A file merged by log compaction keeps its own
+        number through the merged base's ``added_numbers`` map."""
         origins: dict[str, int] = {}
         for num, c in numbered:
             for f in c.get("removed", []):
                 origins.pop(os.path.join(self.data_dir, f), None)
+            recorded = c.get("added_numbers", {})
             for f in c["added"]:
-                origins[os.path.join(self.data_dir, f)] = num
+                origins[os.path.join(self.data_dir, f)] = recorded.get(f, num)
         return origins
 
     @staticmethod
@@ -1562,6 +1670,28 @@ class ManifestTable:
             stage_path = os.path.join(self.data_dir, os.path.dirname(rel_files[0]))
             shutil.rmtree(stage_path, ignore_errors=True)
 
+    def _count_and_dates(
+        self, spark: SparkSession, rel_files: list[str]
+    ) -> tuple[int, list[str]]:
+        """Rows and distinct ``reading_timestamp`` dates of staged
+        files, from one aggregation job. A dateless table (no
+        ``reading_timestamp``) records no dates."""
+        if not rel_files:
+            return 0, []
+        sdf = spark.read.parquet(
+            *(os.path.join(self.data_dir, f) for f in rel_files)
+        )
+        aggs = [F.count(F.lit(1)).alias("n")]
+        has_ts = "reading_timestamp" in sdf.columns
+        if has_ts:
+            aggs.append(
+                F.collect_set(
+                    F.to_date("reading_timestamp").cast("string")
+                ).alias("dates")
+            )
+        row = sdf.agg(*aggs).collect()[0]
+        return row["n"], sorted(row["dates"]) if has_ts else []
+
     def idempotent_append(
         self,
         spark: SparkSession,
@@ -1651,21 +1781,20 @@ class ManifestTable:
                     with contextlib.suppress(FileNotFoundError):
                         os.remove(os.path.join(head, f".{name}.crc"))
                 staged = list(stats)
-            if self._pre_publish_hook is not None:
-                self._pre_publish_hook()
-            payload = json.dumps(
-                {
-                    "version": validated_through,
-                    "added": staged,
-                    "count": n,
-                    "dates": sorted(batch_dates or []),
-                    "schema": in_batch.schema.json(),
-                    "stats": stats,
-                    "blooms": self._file_blooms(staged),
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if _put_if_absent(self._commit_path(validated_through), payload):
+                record = _record(
+                    self,
+                    staged,
+                    stats=stats,
+                    count=n,
+                    dates=batch_dates or (),
+                    schema=in_batch.schema,
+                )
+            if _publish(
+                self._commit_path(validated_through),
+                validated_through,
+                self._pre_publish_hook,
+                **record,
+            ):
                 return n
             # Lost the race: validate only against the commits we
             # lost to. If their key sets can't overlap ours (date
@@ -2179,85 +2308,52 @@ class ManifestTable:
                 # omitting them would let a future append's date-pruned
                 # validation miss those rows and double-insert); count
                 # = rows the added files physically hold.
-                if staged:
-                    sdf = spark.read.parquet(
-                        *(
-                            os.path.join(self.data_dir, f)
-                            for f in staged
+                n_staged, added_dates = self._count_and_dates(spark, staged)
+                record = _record(
+                    self,
+                    staged,
+                    removed=removed_rel,
+                    count=n_staged,
+                    dates=added_dates,
+                    # CDC metadata: the dates the matched (removed
+                    # or re-stated) rows lived on — the only
+                    # record of a date a DELETE emptied entirely,
+                    # which the post-image diff cannot see. With a
+                    # timestamp-free pk the matched rows may live
+                    # on dates OUTSIDE the batch's — over-
+                    # approximate with every commit date (CDC
+                    # consumers re-read more, never less).
+                    removed_dates=(
+                        []
+                        if not n_matched
+                        else sorted(batch_dates_set)
+                        if ts_in_pk
+                        else sorted(
+                            {
+                                d
+                                for c in commits
+                                for d in c.get("dates", [])
+                            }
                         )
-                    )
-                    # dateless tables (no reading_timestamp) record
-                    # no dates — same guard as idempotent_append
-                    aggs = [F.count(F.lit(1)).alias("n")]
-                    has_ts = "reading_timestamp" in sdf.columns
-                    if has_ts:
-                        aggs.append(
-                            F.collect_set(
-                                F.to_date("reading_timestamp").cast(
-                                    "string"
-                                )
-                            ).alias("dates")
-                        )
-                    stat = sdf.agg(*aggs).collect()[0]
-                    n_staged = stat["n"]
-                    added_dates = (
-                        sorted(stat["dates"]) if has_ts else []
-                    )
-                else:
-                    n_staged, added_dates = 0, []
-                if self._pre_publish_hook is not None:
-                    self._pre_publish_hook()
-                payload = json.dumps(
-                    {
-                        "version": fence,
-                        "added": staged,
-                        "removed": removed_rel,
-                        "count": n_staged,
-                        "dates": added_dates,
-                        "stats": self._file_stats(staged),
-                        "blooms": self._file_blooms(staged),
-                        # CDC metadata: the dates the matched (removed
-                        # or re-stated) rows lived on — the only
-                        # record of a date a DELETE emptied entirely,
-                        # which the post-image diff cannot see. With a
-                        # timestamp-free pk the matched rows may live
-                        # on dates OUTSIDE the batch's — over-
-                        # approximate with every commit date (CDC
-                        # consumers re-read more, never less).
-                        "removed_dates": (
-                            []
-                            if not n_matched
-                            else sorted(batch_dates_set)
-                            if ts_in_pk
-                            else sorted(
-                                {
-                                    d
-                                    for c in commits
-                                    for d in c.get("dates", [])
-                                }
-                            )
-                        ),
-                        # The batch's own dates: with removed_dates
-                        # this is the EXACT changed-date set of a
-                        # mutation, letting incremental consumers skip
-                        # reading survivor files (whose full date
-                        # range is mostly unchanged rows).
-                        "batch_dates": (
-                            sorted(batch_dates_set)
-                            if batch is not None
-                            else []
-                        ),
-                        "schema": (
-                            in_keys.schema.json()
-                            if batch is not None
-                            else ev_schema.json()
-                            if ev_schema is not None
-                            else None
-                        ),
-                        "committed_at": time.time(),
-                    }
-                ).encode()
-                if _put_if_absent(self._commit_path(fence), payload):
+                    ),
+                    # The batch's own dates: with removed_dates
+                    # this is the EXACT changed-date set of a
+                    # mutation, letting incremental consumers skip
+                    # reading survivor files (whose full date
+                    # range is mostly unchanged rows).
+                    batch_dates=(
+                        sorted(batch_dates_set)
+                        if batch is not None
+                        else []
+                    ),
+                    schema=in_keys.schema if batch is not None else ev_schema,
+                )
+                if _publish(
+                    self._commit_path(fence),
+                    fence,
+                    self._pre_publish_hook,
+                    **record,
+                ):
                     if batch is not None:
                         return n_matched, n_inserted
                     return n_matched, 0
@@ -2383,54 +2479,50 @@ def compact_log(table: ManifestTable, keep_last: int = 10) -> int:
         # from the log — after this its stage dir becomes vacuumable);
         # tail commits keep their own removed lists, which may still
         # reference base files (applied in order by _files).
-        base_schema = ManifestTable._evolved_schema([c for _, c in base])
-        net_rel = set(table._net_relfiles([c for _, c in base]))
-        base_stats = {
-            rel: r
-            for _, c in base
-            for rel, r in c.get("stats", {}).items()
-            if rel in net_rel
+        base_commits = [c for _, c in base]
+        base_schema = ManifestTable._evolved_schema(base_commits)
+        # Each merged file keeps the number of the commit that added
+        # it: the secondary index treats a file whose number is past
+        # its last refresh as unindexed (sources/index.py).
+        added_numbers = {
+            os.path.relpath(p, table.data_dir): n
+            for p, n in table._file_origins(base).items()
         }
-        base_blooms = {
-            rel: b
-            for _, c in base
-            for rel, b in c.get("blooms", {}).items()
-            if rel in net_rel
-        }
-        merged = {
-            "version": base_num,
-            "added": table._net_relfiles([c for _, c in base]),
-            "count": sum(c.get("count", 0) for _, c in base),
-            "dates": sorted(
-                {d for _, c in base for d in c.get("dates", [])}
-            ),
-            "compacted_from": cut,
-            "schema": base_schema.json() if base_schema else None,
-            "stats": base_stats,
-            "blooms": base_blooms,
+        record = _record(
+            table,
+            carried=list(added_numbers),
+            carry_from=base_commits,
+            count=sum(c.get("count", 0) for c in base_commits),
+            dates={d for c in base_commits for d in c.get("dates", [])},
+            schema=base_schema,
+            compacted_from=cut,
             # ALTER DROP COLUMN markers inside the merged prefix are
             # already folded into base_schema; the dropped-type
             # tombstones carry over (latest wins) so the re-add-with-
             # different-type guard survives compaction for columns
             # still absent from the base schema.
-            "dropped_types": {
+            dropped_types={
                 name: tp
-                for _, c in base
+                for c in base_commits
                 for name, tp in (c.get("dropped_types") or {}).items()
                 if base_schema is None
                 or name not in {f.name for f in base_schema.fields}
             },
-            # The base REPRESENTS the table as of the last merged
-            # commit, so it inherits that commit's timestamp: asof
-            # reads inside the merged range are no longer resolvable
-            # (the same granularity loss Delta log cleanup accepts).
-            "committed_at": base[-1][1].get("committed_at"),
-        }
+            added_numbers=added_numbers,
+        )
+        # The base is put under a fresh name and renamed over the
+        # lowest commit. It REPRESENTS the table as of the last merged
+        # commit, so it inherits that commit's timestamp: asof reads
+        # inside the merged range are no longer resolvable (the same
+        # granularity loss Delta log cleanup accepts).
         tmp = table._commit_path(base_num) + f".compacting.{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(merged, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
+        _publish(
+            tmp,
+            base_num,
+            table._pre_publish_hook,
+            committed_at=base[-1][1].get("committed_at"),
+            **record,
+        )
         os.rename(tmp, table._commit_path(base_num))
         for num, _ in base[1:]:
             with contextlib.suppress(FileNotFoundError):
@@ -2643,36 +2735,26 @@ def optimize_table(
             n_staged = spark.read.parquet(
                 *(os.path.join(table.data_dir, f) for f in staged)
             ).count()
-            removed_rel = sorted(
-                os.path.relpath(f, table.data_dir) for f in small
+            record = _record(
+                table,
+                staged,
+                removed=sorted(
+                    os.path.relpath(f, table.data_dir) for f in small
+                ),
+                count=n_staged,
+                # Dates over-approximate (union of all commit dates):
+                # safe for the date-pruned validation scan — it may
+                # read the packed files unnecessarily, never miss them.
+                dates={d for c in commits for d in c.get("dates", [])},
+                schema=schema,
+                optimize=True,
             )
-            # Dates over-approximate (union of all commit dates):
-            # safe for the date-pruned validation scan — it may read
-            # the packed files unnecessarily, never miss them.
-            dates = sorted(
-                {
-                    d
-                    for c in commits
-                    for d in c.get("dates", [])
-                }
-            )
-            payload = json.dumps(
-                {
-                    "version": fence,
-                    "added": staged,
-                    "removed": removed_rel,
-                    "count": n_staged,
-                    "dates": dates,
-                    "schema": schema.json() if schema else None,
-                    "stats": table._file_stats(staged),
-                    "blooms": table._file_blooms(staged),
-                    "optimize": True,
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if table._pre_publish_hook is not None:
-                table._pre_publish_hook()
-            if _put_if_absent(table._commit_path(fence), payload):
+            if _publish(
+                table._commit_path(fence),
+                fence,
+                table._pre_publish_hook,
+                **record,
+            ):
                 return {
                     "files_rewritten": len(small),
                     "files_created": len(staged),
@@ -2697,10 +2779,7 @@ def restore_version(table: ManifestTable, version: int) -> dict:
     Requires every target file to still exist (an aged vacuum after a
     compaction can have reclaimed CoW originals — then the restore
     point is gone and this raises instead of publishing a half-readable
-    state). ``removed_dates`` records the union of the reverted
-    commits' dates so the incremental-refresh feed
-    (changed_dates_since) re-derives every date the rollback could
-    have touched. Additive schema evolution is NOT reverted: the read
+    state). Additive schema evolution is NOT reverted: the read
     schema stays the union of all recorded schemas, so post-version
     columns read as NULL on restored rows — documented Delta-parity
     gap (Delta restores the schema pointer; a union-schema log has no
@@ -2761,37 +2840,27 @@ def restore_version(table: ManifestTable, version: int) -> dict:
                     )
                 }
             )
-            target_schema = table._evolved_schema(commits[: version + 1])
-            payload = json.dumps(
-                {
-                    "version": fence,
-                    "added": readd,
-                    "removed": remove,
-                    # count/dates describe the re-added files: their
-                    # dates come from the commits that first added
-                    # them, which the target prefix recorded.
-                    "count": 0,
-                    "dates": sorted(
-                        {
-                            d
-                            for c in commits[: version + 1]
-                            for d in c.get("dates", [])
-                        }
-                    ),
-                    "stats": table._file_stats(readd),
-                    "blooms": table._file_blooms(readd),
-                    "removed_dates": reverted_dates,
-                    "batch_dates": [],
-                    "schema": (
-                        target_schema.json() if target_schema else None
-                    ),
-                    "restore_of": version,
-                    "committed_at": time.time(),
-                }
-            ).encode()
-            if table._pre_publish_hook is not None:
-                table._pre_publish_hook()
-            if _put_if_absent(table._commit_path(fence), payload):
+            record = _record(
+                table,
+                readd,
+                removed=remove,
+                # count/dates describe the re-added files: their
+                # dates come from the commits that first added
+                # them, which the target prefix recorded.
+                dates={
+                    d for c in commits[: version + 1] for d in c.get("dates", [])
+                },
+                schema=table._evolved_schema(commits[: version + 1]),
+                removed_dates=reverted_dates,
+                batch_dates=[],
+                restore_of=version,
+            )
+            if _publish(
+                table._commit_path(fence),
+                fence,
+                table._pre_publish_hook,
+                **record,
+            ):
                 return {
                     "files_readded": len(readd),
                     "files_removed": len(remove),
@@ -3105,8 +3174,6 @@ def delete_where(
         ev_schema = table._evolved_schema(commits)
         staged: list[str] = []
         n_rewrite_orig = 0
-        n_survivors = 0
-        added_dates: list[str] = []
         if rewrite:
             src = table._read_files(spark, rewrite, ev_schema)
             n_rewrite_orig = src.count()
@@ -3117,52 +3184,25 @@ def delete_where(
                 cond = cond & (F.col(column) <= F.lit(hi))
             survivors = src.filter(~cond | F.col(column).isNull())
             staged = table._stage(survivors)
-            if staged:
-                sdf = spark.read.parquet(
-                    *(
-                        os.path.join(table.data_dir, f)
-                        for f in staged
-                    )
-                )
-                # dateless tables record no dates (same guard as
-                # idempotent_append / _cow_mutation)
-                aggs = [F.count(F.lit(1)).alias("n")]
-                has_ts = "reading_timestamp" in sdf.columns
-                if has_ts:
-                    aggs.append(
-                        F.collect_set(
-                            F.to_date("reading_timestamp").cast("string")
-                        ).alias("dates")
-                    )
-                stat = sdf.agg(*aggs).collect()[0]
-                n_survivors = stat["n"]
-                added_dates = sorted(stat["dates"]) if has_ts else []
-        removed_rel = sorted(
-            os.path.relpath(f, table.data_dir)
-            for f in dropped + rewrite
+        n_survivors, added_dates = table._count_and_dates(spark, staged)
+        record = _record(
+            table,
+            staged,
+            removed=sorted(
+                os.path.relpath(f, table.data_dir) for f in dropped + rewrite
+            ),
+            count=n_survivors,
+            dates=added_dates,
+            # removed_dates over-approximates with every commit date —
+            # safe for CDC consumers (they re-read more, never less)
+            removed_dates=sorted(
+                {d for c in commits for d in c.get("dates", [])}
+            ),
+            schema=ev_schema,
         )
-        # removed_dates over-approximates with every commit date —
-        # safe for CDC consumers (they re-read more, never less)
-        all_dates = sorted(
-            {d for c in commits for d in c.get("dates", [])}
-        )
-        if table._pre_publish_hook is not None:
-            table._pre_publish_hook()
-        payload = json.dumps(
-            {
-                "version": fence,
-                "added": staged,
-                "removed": removed_rel,
-                "count": n_survivors,
-                "dates": added_dates,
-                "stats": table._file_stats(staged),
-                "blooms": table._file_blooms(staged),
-                "removed_dates": all_dates,
-                "schema": ev_schema.json() if ev_schema else None,
-                "committed_at": time.time(),
-            }
-        ).encode()
-        if _put_if_absent(table._commit_path(fence), payload):
+        if _publish(
+            table._commit_path(fence), fence, table._pre_publish_hook, **record
+        ):
             return {
                 "files_dropped": len(dropped),
                 "files_rewritten": len(rewrite),
@@ -3275,22 +3315,17 @@ def alter_drop_column(table: ManifestTable, column: str) -> int:
         )
         from pyspark.sql.types import StructType
 
-        payload = json.dumps(
-            {
-                "version": fence,
-                "added": [],
-                "removed": [],
-                "count": 0,
-                "dates": [],
-                "stats": {},
-                "blooms": {},
-                "drop_columns": [column],
-                "dropped_types": {column: dropped.dataType.json()},
-                "schema": StructType(post).json() if post else None,
-                "committed_at": time.time(),
-            }
-        ).encode()
-        if _put_if_absent(table._commit_path(fence), payload):
+        if _publish(
+            table._commit_path(fence),
+            fence,
+            table._pre_publish_hook,
+            **_record(
+                table,
+                schema=StructType(post) if post else None,
+                drop_columns=[column],
+                dropped_types={column: dropped.dataType.json()},
+            ),
+        ):
             return fence
     raise CommitConflictError(
         f"gave up after 20 drop-column attempts on {table.table_dir}"
@@ -3833,11 +3868,6 @@ def shallow_clone(source: ManifestTable, target_dir: str) -> ManifestTable:
     (it only sweeps the clone's own data dir). Divergence after the
     clone point is therefore fully isolated — the Delta semantics.
 
-    Carried metadata: evolved schema (so evolution history collapses
-    to one recorded schema), per-file skipping stats (live files
-    only, keyed by the clone-relative path), and the union of commit
-    dates (over-approximate like all add-side date pruning).
-
     HAZARD (same as Delta): the source's VACUUM does not know about
     clones — a CoW mutation or OPTIMIZE on the SOURCE followed by its
     vacuum can delete files the clone still references. Clones are
@@ -3860,36 +3890,20 @@ def shallow_clone(source: ManifestTable, target_dir: str) -> ManifestTable:
     if clone.snapshot():
         raise ValueError(f"clone target is not empty: {target_dir}")
 
-    stats_by_abs: dict[str, dict] = {}
-    blooms_by_abs: dict[str, dict] = {}
-    for c in commits:
-        for f, s in (c.get("stats") or {}).items():
-            stats_by_abs[os.path.join(source.data_dir, f)] = s
-        for f, b in (c.get("blooms") or {}).items():
-            blooms_by_abs[os.path.join(source.data_dir, f)] = b
-    rel_of = {p: os.path.relpath(p, clone.data_dir) for p in live_abs}
     schema = source._evolved_schema(commits)
-    payload = {
-        "version": 0,
-        "added": [rel_of[p] for p in live_abs],
-        "dates": sorted({d for c in commits for d in c["dates"]}),
-        "stats": {
-            rel_of[p]: stats_by_abs[p]
-            for p in live_abs
-            if p in stats_by_abs
-        },
-        "blooms": {
-            rel_of[p]: blooms_by_abs[p]
-            for p in live_abs
-            if p in blooms_by_abs
-        },
-        "committed_at": time.time(),
-        "cloned_from": source.table_dir,
-    }
-    if schema is not None:
-        payload["schema"] = schema.json()
-    if not _put_if_absent(
-        clone._commit_path(0), json.dumps(payload).encode()
+    if not _publish(
+        clone._commit_path(0),
+        0,
+        clone._pre_publish_hook,
+        **_record(
+            clone,
+            carried=[os.path.relpath(p, clone.data_dir) for p in live_abs],
+            carry_from=commits,
+            carry_dir=source.data_dir,
+            dates={d for c in commits for d in c["dates"]},
+            schema=schema,
+            cloned_from=source.table_dir,
+        ),
     ):
         raise ValueError(f"clone target is not empty: {target_dir}")
     return clone
@@ -3973,10 +3987,8 @@ class ManifestBranch(ManifestTable):
         publish or makes it diverge — never a silent overwrite.
 
         The squash records the branch's NET effect: files the branch
-        added (minus ones it later removed), removals of BASE files
-        the branch rewrote (copy-on-write upserts/deletes), carried
-        per-file stats/Bloom bitmaps, the union of branch dates, the
-        branch-evolved schema, and dropped-type tombstones. Per-commit
+        added (minus ones it later removed) and removals of BASE files
+        the branch rewrote (copy-on-write upserts/deletes). Per-commit
         branch granularity is deliberately not replayed — a squash has
         no partial-publish state, which is what makes the publish
         atomic on an object store."""
@@ -3991,39 +4003,21 @@ class ManifestBranch(ManifestTable):
             for f in c.get("removed", []):
                 if f not in added_in_branch:
                     removed_net[f] = None
-        stats = {
-            rel: s
-            for c in bc
-            for rel, s in (c.get("stats") or {}).items()
-            if rel in set(added_net)
-        }
-        blooms = {
-            rel: b
-            for c in bc
-            for rel, b in (c.get("blooms") or {}).items()
-            if rel in set(added_net)
-        }
-        schema = self._evolved_schema([c for _, c in numbered_view])
         dropped = {}
         for c in bc:
             dropped.update(c.get("dropped_types") or {})
-        payload = {
-            "added": added_net,
-            "removed": sorted(removed_net),
-            "count": sum(c.get("count", 0) for c in bc),
-            "dates": sorted({d for c in bc for d in c.get("dates", [])}),
-            "committed_at": time.time(),
-            "fast_forward_of": self.branch_name,
-            "squashed_from": len(bc),
-        }
-        if schema is not None:
-            payload["schema"] = schema.json()
-        if dropped:
-            payload["dropped_types"] = dropped
-        if stats:
-            payload["stats"] = stats
-        if blooms:
-            payload["blooms"] = blooms
+        record = _record(
+            self,
+            carried=added_net,
+            carry_from=bc,
+            removed=sorted(removed_net),
+            count=sum(c.get("count", 0) for c in bc),
+            dates={d for c in bc for d in c.get("dates", [])},
+            schema=self._evolved_schema([c for _, c in numbered_view]),
+            fast_forward_of=self.branch_name,
+            squashed_from=len(bc),
+            dropped_types=dropped,
+        )
         for _ in range(max_retries):
             main_numbered = self._parent.numbered_snapshot()
             fence = self._fence(main_numbered)
@@ -4034,12 +4028,11 @@ class ManifestBranch(ManifestTable):
                     f"{self.base_number} — main advanced since the "
                     "branch; rebase by re-branching and re-applying"
                 )
-            payload["version"] = fence
-            if self._pre_publish_hook is not None:
-                self._pre_publish_hook()
-            if _put_if_absent(
+            if _publish(
                 self._parent._commit_path(fence),
-                json.dumps(payload).encode(),
+                fence,
+                self._pre_publish_hook,
+                **record,
             ):
                 if not retain_branch:
                     self._parent.delete_branch(self.branch_name)

@@ -1,0 +1,274 @@
+"""The commit record every writer publishes, and the seam each publish
+passes through.
+
+Each writer runs once on a tiny table. The first test pins the keys of
+the commit it publishes, its ``count`` and ``dates``, and the
+``stats``/``blooms`` of the files it adds: a writer may spell out a key
+it used to leave out only with the empty value every reader defaults it
+to (``removed: []``, ``blooms: {}``), and may never drop a key or change
+a value. The hook tests make every writer's pre-publish hook raise
+and check that nothing was published.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from smart_meter_data_pipeline_spark.sources import manifest
+from smart_meter_data_pipeline_spark.sources.catalog import (
+    Catalog,
+    compact_catalog,
+    optimize_catalog_table,
+)
+from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+
+RECORD = {"version", "added", "count", "dates", "schema", "stats", "blooms",
+          "committed_at"}
+MUTATION = RECORD | {"removed"}
+PINNED = {
+    "append": RECORD,
+    "upsert": MUTATION | {"removed_dates", "batch_dates"},
+    "delete_keys": MUTATION | {"removed_dates", "batch_dates"},
+    "delete_where": MUTATION | {"removed_dates"},
+    "optimize_table": MUTATION | {"optimize"},
+    "restore_version": MUTATION | {"removed_dates", "batch_dates",
+                                   "restore_of"},
+    "alter_drop_column": MUTATION | {"drop_columns", "dropped_types"},
+    "fast_forward": MUTATION | {"fast_forward_of", "squashed_from"},
+    "shallow_clone": (RECORD - {"count"}) | {"cloned_from"},
+    "compact_log": RECORD | {"compacted_from", "dropped_types"},
+}
+# keys a writer may gain, each with the value readers default it to
+EMPTY = {"removed": [], "blooms": {}, "stats": {}, "schema": None,
+         "count": 0, "dropped_types": {}}
+# the count each writer records: the rows its added files hold, 0, or
+# (the merged base) the sum of the merged commits' counts
+COUNTS = {
+    "restore_version": 0,
+    "alter_drop_column": 0,
+    "shallow_clone": 0,
+}
+DAY = ["2024-03-01"]
+CHAIN = {"version", "tables", "committed_at"}
+TABLE_PAYLOAD = {"added", "removed", "count", "dates", "schema", "stats"}
+
+
+def _rows(spark, lo, hi, consumption=1500):
+    return spark.range(lo, hi).select(
+        F.expr("timestamp'2024-03-01 10:30:00'").alias("reading_timestamp"),
+        F.col("id").alias("meter_id"),
+        F.lit(consumption).cast("long").alias("reading_consumption_milliwatts"),
+        F.lit(0).cast("long").alias("reading_production_milliwatts"),
+        F.lit("V").alias("status"),
+    )
+
+
+def _check_keys(commit: dict, pinned: set, extra_ok=()) -> None:
+    keys = set(commit)
+    assert pinned <= keys, sorted(pinned - keys)
+    for k in keys - pinned - set(extra_ok):
+        assert k in EMPTY and commit[k] == EMPTY[k], (k, commit[k])
+
+
+def _check_indexes(t: ManifestTable, commit: dict) -> None:
+    """Every added file's recorded stats and blooms are what its footer
+    gives, whether the writer read the footer or carried the entry."""
+    stats = commit.get("stats") or {}
+    blooms = commit.get("blooms") or {}
+    for f in commit["added"]:
+        assert stats[f] == t._file_stats([f])[f]
+        assert blooms.get(f) == t._file_blooms([f]).get(f)
+    assert set(stats) <= set(commit["added"])
+    assert set(blooms) <= set(commit["added"])
+
+
+def test_every_writer_keeps_the_commit_format(spark, tmp_path):
+    t = ManifestTable(
+        str(tmp_path / "t"), bloom_columns=["meter_id"], dict_columns=["status"]
+    )
+    published = {}
+
+    def record(name):
+        published[name] = t.snapshot()[-1]
+
+    t.idempotent_append(spark, _rows(spark, 0, 20))
+    record("append")
+    t.idempotent_append(spark, _rows(spark, 20, 40))
+    t.upsert(spark, _rows(spark, 5, 8, consumption=99))
+    record("upsert")
+    t.delete_keys(spark, _rows(spark, 30, 31).select(*manifest.PK))
+    record("delete_keys")
+    manifest.delete_where(t, spark, "meter_id", 10, 12)
+    record("delete_where")
+    manifest.optimize_table(t, spark)
+    record("optimize_table")
+    manifest.restore_version(t, 1)
+    record("restore_version")
+    manifest.alter_drop_column(t, "reading_production_milliwatts")
+    record("alter_drop_column")
+    t.create_branch("audit")
+    t.branch("audit").idempotent_append(spark, _rows(spark, 40, 50))
+    t.branch("audit").fast_forward()
+    record("fast_forward")
+    clone = manifest.shallow_clone(t, str(tmp_path / "clone"))
+    published["shallow_clone"] = clone.snapshot()[0]
+    merged = sum(c.get("count", 0) for c in t.snapshot()[:8])
+    assert manifest.compact_log(t, keep_last=1) == 8
+    published["compact_log"] = t.snapshot()[0]
+    counts = dict(COUNTS, compact_log=merged)
+
+    assert set(published) == set(PINNED)
+    for name, commit in published.items():
+        # the merged base maps each file to the commit that added it
+        extra_ok = {"added_numbers"} if name == "compact_log" else ()
+        _check_keys(commit, PINNED[name], extra_ok)
+        rows = sum(s["#rows"] for s in commit["stats"].values())
+        assert commit.get("count", 0) == counts.get(name, rows), name
+        assert commit["dates"] == ([] if name == "alter_drop_column" else DAY)
+        _check_indexes(clone if name == "shallow_clone" else t, commit)
+        assert commit["added"] or name == "alter_drop_column"
+    assert {r["meter_id"] for r in t.read(spark).collect()} == set(range(50))
+
+
+def test_catalog_commits_keep_the_commit_format(spark, tmp_path):
+    cat = Catalog(str(tmp_path / "cat"))
+    txn = cat.txn()
+    txn.append(spark, "fact", _rows(spark, 0, 10))
+    txn.commit()
+    txn = cat.txn()
+    txn.append(spark, "fact", _rows(spark, 10, 20))
+    txn.upsert(spark, "fact", _rows(spark, 3, 4, consumption=99))
+    txn.commit()
+    txn = cat.txn()
+    txn.delete_keys(spark, "fact", _rows(spark, 15, 16).select(*manifest.PK))
+    txn.commit()
+    chain = [c for _, c in cat.numbered_snapshot()]
+    assert compact_catalog(cat, keep_last=1) == 2
+    base = cat.numbered_snapshot()[0][1]
+
+    t = cat.table_handle("fact")
+    for commit, extra in (
+        (chain[0], set()),
+        (chain[1], set()),
+        (chain[2], set()),
+        (base, {"compacted_from"}),
+    ):
+        _check_keys(commit, CHAIN | extra)
+        payload = commit["tables"]["fact"]
+        # the merged base maps each file to the commit that added it
+        _check_keys(payload, TABLE_PAYLOAD, {"added_numbers"} if extra else ())
+        # a payload's count is the rows its added files hold
+        rows = sum(s["#rows"] for s in payload["stats"].values())
+        assert (payload["count"], payload["dates"]) == (rows, DAY)
+        _check_indexes(t, payload)
+    assert chain[0]["tables"]["fact"]["count"] == 10
+    assert sorted(
+        r["meter_id"] for r in cat.read(spark, "fact").collect()
+    ) == [m for m in range(20) if m != 15]
+
+
+class _Killed(Exception):
+    pass
+
+
+def _kill():
+    raise _Killed("killed before publish")
+
+
+def _fast_forward(spark, t):
+    branch = t.branch("audit")
+    branch._pre_publish_hook = _kill
+    branch.fast_forward()
+
+
+TABLE_WRITERS = {
+    "append": lambda spark, t: t.idempotent_append(spark, _rows(spark, 30, 40)),
+    "upsert": lambda spark, t: t.upsert(spark, _rows(spark, 5, 8, 99)),
+    "delete_keys": lambda spark, t: t.delete_keys(
+        spark, _rows(spark, 5, 8).select(*manifest.PK)
+    ),
+    "delete_where": lambda spark, t: manifest.delete_where(
+        t, spark, "meter_id", 0, 12
+    ),
+    "optimize_table": lambda spark, t: manifest.optimize_table(t, spark),
+    "restore_version": lambda spark, t: manifest.restore_version(t, 0),
+    "alter_drop_column": lambda spark, t: manifest.alter_drop_column(
+        t, "reading_production_milliwatts"
+    ),
+    "fast_forward": _fast_forward,
+    "compact_log": lambda spark, t: manifest.compact_log(t, keep_last=1),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(TABLE_WRITERS))
+def test_pre_publish_hook_fires_on_every_writer(spark, tmp_path, writer):
+    """A writer whose pre-publish hook raises publishes nothing: the
+    log listing and the table's rows are what they were."""
+    t = ManifestTable(str(tmp_path / "t"))
+    for lo in (0, 10, 20):
+        t.idempotent_append(spark, _rows(spark, lo, lo + 10))
+    if writer == "fast_forward":
+        t.create_branch("audit")
+        t.branch("audit").idempotent_append(spark, _rows(spark, 40, 50))
+
+    def state():
+        rows = sorted(tuple(r) for r in t.read(spark).collect())
+        return sorted(os.listdir(t.commits_dir)), rows
+
+    before = state()
+    t._pre_publish_hook = _kill
+    with pytest.raises(_Killed):
+        TABLE_WRITERS[writer](spark, t)
+    assert state() == before
+
+
+def _catalog_txn_commit(spark, cat):
+    txn = cat.txn()
+    txn.append(spark, "fact", _rows(spark, 30, 40))
+    txn._pre_publish_hook = _kill
+    txn.commit()
+
+
+def _catalog_fast_forward(spark, cat):
+    branch = cat.branch("audit")
+    branch._pre_publish_hook = _kill
+    branch.fast_forward()
+
+
+CATALOG_WRITERS = {
+    "txn_commit": _catalog_txn_commit,
+    "optimize_catalog_table": lambda spark, cat: optimize_catalog_table(
+        cat, spark, "fact"
+    ),
+    "compact_catalog": lambda spark, cat: compact_catalog(cat, keep_last=1),
+    "fast_forward": _catalog_fast_forward,
+}
+
+
+@pytest.mark.parametrize("writer", sorted(CATALOG_WRITERS))
+def test_pre_publish_hook_fires_on_every_catalog_writer(spark, tmp_path, writer):
+    """The same for the catalog chain: a raising hook leaves the chain
+    listing and the table's rows as they were."""
+    cat = Catalog(str(tmp_path / "cat"))
+    for lo in (0, 10, 20):
+        txn = cat.txn()
+        txn.append(spark, "fact", _rows(spark, lo, lo + 10))
+        txn.commit()
+    if writer == "fast_forward":
+        cat.create_branch("audit")
+        txn = cat.branch("audit").txn()
+        txn.append(spark, "fact", _rows(spark, 40, 50))
+        txn.commit()
+
+    def state():
+        rows = sorted(tuple(r) for r in cat.read(spark, "fact").collect())
+        return sorted(os.listdir(cat.commits_dir)), rows
+
+    before = state()
+    cat._pre_publish_hook = _kill
+    with pytest.raises(_Killed):
+        CATALOG_WRITERS[writer](spark, cat)
+    assert state() == before

@@ -1,15 +1,19 @@
-"""The pipeline's import boundary and the ``__spark_entry__`` contract.
+"""The pipeline's import boundary, the single commit writer, and the
+``__spark_entry__`` contract.
 
 The ingest → staging → marts path must load without the query
 registry: importing it registers nothing and pulls in no ``plans``
-module, nor the table reader, catalog or index modules. The registry
-side is checked here too: every name in ``registry._PRIORITY`` is
-registered after ``load_all()``, and ``__spark_entry__.entry`` returns
-the ``daily_customer_billing`` frame.
+module, nor the table reader, catalog or index modules. Every commit
+to a table log, branch log or catalog chain goes through one function,
+``manifest._publish``. The registry side is checked here too: every
+name in ``registry._PRIORITY`` is registered after ``load_all()``, and
+``__spark_entry__.entry`` returns the ``daily_customer_billing`` frame.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
 import os
 import subprocess
@@ -55,6 +59,56 @@ def test_pipeline_imports_load_no_registry():
     # and index machinery that sits on top of the manifest table
     for module in ("sources.readers", "sources.catalog", "sources.index"):
         assert f"smart_meter_data_pipeline_spark.{module}" not in loaded
+
+
+def _put_callers_and_commit_dicts() -> tuple[set, set]:
+    """Under ``sources/``: the functions that call ``_put_if_absent``,
+    and the functions that build a dict literal with a
+    ``"committed_at"`` key, each as ``module:Class.function``."""
+    callers, builders = set(), set()
+
+    def visit(node, module, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(
+                child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                inner = scope + [child.name]
+            where = f"{module}:{'.'.join(inner)}"
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name == "_put_if_absent":
+                    callers.add(where)
+            if isinstance(child, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == "committed_at"
+                for k in child.keys
+            ):
+                builders.add(where)
+            visit(child, module, inner)
+
+    pattern = os.path.join(ROOT, "smart_meter_data_pipeline_spark", "sources", "*.py")
+    for path in sorted(glob.glob(pattern)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        visit(tree, os.path.basename(path)[: -len(".py")], [])
+    return callers, builders
+
+
+def test_one_commit_writer():
+    """Only the commit writer stamps and puts commits; the other
+    put-if-absent users are the tag, branch-ref and identity-range
+    allocators, whose files are refs, not commits."""
+    callers, builders = _put_callers_and_commit_dicts()
+    assert callers == {
+        "manifest:_publish",
+        "manifest:ManifestTable.create_tag",
+        "manifest:ManifestTable.create_branch",
+        "manifest:ManifestTable.allocate_identity_range",
+        "catalog:Catalog.create_tag",
+        "catalog:Catalog.create_branch",
+    }
+    assert builders == {"manifest:_publish"}
 
 
 def test_every_priority_name_is_registered():

@@ -96,6 +96,58 @@ def test_index_survives_cow_rewrite(spark, tmp_path):
     )
 
 
+def test_index_reads_after_log_compaction(spark, tmp_path):
+    """Log compaction merges files appended after the last refresh into
+    the base commit. They keep their own commit numbers there, so the
+    index still treats them as unindexed and a point read finds their
+    rows, exactly as the plain filtered read does."""
+    from smart_meter_data_pipeline_spark.sources.manifest import compact_log
+
+    t = ManifestTable(str(tmp_path / "t"))
+    batches = [
+        _readings(spark, n=10, meters=10).withColumn(
+            "meter_id", F.col("meter_id") + 100 * k
+        )
+        for k in range(4)
+    ]
+    t.idempotent_append(spark, batches[0])
+    refresh_index(t, spark, "meter_id")
+    for b in batches[1:]:
+        t.idempotent_append(spark, b)
+    assert compact_log(t, keep_last=1) == 3
+    for meter in (3, 103, 203, 303):
+        out, _ = index_point_read(t, spark, "meter_id", [meter])
+        truth = t.read(spark).filter(F.col("meter_id") == meter)
+        assert out.count() == truth.count() == 1
+
+
+def test_catalog_index_reads_after_chain_compaction(spark, tmp_path):
+    """The same repro through a catalog table: chain compaction keeps
+    each merged file's own catalog commit number."""
+    from smart_meter_data_pipeline_spark.sources.catalog import (
+        Catalog,
+        CatalogTableView,
+        compact_catalog,
+    )
+
+    cat = Catalog(str(tmp_path / "cat"))
+    for k in range(4):
+        txn = cat.txn()
+        batch = _readings(spark, n=10, meters=10).withColumn(
+            "meter_id", F.col("meter_id") + 100 * k
+        )
+        txn.append(spark, "fact", batch)
+        txn.commit()
+        if k == 0:
+            refresh_index(CatalogTableView(cat, "fact"), spark, "meter_id")
+    assert compact_catalog(cat, keep_last=1) == 3
+    view = CatalogTableView(cat, "fact")
+    for meter in (3, 103, 203, 303):
+        out, _ = index_point_read(view, spark, "meter_id", [meter])
+        truth = cat.read(spark, "fact").filter(F.col("meter_id") == meter)
+        assert out.count() == truth.count() == 1
+
+
 def test_index_refresh_is_idempotent(spark, tmp_path):
     t, _ = _tbl(spark, tmp_path, n=200, meters=40, parts=2)
     r1 = refresh_index(t, spark, "meter_id")

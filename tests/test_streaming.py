@@ -458,6 +458,81 @@ def test_stream_manifest_sink_killed_between_stage_and_publish(
 
 
 @pytest.mark.parametrize("sink", ["lock", "manifest"])
+def test_stream_killed_between_fact_commit_and_quarantine_write(
+    spark, tmp_path, monkeypatch, sink
+):
+    """The sink commits the first micro-batch's facts, then dies before
+    that batch's quarantine write. The restart from the same checkpoint
+    replays the batch: its facts are already there and land no second
+    time, and its rejects land once."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+
+    src = tmp_path / "msgs"
+    target = str(tmp_path / "fact")
+    quarantine = str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    _write_deliveries(src, n_files=8, n_meters=10)  # 4 files per batch
+
+    def drain():
+        start_ingest_stream(
+            spark,
+            str(src / "*.txt"),
+            target,
+            ckpt,
+            quarantine_target=quarantine,
+            sink=sink,
+        ).awaitTermination()
+
+    def landed():
+        if sink == "manifest":
+            return ManifestTable(target).read(spark)
+        return spark.read.parquet(target)
+
+    real_parquet = DataFrameWriter.parquet
+    kills = []
+
+    def dies_on_first_quarantine_write(self, path, *args, **kwargs):
+        if path.startswith(quarantine) and not kills:
+            kills.append(path)
+            raise RuntimeError("killed before the quarantine write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_on_first_quarantine_write)
+    with pytest.raises(StreamingQueryException, match="killed before"):
+        drain()
+    assert landed().count() == 40  # the first batch's facts committed
+    assert not os.path.exists(quarantine)
+
+    drain()
+    got = sorted(
+        tuple(r)
+        for r in landed()
+        .select(
+            F.hour("reading_timestamp"),
+            "meter_id",
+            "reading_consumption_milliwatts",
+        )
+        .collect()
+    )
+    assert got == [
+        (i, m, 1000 * i + m) for i in range(8) for m in range(1, 11)
+    ]
+    reasons = {
+        r["reject_reason"]: r["count"]
+        for r in spark.read.parquet(quarantine)
+        .groupBy("reject_reason")
+        .count()
+        .collect()
+    }
+    assert reasons == {"malformed_json": 8, "bad_status": 8}
+    if sink == "manifest":
+        assert sum(c["count"] for c in ManifestTable(target).snapshot()) == 80
+
+
+@pytest.mark.parametrize("sink", ["lock", "manifest"])
 def test_stream_stamps_one_arrived_at_per_micro_batch(spark, tmp_path, sink):
     """Every valid row of a micro-batch carries the same ``arrived_at``
     and the next micro-batch carries another, as the reference stamps
