@@ -95,12 +95,6 @@ def _build_parser() -> argparse.ArgumentParser:
         help="list what vacuum WOULD sweep instead of deleting",
     )
     maint.add_argument(
-        "--analyze",
-        action="store_true",
-        help="collect ANALYZE statistics (row count, per-column "
-        "nulls/NDV/min-max) into _table.json (needs a Spark session)",
-    )
-    maint.add_argument(
         "--cluster-by",
         default="",
         help="comma-separated columns to cluster the optimize rewrite "
@@ -292,13 +286,6 @@ def main(argv: list[str] | None = None) -> int:
         dropped_col = None
         if args.drop_column:
             dropped_col = mf.alter_drop_column(t, args.drop_column)
-        analyzed = None
-        if args.analyze:
-            from smart_meter_data_pipeline_spark.session import get_spark
-
-            analyzed = mf.analyze_table(
-                t, get_spark("smart-meter-maintain")
-            )
         merged = mf.compact_log(t, keep_last=args.keep_last)
         swept = mf.vacuum_unreferenced(
             t, ttl_s=args.vacuum_ttl_s, dry_run=args.vacuum_dry_run
@@ -316,9 +303,6 @@ def main(argv: list[str] | None = None) -> int:
                         swept if isinstance(swept, list) else None
                     ),
                     "commits_now": len(t.snapshot()),
-                    "analyzed_rows": (
-                        analyzed["n_rows"] if analyzed else None
-                    ),
                     "dropped_column_commit": dropped_col,
                 }
             )

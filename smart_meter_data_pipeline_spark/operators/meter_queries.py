@@ -602,84 +602,6 @@ SELECT TIMESTAMP '2024-01-02 00:00:00', CAST(777 AS INT),
 )(manifest_upsert_partial_roundtrip)
 
 
-def manifest_cbo_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANALYZE statistics layer CONSUMED under the oracle gate: a
-    fact manifest table (the full generator day) joined to a
-    latest-state manifest table (one row per meter) through
-    ``cbo_join`` — both sides ANALYZEd, the build side chosen from
-    the persisted profiles' cardinality estimates, asserted to be
-    the 200-row latest side (a wrong decision here is the 100 TB
-    forced-fact-broadcast OOM). The returned join is hash-checked
-    against the relational twin, proving the CBO hint is
-    result-transparent (sources/manifest.py choose_build_side)."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        analyze_table,
-        cbo_join,
-        choose_build_side,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_cbo_q_")
-    try:
-        fact = ManifestTable(os.path.join(workdir, "fact"))
-        readings = gen_meter_readings(spark)
-        fact.idempotent_append(spark, readings)
-        latest_t = ManifestTable(os.path.join(workdir, "latest"))
-        last_ts = (
-            f"timestampadd(MINUTE, {(N_TICKS - 1) * 15}, "
-            f"timestamp'{GEN_START}')"
-        )
-        latest_t.idempotent_append(
-            spark,
-            readings.filter(
-                F.col("reading_timestamp") == F.expr(last_ts)
-            ).select(
-                "meter_id",
-                F.col("reading_consumption_milliwatts").alias(
-                    "final_consumption"
-                ),
-            ),
-            pk=["meter_id"],
-        )
-        analyze_table(fact, spark, exact_ndv=True)
-        analyze_table(latest_t, spark, exact_ndv=True)
-        d = choose_build_side(fact, latest_t)
-        if d["build"] != "right":
-            raise AssertionError(
-                f"CBO chose {d} — the 200-row latest side must build"
-            )
-        joined = cbo_join(
-            spark, fact, latest_t, ["meter_id"]
-        ).select(
-            F.col("reading_timestamp").alias("rt"),
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "final_consumption",
-        )
-        return joined.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_cbo_join",
-    f"""WITH {_readings_cte()},
-latest AS (
-  SELECT meter_id, reading_consumption_milliwatts AS final_consumption
-  FROM readings
-  WHERE reading_timestamp =
-        TIMESTAMP '{GEN_START}' + to_minutes({(N_TICKS - 1) * 15})
-)
-SELECT r.reading_timestamp AS rt, r.meter_id,
-       r.reading_consumption_milliwatts, l.final_consumption
-FROM readings r JOIN latest l ON l.meter_id = r.meter_id""",
-)(manifest_cbo_join)
-
-
 def manifest_upsert_if_newer_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1766,202 +1688,6 @@ register(
     f"""WITH {_readings_cte()}
 SELECT * FROM readings WHERE meter_id IN (5, 14)""",
 )(manifest_bloom_read)
-
-
-def manifest_analyze_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANALYZE TABLE under the oracle gate: land the generator day,
-    run :func:`manifest.analyze_table` (exact NDV for the oracle
-    check), assert the profile persists to ``_table.json`` and reads
-    back FRESH through a bare reopen, then return it as a one-row-
-    per-column frame against a DuckDB oracle computing the identical
-    statistics from the generator CTE — row count, null count, NDV,
-    and int/epoch-micros min/max per column. The statistics layer a
-    cost-based planner consults for join-order and broadcast
-    decisions; production uses the approx-NDV sketch form
-    (rsd pinned at 0.01), exercised by pytest."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        analyze_table,
-        analyzed_stats,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_analyze_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        t.idempotent_append(spark, gen_meter_readings(spark))
-        analyze_table(t, spark, exact_ndv=True)
-        prof, fresh = analyzed_stats(ManifestTable(t.table_dir))
-        if not fresh:
-            raise AssertionError("reopened profile not fresh")
-        rows = [
-            (
-                c,
-                prof["n_rows"],
-                s["null_count"],
-                s["ndv"],
-                s.get("min"),
-                s.get("max"),
-            )
-            for c, s in sorted(prof["columns"].items())
-        ]
-        return spark.createDataFrame(
-            rows,
-            "column STRING, n_rows BIGINT, null_count BIGINT,"
-            " ndv BIGINT, min_int BIGINT, max_int BIGINT",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def _analyze_oracle() -> str:
-    def branch(col: str, minmax: str | None) -> str:
-        mn = (
-            f"CAST(MIN({minmax}) AS BIGINT)"
-            if minmax
-            else "CAST(NULL AS BIGINT)"
-        )
-        mx = (
-            f"CAST(MAX({minmax}) AS BIGINT)"
-            if minmax
-            else "CAST(NULL AS BIGINT)"
-        )
-        return f"""
-  SELECT '{col}' AS column, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS null_count,
-         CAST(COUNT(DISTINCT {col}) AS BIGINT) AS ndv,
-         {mn} AS min_int, {mx} AS max_int
-  FROM readings"""
-
-    branches = " UNION ALL ".join(
-        [
-            branch("meter_id", "meter_id"),
-            branch(
-                "reading_consumption_milliwatts",
-                "reading_consumption_milliwatts",
-            ),
-            branch(
-                "reading_production_milliwatts",
-                "reading_production_milliwatts",
-            ),
-            branch("reading_timestamp", "epoch_us(reading_timestamp)"),
-            branch("status", None),
-        ]
-    )
-    return f"""WITH {_readings_cte()}
-{branches}"""
-
-
-register("manifest_analyze_report", _analyze_oracle())(
-    manifest_analyze_report
-)
-
-
-def manifest_cost_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The planner arithmetic the ANALYZE statistics exist for,
-    audited: cardinality estimates for a range predicate, a point
-    set, and their conjunction (uniformity + independence — the
-    textbook CBO defaults) next to the ACTUAL row counts from the
-    pruned reads. The generator's meter ids are uniform, so the
-    meter-side estimates land exactly; the timestamp range shows the
-    honest interpolation error of treating micros as a continuous
-    domain. Oracle recomputes the identical integer
-    cross-multiplications from the same statistics."""
-    import datetime as _dt
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        analyze_table,
-        estimate_read_rows,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_cost_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        t.idempotent_append(spark, gen_meter_readings(spark))
-        analyze_table(t, spark, exact_ndv=True)
-        lo_ts = _dt.datetime(2024, 1, 1, 10, 0, 0)
-        hi_ts = _dt.datetime(2024, 1, 1, 13, 45, 0)
-        preds = {
-            "meter_range": dict(where={"meter_id": (40, 90)}),
-            "meter_in": dict(where_in={"meter_id": [5, 14]}),
-            "ts_range": dict(where={"reading_timestamp": (lo_ts, hi_ts)}),
-            "meter_and_ts": dict(
-                where={
-                    "meter_id": (40, 90),
-                    "reading_timestamp": (lo_ts, hi_ts),
-                }
-            ),
-        }
-        rows = []
-        for label, kw in sorted(preds.items()):
-            e = estimate_read_rows(t, **kw)
-            if not e["profile_fresh"]:
-                raise AssertionError("profile should be fresh")
-            actual = t.read(spark, **kw).count()
-            rows.append((label, e["est_rows"], actual))
-        return spark.createDataFrame(
-            rows, "predicate STRING, est_rows BIGINT, actual_rows BIGINT"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-_COST_ORACLE = f"""
-WITH {_readings_cte()},
-st AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(MIN(meter_id) AS BIGINT) AS m_mn,
-         CAST(MAX(meter_id) AS BIGINT) AS m_mx,
-         CAST(COUNT(DISTINCT meter_id) AS BIGINT) AS m_ndv,
-         CAST(epoch_us(MIN(reading_timestamp)) AS BIGINT) AS t_mn,
-         CAST(epoch_us(MAX(reading_timestamp)) AS BIGINT) AS t_mx
-  FROM readings
-),
-sel AS (
-  SELECT n,
-         CAST((n * (90 - 40 + 1)) // (m_mx - m_mn + 1) AS BIGINT)
-           AS sel_m,
-         CAST((n * 2) // m_ndv AS BIGINT) AS sel_in,
-         CAST((n * (epoch_us(TIMESTAMP '2024-01-01 13:45:00')
-                    - epoch_us(TIMESTAMP '2024-01-01 10:00:00') + 1))
-              // (t_mx - t_mn + 1) AS BIGINT) AS sel_t
-  FROM st
-)
-SELECT 'meter_and_ts' AS predicate,
-       CAST((sel_m * sel_t) // n AS BIGINT) AS est_rows,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM readings
-        WHERE meter_id BETWEEN 40 AND 90
-          AND reading_timestamp BETWEEN TIMESTAMP '2024-01-01 10:00:00'
-                                    AND TIMESTAMP '2024-01-01 13:45:00')
-         AS actual_rows
-FROM sel
-UNION ALL
-SELECT 'meter_in', CAST(sel_in AS BIGINT),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM readings
-        WHERE meter_id IN (5, 14))
-FROM sel
-UNION ALL
-SELECT 'meter_range', CAST(sel_m AS BIGINT),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM readings
-        WHERE meter_id BETWEEN 40 AND 90)
-FROM sel
-UNION ALL
-SELECT 'ts_range', CAST(sel_t AS BIGINT),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM readings
-        WHERE reading_timestamp BETWEEN TIMESTAMP '2024-01-01 10:00:00'
-                                    AND TIMESTAMP '2024-01-01 13:45:00')
-FROM sel
-"""
-
-register("manifest_cost_estimate", _COST_ORACLE)(manifest_cost_estimate)
 
 
 def manifest_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3862,258 +3588,6 @@ SELECT reading_timestamp + INTERVAL 1 DAY AS reading_timestamp,
        reading_production_milliwatts, status
 FROM readings""",
 )(catalog_sliced_read)
-
-
-def manifest_cbo_mcv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-aware cardinality estimation under the oracle gate (round
-    13, sources/manifest.py analyze_table(mcv_columns=) +
-    estimate_read_rows): a tag column where one value ('HOT', every
-    tenth meter) holds ~10% of the table breaks uniform-over-NDV in
-    both directions — the hot value under-estimates ~ndv-fold, every
-    rare value over-estimates. The MCV list (top-k exact frequencies,
-    ties broken by value so both engines build the SAME list) gives
-    MCV members their exact counts and leaves the uniform rule to the
-    remainder mass. Output: one row per probe with the engine's
-    metadata-only estimate NEXT TO the true count — the oracle
-    recomputes both from first principles, so any drift in the
-    estimator arithmetic (integer flooring, remainder-mass
-    accounting, tie-break order) breaks the hash."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        analyze_table,
-        estimate_read_rows,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_cbo_mcv_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        tag = F.when(
-            F.col("meter_id") % 10 == 0, F.lit("HOT")
-        ).otherwise(
-            F.concat(
-                F.lit("AC"),
-                F.lpad(F.col("meter_id").cast("string"), 5, "0"),
-            )
-        )
-        day1 = gen_meter_readings(spark).withColumn("tag", tag)
-        t.idempotent_append(spark, day1)
-        prof = analyze_table(
-            t, spark, exact_ndv=True, mcv_columns=["tag"], mcv_k=4
-        )
-        mcv = prof["columns"]["tag"]["mcv"]
-        if mcv[0][0] != "HOT":
-            raise AssertionError(f"HOT not at the top of the MCV: {mcv}")
-        probes = {
-            "hot": ["HOT"],
-            "rare": ["AC00177"],
-            "mix": ["HOT", "AC00177"],
-        }
-        full = t.read(spark)
-        rows = []
-        for name, vals in sorted(probes.items()):
-            est = estimate_read_rows(t, where_in={"tag": vals})
-            actual = full.filter(F.col("tag").isin(vals)).count()
-            rows.append((name, est["est_rows"], actual))
-        return spark.createDataFrame(
-            rows, "probe string, est_rows bigint, actual_rows bigint"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_cbo_mcv",
-    f"""WITH {_readings_cte()},
-tagged AS (
-  SELECT CASE WHEN meter_id % 10 = 0 THEN 'HOT'
-         ELSE 'AC' || lpad(CAST(meter_id AS VARCHAR), 5, '0') END AS tag
-  FROM readings
-),
-col_stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS nn,
-         CAST(COUNT(DISTINCT tag) AS BIGINT) AS ndv
-  FROM tagged
-),
-freq AS (
-  SELECT tag, CAST(COUNT(*) AS BIGINT) AS f FROM tagged GROUP BY tag
-),
-mcv AS (
-  SELECT tag, f FROM freq ORDER BY f DESC, tag LIMIT 4
-),
-mcv_tot AS (
-  SELECT CAST(SUM(f) AS BIGINT) AS mt, CAST(COUNT(*) AS BIGINT) AS k
-  FROM mcv
-),
-probes AS (
-  SELECT 'hot' AS probe, ['HOT'] AS vals
-  UNION ALL SELECT 'mix', ['HOT', 'AC00177']
-  UNION ALL SELECT 'rare', ['AC00177']
-),
-est AS (
-  SELECT p.probe,
-    CAST(
-      COALESCE((SELECT SUM(m.f) FROM mcv m
-                WHERE list_contains(p.vals, m.tag)), 0)
-      + CAST(((s.nn - t.mt)
-              * (SELECT COUNT(*) FROM unnest(p.vals) u(v)
-                 WHERE v NOT IN (SELECT tag FROM mcv)))
-             // (s.ndv - t.k) AS BIGINT)
-    AS BIGINT) AS est_rows,
-    (SELECT CAST(COUNT(*) AS BIGINT) FROM tagged g
-     WHERE list_contains(p.vals, g.tag)) AS actual_rows
-  FROM probes p, col_stats s, mcv_tot t
-)
-SELECT probe, est_rows, actual_rows FROM est""",
-)(manifest_cbo_mcv)
-
-
-def manifest_cbo_skew_salt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MCV statistics wired into JOIN planning, under the oracle gate
-    (round 14 — sources/manifest.py choose_build_side
-    skew advisory + cbo_join salting):
-
-    A fact table derived from events with a manufactured hot key
-    (every event with ``event_id % 4 < 2`` maps to user 17 — half the
-    table) joins the customer dimension. Two planner properties are
-    asserted in-query:
-
-    1. **The MCV-aware decision DIFFERS from uniform.** With a plain
-       ANALYZE profile, uniform-over-NDV prices the hot-key filter at
-       ``n/ndv`` (~66 rows at every SF) — under the 100-row broadcast
-       threshold, so the planner would BROADCAST the filtered fact
-       side: the forced-fact-broadcast OOM at 100 TB. Re-ANALYZEd
-       with ``mcv_columns=["user_id"]``, the same probe estimates the
-       hot key's exact mass (~half the table), the fact side leaves
-       the broadcast window, and the decision flips to the shuffle
-       join ("none").
-    2. **The shuffle decision carries a salt advisory.** The hot
-       key's exact MCV count overfills an average shuffle partition
-       (count·n_shuffle > factor·n_rows — AQE can split an oversized
-       partition but never a single key's hash bucket), so the
-       decision names key 17, the fact side, and an n_salts sized to
-       spread it back to ~average mass; cbo_join routes the join
-       through operators.skew.salted_join with that n_salts.
-
-    The returned per-nation rollup is hash-checked against the plain
-    relational join in DuckDB — the salted physical plan must be
-    result-identical (the whole point: a different exchange layout,
-    the same relation)."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.operators.common import dsum
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        analyze_table,
-        cbo_join,
-        choose_build_side,
-    )
-    from smart_meter_data_pipeline_spark.sources.readers import (
-        load_table,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_cbo_skew_q_")
-    try:
-        fact_t = ManifestTable(os.path.join(workdir, "fact"))
-        ev = load_table(spark, sf_dir, "events").select(
-            F.when(F.pmod("event_id", F.lit(4)) < 2, F.lit(17))
-            .otherwise(F.col("user_id"))
-            .alias("user_id"),
-            "value",
-            "event_id",
-        )
-        fact_t.idempotent_append(spark, ev, pk=["event_id"])
-        dim_t = ManifestTable(os.path.join(workdir, "dim"))
-        dim_t.idempotent_append(
-            spark,
-            load_table(spark, sf_dir, "customer").select(
-                F.col("c_custkey").alias("user_id"), "c_nationkey"
-            ),
-            pk=["user_id"],
-        )
-        analyze_table(fact_t, spark, exact_ndv=True)
-        analyze_table(dim_t, spark, exact_ndv=True)
-        probe = {"user_id": [17]}
-        d_uniform = choose_build_side(
-            fact_t,
-            dim_t,
-            broadcast_threshold_rows=100,
-            left_where_in=probe,
-            on=["user_id"],
-        )
-        if d_uniform["build"] != "left":
-            raise AssertionError(
-                "uniform profile must (wrongly) broadcast the "
-                f"hot-key-filtered fact side: {d_uniform}"
-            )
-        analyze_table(
-            fact_t,
-            spark,
-            exact_ndv=True,
-            mcv_columns=["user_id"],
-            mcv_k=4,
-        )
-        d_mcv = choose_build_side(
-            fact_t,
-            dim_t,
-            broadcast_threshold_rows=100,
-            left_where_in=probe,
-            on=["user_id"],
-        )
-        if d_mcv["build"] != "none":
-            raise AssertionError(
-                f"MCV-aware decision must flip to shuffle: {d_mcv}"
-            )
-        sk = d_mcv["skew"]
-        if (
-            not sk
-            or sk["side"] != "left"
-            or 17 not in [k["value"] for k in sk["keys"]]
-            or sk["n_salts"] < 2
-        ):
-            raise AssertionError(
-                f"hot key 17 must carry a salt advisory: {d_mcv}"
-            )
-        joined = cbo_join(
-            spark,
-            fact_t,
-            dim_t,
-            ["user_id"],
-            broadcast_threshold_rows=100,
-        )
-        return (
-            joined.groupBy("c_nationkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value", "total_value"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_cbo_skew_salt",
-    """
-WITH fact AS (
-  SELECT CASE WHEN event_id % 4 < 2 THEN 17 ELSE user_id END AS user_id,
-         value
-  FROM events
-)
-SELECT c.c_nationkey AS c_nationkey,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(f.value AS DECIMAL(25,6))) AS DOUBLE) AS total_value
-FROM fact f
-JOIN customer c ON f.user_id = c.c_custkey
-GROUP BY 1
-""",
-)(manifest_cbo_skew_salt)
 
 
 def catalog_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -81,16 +81,15 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 _PRIORITY = [
     # Drain schedule (round 14 written): the driver evaluates a ~50-
     # query prefix per round. Per VERDICT r13 #3 the r14 window spends
-    # almost everything on the stale r5-r8 section: (a) the 3 r14-new
+    # almost everything on the stale r5-r8 section: (a) the 2 r14-new
     # queries (each builder-proven at sf0.001+sf0.01+sf0.1 and needing
     # a first driver row — they pin the round's engine fixes under the
     # gate: ANSI-total ingest validation incl. the pandas-interop
-    # timestamp domain, MCV-driven join planning + salt advisory, and
-    # the index lifecycle over catalog transactions), (b) 4 r14-
-    # changed queries whose in-query asserts or computation path
-    # changed (explicit df_cap + pinned needle commit; vacuum-always +
-    # vacuumed_at_head stamp; classify try_to_timestamp + domain
-    # guard; choose_build_side skew field) — all values re-proven at
+    # timestamp domain, and the index lifecycle over catalog
+    # transactions), (b) 3 r14-changed queries whose in-query asserts
+    # or computation path changed (explicit df_cap + pinned needle
+    # commit; vacuum-always + vacuumed_at_head stamp; classify
+    # try_to_timestamp + domain guard) — all values re-proven at
     # sf0.01 via the full 404/404 contract sweep and at sf0.1 via the
     # parity suite this round, (c) then the (stale) section continues
     # where the r13 window's edge left it (r13 drained through
@@ -104,14 +103,12 @@ _PRIORITY = [
     # (r14-new) builder-proven at sf0.001, sf0.01 AND sf0.1 via
     # tests/test_oracle_parity.py:
     "ingest_wire_quarantine",
-    "manifest_cbo_skew_salt",
     "catalog_index_lifecycle",
     # (r14-changed) asserts/computation changed this round — values
     # unchanged, re-proven at sf0.01 + sf0.1 by the builder:
     "corpus_text_index_hot_token",
     "manifest_index_retention_lifecycle",
     "stream_ingest_daily",
-    "manifest_cbo_join",
     # (stale) evaluated queries, stalest round first (r5 -> r8) —
     # HEAD OF THE R14 WINDOW after the r14 new/changed head; the
     # r13-drained prefix (through meter_dims) now sits in
@@ -251,12 +248,9 @@ _PRIORITY = [
     "manifest_skipping_read",
     "manifest_bloom_read",
     "manifest_dict_skipping_read",
-    "manifest_cost_estimate",
-    "manifest_analyze_report",
     "catalog_txn_restatement",
     "stream_catalog_restatement",
     "catalog_sliced_read",
-    "manifest_cbo_mcv",
     "daily_customer_billing",
     "hourly_nation_load",
     "stream_static_join",

@@ -729,7 +729,7 @@ class CatalogTxn:
         prior_added = prior.get("added", [])
         for r in removed:
             if r in prior_added:
-                t._discard_stage([r])
+                t._remove_staged_file(r)
         removed_chain = {r for r in removed if r not in prior_added}
         kept = [f for f in prior_added if f not in removed]
         count, dates = t._count_and_dates(spark, kept + staged)

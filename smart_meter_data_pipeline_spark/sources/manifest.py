@@ -314,8 +314,8 @@ class ManifestTable:
         } != want:
             tmp = cfg_path + f".tmp.{uuid.uuid4().hex}"
             with open(tmp, "w") as fh:
-                # merge, don't replace: other persisted sections
-                # (e.g. ANALYZE statistics) survive a reopen that
+                # merge, don't replace: keys this version does not
+                # write (left by an older one) survive a reopen that
                 # pins skipping config explicitly
                 json.dump({**persisted, **want}, fh)
             os.replace(tmp, cfg_path)
@@ -995,30 +995,12 @@ class ManifestTable:
         Only columns that HAVE a refreshed index directory consult
         it; the index set is ``(postings ∩ live) ∪ unindexed``, an
         over-approximation of the files containing the values, so
-        intersecting stays sound on the current snapshot.
-
-        Selectivity-aware bypass (round 13): the posting lookup pays
-        for itself only when the values live in FEW files. With an
-        ANALYZE profile present, estimate the matching rows under the
-        planner's uniformity rule (``estimate_read_rows``) — when the
-        estimate exceeds ~ln2 rows per live file, the expected
-        file-hit fraction is over one half and zone-map/Bloom pruning
-        (already applied) is all the read should pay for; skip the
-        index consult entirely. No profile → consult (the index was
-        built to be used); the consult itself stays bounded via the
-        df-cap inside ``index_candidate_files``. Purely a performance
-        decision — both branches return a sound candidate superset."""
+        intersecting stays sound on the current snapshot. The consult
+        stays bounded via the df-cap inside ``index_candidate_files``."""
         for col, vs in where_in.items():
             idx_dir = os.path.join(self.table_dir, "_indexes", col)
             if not os.path.isdir(idx_dir):
                 continue
-            try:
-                est = estimate_read_rows(self, where_in={col: vs})
-                # est/F >= ln2 (~2/3) => expected hit fraction > 50%
-                if 3 * est["est_rows"] >= 2 * max(1, len(files)):
-                    continue
-            except ValueError:
-                pass  # never analyzed: no estimate, consult the index
             from smart_meter_data_pipeline_spark.sources.index import (
                 index_candidate_files,
             )
@@ -1663,13 +1645,6 @@ class ManifestTable:
                 kept.append(f)
         return kept
 
-    def _discard_stage(self, rel_files: list[str]) -> None:
-        import shutil
-
-        if rel_files:
-            stage_path = os.path.join(self.data_dir, os.path.dirname(rel_files[0]))
-            shutil.rmtree(stage_path, ignore_errors=True)
-
     def _count_and_dates(
         self, spark: SparkSession, rel_files: list[str]
     ) -> tuple[int, list[str]]:
@@ -1770,16 +1745,13 @@ class ManifestTable:
                 stats = self._file_stats(staged)
                 n = sum(st["#rows"] for st in stats.values())
                 if n == 0:
-                    self._discard_stage(staged)
+                    self._discard_stage_all(staged)
                     return 0
                 # A write task that got no rows still leaves a 0-row
                 # file; it holds nothing, so it is never committed.
                 for rel in [f for f in staged if stats[f]["#rows"] == 0]:
                     del stats[rel]
-                    head, name = os.path.split(os.path.join(self.data_dir, rel))
-                    os.remove(os.path.join(head, name))
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(os.path.join(head, f".{name}.crc"))
+                    self._remove_staged_file(rel)
                 staged = list(stats)
                 record = _record(
                     self,
@@ -1815,14 +1787,14 @@ class ManifestTable:
                     # Genuine conflict: our staged rows now contain
                     # duplicates. Re-anti-join and re-stage against
                     # one fresh listing (validation + fence).
-                    self._discard_stage(staged)
+                    self._discard_stage_all(staged)
                     numbered = self.numbered_snapshot()
                     validated_through = self._fence(numbered)
                     fresh = self._anti_join(
                         spark, in_batch, numbered, batch_dates, pk
                     )
                     staged = []
-        self._discard_stage(staged)
+        self._discard_stage_all(staged)
         raise CommitConflictError(
             f"gave up after {max_retries} commit attempts on "
             f"{self.table_dir}"
@@ -2374,6 +2346,14 @@ class ManifestTable:
             shutil.rmtree(
                 os.path.join(self.data_dir, d), ignore_errors=True
             )
+
+    def _remove_staged_file(self, rel: str) -> None:
+        """Remove one staged file and its checksum, leaving the other
+        files of its stage dir in place."""
+        head, name = os.path.split(os.path.join(self.data_dir, rel))
+        os.remove(os.path.join(head, name))
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(head, f".{name}.crc"))
 
     def _anti_join(
         self,
@@ -3330,525 +3310,6 @@ def alter_drop_column(table: ManifestTable, column: str) -> int:
     raise CommitConflictError(
         f"gave up after 20 drop-column attempts on {table.table_dir}"
     )
-
-
-def analyze_table(
-    table: ManifestTable,
-    spark: SparkSession,
-    columns: list[str] | None = None,
-    exact_ndv: bool = False,
-    mcv_columns: list[str] | None = None,
-    mcv_k: int = 16,
-) -> dict:
-    """ANALYZE TABLE — table-level optimizer statistics in ONE scan:
-    row count plus per-column null count, NDV, and (for integer /
-    timestamp columns) min / max, persisted to ``_table.json`` under
-    ``analyze`` keyed by the snapshot version so a stale profile is
-    detectable (``analyzed_stats()`` reports freshness). This is the
-    statistics layer a cost-based planner consults for join ordering
-    and broadcast decisions — the table-level companion to the
-    per-file zone maps (those answer "which files", these answer
-    "how big / how selective").
-
-    NDV defaults to ``approx_count_distinct(rsd=0.01)`` — the sketch
-    is the only form that scales (exact COUNT(DISTINCT) per column is
-    a shuffle per column at 100 TB) and rsd is pinned explicitly
-    (the default 0.05 breaches property bounds on a few thousand
-    distinct keys). ``exact_ndv=True`` switches to exact counts for
-    oracle-checked paths. Timestamp min/max are reduced to UTC epoch
-    micros ENGINE-side (``unix_micros``) — never a driver-side
-    datetime conversion (the ``_batch_key_ranges`` timezone rule).
-    Doubles report null/NDV only (same int-first discipline as the
-    file stats).
-
-    ``mcv_columns`` (round 13) opts named INT/STRING columns into a
-    MOST-COMMON-VALUES list — the Postgres-style skew statistic: the
-    top ``mcv_k`` values by exact frequency (ties broken by value, so
-    the list is deterministic and oracle-reproducible), stored as
-    ``[value, count]`` pairs. Uniform-over-NDV estimation is wrong in
-    BOTH directions on skewed columns (a hot value under-estimated
-    ~ndv-fold, a rare one over-estimated); the MCV gives the hot
-    values their exact counts and leaves the uniform rule to the
-    remainder mass. Each MCV column costs one NDV-bounded rollup on
-    top of the single stats scan — that bound is why it is opt-in."""
-    from pyspark.sql import types as T
-
-    df = table.read(spark)
-    if df is None:
-        raise ValueError(f"{table.table_dir} has no commits to analyze")
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    cols = list(columns) if columns else list(fields)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(cols):
-        aggs.append(
-            F.sum(
-                F.when(F.col(c).isNull(), 1).otherwise(0)
-            ).alias(f"nu{i}")
-        )
-        aggs.append(
-            (
-                F.countDistinct(c)
-                if exact_ndv
-                else F.approx_count_distinct(c, rsd=0.01)
-            ).alias(f"nd{i}")
-        )
-        e = None
-        if isinstance(fields[c], T.TimestampType):
-            e = F.unix_micros(F.col(c))
-        elif isinstance(fields[c], (T.IntegerType, T.LongType, T.ShortType)):
-            e = F.col(c).cast("bigint")
-        if e is not None:
-            aggs.append(F.min(e).alias(f"mn{i}"))
-            aggs.append(F.max(e).alias(f"mx{i}"))
-    row = df.agg(*aggs).collect()[0]
-    col_stats = {}
-    for i, c in enumerate(cols):
-        s = {
-            "null_count": int(row[f"nu{i}"] or 0),
-            "ndv": int(row[f"nd{i}"] or 0),
-        }
-        if f"mn{i}" in row.__fields__ and row[f"mn{i}"] is not None:
-            s["min"] = int(row[f"mn{i}"])
-            s["max"] = int(row[f"mx{i}"])
-        col_stats[c] = s
-    for c in mcv_columns or []:
-        if c not in col_stats or not isinstance(
-            fields.get(c),
-            (T.IntegerType, T.LongType, T.ShortType, T.StringType),
-        ):
-            continue  # JSON-portable value types only
-        top = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(c)
-            .agg(F.count(F.lit(1)).alias("__f"))
-            .orderBy(F.desc("__f"), F.col(c))
-            .limit(int(mcv_k))
-            .collect()
-        )
-        col_stats[c]["mcv"] = [
-            [
-                int(r[c])
-                if not isinstance(r[c], str)
-                else r[c],
-                int(r["__f"]),
-            ]
-            for r in top
-        ]
-    result = {
-        "version": len(table.snapshot()) - 1,
-        "n_rows": int(row["__n"]),
-        "exact_ndv": bool(exact_ndv),
-        "columns": col_stats,
-    }
-    cfg_path = os.path.join(table.table_dir, "_table.json")
-    persisted: dict = {}
-    if os.path.exists(cfg_path):
-        with contextlib.suppress(OSError, ValueError):
-            with open(cfg_path) as fh:
-                persisted = json.load(fh)
-    persisted["analyze"] = result
-    tmp = cfg_path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(persisted, fh)
-    os.replace(tmp, cfg_path)
-    return result
-
-
-def analyze_incremental(
-    table: ManifestTable, spark: SparkSession
-) -> dict:
-    """Refresh a stale ANALYZE profile from the CHANGE, not the table:
-    the commits since the profile's version are read through
-    :meth:`ManifestTable.diff` (exactly the files those commits added
-    — the CDC property), so the additive statistics update exactly —
-    ``n_rows += Δrows``, ``null_count += Δnulls``, min/max widen by
-    the delta's min/max — at a cost proportional to the appended
-    data, not the 100 TB behind it. NDV is NOT additive: the merged
-    profile carries ``max(old, Δ)`` as a LOWER BOUND and marks
-    ``ndv_stale: true`` per column until a full :func:`analyze_table`
-    recomputes it (a planner treats a stale NDV as a hint).
-
-    Falls back to a FULL re-analyze when any delta commit REMOVED
-    files (copy-on-write mutations invalidate additive update — the
-    removed rows' contribution cannot be subtracted from aggregates)
-    or when no profile exists yet."""
-    from pyspark.sql import types as T
-
-    prof, fresh = analyzed_stats(table)
-    commits = table.snapshot()
-    latest = len(commits) - 1
-    if prof is None:
-        return analyze_table(table, spark)
-    if fresh:
-        return prof
-    v_from = prof["version"]
-    if any(c.get("removed") for c in commits[v_from + 1 :]):
-        return analyze_table(table, spark, exact_ndv=prof["exact_ndv"])
-    delta = table.diff(spark, v_from, latest)
-    if delta is None:
-        prof = dict(prof, version=latest)
-    else:
-        fields = {f.name: f.dataType for f in delta.schema.fields}
-        cols = [c for c in prof["columns"] if c in fields]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for i, c in enumerate(cols):
-            aggs.append(
-                F.sum(
-                    F.when(F.col(c).isNull(), 1).otherwise(0)
-                ).alias(f"nu{i}")
-            )
-            aggs.append(
-                (
-                    F.countDistinct(c)
-                    if prof["exact_ndv"]
-                    else F.approx_count_distinct(c, rsd=0.01)
-                ).alias(f"nd{i}")
-            )
-            e = None
-            if isinstance(fields[c], T.TimestampType):
-                e = F.unix_micros(F.col(c))
-            elif isinstance(
-                fields[c], (T.IntegerType, T.LongType, T.ShortType)
-            ):
-                e = F.col(c).cast("bigint")
-            if e is not None:
-                aggs.append(F.min(e).alias(f"mn{i}"))
-                aggs.append(F.max(e).alias(f"mx{i}"))
-        row = delta.agg(*aggs).collect()[0]
-        merged = {}
-        for i, c in enumerate(cols):
-            old = dict(prof["columns"][c])
-            old["null_count"] += int(row[f"nu{i}"] or 0)
-            old["ndv"] = max(old["ndv"], int(row[f"nd{i}"] or 0))
-            old["ndv_stale"] = True
-            if "min" in old and row.__fields__.count(f"mn{i}"):
-                if row[f"mn{i}"] is not None:
-                    old["min"] = min(old["min"], int(row[f"mn{i}"]))
-                    old["max"] = max(old["max"], int(row[f"mx{i}"]))
-            if old.get("mcv"):
-                # MCV counts are additive for values already IN the
-                # list (one bounded isin rollup over the delta); a
-                # NEW value rising into the top-k is invisible until
-                # a full re-analyze — flag the list as stale (lower
-                # bounds), the same hint semantics as ndv_stale.
-                mcv_vals = [v for v, _ in old["mcv"]]
-                delta_freq = {
-                    r[c]: r["__f"]
-                    for r in delta.filter(F.col(c).isin(mcv_vals))
-                    .groupBy(c)
-                    .agg(F.count(F.lit(1)).alias("__f"))
-                    .collect()
-                }
-                old["mcv"] = [
-                    [v, cnt + int(delta_freq.get(v, 0))]
-                    for v, cnt in old["mcv"]
-                ]
-                old["mcv_stale"] = True
-            merged[c] = old
-        prof = dict(
-            prof,
-            version=latest,
-            n_rows=prof["n_rows"] + int(row["__n"]),
-            columns=merged,
-            incremental=True,
-        )
-    cfg_path = os.path.join(table.table_dir, "_table.json")
-    persisted: dict = {}
-    if os.path.exists(cfg_path):
-        with contextlib.suppress(OSError, ValueError):
-            with open(cfg_path) as fh:
-                persisted = json.load(fh)
-    persisted["analyze"] = prof
-    tmp = cfg_path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(persisted, fh)
-    os.replace(tmp, cfg_path)
-    return prof
-
-
-def estimate_read_rows(
-    table: ManifestTable,
-    where: dict | None = None,
-    where_in: dict | None = None,
-) -> dict:
-    """Cardinality estimation from the persisted ANALYZE profile —
-    the planner arithmetic the statistics exist for: a range
-    predicate's selectivity is its overlap share of the column's
-    [min, max] under the uniformity assumption
-    (``rows ≈ n_nonnull · overlap / width``, exact integer
-    cross-multiplication, floored), an IN predicate's is
-    ``n_nonnull · k / ndv`` — except that values found in the
-    column's MCV list (``analyze_table(mcv_columns=...)``) use their
-    EXACT frequencies and only the misses fall back to uniform over
-    the remainder mass (Postgres's skew rule); conjuncts multiply
-    (independence
-    assumption — both assumptions are the textbook CBO defaults and
-    both are stated in the output so a consumer knows what it got).
-    Metadata-only: no data is read. Raises if the table was never
-    analyzed; a stale profile is used as-is (the freshness flag is
-    the caller's signal to re-analyze)."""
-    prof, fresh = analyzed_stats(table)
-    if prof is None:
-        raise ValueError(
-            f"{table.table_dir} has no ANALYZE profile; run "
-            "analyze_table() first"
-        )
-    n = prof["n_rows"]
-    est = n
-    for col, (lo, hi) in (where or {}).items():
-        s = prof["columns"].get(col)
-        if s is None or "min" not in s:
-            continue  # no stats: contributes selectivity 1
-        nn = n - s["null_count"]
-        lo_i = table._stat_int(lo) if lo is not None else s["min"]
-        hi_i = table._stat_int(hi) if hi is not None else s["max"]
-        lo_c = max(lo_i, s["min"])
-        hi_c = min(hi_i, s["max"])
-        if hi_c < lo_c or n == 0:
-            est = 0
-            break
-        width = s["max"] - s["min"] + 1
-        sel_rows = (nn * (hi_c - lo_c + 1)) // width
-        est = (est * sel_rows) // n if n else 0
-    for col, vals in (where_in or {}).items():
-        s = prof["columns"].get(col)
-        # dedupe: IN semantics match each distinct value once, so a
-        # caller passing duplicates must not inflate the estimate
-        vals = {v for v in vals if v is not None}
-        if not vals:
-            est = 0
-            break
-        if s is None or not s.get("ndv"):
-            continue
-        nn = n - s["null_count"]
-        mcv = s.get("mcv")
-        if mcv:
-            # Skew-aware split (round 13): MCV members contribute
-            # their EXACT counts; the rest fall back to uniform over
-            # the remainder mass (rows and NDV both net of the MCV) —
-            # the Postgres selectivity rule, all-integer.
-            freq = {v: c for v, c in mcv}
-            hits = sum(freq.get(v, 0) for v in vals)
-            n_miss = sum(1 for v in vals if v not in freq)
-            rest_rows = max(0, nn - sum(freq.values()))
-            rest_ndv = max(1, s["ndv"] - len(freq))
-            sel_rows = min(
-                hits + (rest_rows * n_miss) // rest_ndv, nn
-            )
-        else:
-            sel_rows = min((nn * len(vals)) // s["ndv"], nn)
-        est = (est * sel_rows) // n if n else 0
-    return {
-        "est_rows": int(est),
-        "n_rows": n,
-        "profile_fresh": fresh,
-        "assumptions": "uniformity+independence",
-    }
-
-
-def choose_build_side(
-    left: ManifestTable,
-    right: ManifestTable,
-    left_where: dict | None = None,
-    right_where: dict | None = None,
-    broadcast_threshold_rows: int = 500_000,
-    left_where_in: dict | None = None,
-    right_where_in: dict | None = None,
-    on: list[str] | None = None,
-    n_shuffle_partitions: int = 32,
-    skew_factor: int = 2,
-) -> dict:
-    """The planning decision ANALYZE exists for: which side of a
-    manifest-to-manifest join to BUILD (broadcast), decided from the
-    persisted profiles' post-filter cardinality estimates — never
-    from reading data. Decision rule (documented in README):
-
-    1. estimate each side via :func:`estimate_read_rows` (range
-       selectivity = overlap/width, uniformity + independence,
-       MCV-exact frequencies for IN-list members — round 13's skew
-       statistics feed straight into this decision: a side filtered
-       to a HOT key estimates its true mass, where uniform-over-NDV
-       would call it broadcastable and OOM an executor at 100 TB);
-       a side with no ANALYZE profile estimates None;
-    2. broadcast the SMALLER estimated side iff its estimate is at or
-       under ``broadcast_threshold_rows`` (the rows-fit-in-one-
-       executor bound — at 100 TB a mis-broadcast fact is an OOM, so
-       an unknown/over-threshold side is never built);
-    3. both unknown or both over threshold → ``"none"``: leave the
-       strategy to AQE's runtime statistics.
-
-    Join-key SKEW advisory (round 14): when ``on`` names the join
-    keys and the decision is a SHUFFLE join (``build == "none"``),
-    each side's MCV list is screened for keys whose exact count
-    overfills an average shuffle partition by ``skew_factor``×
-    (``count · n_shuffle_partitions > skew_factor · n_rows``). AQE's
-    OptimizeSkewedJoin absorbs this for the sort-merge JOIN itself
-    (it splits the oversized partition by mapper ranges), but NOT
-    for what rides the same key downstream — keyed aggregations and
-    stateful ops reduce one key on one task however big — nor for
-    shuffled-hash plans or AQE-off deployments; the planner
-    therefore recommends the static fix: ``skew`` carries the hot
-    keys, the side to salt, and an ``n_salts`` sized to spread the
-    hottest key back to ~average partition mass (the
-    ``operators.skew.salted_join`` kit — measured ~zero overhead in
-    bench leg ``skew_join_salted``). A broadcast decision gets
-    ``skew: None`` — no shuffle on the key, nothing to overfill.
-
-    Returns ``{"build": "left"|"right"|"none", "est_left",
-    "est_right", "threshold_rows", "reason", "skew"}`` so callers
-    (and the plan-contract test) can audit why."""
-
-    def _est(t: ManifestTable, w: dict | None, wi: dict | None):
-        try:
-            return estimate_read_rows(t, where=w, where_in=wi)[
-                "est_rows"
-            ]
-        except ValueError:
-            return None
-
-    le = _est(left, left_where, left_where_in)
-    re_ = _est(right, right_where, right_where_in)
-    build, reason = "none", "both sides unknown or over threshold"
-    cands = [
-        (e, side)
-        for e, side in ((le, "left"), (re_, "right"))
-        if e is not None and e <= broadcast_threshold_rows
-    ]
-    if cands:
-        e, build = min(cands)
-        reason = (
-            f"estimated {e} rows <= threshold and <= other side"
-        )
-    skew = None
-    if on and build == "none":
-        for side, tbl in (("left", left), ("right", right)):
-            prof, _fresh = analyzed_stats(tbl)
-            n = (prof or {}).get("n_rows") or 0
-            if not n:
-                continue
-            hot = [
-                {"column": col, "value": v, "count": int(cnt)}
-                for col in on
-                for v, cnt in (
-                    (prof["columns"].get(col) or {}).get("mcv") or []
-                )
-                if cnt * n_shuffle_partitions > skew_factor * n
-            ]
-            if hot and (skew is None or n > skew["side_rows"]):
-                worst = max(h["count"] for h in hot)
-                skew = {
-                    "side": side,
-                    "side_rows": n,
-                    "keys": hot,
-                    "n_salts": min(
-                        64,
-                        max(
-                            2,
-                            -(-worst * n_shuffle_partitions // n),
-                        ),
-                    ),
-                    "n_shuffle_partitions": n_shuffle_partitions,
-                    "skew_factor": skew_factor,
-                }
-    return {
-        "build": build,
-        "est_left": le,
-        "est_right": re_,
-        "threshold_rows": broadcast_threshold_rows,
-        "reason": reason,
-        "skew": skew,
-    }
-
-
-def cbo_join(
-    spark: SparkSession,
-    left: ManifestTable,
-    right: ManifestTable,
-    on: list[str],
-    left_where: dict | None = None,
-    right_where: dict | None = None,
-    how: str = "inner",
-    broadcast_threshold_rows: int = 500_000,
-    salt_skew: bool = True,
-    n_shuffle_partitions: int = 32,
-) -> DataFrame:
-    """Manifest-to-manifest join planned from ANALYZE statistics:
-    each side reads through :meth:`ManifestTable.read`'s zone-map
-    skipping for its filter, then :func:`choose_build_side` decides
-    the broadcast hint from the persisted profiles (see its decision
-    rule). The estimate CONSUMES the statistics layer end to end:
-    stale or missing profiles degrade to AQE, never to a forced
-    fact-side broadcast.
-
-    When the decision is a shuffle join AND the profiles flag a hot
-    join key (round 14 — see ``choose_build_side``'s skew advisory),
-    ``salt_skew=True`` routes a single-key inner/left join through
-    ``operators.skew.salted_join`` with the recommended ``n_salts``:
-    result-identical (order and column order aside), but the hot
-    key's rows spread over ``n_salts`` sub-buckets BEFORE the
-    exchange, which also de-skews everything KEYED downstream of the
-    join — the part AQE's skew-join rewrite cannot reach (see
-    ``choose_build_side``). Measured ~zero overhead at bench scale.
-    Multi-key joins and join types where side-swapping or right-side
-    replication would change semantics keep the plain join (the
-    advisory still rides the decision dict for the caller)."""
-    decision = choose_build_side(
-        left,
-        right,
-        left_where,
-        right_where,
-        broadcast_threshold_rows,
-        on=on,
-        n_shuffle_partitions=n_shuffle_partitions,
-    )
-    ldf = left.read(spark, where=left_where)
-    rdf = right.read(spark, where=right_where)
-    if ldf is None or rdf is None:
-        raise ValueError("cbo_join requires both tables to have commits")
-    sk = decision.get("skew")
-    if (
-        salt_skew
-        and decision["build"] == "none"
-        and sk
-        and len(on) == 1
-    ):
-        from smart_meter_data_pipeline_spark.operators.skew import (
-            salted_join,
-        )
-
-        if sk["side"] == "left" and how in ("inner", "left"):
-            return salted_join(
-                ldf, rdf, on[0], n_salts=sk["n_salts"], how=how
-            )
-        if sk["side"] == "right" and how == "inner":
-            # inner is symmetric: salt the skewed side as the left
-            return salted_join(
-                rdf, ldf, on[0], n_salts=sk["n_salts"], how="inner"
-            )
-    if decision["build"] == "left":
-        ldf = F.broadcast(ldf)
-    elif decision["build"] == "right":
-        rdf = F.broadcast(rdf)
-    return ldf.join(rdf, on, how)
-
-
-def analyzed_stats(table: ManifestTable) -> tuple[dict | None, bool]:
-    """The persisted ANALYZE profile and whether it is FRESH (computed
-    at the current snapshot version). A planner treats a stale profile
-    as a hint, a fresh one as authoritative."""
-    cfg_path = os.path.join(table.table_dir, "_table.json")
-    if not os.path.exists(cfg_path):
-        return None, False
-    try:
-        with open(cfg_path) as fh:
-            persisted = json.load(fh)
-    except (OSError, ValueError):
-        return None, False
-    prof = persisted.get("analyze")
-    if prof is None:
-        return None, False
-    fresh = prof.get("version") == len(table.snapshot()) - 1
-    return prof, fresh
 
 
 def shallow_clone(source: ManifestTable, target_dir: str) -> ManifestTable:

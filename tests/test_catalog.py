@@ -743,6 +743,25 @@ def test_catalog_read_prunes_files_by_stats(spark, cat):
     assert got_in.count() == 6  # 2 meters x 3 days
 
 
+def test_txn_delete_of_own_staged_row_keeps_sibling_files(spark, cat):
+    """Deleting a row this txn staged earlier rewrites only the file
+    that holds it: the other files of the same stage stay in the
+    payload and land at commit."""
+    txn = cat.txn()
+    assert txn.append(spark, "fact", _facts(spark, 0, 40)) == 40
+    staged = txn._payloads["fact"]["added"]
+    assert len(staged) > 1
+    assert len({os.path.dirname(f) for f in staged}) == 1
+    doomed = _facts(spark, 7, 8).select("reading_timestamp", "meter_id")
+    assert txn.delete_keys(spark, "fact", doomed) == 1
+    txn.commit()
+    got = cat.read(spark, "fact")
+    assert got.count() == 39
+    assert sorted(r["meter_id"] for r in got.collect()) == [
+        m for m in range(40) if m != 7
+    ]
+
+
 def test_txn_delete_keys_and_write_screens(spark, cat):
     """delete_keys erases a pk frame inside the txn; catalog appends
     run the same write screens as the manifest append (additive-only

@@ -2237,120 +2237,6 @@ def test_read_where_in_bloom_point_lookup(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_analyze_table_persists_and_staleness(spark, tmp_path):
-    """ANALYZE profile: exact stats persisted in _table.json, FRESH
-    through a bare reopen AND through a reopen that re-pins skipping
-    config explicitly (the merge-don't-replace rule), stale after a
-    new commit, refreshed by re-analyzing; approx-NDV default lands
-    within the rsd=0.01 envelope."""
-    import datetime as dt
-
-    rows = [
-        (dt.datetime(2024, 3, 1, 0, i % 60, 0), i, float(i) if i % 3 else None)
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(
-        rows, "reading_timestamp timestamp, meter_id bigint, v double"
-    )
-    t = manifest.ManifestTable(
-        str(tmp_path / "an_tbl"), stats_columns=["meter_id"]
-    )
-    t.idempotent_append(spark, df)
-    prof = manifest.analyze_table(t, spark, exact_ndv=True)
-    assert prof["n_rows"] == 500
-    cs = prof["columns"]
-    assert cs["meter_id"] == {
-        "null_count": 0,
-        "ndv": 500,
-        "min": 0,
-        "max": 499,
-    }
-    assert cs["v"]["null_count"] == len([r for r in rows if r[2] is None])
-    assert "min" not in cs["v"]  # doubles: null/ndv only
-    want_mn = int(
-        dt.datetime(
-            2024, 3, 1, tzinfo=dt.timezone.utc
-        ).timestamp() * 1_000_000
-    )
-    assert cs["reading_timestamp"]["min"] == want_mn
-    assert cs["reading_timestamp"]["ndv"] == 60
-
-    # bare reopen: fresh
-    p2, fresh = manifest.analyzed_stats(
-        manifest.ManifestTable(t.table_dir)
-    )
-    assert fresh and p2 == prof
-    # reopen with explicit config: analyze section must survive
-    manifest.ManifestTable(t.table_dir, stats_columns=["meter_id"])
-    p3, fresh3 = manifest.analyzed_stats(t)
-    assert fresh3 and p3 == prof
-    # new commit -> stale; re-analyze -> fresh again with new counts
-    extra = spark.createDataFrame(
-        [(dt.datetime(2024, 3, 2), 1000, 1.0)],
-        "reading_timestamp timestamp, meter_id bigint, v double",
-    )
-    t.idempotent_append(spark, extra)
-    _, fresh4 = manifest.analyzed_stats(t)
-    assert not fresh4
-    prof5 = manifest.analyze_table(t, spark, exact_ndv=True)
-    assert prof5["n_rows"] == 501
-    assert manifest.analyzed_stats(t)[1]
-    # approx default: NDV within 5% of exact on 501 keys (rsd 0.01)
-    prof6 = manifest.analyze_table(t, spark)
-    nd = prof6["columns"]["meter_id"]["ndv"]
-    assert abs(nd - 501) <= 25, nd
-
-
-def test_analyze_incremental_updates_from_delta_only(spark, tmp_path):
-    """Incremental ANALYZE: an append-only delta updates n_rows /
-    nulls / min-max EXACTLY through the CDC diff (no full re-scan),
-    marks NDV stale with a lower bound; a mutation in the delta falls
-    back to a full re-analyze (additive update invalid)."""
-    import datetime as dt
-
-    def mk(lo, hi, null_every=0):
-        rows = [
-            (
-                dt.datetime(2024, 3, 1 + i // 1000, 0, i % 60, 0),
-                i,
-                None if null_every and i % null_every == 0 else float(i),
-            )
-            for i in range(lo, hi)
-        ]
-        return spark.createDataFrame(
-            rows, "reading_timestamp timestamp, meter_id bigint, v double"
-        )
-
-    t = manifest.ManifestTable(str(tmp_path / "inc_tbl"))
-    t.idempotent_append(spark, mk(0, 100, null_every=10))
-    full = manifest.analyze_table(t, spark, exact_ndv=True)
-    assert full["n_rows"] == 100 and full["columns"]["v"]["null_count"] == 10
-
-    t.idempotent_append(spark, mk(100, 150))
-    inc = manifest.analyze_incremental(t, spark)
-    assert inc["incremental"] and inc["version"] == 1
-    assert inc["n_rows"] == 150
-    assert inc["columns"]["v"]["null_count"] == 10
-    assert inc["columns"]["meter_id"]["max"] == 149
-    assert inc["columns"]["meter_id"]["min"] == 0
-    assert inc["columns"]["meter_id"]["ndv_stale"] is True
-    assert inc["columns"]["meter_id"]["ndv"] >= 100  # lower bound kept
-    # persisted + fresh
-    p, fresh = manifest.analyzed_stats(t)
-    assert fresh and p == inc
-    # already fresh: no-op returns the same profile
-    assert manifest.analyze_incremental(t, spark) == inc
-    # a mutation forces the full path: ndv exact again, no stale flag
-    restated = mk(0, 10)
-    t.upsert(spark, restated)
-    full2 = manifest.analyze_incremental(t, spark)
-    assert "incremental" not in full2
-    assert full2["n_rows"] == 150
-    assert full2["columns"]["meter_id"]["ndv"] == 150
-    assert "ndv_stale" not in full2["columns"]["meter_id"]
-
-
-@pytest.mark.slow
 def test_delete_where_drops_whole_files_metadata_only(spark, tmp_path):
     """Range retention DELETE: fully-covered null-free files drop by
     metadata alone, the straddler rewrites, disjoint files are
@@ -2974,120 +2860,6 @@ def test_upsert_if_newer_drops_stale_rows(spark, tmp_path):
     assert got[9] == 999.0     # new key inserted
 
 
-def test_cbo_join_build_side_flips_with_stats(spark, tmp_path):
-    """ANALYZE has a consumer: cbo_join picks its broadcast build side
-    from the persisted profiles' post-filter cardinality estimates —
-    and the decision FLIPS when the stats say it should (two
-    equal-size tables; only the filtered side estimates under the
-    threshold). Auto-broadcast is disabled so the BroadcastExchange
-    in the plan can only come from the CBO decision."""
-    import contextlib
-    import datetime as dt
-    import io
-
-    def mk(name):
-        t = manifest.ManifestTable(
-            str(tmp_path / name), stats_columns=["meter_id"]
-        )
-        t.idempotent_append(
-            spark,
-            spark.createDataFrame(
-                [
-                    (dt.datetime(2024, 3, 1, 0, 0, 0), m, float(m))
-                    for m in range(1, 2001)
-                ],
-                "reading_timestamp timestamp, meter_id bigint, v double",
-            ),
-        )
-        manifest.analyze_table(t, spark, exact_ndv=True)
-        return t
-
-    ta, tb = mk("cbo_a"), mk("cbo_b")
-    sel = {"meter_id": (1, 100)}  # ~100 of 2000 rows by uniformity
-
-    d = manifest.choose_build_side(
-        ta, tb, left_where=sel, broadcast_threshold_rows=500
-    )
-    assert d["build"] == "left" and d["est_left"] <= 500
-    assert d["est_right"] == 2000  # unfiltered side: full profile count
-
-    d2 = manifest.choose_build_side(
-        ta, tb, right_where=sel, broadcast_threshold_rows=500
-    )
-    assert d2["build"] == "right"
-
-    # both over threshold -> no forced broadcast (AQE decides)
-    d3 = manifest.choose_build_side(
-        ta, tb, broadcast_threshold_rows=500
-    )
-    assert d3["build"] == "none"
-
-    # a side with no ANALYZE profile is never built
-    t_raw = manifest.ManifestTable(str(tmp_path / "cbo_raw"))
-    t_raw.idempotent_append(
-        spark,
-        spark.createDataFrame(
-            [(dt.datetime(2024, 3, 1), 1, 1.0)],
-            "reading_timestamp timestamp, meter_id bigint, v double",
-        ),
-    )
-    d4 = manifest.choose_build_side(
-        t_raw, tb, broadcast_threshold_rows=500
-    )
-    assert d4["build"] == "none" and d4["est_left"] is None
-
-    def plan(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p1 = plan(
-            manifest.cbo_join(
-                spark,
-                ta,
-                tb,
-                ["meter_id"],
-                left_where=sel,
-                broadcast_threshold_rows=500,
-            )
-        )
-        assert "BroadcastHashJoin" in p1 and "BuildLeft" in p1
-        p2 = plan(
-            manifest.cbo_join(
-                spark,
-                ta,
-                tb,
-                ["meter_id"],
-                right_where=sel,
-                broadcast_threshold_rows=500,
-            )
-        )
-        assert "BroadcastHashJoin" in p2 and "BuildRight" in p2
-        p3 = plan(
-            manifest.cbo_join(
-                spark,
-                ta,
-                tb,
-                ["meter_id"],
-                broadcast_threshold_rows=500,
-            )
-        )
-        assert "BroadcastHashJoin" not in p3  # SMJ floor: no hint
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-    # the join itself is semantically a plain join
-    got = manifest.cbo_join(
-        spark, ta, tb, ["meter_id"], left_where=sel,
-        broadcast_threshold_rows=500,
-    )
-    assert got.count() == 100
-
-
 def test_upsert_timestamp_free_pk_never_date_prunes(spark, tmp_path):
     """Date pruning is only sound when the timestamp is part of the
     match key. Under pk=[meter_id], a restatement that MOVES a row to
@@ -3497,144 +3269,3 @@ def test_identity_ranges_disjoint_across_branch_and_main(spark, table_dir):
     assert not (branch_ids - main_ids) & (main_ids - branch_ids)
     assert t.identity_high_water() == 20
 
-
-def test_analyze_mcv_skew_aware_estimates(spark, tmp_path):
-    """Round-13 MCV statistics: a skewed column's hot values estimate
-    at their EXACT frequencies, misses fall back to uniform over the
-    remainder mass — uniform-over-NDV is wrong in both directions on
-    skew. MCV counts update additively for listed values under
-    analyze_incremental (flagged stale), and the selectivity bypass
-    composes: the hot value bypasses the posting index, a rare one
-    consults it."""
-    from pyspark.sql import functions as F
-
-    # 1 hot value (5000 rows) + 1000 rare values (5 rows each)
-    df = spark.range(10000).select(
-        F.col("id").alias("rid"),
-        F.when(F.col("id") < 5000, F.lit("hot"))
-        .otherwise(
-            F.concat(F.lit("rare_"), (F.col("id") % 1000).cast("string"))
-        )
-        .alias("tag"),
-    )
-    t = manifest.ManifestTable(
-        str(tmp_path / "mcv_tbl"), stats_columns=["rid"]
-    )
-    t.idempotent_append(spark, df.repartition(8), pk=["rid"])
-    prof = manifest.analyze_table(
-        t, spark, exact_ndv=True, mcv_columns=["tag"], mcv_k=4
-    )
-    mcv = dict(prof["columns"]["tag"]["mcv"])
-    assert mcv["hot"] == 5000
-    assert len(mcv) == 4
-    # hot value: exact; uniform would have said 10000/1001 ~ 9
-    est_hot = manifest.estimate_read_rows(t, where_in={"tag": ["hot"]})
-    assert est_hot["est_rows"] == 5000
-    # rare miss: uniform over the remainder mass
-    est_rare = manifest.estimate_read_rows(
-        t, where_in={"tag": ["rare_999"]}
-    )
-    rest_rows = 10000 - sum(mcv.values())
-    assert est_rare["est_rows"] == rest_rows // (1001 - 4)
-    assert est_rare["est_rows"] <= 10  # near the true 5
-    # mixed probe: exact hit + uniform miss, additive
-    est_mix = manifest.estimate_read_rows(
-        t, where_in={"tag": ["hot", "rare_999"]}
-    )
-    assert est_mix["est_rows"] == 5000 + est_rare["est_rows"]
-    # incremental: appended hot rows ADD to the listed count (stale-
-    # flagged); new values don't disturb it
-    extra = spark.range(10000, 10500).select(
-        F.col("id").alias("rid"), F.lit("hot").alias("tag")
-    )
-    t.idempotent_append(spark, extra, pk=["rid"])
-    prof2 = manifest.analyze_incremental(t, spark)
-    mcv2 = dict(prof2["columns"]["tag"]["mcv"])
-    assert mcv2["hot"] == 5500
-    assert prof2["columns"]["tag"]["mcv_stale"] is True
-
-
-def test_cbo_skew_advisory_and_salted_join(spark, tmp_path):
-    """Round-14: a shuffle decision screens the join keys' MCVs for
-    single keys that overfill an average shuffle partition and emits
-    a salt advisory; cbo_join routes the single-key inner join
-    through salted_join with the recommended n_salts — plan carries
-    the salt column, result equals the plain join. A broadcast
-    decision gets no advisory (no shuffle on the key)."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    t_fact = manifest.ManifestTable(str(tmp_path / "skw_fact"))
-    # meter 7 holds half the fact rows — the single-key hot bucket
-    t_fact.idempotent_append(
-        spark,
-        spark.range(4000).select(
-            F.expr(
-                "timestamp'2024-03-01 00:00:00'"
-                " + make_interval(0,0,0,0,0,0,id)"
-            ).alias("reading_timestamp"),
-            F.when(F.col("id") % 2 == 0, F.lit(7))
-            .otherwise(F.col("id"))
-            .alias("meter_id"),
-            F.col("id").cast("double").alias("v"),
-        ),
-    )
-    t_dim = manifest.ManifestTable(str(tmp_path / "skw_dim"))
-    t_dim.idempotent_append(
-        spark,
-        spark.range(4000).select(
-            F.col("id").alias("meter_id"),
-            (F.col("id") % 5).alias("zone"),
-        ),
-        pk=["meter_id"],
-    )
-    manifest.analyze_table(
-        t_fact, spark, exact_ndv=True, mcv_columns=["meter_id"]
-    )
-    manifest.analyze_table(t_dim, spark, exact_ndv=True)
-    d = manifest.choose_build_side(
-        t_fact, t_dim, broadcast_threshold_rows=100, on=["meter_id"]
-    )
-    assert d["build"] == "none"
-    sk = d["skew"]
-    assert sk and sk["side"] == "left"
-    assert 7 in [k["value"] for k in sk["keys"]]
-    assert 2 <= sk["n_salts"] <= 64
-    # broadcast decision -> no advisory (no key shuffle to overfill)
-    d2 = manifest.choose_build_side(
-        t_fact,
-        t_dim,
-        broadcast_threshold_rows=10_000,
-        on=["meter_id"],
-    )
-    assert d2["build"] != "none" and d2["skew"] is None
-
-    def plan(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    joined = manifest.cbo_join(
-        spark, t_fact, t_dim, ["meter_id"],
-        broadcast_threshold_rows=100,
-    )
-    assert "_salt" in plan(joined)
-    want = (
-        t_fact.read(spark)
-        .join(t_dim.read(spark), "meter_id")
-        .groupBy("zone")
-        .count()
-    )
-    got = joined.groupBy("zone").count()
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    # salt_skew=False keeps the plain shuffle join
-    plain = manifest.cbo_join(
-        spark, t_fact, t_dim, ["meter_id"],
-        broadcast_threshold_rows=100, salt_skew=False,
-    )
-    assert "_salt" not in plan(plain)

@@ -38,7 +38,6 @@ _SMOKE_MUST = [
     "stream_ingest_daily",
     "events_sessionized",
     "meter_gap_fill",
-    "manifest_cbo_skew_salt",
     "multimodal_frame_sample",
     # sampled by the every-40th slice of the larger registry before the
     # similarity and graph families were deleted
@@ -69,6 +68,11 @@ _SMOKE_MUST = [
     "events_theil_sen_slope",
     "nation_peak_coincidence",
     "stream_score_zscore",
+    # sampled by the every-40th slice of the registry before the
+    # ANALYZE / cost-based-planner demo queries were deleted
+    "manifest_restore_roundtrip",
+    "quality_filter_chain",
+    "stream_sessionized_timeout",
 ]
 
 SMOKE = sorted(set(_SMOKE_MUST) | set(ORACLE_CHECKED[::40]))

@@ -534,45 +534,6 @@ def test_prefix_sum_invariant_to_partition_count(spark, n, parts):
         assert got[k] == run, (k, parts)
 
 
-def test_analyze_incremental_matches_full_on_appends(spark, tmp_path):
-    """On append-only history, the incremental profile's additive
-    fields must EQUAL a from-scratch analyze (n_rows, nulls, min/max);
-    only NDV is allowed to degrade to a flagged lower bound."""
-    import datetime as dt
-
-    from smart_meter_data_pipeline_spark.sources import manifest
-
-    t = manifest.ManifestTable(str(tmp_path / "ainc"))
-
-    def mk(lo, hi):
-        return spark.createDataFrame(
-            [
-                (
-                    dt.datetime(2024, 3, 1, 0, 0, 0)
-                    + dt.timedelta(minutes=i),
-                    i * 3 % 97,
-                    None if i % 7 == 0 else float(i),
-                )
-                for i in range(lo, hi)
-            ],
-            "reading_timestamp timestamp, meter_id bigint, v double",
-        )
-
-    t.idempotent_append(spark, mk(0, 40))
-    manifest.analyze_table(t, spark, exact_ndv=True)
-    t.idempotent_append(spark, mk(40, 90))
-    t.idempotent_append(spark, mk(90, 130))
-    inc = manifest.analyze_incremental(t, spark)
-    full = manifest.analyze_table(t, spark, exact_ndv=True)
-    assert inc["n_rows"] == full["n_rows"]
-    for c in full["columns"]:
-        fi, fc = inc["columns"][c], full["columns"][c]
-        assert fi["null_count"] == fc["null_count"], c
-        assert fi.get("min") == fc.get("min"), c
-        assert fi.get("max") == fc.get("max"), c
-        assert fi["ndv"] <= fc["ndv"]
-
-
 # -- commit-replay properties (round 14, no SparkSession needed) ----------
 
 _file_universe = [f"f{i:02d}.parquet" for i in range(12)]

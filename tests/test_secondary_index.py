@@ -558,46 +558,6 @@ def test_index_meta_monotonic_and_snapshot_race_guard(spark, tmp_path):
     assert out.count() == 5
 
 
-def test_read_where_in_selectivity_bypass(spark, tmp_path, monkeypatch):
-    """Round-13 bypass: with an ANALYZE profile, a low-selectivity
-    IN-list (most rows match) skips the posting-index consult —
-    zone-map/Bloom pruning is all the read pays for — while a rare
-    value still consults it. Identical results both ways."""
-    import smart_meter_data_pipeline_spark.sources.index as idxmod
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        analyze_table,
-    )
-
-    # The bypass compares the estimate with the files left after zone
-    # maps: eight appends of meter_id % 8 give eight files that each
-    # span the whole meter_id range, so zone maps keep all eight.
-    t = ManifestTable(str(tmp_path / "t"))
-    df = _readings(spark)
-    for r in range(8):
-        t.idempotent_append(spark, df.filter(F.col("meter_id") % 8 == r))
-    refresh_index(t, spark, "meter_id")
-    analyze_table(t, spark, columns=["meter_id"])
-    calls = []
-    orig = idxmod.index_candidate_files
-
-    def spy(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
-
-    monkeypatch.setattr(idxmod, "index_candidate_files", spy)
-    wide = list(range(600))
-    got_wide = t.read(spark, where_in={"meter_id": wide})
-    want_wide = t.read(spark).filter(F.col("meter_id").isin(wide))
-    assert got_wide.count() == want_wide.count() == 3000
-    assert calls == []  # est >= ~2/3 row/file -> bypassed
-    got = t.read(spark, where_in={"meter_id": [17]})
-    want = t.read(spark).filter(F.col("meter_id") == 17)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    assert calls == [1]  # rare value -> consulted
-
-
 def test_maintain_index_composition(spark, tmp_path):
     """maintain_index = refresh + vacuum (always — see the
     metadata-only-retention test) + (compact iff fragmented):

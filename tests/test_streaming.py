@@ -532,6 +532,83 @@ def test_stream_killed_between_fact_commit_and_quarantine_write(
         assert sum(c["count"] for c in ManifestTable(target).snapshot()) == 80
 
 
+def test_stream_lock_sink_killed_mid_write(spark, tmp_path, monkeypatch):
+    """The lock sink dies partway through writing the first
+    micro-batch: the even meters' rows are in the table, the odd ones
+    are not, and the job raises. The restart from the same checkpoint
+    replays the batch; the anti-join keeps the rows already written
+    and lands the rest, each reading once, its rejects once, and the
+    table lock is free again."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from smart_meter_data_pipeline_spark.sources.txn import table_lock
+
+    src = tmp_path / "msgs"
+    target = str(tmp_path / "fact")
+    quarantine = str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    _write_deliveries(src, n_files=8, n_meters=10)  # 4 files per batch
+
+    def drain():
+        start_ingest_stream(
+            spark,
+            str(src / "*.txt"),
+            target,
+            ckpt,
+            quarantine_target=quarantine,
+            sink="lock",
+        ).awaitTermination()
+
+    real_parquet = DataFrameWriter.parquet
+    kills = []
+
+    def dies_mid_fact_write(self, path, *args, **kwargs):
+        if path == target and not kills:
+            kills.append(path)
+            real_parquet(
+                self._df.filter(F.col("meter_id") % 2 == 0)
+                .write.mode("append")
+                .partitionBy("reading_date"),
+                path,
+            )
+            raise RuntimeError("killed mid-write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dies_mid_fact_write)
+    with pytest.raises(StreamingQueryException, match="killed mid-write"):
+        drain()
+    partial = spark.read.parquet(target)
+    assert partial.count() == 20  # even meters of ticks 0-3
+    assert partial.filter(F.col("meter_id") % 2 == 1).count() == 0
+    assert not os.path.exists(quarantine)
+
+    drain()
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(target)
+        .select(
+            F.hour("reading_timestamp"),
+            "meter_id",
+            "reading_consumption_milliwatts",
+        )
+        .collect()
+    )
+    assert got == [
+        (i, m, 1000 * i + m) for i in range(8) for m in range(1, 11)
+    ]
+    reasons = {
+        r["reject_reason"]: r["count"]
+        for r in spark.read.parquet(quarantine)
+        .groupBy("reject_reason")
+        .count()
+        .collect()
+    }
+    assert reasons == {"malformed_json": 8, "bad_status": 8}
+    with table_lock(target, timeout_s=1.0):
+        pass
+
+
 @pytest.mark.parametrize("sink", ["lock", "manifest"])
 def test_stream_stamps_one_arrived_at_per_micro_batch(spark, tmp_path, sink):
     """Every valid row of a micro-batch carries the same ``arrived_at``
