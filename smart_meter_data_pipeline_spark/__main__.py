@@ -12,9 +12,6 @@ the reference's assorted entry points (producer loop, consumer loop,
     python -m smart_meter_data_pipeline_spark history <table_dir>
     python -m smart_meter_data_pipeline_spark restore <table_dir> <version>
     python -m smart_meter_data_pipeline_spark asof <table_dir> <unix_ts>
-    python -m smart_meter_data_pipeline_spark tag <table_dir> <name>
-    python -m smart_meter_data_pipeline_spark tags <table_dir>
-    python -m smart_meter_data_pipeline_spark untag <table_dir> <name>
     python -m smart_meter_data_pipeline_spark clone <table_dir> <target_dir>
 
 ``run`` executes any registered query (the full SURVEY §2 + LLM-ops
@@ -133,24 +130,6 @@ def _build_parser() -> argparse.ArgumentParser:
         "at or before this instant",
     )
 
-    tagp = sub.add_parser(
-        "tag",
-        help="create an immutable named ref to a version "
-        "(default: current); tags are compaction GC roots",
-    )
-    tagp.add_argument("table_dir", help="ManifestTable directory")
-    tagp.add_argument("name", help="tag name ([A-Za-z0-9._-]{1,64})")
-    tagp.add_argument(
-        "--version", type=int, default=None, help="version to tag"
-    )
-
-    tags = sub.add_parser("tags", help="list a manifest table's tags")
-    tags.add_argument("table_dir", help="ManifestTable directory")
-
-    untag = sub.add_parser("untag", help="delete a tag")
-    untag.add_argument("table_dir", help="ManifestTable directory")
-    untag.add_argument("name", help="tag name")
-
     clone = sub.add_parser(
         "clone",
         help="zero-copy SHALLOW CLONE into an empty target directory "
@@ -174,9 +153,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}\t{oracle}")
         return 0
 
-    if args.cmd in (
-        "history", "restore", "asof", "tag", "tags", "untag", "clone",
-    ):
+    if args.cmd in ("history", "restore", "asof", "clone"):
         # Metadata-only (one log listing; restore publishes one
         # commit) — no Spark session, same typo'd-path guard as
         # maintain.
@@ -204,25 +181,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(str(e), file=sys.stderr)
                 return 2
             print(json.dumps({"version": v, "asof": args.timestamp}))
-            return 0
-        if args.cmd == "tag":
-            try:
-                print(json.dumps(t.create_tag(args.name, args.version)))
-            except ValueError as e:
-                print(str(e), file=sys.stderr)
-                return 2
-            return 0
-        if args.cmd == "tags":
-            for row in t.list_tags():
-                print(json.dumps(row))
-            return 0
-        if args.cmd == "untag":
-            try:
-                t.delete_tag(args.name)
-            except ValueError as e:
-                print(str(e), file=sys.stderr)
-                return 2
-            print(json.dumps({"deleted": args.name}))
             return 0
         if args.cmd == "clone":
             try:

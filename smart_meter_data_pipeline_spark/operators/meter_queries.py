@@ -712,186 +712,6 @@ SELECT TIMESTAMP '2024-01-03 00:00:00', CAST(900 AS INT),
 )(manifest_upsert_if_newer_roundtrip)
 
 
-def manifest_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-Audit-Publish through manifest BRANCHES under the oracle
-    gate (sources/manifest.py ManifestBranch — Iceberg branch refs /
-    Netflix's WAP workflow; the metadata-only fork the reference's
-    single-writer Postgres sink never needs, and a 100 TB object-store
-    table cannot live without): land the generator day on main, fork
-    an ``audit`` branch, and run a full audit campaign ON THE BRANCH —
-    append the next synthetic day (meters ≡1 mod 6, +1 day, +7777
-    mWh), restate meters ≡4 mod 9 (+5003 mWh, carrying a NEW
-    ``audit_pass`` column — schema evolution rides the squash), and
-    copy-on-write DELETE meters ≡7 mod 13's original-day rows. Main
-    must stay byte-identical throughout (asserted mid-flight: row
-    count AND schema untouched — branch writes share data files but
-    never the main log). ``fast_forward`` then publishes the branch's
-    net effect as ONE optimistic squash commit; the hash is taken over
-    the MAIN read after publish, so isolation, branch CoW, evolution,
-    and atomic publish all sit under one oracle."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_wap_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        readings = gen_meter_readings(spark)
-        n_base = readings.count()
-        t.idempotent_append(spark, readings)
-        t.create_branch("audit")
-        b = t.branch("audit")
-        m = F.col("meter_id")
-        cons = F.col("reading_consumption_milliwatts")
-        next_day = (
-            readings.filter(m % 6 == 1)
-            .withColumn(
-                "reading_timestamp",
-                F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-            )
-            .withColumn(
-                "reading_consumption_milliwatts",
-                (cons + F.lit(7777)).cast("int"),
-            )
-        )
-        b.idempotent_append(spark, next_day)
-        restated = (
-            readings.filter(m % 9 == 4)
-            .withColumn(
-                "reading_consumption_milliwatts",
-                (cons + F.lit(5003)).cast("int"),
-            )
-            .withColumn("audit_pass", F.lit("clean"))
-        )
-        b.upsert(spark, restated)
-        doomed = readings.filter(m % 13 == 7).select(
-            "reading_timestamp", "meter_id"
-        )
-        b.delete_keys(spark, doomed)
-        # the Audit step's isolation contract: nothing the branch did
-        # is visible through the main handle until publish
-        main_mid = t.read(spark)
-        if main_mid.count() != n_base or "audit_pass" in main_mid.columns:
-            raise AssertionError(
-                "branch write leaked into main before fast_forward"
-            )
-        res = b.fast_forward()
-        if res.get("published") != 1 or t.list_branches():
-            raise AssertionError(f"fast_forward did not publish: {res}")
-        final = t.read(spark).select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "reading_production_milliwatts",
-            "status",
-            "audit_pass",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_branch_wap",
-    f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id,
-       CAST(CASE WHEN meter_id % 9 = 4
-                 THEN reading_consumption_milliwatts + 5003
-                 ELSE reading_consumption_milliwatts END AS INT)
-           AS reading_consumption_milliwatts,
-       reading_production_milliwatts, status,
-       CASE WHEN meter_id % 9 = 4 THEN 'clean' ELSE NULL END
-           AS audit_pass
-FROM readings
-WHERE meter_id % 13 <> 7
-UNION ALL
-SELECT reading_timestamp + INTERVAL 1 DAY, meter_id,
-       CAST(reading_consumption_milliwatts + 7777 AS INT),
-       reading_production_milliwatts, status, NULL
-FROM readings
-WHERE meter_id % 6 = 1""",
-)(manifest_branch_wap)
-
-
-def manifest_identity_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENERATED ALWAYS AS IDENTITY under the oracle gate
-    (sources/manifest.py append_with_identity — Delta identity
-    columns, the object-store way): ids come from put-if-absent RANGE
-    allocations (one winner, zero write-time coordination) and the
-    per-row values from the distributed row-number kit (no
-    single-partition window at any batch size). Three appends: the
-    generator day (ids 1..N in pk order), a FULL REPLAY (claims a
-    range, inserts nothing — the allocation burns, which is exactly
-    Delta's documented gap semantics; asserted in-query via the
-    high-water), and a next-day subset (ids 2N+1.. — the gap is
-    visible in the hash). The oracle reproduces both tiers with
-    ROW_NUMBER, so uniqueness, ordering, and the gap are all under
-    one hash."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
-
-    n_day = N_METERS * N_TICKS
-    workdir = tempfile.mkdtemp(prefix="manifest_identity_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        readings = gen_meter_readings(spark)
-        n1 = t.append_with_identity(spark, readings)
-        n2 = t.append_with_identity(spark, readings)  # full replay
-        if (n1, n2) != (n_day, 0):
-            raise AssertionError(
-                f"identity appends wrote ({n1}, {n2}), wanted "
-                f"({n_day}, 0)"
-            )
-        if t.identity_high_water() != 2 * n_day:
-            raise AssertionError(
-                "replayed batch must burn its claimed range: "
-                f"high water {t.identity_high_water()} != {2 * n_day}"
-            )
-        next_day = readings.filter(
-            F.col("meter_id") % 4 == 1
-        ).withColumn(
-            "reading_timestamp",
-            F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-        )
-        t.append_with_identity(spark, next_day)
-        final = t.read(spark).select(
-            "reading_timestamp",
-            "meter_id",
-            "reading_consumption_milliwatts",
-            "row_id",
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_identity_append",
-    f"""WITH {_readings_cte()}
-SELECT reading_timestamp, meter_id, reading_consumption_milliwatts,
-       CAST(ROW_NUMBER() OVER
-            (ORDER BY reading_timestamp, meter_id) AS BIGINT)
-           AS row_id
-FROM readings
-UNION ALL
-SELECT reading_timestamp + INTERVAL 1 DAY, meter_id,
-       reading_consumption_milliwatts,
-       CAST({2 * N_METERS * N_TICKS} + ROW_NUMBER() OVER
-            (ORDER BY reading_timestamp, meter_id) AS BIGINT)
-FROM readings
-WHERE meter_id % 4 = 1""",
-)(manifest_identity_append)
-
-
 def catalog_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog-level MULTI-TABLE transaction under the oracle gate
     (sources/catalog.py — the Nessie model: one put-if-absent catalog
@@ -1003,109 +823,6 @@ SELECT f.reading_timestamp, f.meter_id,
        f.reading_consumption_milliwatts, d.is_solar, d.zone
 FROM fact f JOIN dim d USING (meter_id)""",
 )(catalog_multi_table_txn)
-
-
-def catalog_branch_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whole-CATALOG Write-Audit-Publish under the oracle gate
-    (sources/catalog.py CatalogBranch — the full Nessie model): fork
-    the ENTIRE catalog, run a multi-table audit campaign on the
-    branch (one atomic branch txn appends a next-day fact slice —
-    meters ≡2 mod 7, +1 day, +77 mWh — AND its new dimension rows,
-    meter_id+500), serve main untouched throughout (asserted), then
-    ``fast_forward`` publishes the whole change-set as ONE main
-    catalog commit — fact and dim cross the serving boundary
-    together, which neither table-level branches nor plain catalog
-    txns alone can promise for an already-staged audit campaign. The
-    hash is over fact ⋈ dim at the published main state."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.catalog import Catalog
-
-    workdir = tempfile.mkdtemp(prefix="catalog_wap_q_")
-    try:
-        cat = Catalog(os.path.join(workdir, "cat"))
-        readings = gen_meter_readings(spark)
-        dim = (
-            readings.select("meter_id")
-            .distinct()
-            .withColumn("is_solar", F.col("meter_id") % 2 == 0)
-            .withColumn("zone", (F.col("meter_id") % 10).cast("int"))
-        )
-        t1 = cat.txn()
-        t1.append(spark, "fact", readings)
-        t1.append(spark, "dim_meters", dim, pk=["meter_id"])
-        t1.commit()
-        n_fact0 = cat.read(spark, "fact").count()
-        n_dim0 = cat.read(spark, "dim_meters").count()
-        cat.create_branch("audit")
-        b = cat.branch("audit")
-        next_day = readings.filter(F.col("meter_id") % 7 == 2).withColumn(
-            "reading_timestamp",
-            F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-        ).withColumn(
-            "reading_consumption_milliwatts",
-            (F.col("reading_consumption_milliwatts") + F.lit(77)).cast(
-                "int"
-            ),
-        )
-        new_dims = dim.withColumn(
-            "meter_id", (F.col("meter_id") + 500).cast("int")
-        )
-        bt = b.txn()
-        bt.append(spark, "fact", next_day)
-        bt.append(spark, "dim_meters", new_dims, pk=["meter_id"])
-        bt.commit()
-        if (
-            cat.read(spark, "fact").count() != n_fact0
-            or cat.read(spark, "dim_meters").count() != n_dim0
-        ):
-            raise AssertionError(
-                "branch txn leaked into the main catalog before publish"
-            )
-        res = b.fast_forward()
-        if res.get("published") != 1 or cat.list_branches():
-            raise AssertionError(f"fast_forward did not publish: {res}")
-        if cat.read(spark, "dim_meters").count() != 2 * n_dim0:
-            raise AssertionError("published dim rows missing")
-        final = (
-            cat.read(spark, "fact")
-            .join(cat.read(spark, "dim_meters"), "meter_id")
-            .select(
-                "reading_timestamp",
-                "meter_id",
-                "reading_consumption_milliwatts",
-                "is_solar",
-                "zone",
-            )
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "catalog_branch_wap",
-    f"""WITH {_readings_cte()},
-dim AS (
-  SELECT DISTINCT meter_id, meter_id % 2 = 0 AS is_solar,
-         CAST(meter_id % 10 AS INT) AS zone
-  FROM readings
-),
-fact AS (
-  SELECT reading_timestamp, meter_id, reading_consumption_milliwatts
-  FROM readings
-  UNION ALL
-  SELECT reading_timestamp + INTERVAL 1 DAY, meter_id,
-         CAST(reading_consumption_milliwatts + 77 AS INT)
-  FROM readings
-  WHERE meter_id % 7 = 2
-)
-SELECT f.reading_timestamp, f.meter_id,
-       f.reading_consumption_milliwatts, d.is_solar, d.zone
-FROM fact f JOIN dim d USING (meter_id)""",
-)(catalog_branch_wap)
 
 
 def manifest_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1898,61 +1615,6 @@ SELECT CAST(sp.sum_ind_peaks AS BIGINT) AS sum_ind_peaks_mwh,
          AS diversity_factor_micro
 FROM sp, sys""",
 )(meter_diversity_factor)
-
-
-def manifest_tag_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named refs under the oracle gate: land the generator day as two
-    commits (even meters tagged 'baseline', then odd meters), then
-
-    - assert the tag still reads exactly the even-meter snapshot
-      after the second commit,
-    - assert a log compaction that would merge the tagged commit
-      NO-OPS (tags are GC roots — sources/manifest.py compact_log),
-      and the tag read is unchanged after the attempt,
-    - return the current read — against the PLAIN generator oracle.
-
-    This is the savepoint workflow (tag a corpus version before a
-    risky restatement; readers pin the tag) with its two safety
-    properties checked in-query."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        compact_log,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="manifest_tag_q_")
-    try:
-        t = ManifestTable(os.path.join(workdir, "fact"))
-        readings = gen_meter_readings(spark)
-        t.idempotent_append(
-            spark, readings.filter(F.col("meter_id") % 2 == 0)
-        )
-        t.create_tag("baseline")
-        t.idempotent_append(
-            spark, readings.filter(F.col("meter_id") % 2 == 1)
-        )
-        n_even = readings.filter(F.col("meter_id") % 2 == 0).count()
-        if t.read(spark, tag="baseline").count() != n_even:
-            raise AssertionError("tag drifted after the second commit")
-        if compact_log(t, keep_last=1) != 0:
-            raise AssertionError(
-                "compaction merged a tagged commit (GC-root violation)"
-            )
-        if t.read(spark, tag="baseline").count() != n_even:
-            raise AssertionError("tag drifted after compaction attempt")
-        return t.read(spark).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "manifest_tag_read",
-    f"""WITH {_readings_cte()}
-SELECT * FROM readings""",
-)(manifest_tag_read)
 
 
 def manifest_clone_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2796,105 +2458,6 @@ SELECT reading_timestamp, meter_id,
        reading_production_milliwatts, status
 FROM readings""",
 )(manifest_vacuum_roundtrip)
-
-
-def catalog_tag_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalog-level TAGS — cross-table releases — under the oracle
-    gate (sources/catalog.py create_tag / read(tag=)): one named ref
-    pins EVERY table to one chain position, so "serve release-1" is
-    a single name instead of N per-table versions that might not even
-    be mutually consistent. Scenario: txn1 lands fact + dim
-    atomically and is tagged ``release-1``; txn2 lands a next-day
-    fact slice AND new dim rows; the tagged read of BOTH tables must
-    show exactly the release state while latest moved on (asserted);
-    catalog-chain compaction must preserve the tagged view (tag
-    numbers are GC-root clamps, asserted by re-reading after
-    ``compact_catalog``). The hash is over fact ⋈ dim AT THE TAG —
-    the released serving state, not the head."""
-    import os
-    import shutil
-    import tempfile
-
-    from smart_meter_data_pipeline_spark.sources.catalog import (
-        Catalog,
-        compact_catalog,
-    )
-
-    workdir = tempfile.mkdtemp(prefix="catalog_tag_q_")
-    try:
-        cat = Catalog(os.path.join(workdir, "cat"))
-        readings = gen_meter_readings(spark)
-        dim = (
-            readings.select("meter_id")
-            .distinct()
-            .withColumn("is_solar", F.col("meter_id") % 2 == 0)
-            .withColumn("zone", (F.col("meter_id") % 10).cast("int"))
-        )
-        t1 = cat.txn()
-        t1.append(spark, "fact", readings)
-        t1.append(spark, "dim_meters", dim, pk=["meter_id"])
-        t1.commit()
-        cat.create_tag("release-1")
-        next_day = readings.filter(F.col("meter_id") % 3 == 0).withColumn(
-            "reading_timestamp",
-            F.expr("timestampadd(DAY, 1, reading_timestamp)"),
-        )
-        new_dims = dim.withColumn(
-            "meter_id", (F.col("meter_id") + 1000).cast("int")
-        )
-        t2 = cat.txn()
-        t2.append(spark, "fact", next_day)
-        t2.append(spark, "dim_meters", new_dims, pk=["meter_id"])
-        t2.commit()
-        n_fact_rel = cat.read(spark, "fact", tag="release-1").count()
-        n_dim_rel = cat.read(
-            spark, "dim_meters", tag="release-1"
-        ).count()
-        if cat.read(spark, "fact").count() == n_fact_rel:
-            raise AssertionError("head did not move past the release")
-        if cat.read(spark, "dim_meters").count() != 2 * n_dim_rel:
-            raise AssertionError("txn2 dim rows missing from head")
-        compact_catalog(cat, keep_last=0)
-        if (
-            cat.read(spark, "fact", tag="release-1").count()
-            != n_fact_rel
-            or cat.read(spark, "dim_meters", tag="release-1").count()
-            != n_dim_rel
-        ):
-            raise AssertionError(
-                "chain compaction changed the tagged release view"
-            )
-        final = (
-            cat.read(spark, "fact", tag="release-1")
-            .join(
-                cat.read(spark, "dim_meters", tag="release-1"),
-                "meter_id",
-            )
-            .select(
-                "reading_timestamp",
-                "meter_id",
-                "reading_consumption_milliwatts",
-                "is_solar",
-                "zone",
-            )
-        )
-        return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-register(
-    "catalog_tag_read",
-    f"""WITH {_readings_cte()},
-dim AS (
-  SELECT DISTINCT meter_id, meter_id % 2 = 0 AS is_solar,
-         CAST(meter_id % 10 AS INT) AS zone
-  FROM readings
-)
-SELECT r.reading_timestamp, r.meter_id,
-       r.reading_consumption_milliwatts, d.is_solar, d.zone
-FROM readings r JOIN dim d USING (meter_id)""",
-)(catalog_tag_read)
 
 
 ROLLOVER_MODULUS = 2**24  # register width of the simulated meter

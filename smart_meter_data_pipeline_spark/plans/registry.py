@@ -243,8 +243,6 @@ _PRIORITY = [
     "corpus_text_index_search",
     "stream_text_index_maintenance",
     "catalog_multi_table_txn",
-    "catalog_branch_wap",
-    "catalog_tag_read",
     "manifest_skipping_read",
     "manifest_bloom_read",
     "manifest_dict_skipping_read",
@@ -288,9 +286,7 @@ _PRIORITY = [
     # (r12-evaluated, ex r11-new) first driver rows r12:
     "manifest_upsert_partial_roundtrip",
     "manifest_upsert_if_newer_roundtrip",
-    "manifest_branch_wap",
     "manifest_hilbert_roundtrip",
-    "manifest_identity_append",
     "events_ols_trend",
     "multimodal_dup_scenes",
     "events_dp_release",
@@ -339,7 +335,6 @@ _PRIORITY = [
     "meter_load_factor",
     "meter_diversity_factor",
     "events_user_archetypes",
-    "manifest_tag_read",
     "lineitem_bloom_semijoin",
     "dedup_prefix_filter_join",
     "events_k_anonymity",

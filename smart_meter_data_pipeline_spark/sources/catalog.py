@@ -1,5 +1,5 @@
-"""Catalog-level MULTI-TABLE transactions — the Nessie/"git-for-data"
-model layered on the manifest commit machinery.
+"""Catalog-level MULTI-TABLE transactions — one commit chain for a
+directory of tables, layered on the manifest commit machinery.
 
 A single manifest table's put-if-absent log makes one table's commits
 atomic; nothing in that protocol can make a fact-and-dimension pair
@@ -44,14 +44,15 @@ At 100 TB the catalog chain stays metadata-bounded the same way the
 manifest log does: payloads are O(files touched), the chain is
 compactable by the same merged-base move, and data files never move —
 staging is already distributed, the commit is one conditional PUT.
+The chain is the only log: there are no named refs (tags or
+branches), and a reader pins a whole-catalog state by its positional
+``version``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,8 +62,9 @@ from smart_meter_data_pipeline_spark.sources.manifest import (
     CommitConflictError,
     ManifestTable,
     _publish,
-    _put_if_absent,
     _record,
+    _refuse_branch_commits,
+    _sweep_unreferenced,
 )
 
 CATALOG_DIRNAME = "_catalog"
@@ -77,7 +79,7 @@ class Catalog:
         self.commits_dir = os.path.join(root, CATALOG_DIRNAME)
         os.makedirs(self.commits_dir, exist_ok=True)
         # test seam fired before every catalog-wide publish (optimize,
-        # compaction, branch fast-forward), same contract as
+        # compaction), same contract as
         # ManifestTable._pre_publish_hook
         self._pre_publish_hook = None
 
@@ -122,7 +124,6 @@ class Catalog:
         spark: SparkSession,
         name: str,
         version: int | None = None,
-        tag: str | None = None,
         where: dict | None = None,
         where_in: dict | None = None,
     ) -> DataFrame | None:
@@ -130,9 +131,7 @@ class Catalog:
         committed transaction). ``version`` time-travels the WHOLE
         CATALOG, not one table — version k shows every table as of
         catalog commit k, which is what makes cross-table reads at a
-        pinned version mutually consistent by construction. ``tag``
-        reads a named catalog release (:meth:`create_tag`) — the same
-        whole-catalog pin by name.
+        pinned version mutually consistent by construction.
 
         ``where={col: (lo, hi)}`` / ``where_in={col: [v, ...]}`` add
         zone-map FILE pruning (round 13) against the per-file stats
@@ -145,10 +144,6 @@ class Catalog:
         Stats columns follow the table's persisted config (configure
         once via ``ManifestTable(path, stats_columns=[...])`` on the
         handle's directory)."""
-        if version is not None and tag is not None:
-            raise ValueError("pass at most one of version / tag")
-        if tag is not None:
-            version = self.version_of_tag(tag)
         t = self.table_handle(name)
         commits = self._table_commits(name, version)
         if not commits:
@@ -221,156 +216,6 @@ class Catalog:
     def txn(self) -> "CatalogTxn":
         return CatalogTxn(self)
 
-    # -- tags ----------------------------------------------------------------
-    #
-    # Catalog-level tags — cross-table RELEASES: one named ref pins
-    # EVERY table to one chain position, so "serve release-1" is a
-    # single name instead of N per-table version numbers that might
-    # not even be mutually consistent. Tags store the chain commit
-    # NUMBER (not the position): compaction may merge positions away,
-    # and the clamp below guarantees the tagged number's prefix
-    # content survives any merge, so a tag resolves forever.
-
-    def _tags_dir(self) -> str:
-        return os.path.join(self.root, "_tags")
-
-    def create_tag(self, name: str, version: int | None = None) -> dict:
-        """Tag the catalog at positional chain ``version`` (default:
-        latest). Immutable — put-if-absent, so two writers cannot
-        silently move a release."""
-        if isinstance(self, CatalogBranch):
-            raise ValueError(
-                "tags are main-catalog refs; tag through the parent"
-            )
-        numbered = self.numbered_snapshot()
-        if not numbered:
-            raise ValueError("cannot tag an empty catalog")
-        if version is None:
-            version = len(numbered) - 1
-        if version < 0 or version >= len(numbered):
-            raise ValueError(
-                f"version {version} out of range: catalog has "
-                f"{len(numbered)} commits"
-            )
-        os.makedirs(self._tags_dir(), exist_ok=True)
-        ref = {
-            "name": name,
-            "commit_number": numbered[version][0],
-            "created_at": time.time(),
-        }
-        path = os.path.join(self._tags_dir(), f"{name}.json")
-        if not _put_if_absent(path, json.dumps(ref).encode()):
-            raise ValueError(f"catalog tag already exists: {name}")
-        return ref
-
-    def list_tags(self) -> list[dict]:
-        d = self._tags_dir()
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for fn in sorted(os.listdir(d)):
-            if fn.endswith(".json"):
-                with open(os.path.join(d, fn)) as fh:
-                    out.append(json.load(fh))
-        return out
-
-    def delete_tag(self, name: str) -> None:
-        try:
-            os.unlink(os.path.join(self._tags_dir(), f"{name}.json"))
-        except FileNotFoundError:
-            raise ValueError(f"no such catalog tag: {name}") from None
-
-    def version_of_tag(self, name: str) -> int:
-        """The tag's POSITIONAL chain version, resolved at read time:
-        compaction shifts positions, so the stored commit NUMBER maps
-        to 'the last position whose number is <= the tagged number' —
-        exactly the prefix the clamp preserves."""
-        path = os.path.join(self._tags_dir(), f"{name}.json")
-        try:
-            with open(path) as fh:
-                num = json.load(fh)["commit_number"]
-        except FileNotFoundError:
-            raise ValueError(f"no such catalog tag: {name}") from None
-        numbered = self.numbered_snapshot()
-        pos = None
-        for i, (n, _) in enumerate(numbered):
-            if n <= num:
-                pos = i
-        if pos is None:
-            raise ValueError(
-                f"catalog tag {name!r} points before the current chain"
-            )
-        return pos
-
-    # -- branches ----------------------------------------------------------
-    #
-    # Whole-CATALOG branches — the full Nessie/"git for data" model:
-    # a branch forks the entire catalog (every table at one chain
-    # position), transactions run against the branch's own chain, and
-    # fast_forward publishes the whole multi-table change-set as ONE
-    # main catalog commit. This is WAP at the catalog level: an audit
-    # campaign spanning fact AND dimensions serves from the branch,
-    # main stays pinned, and the publish is atomic across all of it.
-
-    def _branch_refs_dir(self) -> str:
-        return os.path.join(self.root, "_branch_refs")
-
-    def _branch_chain_dir(self, name: str) -> str:
-        return os.path.join(self.root, "_catalog_branches", name)
-
-    def create_branch(self, name: str, version: int | None = None) -> dict:
-        numbered = self.numbered_snapshot()
-        if not numbered:
-            raise ValueError(f"cannot branch an empty catalog: {self.root}")
-        if version is None:
-            version = len(numbered) - 1
-        if version < 0 or version >= len(numbered):
-            raise ValueError(
-                f"version {version} out of range: catalog has "
-                f"{len(numbered)} commits"
-            )
-        payload = {
-            "name": name,
-            "base_commit_number": numbered[version][0],
-            "created_at": time.time(),
-        }
-        os.makedirs(self._branch_refs_dir(), exist_ok=True)
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        if not _put_if_absent(path, json.dumps(payload).encode()):
-            raise ValueError(f"catalog branch {name!r} already exists")
-        os.makedirs(self._branch_chain_dir(name), exist_ok=True)
-        return payload
-
-    def list_branches(self) -> list[dict]:
-        refs = self._branch_refs_dir()
-        if not os.path.isdir(refs):
-            return []
-        out = []
-        for n in sorted(os.listdir(refs)):
-            if n.endswith(".json"):
-                with open(os.path.join(refs, n)) as fh:
-                    out.append(json.load(fh))
-        return out
-
-    def branch(self, name: str) -> "CatalogBranch":
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        try:
-            with open(path) as fh:
-                ref = json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"no such catalog branch: {name!r}") from None
-        return CatalogBranch(self, name, ref["base_commit_number"])
-
-    def delete_branch(self, name: str) -> None:
-        import shutil as _shutil
-
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        try:
-            os.unlink(path)
-        except FileNotFoundError:
-            raise ValueError(f"no such catalog branch: {name!r}") from None
-        _shutil.rmtree(self._branch_chain_dir(name), ignore_errors=True)
-
     # -- maintenance -------------------------------------------------------
 
     def vacuum(self, ttl_s: float = 3600.0) -> int:
@@ -380,62 +225,24 @@ class Catalog:
         (Do NOT run ``vacuum_unreferenced`` on a catalog table
         handle: its own log is empty by design and the sweep would
         read everything as unreferenced — this method is the catalog
-        half of that lifecycle.)"""
-        if isinstance(self, CatalogBranch):
-            raise ValueError(
-                "vacuum is a main-catalog maintenance operation (it "
-                "sweeps the shared data dirs); run it through the "
-                "parent catalog handle"
-            )
+        half of that lifecycle.) Refuses a catalog holding branch
+        commits an older version wrote, like the manifest vacuum."""
+        _refuse_branch_commits(
+            os.path.join(self.root, "_catalog_branches"), self.root
+        )
+        tables_dir = os.path.join(self.root, "tables")
+        if not os.path.isdir(tables_dir):
+            return 0
         removed = 0
-        now = time.time()
-        branches = [self.branch(b["name"]) for b in self.list_branches()]
-        for name in os.listdir(os.path.join(self.root, "tables")) if (
-            os.path.isdir(os.path.join(self.root, "tables"))
-        ) else []:
-            t = self.table_handle(name)
+        for name in os.listdir(tables_dir):
             referenced = {
                 f
                 for c in self._table_commits(name)
                 for f in c.get("added", [])
             }
-            # branch chains are GC roots: their txns reference files
-            # no main catalog commit names
-            for bc in branches:
-                referenced |= {
-                    f
-                    for c in bc._table_commits(name)
-                    for f in c.get("added", [])
-                }
-            for d in os.listdir(t.data_dir):
-                p = os.path.join(t.data_dir, d)
-                if not os.path.isdir(p):
-                    continue
-                entries = os.listdir(p)
-                dir_has_live = any(
-                    os.path.join(d, f) in referenced for f in entries
-                )
-                for fname in entries:
-                    rel = os.path.join(d, fname)
-                    fp = os.path.join(p, fname)
-                    if rel in referenced:
-                        continue
-                    # non-data markers (_SUCCESS) stay with a live
-                    # stage; they go only when the whole dir is dead
-                    if not fname.endswith(".parquet") and dir_has_live:
-                        continue
-                    if now - os.path.getmtime(fp) < ttl_s:
-                        continue
-                    try:
-                        os.unlink(fp)
-                        removed += 1
-                    except FileNotFoundError:
-                        pass
-                if not os.listdir(p):
-                    try:
-                        os.rmdir(p)
-                    except OSError:
-                        pass
+            removed += _sweep_unreferenced(
+                self.table_handle(name).data_dir, referenced, ttl_s, False
+            )
         return removed
 
 
@@ -528,12 +335,12 @@ def optimize_catalog_table(
 
 def _squash_payloads(payloads: list[dict]) -> dict:
     """Replay a table's per-commit payloads into ONE payload — the
-    shared merge behind :func:`compact_catalog` and
-    :meth:`CatalogBranch.fast_forward`. A ``removed`` entry drops the
+    merge behind :func:`compact_catalog`. A ``removed`` entry drops the
     file if a prior payload in the window added it, else it CARRIES
-    THROUGH to the squashed ``removed`` (a branch mutation can remove a
-    file main's prefix added — the squash commit must still remove
-    it). ``count`` is recomputed from the SURVIVING files' footer stats
+    THROUGH to the squashed ``removed`` (empty under compaction, whose
+    window starts at the chain's first commit; the replay stays
+    faithful for any window).
+    ``count`` is recomputed from the SURVIVING files' footer stats
     (``"#rows"``) when every survivor carries them — the concatenated
     sum double-counts after a delete→optimize→compact lifecycle
     (optimize's payload re-counts the rows it rewrote), and a consumer
@@ -587,37 +394,13 @@ def compact_catalog(cat: Catalog, keep_last: int = 10) -> int:
     base reuses the lowest commit number; tail numbers are
     untouched, so the transaction fence stays monotone and a lost
     put-if-absent remains the only way to miss concurrent content.
-    Catalog-BRANCH bases are GC roots (the clamp rule tags have on
-    the manifest log): merging past one would silently widen the
-    frozen prefix that branch reads. Positional version pinning
+    Positional version pinning
     coarsens for the merged range — the granularity trade every log
     cleanup makes. Returns the number of commits merged."""
-    if isinstance(cat, CatalogBranch):
-        raise ValueError(
-            "compact_catalog is a main-catalog maintenance operation"
-        )
     numbered = cat.numbered_snapshot()
     if len(numbered) <= max(keep_last, 1):
         return 0
     cut = len(numbered) - keep_last
-    bases = {b["base_commit_number"] for b in cat.list_branches()}
-    if bases:
-        for i in range(cut):
-            if numbered[i][0] in bases:
-                cut = i
-                break
-    # Tag numbers are GC roots too, with STRICT clamp semantics:
-    # merging a commit numbered past a tag would fold post-tag
-    # content into the base the tag's prefix resolves through,
-    # silently changing the release. Merging everything <= the tag
-    # number is safe (prefix content is exactly the tag's view).
-    tag_nums = {t["commit_number"] for t in cat.list_tags()}
-    if tag_nums:
-        min_tag = min(tag_nums)
-        for i in range(cut):
-            if numbered[i][0] > min_tag:
-                cut = i
-                break
     if cut < 2:
         return 0
     base = numbered[:cut]
@@ -1147,101 +930,6 @@ class CatalogTxn:
         raise CommitConflictError(
             f"gave up after {max_retries} catalog commit attempts on "
             f"{self.cat.root}"
-        )
-
-
-class CatalogBranchDivergedError(CommitConflictError):
-    """Main catalog advanced past the branch base — the fast-forward
-    would drop those commits, so it refuses."""
-
-
-class CatalogBranch(Catalog):
-    """A writable fork of the WHOLE catalog: every table at the base
-    chain position, plus the branch's own catalog commits (kept in
-    ``_catalog_branches/<name>/``). Transactions, reads, version
-    pinning — everything inherited works against the composite chain
-    because it all flows through ``numbered_snapshot`` /
-    ``_commit_path``, both redirected here. Data files live in the
-    parent's table dirs (staging is table-local and uuid-named), so a
-    catalog branch costs one ref regardless of how many tables or
-    bytes the catalog holds.
-
-    :meth:`fast_forward` publishes the branch's whole multi-table
-    change-set as ONE main catalog commit (a per-table replay squash,
-    :func:`_squash_payloads`), giving catalog-level
-    Write-Audit-Publish: an audit campaign spanning fact AND
-    dimension changes serves from the branch, main stays pinned, and
-    the publish is atomic across every touched table."""
-
-    def __init__(self, parent: Catalog, name: str, base: int) -> None:
-        super().__init__(parent.root)
-        self._parent = parent
-        self.branch_name = name
-        self.base_number = base
-        self.commits_dir = self._branch_chain_dir(name)
-        os.makedirs(self.commits_dir, exist_ok=True)
-
-    def numbered_snapshot(self) -> list[tuple[int, dict]]:
-        main = [
-            (n, c)
-            for n, c in ManifestTable._read_log(self._parent.commits_dir)
-            if n <= self.base_number
-        ]
-        return main + ManifestTable._read_log(self.commits_dir)
-
-    def create_branch(self, name: str, version: int | None = None) -> dict:
-        raise ValueError(
-            "cannot branch a catalog branch — fork the main catalog"
-        )
-
-    def fast_forward(self, max_retries: int = 5) -> dict:
-        """Squash-publish the branch's commits onto the main catalog
-        as ONE commit. Requires main's head to still be the branch
-        base (:class:`CatalogBranchDivergedError` otherwise); the
-        publish rides the same put-if-absent fence as every
-        transaction, so a concurrent main txn either loses or makes
-        this diverge — never a silent overwrite. Payloads squash by
-        per-table REPLAY (:func:`_squash_payloads`): branch-internal
-        add-then-remove pairs net out, and a branch mutation's
-        removal of a main-prefix file carries through to the squash
-        commit; the last schema wins — consistent with how the chain
-        itself evolves schemas."""
-        bc = [c for _, c in ManifestTable._read_log(self.commits_dir)]
-        if not bc:
-            return {"published": 0}
-        by_table: dict[str, list[dict]] = {}
-        for c in bc:
-            for name, p in c.get("tables", {}).items():
-                by_table.setdefault(name, []).append(p)
-        # replay-merge: a branch mutation may remove files MAIN's
-        # prefix added — _squash_payloads carries those removals
-        # through to the squash commit instead of dropping them
-        merged = {
-            name: _squash_payloads(ps) for name, ps in by_table.items()
-        }
-        for _ in range(max_retries):
-            main_numbered = self._parent.numbered_snapshot()
-            fence = ManifestTable._fence(main_numbered)
-            if fence != self.base_number + 1:
-                raise CatalogBranchDivergedError(
-                    f"cannot fast-forward catalog branch "
-                    f"{self.branch_name!r}: main is at fence {fence}, "
-                    f"branch base is {self.base_number} — main "
-                    "advanced since the fork"
-                )
-            if _publish(
-                self._parent._commit_path(fence),
-                fence,
-                self._pre_publish_hook,
-                tables=merged,
-                fast_forward_of=self.branch_name,
-                squashed_from=len(bc),
-            ):
-                self._parent.delete_branch(self.branch_name)
-                return {"published": 1, "squashed_from": len(bc)}
-        raise CommitConflictError(
-            f"gave up after {max_retries} fast-forward attempts on "
-            f"catalog branch {self.branch_name!r}"
         )
 
 

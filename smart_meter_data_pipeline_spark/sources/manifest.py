@@ -23,7 +23,7 @@ by a single **put-if-absent** primitive.
 
 **The commit record.** Every commit is one JSON object, built by
 :func:`_record` and stamped, hooked and put by
-:func:`_publish`, the one writer of table, branch and catalog commits:
+:func:`_publish`, the one writer of table and catalog commits:
 
 - ``version``, ``committed_at``: the commit number and publish time
   (a compaction base keeps its last merged commit's time).
@@ -31,33 +31,32 @@ by a single **put-if-absent** primitive.
   relative to the data dir (``removed`` is empty for appends,
   compaction bases and clones).
 - ``count``: rows the added files hold; 0 for RESTORE, DROP COLUMN
-  and a clone; a compaction base or branch squash sums its commits'.
+  and a clone; a compaction base sums its commits'.
 - ``dates``: distinct dates of the added rows' ``reading_timestamp``
   (empty means unknown), so the existing-keys scan prunes to commits
   whose dates overlap the batch — the manifest's partition pruning
-  (Delta's per-file ``partitionValues``). OPTIMIZE, RESTORE, clones,
-  compaction bases and squashes over-approximate with their source
-  commits' dates.
+  (Delta's per-file ``partitionValues``). OPTIMIZE, RESTORE, clones
+  and compaction bases over-approximate with their source commits'
+  dates.
 - ``schema``: the table's read schema as JSON after the commit, or null.
 - ``stats``, ``blooms``: per added file, footer zone maps and
   membership indexes (:meth:`ManifestTable._file_stats`,
   :meth:`ManifestTable._file_blooms`) — read from the footers of newly
   staged files, carried from earlier commits for files already in the
-  log (compaction, clone, branch squash).
+  log (compaction, clone).
 - Writers' own keys: ``removed_dates`` (copy-on-write mutations,
   ``delete_where``, RESTORE) and ``batch_dates`` (mutations, RESTORE)
   for change feeds; ``optimize``; ``restore_of``; ``drop_columns`` and
-  ``dropped_types`` (DROP COLUMN; compaction bases and squashes carry
+  ``dropped_types`` (DROP COLUMN; compaction bases carry
   ``dropped_types``); ``compacted_from`` and ``added_numbers`` (a
   compaction base's merged-commit count and each file's own commit
-  number); ``cloned_from``; ``fast_forward_of`` and ``squashed_from``.
+  number); ``cloned_from``.
 
 A catalog commit (:mod:`.catalog`) holds ``version``, ``committed_at``
 and ``tables``, one such record per touched table without its own
-``version``/``committed_at``, plus ``optimize``, ``compacted_from`` or
-``fast_forward_of``/``squashed_from``. A squashed table record whose
-files lack row counts adds ``count_is_upper_bound``, and a compaction
-base's table records add ``added_numbers``.
+``version``/``committed_at``, plus ``optimize`` or ``compacted_from``.
+A compaction base's table records add ``added_numbers``, and
+``count_is_upper_bound`` when their files lack row counts.
 
 The reference's guarantee being reproduced is the same PRIMARY KEY
 ``ON CONFLICT DO NOTHING`` (consumer/meter_consumer.py:104-114); this
@@ -81,7 +80,6 @@ import contextlib
 import datetime as _dt
 import json
 import os
-import re
 import shutil
 import time
 import uuid
@@ -91,8 +89,6 @@ from pyspark.sql import functions as F
 
 COMMITS_DIRNAME = "_commits"
 DATA_DIRNAME = "_data"
-REFS_DIRNAME = "_refs"
-BRANCHES_DIRNAME = "_commits_branches"
 
 PK = ["reading_timestamp", "meter_id"]
 
@@ -266,7 +262,6 @@ class ManifestTable:
         self.dict_columns = list(dict_columns) if dict_columns else []
         self.commits_dir = os.path.join(table_dir, COMMITS_DIRNAME)
         self.data_dir = os.path.join(table_dir, DATA_DIRNAME)
-        self.refs_dir = os.path.join(table_dir, REFS_DIRNAME)
         self._recover_interrupted_compaction()
         os.makedirs(self.commits_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
@@ -319,7 +314,6 @@ class ManifestTable:
                 # pins skipping config explicitly
                 json.dump({**persisted, **want}, fh)
             os.replace(tmp, cfg_path)
-        os.makedirs(self.refs_dir, exist_ok=True)
         # Test seam: _publish invokes it before every commit this
         # handle publishes (between validation/staging and the put),
         # so tests can land a competing commit, or kill the writer,
@@ -378,10 +372,13 @@ class ManifestTable:
 
     @staticmethod
     def _read_log(log_dir: str) -> list[tuple[int, dict]]:
-        """Read one numbered commit-log directory (the main log or a
-        branch log — same file format, same immutability rules), and
-        refuse it if it holds unapplied merge-on-read tombstones
-        (:meth:`_refuse_pending_tombstones`)."""
+        """Read one numbered commit-log directory (a table's log or
+        the catalog chain — same file format, same immutability
+        rules). Raise ``ValueError`` when it holds a merge-on-read
+        tombstone an older version of this module wrote and never
+        applied (a ``tombstones`` record whose ``upto`` is above the
+        highest ``mor_applied_upto``): the rows it deleted are still in
+        the live files, and a plain read would return them."""
         for attempt in range(40):
             try:
                 names = sorted(
@@ -404,32 +401,19 @@ class ManifestTable:
                 if attempt == 39:
                     raise
                 time.sleep(0.05)
-        ManifestTable._refuse_pending_tombstones(out, f"commit log {log_dir}")
-        return out
-
-    @staticmethod
-    def _refuse_pending_tombstones(
-        numbered: list[tuple[int, dict]], where: str
-    ) -> None:
-        """Raise ``ValueError`` when ``numbered`` holds a merge-on-read
-        tombstone an older version of this module wrote and never
-        applied (a ``tombstones`` record whose ``upto`` is above the
-        highest ``mor_applied_upto``): the rows it deleted are still in
-        the live files, and a plain read would return them."""
         applied = max(
-            (c.get("mor_applied_upto", -1) for _, c in numbered), default=-1
+            (c.get("mor_applied_upto", -1) for _, c in out), default=-1
         )
         if any(
-            t["upto"] > applied
-            for _, c in numbered
-            for t in c.get("tombstones", ())
+            t["upto"] > applied for _, c in out for t in c.get("tombstones", ())
         ):
             raise ValueError(
-                f"{where} holds merge-on-read tombstones that "
+                f"commit log {log_dir} holds merge-on-read tombstones that "
                 "were never applied; this version reads data files as they "
                 "are and would return the rows they deleted. Apply them with "
                 "the version that wrote them (its apply_tombstones) first."
             )
+        return out
 
     def next_commit_number(self) -> int:
         """max existing number + 1 — MONOTONE across compactions
@@ -508,278 +492,12 @@ class ManifestTable:
             )
         return best
 
-    # -- tags (named immutable refs — Delta/Iceberg savepoint parity) ------
-
-    _TAG_NAME_RE = re.compile(r"^[A-Za-z0-9._-]{1,64}$")
-
-    def create_tag(self, name: str, version: int | None = None) -> dict:
-        """Tag a version (default: the current one) with an immutable
-        named ref. Tags pin the commit's stable NUMBER, not its log
-        position, so they survive compaction renumbering-free;
-        resolving a tag whose commit was later merged into the
-        compaction base fails with a clear error — the same
-        granularity loss Delta accepts after log cleanup. Creation is
-        put-if-absent: tags are immutable (delete then re-create to
-        move one), and concurrent same-name creators get one winner."""
-        if not self._TAG_NAME_RE.match(name or ""):
-            raise ValueError(
-                f"bad tag name {name!r}: use 1-64 chars of [A-Za-z0-9._-]"
-            )
-        numbered = self.numbered_snapshot()
-        if not numbered:
-            raise ValueError(f"cannot tag an empty table: {self.table_dir}")
-        if version is None:
-            version = len(numbered) - 1
-        if version < 0 or version >= len(numbered):
-            raise ValueError(
-                f"version {version} out of range: table has "
-                f"{len(numbered)} commits"
-            )
-        payload = {
-            "name": name,
-            "commit_number": numbered[version][0],
-            "created_at": time.time(),
-        }
-        path = os.path.join(self.refs_dir, f"{name}.json")
-        if not _put_if_absent(path, json.dumps(payload).encode()):
-            raise ValueError(
-                f"tag {name!r} already exists (tags are immutable — "
-                "delete_tag then re-create to move one)"
-            )
-        return payload
-
-    def list_tags(self) -> list[dict]:
-        out = []
-        for n in sorted(os.listdir(self.refs_dir)):
-            if n.endswith(".json"):
-                with open(os.path.join(self.refs_dir, n)) as fh:
-                    out.append(json.load(fh))
-        return out
-
-    def delete_tag(self, name: str) -> None:
-        path = os.path.join(self.refs_dir, f"{name}.json")
-        try:
-            os.unlink(path)
-        except FileNotFoundError:
-            raise ValueError(f"no such tag: {name!r}") from None
-
-    def version_of_tag(self, name: str) -> int:
-        """Positional version a tag resolves to in the CURRENT log."""
-        path = os.path.join(self.refs_dir, f"{name}.json")
-        try:
-            with open(path) as fh:
-                payload = json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"no such tag: {name!r}") from None
-        num = payload["commit_number"]
-        for i, (n, _) in enumerate(self.numbered_snapshot()):
-            if n == num:
-                return i
-        raise ValueError(
-            f"tag {name!r} points at commit number {num}, which is not "
-            "addressable in the current log (a foreign/stale ref — the "
-            "in-protocol compaction never merges tagged commits)"
-        )
-
-    # -- branches ----------------------------------------------------------
-    #
-    # A branch is a MUTABLE named ref plus its own numbered commit log
-    # (Iceberg branch refs / the Write-Audit-Publish workflow): the
-    # branch's visible table = the main log frozen at the base commit
-    # number, followed by the branch's own commits. Data files are
-    # shared with the main table (immutable, uuid-staged — exactly the
-    # shallow-clone sharing argument), so branching is a metadata-only
-    # operation at any table size; only the branch's NEW writes cost
-    # bytes. Publishing is a SQUASH fast-forward: the branch's net
-    # file effect lands on main as one optimistic commit, so there is
-    # no partial-publish state to reason about.
-
-    def _branch_refs_dir(self) -> str:
-        return os.path.join(self.refs_dir, "branches")
-
-    def _branch_log_dir(self, name: str) -> str:
-        return os.path.join(self.table_dir, BRANCHES_DIRNAME, name)
-
-    def create_branch(self, name: str, version: int | None = None) -> dict:
-        """Fork a writable branch at ``version`` (default: head).
-        Metadata-only: records {name, base commit NUMBER} put-if-absent
-        (one winner under concurrent same-name creators) and creates an
-        empty branch log. The base is pinned by stable commit number —
-        compaction treats branch bases as GC roots exactly like tags,
-        so the frozen prefix a branch reads can never be silently
-        widened by a base merge that swallows newer commits."""
-        if not self._TAG_NAME_RE.match(name or ""):
-            raise ValueError(
-                f"bad branch name {name!r}: use 1-64 chars of [A-Za-z0-9._-]"
-            )
-        numbered = self.numbered_snapshot()
-        if not numbered:
-            raise ValueError(
-                f"cannot branch an empty table: {self.table_dir}"
-            )
-        if version is None:
-            version = len(numbered) - 1
-        if version < 0 or version >= len(numbered):
-            raise ValueError(
-                f"version {version} out of range: table has "
-                f"{len(numbered)} commits"
-            )
-        payload = {
-            "name": name,
-            "base_commit_number": numbered[version][0],
-            "created_at": time.time(),
-        }
-        os.makedirs(self._branch_refs_dir(), exist_ok=True)
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        if not _put_if_absent(path, json.dumps(payload).encode()):
-            raise ValueError(f"branch {name!r} already exists")
-        os.makedirs(self._branch_log_dir(name), exist_ok=True)
-        return payload
-
-    def list_branches(self) -> list[dict]:
-        refs = self._branch_refs_dir()
-        if not os.path.isdir(refs):
-            return []
-        out = []
-        for n in sorted(os.listdir(refs)):
-            if n.endswith(".json"):
-                with open(os.path.join(refs, n)) as fh:
-                    out.append(json.load(fh))
-        return out
-
-    def branch(self, name: str) -> "ManifestBranch":
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        try:
-            with open(path) as fh:
-                ref = json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"no such branch: {name!r}") from None
-        return ManifestBranch(self, name, ref["base_commit_number"])
-
-    def delete_branch(self, name: str) -> None:
-        """Drop the ref and the branch log. Branch-only data files
-        become unreferenced and the next vacuum sweeps them — the
-        audit-failed half of Write-Audit-Publish."""
-        path = os.path.join(self._branch_refs_dir(), f"{name}.json")
-        try:
-            os.unlink(path)
-        except FileNotFoundError:
-            raise ValueError(f"no such branch: {name!r}") from None
-        shutil.rmtree(self._branch_log_dir(name), ignore_errors=True)
-
-    # -- identity columns --------------------------------------------------
-    #
-    # GENERATED ALWAYS AS IDENTITY, the object-store way (Delta
-    # identity columns): uniqueness comes from a put-if-absent RANGE
-    # allocation — one winner per allocation file, zero coordination
-    # at write time — and the per-row values inside a claimed range
-    # come from the distributed row-number kit (no single-partition
-    # window anywhere). Ids are unique and monotone per allocation
-    # but NOT dense: a batch that deduplicates away after claiming
-    # its range leaves a gap, exactly the gap semantics Delta
-    # documents (and the price of lock-free allocation at 1000
-    # concurrent writers).
-
-    def _identity_dir(self) -> str:
-        return os.path.join(self.refs_dir, "identity")
-
-    def identity_high_water(self) -> int:
-        """First unallocated id (0 on a fresh sequence)."""
-        d = self._identity_dir()
-        if not os.path.isdir(d):
-            return 0
-        names = sorted(n for n in os.listdir(d) if n.endswith(".json"))
-        if not names:
-            return 0
-        with open(os.path.join(d, names[-1])) as fh:
-            last = json.load(fh)
-        return int(last["base"]) + int(last["count"])
-
-    def allocate_identity_range(self, n: int, max_retries: int = 40) -> int:
-        """Claim ``[base, base+n)`` from the table's identity
-        sequence. The allocation file is numbered like a commit and
-        published put-if-absent, so concurrent allocators get
-        disjoint ranges without a lock; losing the race costs one
-        re-list. The range is claimed BEFORE the data commits — a
-        failed or fully-duplicate append simply burns the range."""
-        if n <= 0:
-            raise ValueError(f"allocation size must be positive, got {n}")
-        d = self._identity_dir()
-        os.makedirs(d, exist_ok=True)
-        for _ in range(max_retries):
-            names = sorted(
-                x for x in os.listdir(d) if x.endswith(".json")
-            )
-            if names:
-                with open(os.path.join(d, names[-1])) as fh:
-                    last = json.load(fh)
-                base = int(last["base"]) + int(last["count"])
-                nxt = int(names[-1][: -len(".json")]) + 1
-            else:
-                base, nxt = 0, 0
-            payload = json.dumps(
-                {"base": base, "count": n, "created_at": time.time()}
-            ).encode()
-            if _put_if_absent(
-                os.path.join(d, f"{nxt:010d}.json"), payload
-            ):
-                return base
-        raise CommitConflictError(
-            f"gave up after {max_retries} identity allocations on "
-            f"{self.table_dir}"
-        )
-
-    def append_with_identity(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        id_col: str = "row_id",
-        pk: list[str] = PK,
-        order_cols: list[str] | None = None,
-        max_retries: int = 20,
-    ) -> int:
-        """PK-idempotent append that assigns ``id_col`` from the
-        identity sequence: ids = claimed base + the batch's
-        distributed row number ordered by ``order_cols`` (default:
-        the pk — any total order works; a deterministic one makes
-        the assignment reproducible). The id computation is the
-        range-partitioned two-pass prefix sum
-        (operators/common.py distributed_row_number) — no
-        ``Exchange SinglePartition`` at any batch size. Returns rows
-        written; duplicate rows dropped by the append leave their
-        claimed ids as gaps."""
-        from smart_meter_data_pipeline_spark.operators.common import (
-            distributed_row_number,
-        )
-
-        if id_col in batch.columns:
-            raise ValueError(
-                f"{id_col!r} is GENERATED ALWAYS AS IDENTITY — the "
-                "batch must not supply it"
-            )
-        clean = batch.dropDuplicates(pk)
-        n = clean.count()
-        if n == 0:
-            return 0
-        base = self.allocate_identity_range(n)
-        order_cols = order_cols or pk
-        withid = distributed_row_number(
-            clean, order_cols, "_idn"
-        ).withColumn(
-            id_col,
-            (F.lit(base).cast("bigint") + F.col("_idn")).cast("bigint"),
-        ).drop("_idn")
-        return self.idempotent_append(
-            spark, withid, pk=pk, max_retries=max_retries
-        )
-
     def read(
         self,
         spark: SparkSession,
         version: int | None = None,
         dates: list | None = None,
         asof: float | None = None,
-        tag: str | None = None,
         where: dict | None = None,
         where_in: dict | None = None,
     ) -> DataFrame | None:
@@ -842,15 +560,11 @@ class ManifestTable:
         ``asof`` (unix seconds) is TIMESTAMP AS OF: resolved to the
         latest version committed at or before that instant via
         :meth:`version_asof`, then read as a version time-travel.
-        ``tag`` reads a named ref (:meth:`create_tag`). version /
-        asof / tag are mutually exclusive."""
-        n_selectors = sum(x is not None for x in (version, asof, tag))
-        if n_selectors > 1:
-            raise ValueError("pass at most one of version / asof / tag")
+        version and asof are mutually exclusive."""
+        if version is not None and asof is not None:
+            raise ValueError("pass at most one of version / asof")
         if asof is not None:
             version = self.version_asof(asof)
-        if tag is not None:
-            version = self.version_of_tag(tag)
         numbered = self.numbered_snapshot()
         if version is not None:
             if version < 0 or version >= len(numbered):
@@ -2417,34 +2131,11 @@ def compact_log(table: ManifestTable, keep_last: int = 10) -> int:
     Returns the number of commits merged."""
     from smart_meter_data_pipeline_spark.sources.txn import table_lock
 
-    if isinstance(table, ManifestBranch):
-        raise ValueError(
-            "compact_log is a main-table maintenance operation; a "
-            "branch's visible prefix is frozen main history and must "
-            "not be rewritten through a branch handle"
-        )
     with table_lock(table.table_dir):
         numbered = table.numbered_snapshot()
         if len(numbered) <= max(keep_last, 1):
             return 0
         cut = len(numbered) - keep_last
-        # Tags are GC roots (Iceberg ref-based retention): a tagged
-        # commit must stay individually addressable, and the merged
-        # base REUSES the lowest number — so merging a tagged commit
-        # would silently point its tag at different content. Clamp the
-        # cut to before the oldest tagged commit. Branch BASES are GC
-        # roots for the same reason, with a sharper failure mode: the
-        # merged base reuses number 0 while representing commits up to
-        # the cut, so merging past a branch base would silently widen
-        # the frozen prefix that branch reads.
-        tagged = {t["commit_number"] for t in table.list_tags()} | {
-            b["base_commit_number"] for b in table.list_branches()
-        }
-        if tagged:
-            for i in range(cut):
-                if numbered[i][0] in tagged:
-                    cut = i
-                    break
         if cut < 2:
             # merging 0 or 1 commits is a no-op (the base IS the commit)
             return 0
@@ -2866,7 +2557,9 @@ def vacuum_unreferenced(
     while a stranded ``.old`` log dir exists (legacy
     interrupted-compaction marker): until that log is restored, the
     current commits dir may under-report references and the sweep
-    would delete live data.
+    would delete live data. Refuses, for the same reason, a table
+    holding branch commits an older version wrote
+    (:func:`_refuse_branch_commits`).
 
     ``dry_run=True`` returns the data-dir-relative paths the sweep
     WOULD delete (same TTL rules) without touching a byte — the
@@ -2874,59 +2567,79 @@ def vacuum_unreferenced(
     production table."""
     from smart_meter_data_pipeline_spark.sources.txn import table_lock
 
-    if isinstance(table, ManifestBranch):
-        raise ValueError(
-            "vacuum_unreferenced is a main-table maintenance "
-            "operation (it sweeps the shared data dir); run it "
-            "through the parent table handle"
-        )
     if os.path.isdir(table.commits_dir + ".old"):
         raise RuntimeError(
             f"refusing to vacuum {table.table_dir}: stranded "
             f"'{COMMITS_DIRNAME}.old' dir present — reopen the table "
             "(ManifestTable restores the displaced log) and retry"
         )
+    _refuse_branch_commits(
+        os.path.join(table.table_dir, "_commits_branches"), table.table_dir
+    )
     with table_lock(table.table_dir):
-        commits_all = table.snapshot()
-        referenced = {f for c in commits_all for f in c["added"]}
-        # Branch logs are GC roots: a branch's commits reference data
-        # files no main commit names (shared data dir — the point of
-        # metadata-only branching).
-        for b in table.list_branches():
-            bv = table.branch(b["name"]).numbered_snapshot()
-            referenced |= {f for _, c in bv for f in c["added"]}
-        removed = 0
-        would: list[str] = []
-        now = time.time()
-        for name in os.listdir(table.data_dir):
-            p = os.path.join(table.data_dir, name)
-            if not os.path.isdir(p):
-                continue
-            entries = os.listdir(p)
-            dir_has_live = any(
-                os.path.join(name, f) in referenced for f in entries
+        referenced = {f for c in table.snapshot() for f in c["added"]}
+        return _sweep_unreferenced(table.data_dir, referenced, ttl_s, dry_run)
+
+
+def _refuse_branch_commits(branches_dir: str, where: str) -> None:
+    """Raise ``ValueError`` when ``branches_dir`` holds a branch commit
+    an older version of this module wrote (``<branches_dir>/<name>/
+    <number>.json``). Those commits are the only references to the
+    branch's data files, so a sweep that reads only the main log would
+    delete them as unreferenced."""
+    if not os.path.isdir(branches_dir):
+        return
+    for name in os.listdir(branches_dir):
+        log = os.path.join(branches_dir, name)
+        if os.path.isdir(log) and any(
+            n.endswith(".json") for n in os.listdir(log)
+        ):
+            raise ValueError(
+                f"refusing to vacuum {where}: branch {name!r} has commits "
+                f"under {log}, and the data files only they reference "
+                "would be deleted. This version has no branches; publish "
+                "or delete the branch with the version that wrote it first."
             )
-            for fname in entries:
-                rel = os.path.join(name, fname)
-                fp = os.path.join(p, fname)
-                if rel in referenced:
-                    continue
-                # non-data markers (_SUCCESS) stay with a live dir;
-                # they go only when the whole stage is dead
-                if not fname.endswith(".parquet") and dir_has_live:
-                    continue
-                if now - os.path.getmtime(fp) < ttl_s:
-                    continue
-                if dry_run:
-                    would.append(rel)
-                    continue
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(fp)
-                    removed += 1
-            if not dry_run and not os.listdir(p):
-                with contextlib.suppress(OSError):
-                    os.rmdir(p)
-        return sorted(would) if dry_run else removed
+
+
+def _sweep_unreferenced(
+    data_dir: str, referenced: set[str], ttl_s: float, dry_run: bool
+) -> int | list[str]:
+    """The TTL sweep behind both vacuums: delete every file in a stage
+    directory of ``data_dir`` that ``referenced`` (data-dir-relative
+    paths) does not name and that is older than ``ttl_s``, and prune
+    stage directories left empty. Returns the number of files removed,
+    or with ``dry_run`` the sorted paths it would remove."""
+    removed = 0
+    would: list[str] = []
+    now = time.time()
+    for name in os.listdir(data_dir):
+        p = os.path.join(data_dir, name)
+        if not os.path.isdir(p):
+            continue
+        entries = os.listdir(p)
+        dir_has_live = any(os.path.join(name, f) in referenced for f in entries)
+        for fname in entries:
+            rel = os.path.join(name, fname)
+            fp = os.path.join(p, fname)
+            if rel in referenced:
+                continue
+            # non-data markers (_SUCCESS) stay with a live dir;
+            # they go only when the whole stage is dead
+            if not fname.endswith(".parquet") and dir_has_live:
+                continue
+            if now - os.path.getmtime(fp) < ttl_s:
+                continue
+            if dry_run:
+                would.append(rel)
+                continue
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(fp)
+                removed += 1
+        if not dry_run and not os.listdir(p):
+            with contextlib.suppress(OSError):
+                os.rmdir(p)
+    return sorted(would) if dry_run else removed
 
 
 def _classify_footers_distributed(
@@ -3369,139 +3082,3 @@ def shallow_clone(source: ManifestTable, target_dir: str) -> ManifestTable:
         raise ValueError(f"clone target is not empty: {target_dir}")
     return clone
 
-
-class BranchDivergedError(CommitConflictError):
-    """Main advanced past the branch base — the fast-forward publish
-    would silently drop those commits, so it refuses instead."""
-
-
-class ManifestBranch(ManifestTable):
-    """A writable fork of a :class:`ManifestTable` — Iceberg branch
-    refs, i.e. the table half of Write-Audit-Publish.
-
-    The branch's visible log is the MAIN log frozen at the base commit
-    number followed by the branch's own numbered commits (kept in
-    ``_commits_branches/<name>/``). Every inherited read and write —
-    ``read``, time travel, ``idempotent_append``, ``upsert``/
-    ``delete_keys`` copy-on-write, skipping/Bloom pruning — works
-    unchanged because the whole machinery flows through
-    ``numbered_snapshot`` / ``_commit_path`` / ``_fence``, all of
-    which this subclass redirects to the composite view. Data files
-    live in the PARENT's data dir (immutable, uuid-staged), so
-    branching any size table costs one metadata ref and concurrent
-    branch/main writers can never collide on bytes, only on their own
-    log's put-if-absent — the same one-winner argument as the main
-    protocol, applied per log.
-
-    MAINTENANCE (compaction / vacuum) stays a main-table operation:
-    ``compact_log`` and ``vacuum_unreferenced`` refuse a branch
-    handle, compaction clamps its cut before any branch base (bases
-    are GC roots like tags), and vacuum counts branch-log references
-    as live. Publish is :meth:`fast_forward` — a SQUASH of the
-    branch's net file effect into one optimistic main commit."""
-
-    def __init__(self, parent: ManifestTable, name: str, base: int) -> None:
-        super().__init__(parent.table_dir)
-        self._parent = parent
-        self.branch_name = name
-        self.base_number = base
-        # Redirect the publish namespace to the branch log; data dir,
-        # refs dir and persisted table config stay shared.
-        self.commits_dir = self._branch_log_dir(name)
-        os.makedirs(self.commits_dir, exist_ok=True)
-
-    def numbered_snapshot(self) -> list[tuple[int, dict]]:
-        main = [
-            (n, c)
-            for n, c in self._read_log(self._parent.commits_dir)
-            if n <= self.base_number
-        ]
-        view = main + self._read_log(self.commits_dir)
-        # main may have applied, after the base, a tombstone that the
-        # frozen prefix still holds
-        self._refuse_pending_tombstones(
-            view, f"branch {self.branch_name!r} of {self.table_dir}"
-        )
-        return view
-
-    def next_commit_number(self) -> int:
-        return self._fence(self.numbered_snapshot())
-
-    def create_tag(self, name: str, version: int | None = None) -> dict:
-        raise ValueError(
-            "tags live on the main table (the refs namespace is "
-            "shared); tag the published commit after fast_forward()"
-        )
-
-    def create_branch(self, name: str, version: int | None = None) -> dict:
-        raise ValueError("cannot branch a branch — fork main instead")
-
-    def fast_forward(
-        self, retain_branch: bool = False, max_retries: int = 5
-    ) -> dict:
-        """Publish the branch onto main as ONE squash commit — the
-        "publish" of Write-Audit-Publish. Requires main's head to
-        still be the branch base (otherwise :class:`BranchDivergedError`
-        — this is a fast-forward, not a three-way merge); the commit
-        lands through the same put-if-absent fence as every other
-        writer, so a concurrent main append either loses to the
-        publish or makes it diverge — never a silent overwrite.
-
-        The squash records the branch's NET effect: files the branch
-        added (minus ones it later removed) and removals of BASE files
-        the branch rewrote (copy-on-write upserts/deletes). Per-commit
-        branch granularity is deliberately not replayed — a squash has
-        no partial-publish state, which is what makes the publish
-        atomic on an object store."""
-        numbered_view = self.numbered_snapshot()
-        bc = [c for _, c in self._read_log(self.commits_dir)]
-        if not bc:
-            return {"published": 0}
-        added_net = self._net_relfiles(bc)
-        added_in_branch = {f for c in bc for f in c["added"]}
-        removed_net: dict[str, None] = {}
-        for c in bc:
-            for f in c.get("removed", []):
-                if f not in added_in_branch:
-                    removed_net[f] = None
-        dropped = {}
-        for c in bc:
-            dropped.update(c.get("dropped_types") or {})
-        record = _record(
-            self,
-            carried=added_net,
-            carry_from=bc,
-            removed=sorted(removed_net),
-            count=sum(c.get("count", 0) for c in bc),
-            dates={d for c in bc for d in c.get("dates", [])},
-            schema=self._evolved_schema([c for _, c in numbered_view]),
-            fast_forward_of=self.branch_name,
-            squashed_from=len(bc),
-            dropped_types=dropped,
-        )
-        for _ in range(max_retries):
-            main_numbered = self._parent.numbered_snapshot()
-            fence = self._fence(main_numbered)
-            if fence != self.base_number + 1:
-                raise BranchDivergedError(
-                    f"cannot fast-forward {self.branch_name!r}: main is "
-                    f"at fence {fence}, branch base is "
-                    f"{self.base_number} — main advanced since the "
-                    "branch; rebase by re-branching and re-applying"
-                )
-            if _publish(
-                self._parent._commit_path(fence),
-                fence,
-                self._pre_publish_hook,
-                **record,
-            ):
-                if not retain_branch:
-                    self._parent.delete_branch(self.branch_name)
-                return {"published": 1, "squashed_from": len(bc)}
-            # lost the fence race — re-listing either shows main still
-            # at base (the winner was a stray tmp retry artifact;
-            # attempt again) or advanced (diverged, next loop raises)
-        raise CommitConflictError(
-            f"gave up after {max_retries} fast-forward attempts on "
-            f"branch {self.branch_name!r}"
-        )

@@ -106,36 +106,6 @@ def test_cli_asof(spark, tmp_path, capsys):
     assert main(["asof", str(tmp_path / "nope"), "0"]) == 2
 
 
-def test_cli_tag_tags_untag(spark, tmp_path, capsys):
-    import json as _json
-
-    from tests.test_manifest import _valid_batch
-    from smart_meter_data_pipeline_spark.sources import manifest as mf
-
-    tdir = str(tmp_path / "fact_tags")
-    t = mf.ManifestTable(tdir)
-    t.idempotent_append(spark, _valid_batch(spark, 1, 11))
-
-    assert main(["tag", tdir, "launch"]) == 0
-    res = _json.loads(capsys.readouterr().out.strip())
-    assert res["name"] == "launch" and res["commit_number"] == 0
-
-    assert main(["tags", tdir]) == 0
-    rows = [
-        _json.loads(line)
-        for line in capsys.readouterr().out.strip().splitlines()
-    ]
-    assert [r["name"] for r in rows] == ["launch"]
-
-    assert main(["tag", tdir, "launch"]) == 2  # immutable
-    capsys.readouterr()
-    assert main(["untag", tdir, "launch"]) == 0
-    capsys.readouterr()
-    assert main(["untag", tdir, "launch"]) == 2
-    capsys.readouterr()
-    assert main(["tags", str(tmp_path / "nope")]) == 2
-
-
 def test_cli_clone(spark, tmp_path, capsys):
     import json as _json
 

@@ -37,7 +37,6 @@ PINNED = {
     "restore_version": MUTATION | {"removed_dates", "batch_dates",
                                    "restore_of"},
     "alter_drop_column": MUTATION | {"drop_columns", "dropped_types"},
-    "fast_forward": MUTATION | {"fast_forward_of", "squashed_from"},
     "shallow_clone": (RECORD - {"count"}) | {"cloned_from"},
     "compact_log": RECORD | {"compacted_from", "dropped_types"},
 }
@@ -109,10 +108,8 @@ def test_every_writer_keeps_the_commit_format(spark, tmp_path):
     record("restore_version")
     manifest.alter_drop_column(t, "reading_production_milliwatts")
     record("alter_drop_column")
-    t.create_branch("audit")
-    t.branch("audit").idempotent_append(spark, _rows(spark, 40, 50))
-    t.branch("audit").fast_forward()
-    record("fast_forward")
+    # the tail commit compact_log keeps
+    t.idempotent_append(spark, _rows(spark, 40, 50))
     clone = manifest.shallow_clone(t, str(tmp_path / "clone"))
     published["shallow_clone"] = clone.snapshot()[0]
     merged = sum(c.get("count", 0) for c in t.snapshot()[:8])
@@ -178,12 +175,6 @@ def _kill():
     raise _Killed("killed before publish")
 
 
-def _fast_forward(spark, t):
-    branch = t.branch("audit")
-    branch._pre_publish_hook = _kill
-    branch.fast_forward()
-
-
 TABLE_WRITERS = {
     "append": lambda spark, t: t.idempotent_append(spark, _rows(spark, 30, 40)),
     "upsert": lambda spark, t: t.upsert(spark, _rows(spark, 5, 8, 99)),
@@ -198,7 +189,6 @@ TABLE_WRITERS = {
     "alter_drop_column": lambda spark, t: manifest.alter_drop_column(
         t, "reading_production_milliwatts"
     ),
-    "fast_forward": _fast_forward,
     "compact_log": lambda spark, t: manifest.compact_log(t, keep_last=1),
 }
 
@@ -210,9 +200,6 @@ def test_pre_publish_hook_fires_on_every_writer(spark, tmp_path, writer):
     t = ManifestTable(str(tmp_path / "t"))
     for lo in (0, 10, 20):
         t.idempotent_append(spark, _rows(spark, lo, lo + 10))
-    if writer == "fast_forward":
-        t.create_branch("audit")
-        t.branch("audit").idempotent_append(spark, _rows(spark, 40, 50))
 
     def state():
         rows = sorted(tuple(r) for r in t.read(spark).collect())
@@ -232,19 +219,12 @@ def _catalog_txn_commit(spark, cat):
     txn.commit()
 
 
-def _catalog_fast_forward(spark, cat):
-    branch = cat.branch("audit")
-    branch._pre_publish_hook = _kill
-    branch.fast_forward()
-
-
 CATALOG_WRITERS = {
     "txn_commit": _catalog_txn_commit,
     "optimize_catalog_table": lambda spark, cat: optimize_catalog_table(
         cat, spark, "fact"
     ),
     "compact_catalog": lambda spark, cat: compact_catalog(cat, keep_last=1),
-    "fast_forward": _catalog_fast_forward,
 }
 
 
@@ -256,11 +236,6 @@ def test_pre_publish_hook_fires_on_every_catalog_writer(spark, tmp_path, writer)
     for lo in (0, 10, 20):
         txn = cat.txn()
         txn.append(spark, "fact", _rows(spark, lo, lo + 10))
-        txn.commit()
-    if writer == "fast_forward":
-        cat.create_branch("audit")
-        txn = cat.branch("audit").txn()
-        txn.append(spark, "fact", _rows(spark, 40, 50))
         txn.commit()
 
     def state():

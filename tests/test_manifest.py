@@ -85,8 +85,7 @@ def test_log_with_pending_tombstones_is_refused(spark, table_dir):
     tombstone still holds the deleted rows in its live files. Reading
     them as they are would bring those rows back, so both the read and
     the append refuse the table and nothing is written. Once the log
-    records the tombstone as applied, the table reads again; a branch
-    based before that apply is still refused."""
+    records the tombstone as applied, the table reads again."""
     t = manifest.ManifestTable(table_dir)
     t.idempotent_append(spark, _valid_batch(spark, 0, 10))
     doomed = _valid_batch(spark, 0, 3).select("reading_timestamp", "meter_id")
@@ -120,11 +119,6 @@ def test_log_with_pending_tombstones_is_refused(spark, table_dir):
     got = t.read(spark)
     assert got.count() == 7
     assert got.filter("meter_id < 3").count() == 0
-    # a branch based between the delete and its apply still sees the
-    # tombstone pending
-    t.create_branch("before_apply", version=n)
-    with pytest.raises(ValueError, match="never applied"):
-        t.branch("before_apply").read(spark)
     assert t.idempotent_append(spark, _valid_batch(spark, 10, 12)) == 2
 
 
@@ -412,6 +406,33 @@ def test_vacuum_sweeps_only_stale_unreferenced_stages(spark, table_dir):
         os.utime(os.path.join(leak_dir, fname), (old, old))
     assert manifest.vacuum_unreferenced(t, ttl_s=3600) >= 1
     assert not os.path.isdir(leak_dir)
+    assert t.read(spark).count() == 10
+
+
+def test_vacuum_refuses_leftover_branch_commits(spark, table_dir):
+    """A branch commit an older version left under
+    ``_commits_branches/<name>/`` is the only reference to the branch's
+    data files. Vacuum reads only the main log, so it refuses the
+    table, dry run included, and the aged files survive."""
+    t = manifest.ManifestTable(table_dir)
+    t.idempotent_append(spark, _valid_batch(spark, 1, 11))
+    branch_files = t._stage(_valid_batch(spark, 100, 105))
+    old = time.time() - 7200
+    for f in branch_files:
+        os.utime(os.path.join(t.data_dir, f), (old, old))
+    log = os.path.join(table_dir, "_commits_branches", "audit")
+    os.makedirs(log)
+    with open(os.path.join(log, "0000000001.json"), "w") as fh:
+        json.dump(
+            {"version": 1, "added": branch_files, "removed": [], "count": 5,
+             "dates": ["2024-01-01"], "committed_at": old},
+            fh,
+        )
+    for dry_run in (False, True):
+        with pytest.raises(ValueError, match="branch 'audit' has commits"):
+            manifest.vacuum_unreferenced(t, ttl_s=3600, dry_run=dry_run)
+    for f in branch_files:
+        assert os.path.exists(os.path.join(t.data_dir, f))
     assert t.read(spark).count() == 10
 
 
@@ -1705,59 +1726,6 @@ def test_timestamp_asof_resolution(spark, table_dir):
     assert t.read(spark, asof=stamps[2]).count() == 30
 
 
-def test_tags_pin_numbers_and_survive_compaction(spark, table_dir):
-    """Tags: immutable named refs by stable commit number — reads see
-    the tagged snapshot after later mutations; compaction treats tags
-    as GC ROOTS (it clamps its cut before the oldest tagged commit, so
-    a tagged snapshot can never silently drift onto merged-base
-    content); duplicate creation, bad names, unknown and foreign refs
-    all raise; delete + re-create moves a tag."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 1, 11))    # v0 (num 0)
-    t.create_tag("launch")                                    # -> num 0
-    t.idempotent_append(spark, _valid_batch(spark, 11, 21))   # v1
-    t.idempotent_append(spark, _valid_batch(spark, 21, 31))   # v2
-    assert t.read(spark, tag="launch").count() == 10
-    assert t.version_of_tag("launch") == 0
-    assert [x["name"] for x in t.list_tags()] == ["launch"]
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        t.create_tag("launch")  # immutable
-    with _pytest.raises(ValueError):
-        t.create_tag("bad/name")
-    with _pytest.raises(ValueError):
-        t.read(spark, tag="nope")
-    with _pytest.raises(ValueError):
-        t.read(spark, version=1, tag="launch")
-
-    # the tag is a GC root: compaction that would merge num 0 no-ops
-    assert manifest.compact_log(t, keep_last=1) == 0
-    assert t.read(spark, tag="launch").count() == 10
-
-    # delete the root; compaction now merges the head, tail tag survives
-    t.create_tag("latest", version=2)
-    t.delete_tag("launch")
-    assert manifest.compact_log(t, keep_last=1) > 0
-    assert t.read(spark, tag="latest").count() == 30
-    assert t.version_of_tag("latest") >= 0
-
-    # a foreign/stale ref (number never in this log) fails clearly
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(t.refs_dir, "foreign.json"), "w") as fh:
-        _json.dump({"name": "foreign", "commit_number": 999}, fh)
-    with _pytest.raises(ValueError, match="not .?addressable"):
-        t.version_of_tag("foreign")
-
-    t.create_tag("launch")  # re-created at the current version
-    assert t.read(spark, tag="launch").count() == 30
-    with _pytest.raises(ValueError):
-        t.delete_tag("never-existed")
-
-
 # -- shallow clone ----------------------------------------------------------
 
 
@@ -2997,238 +2965,12 @@ def test_upsert_if_newer_refilters_after_concurrent_write(
     assert row["reading_timestamp"] == dt.datetime(2024, 3, 9)
 
 
-# -- branches (Write-Audit-Publish) -------------------------------------
-
-
-def test_branch_isolated_writes_and_fast_forward(spark, table_dir):
-    """Branch appends/upserts/deletes are invisible through the main
-    handle until fast_forward squash-publishes them as one commit."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 20))
-    t.create_branch("audit")
-    b = t.branch("audit")
-    b.idempotent_append(spark, _valid_batch(spark, 20, 30))
-    b.delete_keys(
-        spark,
-        _valid_batch(spark, 0, 5).select("reading_timestamp", "meter_id"),
-    )
-    assert t.read(spark).count() == 20  # isolation
-    assert b.read(spark).count() == 25
-    main_commits_before = len(t.snapshot())
-    res = b.fast_forward()
-    assert res == {"published": 1, "squashed_from": 2}
-    assert len(t.snapshot()) == main_commits_before + 1  # ONE squash
-    assert t.read(spark).count() == 25
-    assert {r["meter_id"] for r in t.read(spark).collect()} == set(
-        range(5, 30)
-    )
-    assert t.list_branches() == []  # published branch is dropped
-
-
-def test_branch_time_travel_and_base_pinning(spark, table_dir):
-    """The branch view is main frozen at the base NUMBER: main commits
-    after the fork never appear, and time travel inside the branch
-    view resolves positionally across the frozen prefix + branch log."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    t.idempotent_append(spark, _valid_batch(spark, 100, 110))
-    b.idempotent_append(spark, _valid_batch(spark, 50, 55))
-    assert t.read(spark).count() == 20
-    assert b.read(spark).count() == 15
-    assert b.read(spark, version=0).count() == 10
-
-
-def test_branch_fast_forward_diverged_raises(spark, table_dir):
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    b.idempotent_append(spark, _valid_batch(spark, 50, 55))
-    t.idempotent_append(spark, _valid_batch(spark, 100, 105))
-    with pytest.raises(manifest.BranchDivergedError):
-        b.fast_forward()
-    # branch is intact after the refused publish
-    assert b.read(spark).count() == 15
-    assert t.read(spark).count() == 15
-    assert [x["name"] for x in t.list_branches()] == ["b"]
-
-
-def test_branch_fast_forward_loses_race_to_append(spark, table_dir):
-    """A main append landing between the divergence check and the
-    publish makes put-if-absent fail; the retry sees main advanced
-    and raises diverged — never a silent overwrite of the winner."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    b.idempotent_append(spark, _valid_batch(spark, 50, 55))
-    fired = {"n": 0}
-
-    def hook():
-        if fired["n"] == 0:
-            fired["n"] = 1
-            t.idempotent_append(spark, _valid_batch(spark, 100, 105))
-
-    b._pre_publish_hook = hook
-    try:
-        with pytest.raises(manifest.BranchDivergedError):
-            b.fast_forward()
-    finally:
-        b._pre_publish_hook = None
-    assert fired["n"] == 1
-    assert t.read(spark).count() == 15  # the concurrent append won
-    assert b.read(spark).count() == 15  # 10 frozen base + 5 branch
-
-
-def test_branch_files_survive_vacuum_until_branch_deleted(
-    spark, table_dir
-):
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    b.idempotent_append(spark, _valid_batch(spark, 50, 55))
-    assert manifest.vacuum_unreferenced(t, ttl_s=0.0) == 0
-    assert b.read(spark).count() == 15
-    t.delete_branch("b")
-    assert manifest.vacuum_unreferenced(t, ttl_s=0.0) > 0
-    assert t.read(spark).count() == 10
-
-
-@pytest.mark.slow
-def test_branch_base_is_a_compaction_root(spark, table_dir):
-    """compact_log clamps its cut before any branch base — merging
-    past it would widen the frozen prefix the branch reads."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    for i in range(6):
-        t.idempotent_append(spark, _valid_batch(spark, 100 + i * 10, 105 + i * 10))
-    assert manifest.compact_log(t, keep_last=2) == 0  # clamped at base 0
-    assert b.read(spark).count() == 10
-    t.delete_branch("b")
-    assert manifest.compact_log(t, keep_last=2) > 0
-
-
-def test_branch_maintenance_guards(spark, table_dir):
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    with pytest.raises(ValueError, match="main-table maintenance"):
-        manifest.compact_log(b)
-    with pytest.raises(ValueError, match="main-table maintenance"):
-        manifest.vacuum_unreferenced(b)
-    with pytest.raises(ValueError, match="refs namespace is shared"):
-        b.create_tag("x")
-    with pytest.raises(ValueError, match="cannot branch a branch"):
-        b.create_branch("nested")
-    with pytest.raises(ValueError, match="already exists"):
-        t.create_branch("b")
-    with pytest.raises(ValueError, match="no such branch"):
-        t.branch("nope")
-
-
-def test_branch_schema_evolution_rides_the_squash(spark, table_dir):
-    import pyspark.sql.functions as F
-
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    evolved = _valid_batch(spark, 0, 3).withColumn(
-        "audit_note", F.lit("checked")
-    )
-    b.upsert(spark, evolved)
-    assert "audit_note" not in t.read(spark).columns
-    b.fast_forward()
-    got = t.read(spark)
-    assert "audit_note" in got.columns
-    assert got.filter("audit_note = 'checked'").count() == 3
-
-
-def test_branch_pending_tombstones_block_fast_forward(spark, table_dir):
-    """A branch log holding an unapplied merge-on-read tombstone from
-    an older version is refused like a main log: the publish fails
-    before anything lands on main."""
-    t = manifest.ManifestTable(table_dir)
-    t.idempotent_append(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    _write_pending_tombstone(
-        b, _valid_batch(spark, 0, 3).select("reading_timestamp", "meter_id")
-    )
-    with pytest.raises(ValueError, match="never applied"):
-        b.fast_forward()
-    assert len(t.snapshot()) == 1
-    assert t.read(spark).count() == 10
-
-
-# -- identity columns ----------------------------------------------------
-
-
-def test_identity_append_assigns_unique_monotone_ids(spark, table_dir):
-    t = manifest.ManifestTable(table_dir)
-    n = t.append_with_identity(spark, _valid_batch(spark, 0, 20))
-    assert n == 20
-    got = t.read(spark).select("meter_id", "row_id").collect()
-    ids = sorted(r["row_id"] for r in got)
-    assert ids == list(range(1, 21))
-    # pk-ordered assignment is deterministic
-    by_meter = {r["meter_id"]: r["row_id"] for r in got}
-    metres = sorted(by_meter)
-    assert [by_meter[m] for m in metres] == ids
-
-
-@pytest.mark.slow
-def test_identity_replay_burns_range_next_append_gaps(spark, table_dir):
-    t = manifest.ManifestTable(table_dir)
-    t.append_with_identity(spark, _valid_batch(spark, 0, 10))
-    assert t.append_with_identity(spark, _valid_batch(spark, 0, 10)) == 0
-    assert t.identity_high_water() == 20  # replay claimed ids 11..20
-    t.append_with_identity(spark, _valid_batch(spark, 100, 105))
-    ids = sorted(
-        r["row_id"] for r in t.read(spark).select("row_id").collect()
-    )
-    assert ids == list(range(1, 11)) + list(range(21, 26))  # gap 11..20
-
-
-def test_identity_concurrent_allocations_are_disjoint(table_dir):
-    import threading
-
-    t = manifest.ManifestTable(table_dir)
-    bases = []
-    lock = threading.Lock()
-
-    def grab():
-        b = t.allocate_identity_range(100)
-        with lock:
-            bases.append(b)
-
-    threads = [threading.Thread(target=grab) for _ in range(12)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    assert sorted(bases) == [i * 100 for i in range(12)]
-    assert t.identity_high_water() == 1200
-
-
-def test_identity_rejects_supplied_id_column(spark, table_dir):
-    import pyspark.sql.functions as F
-
-    t = manifest.ManifestTable(table_dir)
-    batch = _valid_batch(spark, 0, 5).withColumn("row_id", F.lit(1))
-    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
-        t.append_with_identity(spark, batch)
+# -- distributed row numbers ---------------------------------------------
 
 
 def test_identity_assignment_plan_has_no_global_window(spark, table_dir):
-    """The id assignment must ride the distributed row-number kit —
-    range partition + pid-local window, never Exchange
+    """Row numbers over a batch (the kit an id assignment rides) come
+    from a range partition + pid-local window, never Exchange
     SinglePartition."""
     from smart_meter_data_pipeline_spark.operators.common import (
         distributed_row_number,
@@ -3247,25 +2989,4 @@ def test_identity_assignment_plan_has_no_global_window(spark, table_dir):
     plan = buf.getvalue()
     assert "Exchange SinglePartition" not in plan
     assert "_pfx_pid" in plan
-
-
-@pytest.mark.slow
-def test_identity_ranges_disjoint_across_branch_and_main(spark, table_dir):
-    """The identity sequence is a TABLE property shared by main and
-    every branch (allocation files live in the shared refs dir), so
-    ids stay globally unique across a branch's life and survive the
-    squash publish without collisions."""
-    t = manifest.ManifestTable(table_dir)
-    t.append_with_identity(spark, _valid_batch(spark, 0, 10))
-    t.create_branch("b")
-    b = t.branch("b")
-    b.append_with_identity(spark, _valid_batch(spark, 100, 105))
-    t.append_with_identity(spark, _valid_batch(spark, 200, 205))
-    main_ids = {r["row_id"] for r in t.read(spark).collect()}
-    branch_ids = {r["row_id"] for r in b.read(spark).collect()}
-    # branch view = frozen main prefix + branch commits: its ids and
-    # main's POST-FORK ids never collide
-    assert len(main_ids) == 15 and len(branch_ids) == 15
-    assert not (branch_ids - main_ids) & (main_ids - branch_ids)
-    assert t.identity_high_water() == 20
 
