@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     fact_customer_billing_daily,
     fact_grid_load_hourly,
+    hourly_meter_rollup,
     stg_transform,
 )
 
@@ -105,19 +106,24 @@ def refresh_marts_incremental(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         targets = _rebuild_targets(dates, _existing_fact_dates(spark, fact_dir))
+        # both writes read one persisted rollup: the LAG window runs once
         stg = stg_for_dates(spark, fact_dir, targets)
-        billing = fact_customer_billing_daily(
-            stg, dim_meters, dim_customers, dim_tariff_rates
-        )
-        (
-            billing.write.mode("overwrite")
-            .partitionBy("billing_date")
-            .parquet(billing_dir)
-        )
-        grid = fact_grid_load_hourly(stg, dim_meters, dim_grid_zones).withColumn(
-            "load_date", F.to_date("load_hour")
-        )
-        grid.write.mode("overwrite").partitionBy("load_date").parquet(grid_dir)
+        rollup = hourly_meter_rollup(stg).persist()
+        try:
+            billing = fact_customer_billing_daily(
+                rollup, dim_meters, dim_customers, dim_tariff_rates
+            )
+            (
+                billing.write.mode("overwrite")
+                .partitionBy("billing_date")
+                .parquet(billing_dir)
+            )
+            grid = fact_grid_load_hourly(
+                rollup, dim_meters, dim_grid_zones
+            ).withColumn("load_date", F.to_date("load_hour"))
+            grid.write.mode("overwrite").partitionBy("load_date").parquet(grid_dir)
+        finally:
+            rollup.unpersist()
         return {
             "billing_rows": spark.read.parquet(billing_dir)
             .filter(F.col("billing_date").isin(targets))

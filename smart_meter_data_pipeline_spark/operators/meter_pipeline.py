@@ -13,7 +13,7 @@ This is the reference's analytical core rebuilt Spark-first:
   fallback, mWh→kWh conversion, quality flags.
 - ``fact_customer_billing_daily`` / ``fact_grid_load_hourly``: the two
   marts (fact_customer_billing_daily.sql, fact_grid_load_hourly.sql)
-  as composable DataFrame functions.
+  over one (hour, meter) rollup of staging, ``hourly_meter_rollup``.
 
 The DuckDB twins of the generators and staging, and the registered
 queries that check the pipeline against them, live in
@@ -21,17 +21,18 @@ queries that check the pipeline against them, live in
 
 Numeric-parity design: energy is generated and aggregated as INTEGER
 milliwatt-hours (mirroring the reference's deliberate INTEGER columns,
-01_create_schema.sql:78-79) through *both* rollup levels; the single
+01_create_schema.sql:78-79) through every rollup level; the single
 ``/ 1e6`` happens in the final projection. Integer sums are exact and
 order-insensitive, so results are deterministic under any shuffle
 layout — and hash-identical to the DuckDB oracle. At 100 TB this is
 also the fast path: integer partial aggregation map-side, one double
 division per output row.
 
-Scale notes: the LAG window and the daily rollup both hash-partition
-by meter_id, so Catalyst reuses one exchange; genuinely-tiny dims
-(grid zones, tariff rate) are broadcast explicitly while the 1M-row
-dims are left to AQE (broadcast while they fit, shuffle-join beyond);
+Scale notes: the LAG window and the (hour, meter) rollup both
+hash-partition by meter_id, so Catalyst reuses one exchange; both marts
+read that rollup (a quarter of staging's rows at 15-minute readings);
+tiny dims (grid zones, tariff rate) are broadcast explicitly while the
+1M-row dims are left to AQE (broadcast while they fit, shuffle-join beyond);
 the generator is a single ``range`` with ``div``/``%`` decomposition —
 no cross join, embarrassingly parallel.
 """
@@ -303,34 +304,50 @@ def stg_transform(readings: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def hourly_meter_rollup(stg: DataFrame) -> DataFrame:
+    """The one (hour, meter) aggregation of staging, carrying every
+    input either mart reads: integer mWh sums, reading and quality-flag
+    counts, and whether the meter has solar."""
+    return stg.groupBy(
+        F.date_trunc("hour", "reading_timestamp").alias("load_hour"), "meter_id"
+    ).agg(
+        F.sum("consumption_delta_mwh").alias("cons_mwh"),
+        F.sum("production_delta_mwh").alias("prod_mwh"),
+        F.sum("net_delta_mwh").alias("net_mwh"),
+        F.count(F.lit(1)).alias("reading_count"),
+        F.count_if("is_valid").alias("valid_reading_count"),
+        F.count_if("is_estimated").alias("estimated_reading_count"),
+        F.count_if("is_error").alias("error_reading_count"),
+        F.max("has_solar").alias("has_solar"),
+    )
+
+
 def fact_customer_billing_daily(
-    stg: DataFrame,
+    rollup: DataFrame,
     dim_meters: DataFrame,
     dim_customers: DataFrame,
     dim_tariff_rates: DataFrame,
 ) -> DataFrame:
     """fact_customer_billing_daily.sql:25-114, DataFrame-first.
 
-    Two-level rollup: (day, meter) hash-agg → broadcast-join dims →
-    (day, customer) re-agg → rate application + quality pct. The rate
+    :func:`hourly_meter_rollup` → (day, meter) re-agg → dims → (day,
+    customer) re-agg → rate application + quality pct. The rate
     comes from dim_tariff_rates via a broadcast cross join (the
     principled version of the reference's hard-coded 0.28 — §2.9).
-    Energy aggregates as integer mWh through both levels; kWh appears
+    Energy aggregates as integer mWh through every level; kWh appears
     only in the final projection.
     """
-    daily_meter = stg.groupBy(
-        F.to_date("reading_timestamp").alias("billing_date"), "meter_id"
+    daily_meter = rollup.groupBy(
+        F.to_date("load_hour").alias("billing_date"), "meter_id"
     ).agg(
-        F.sum("consumption_delta_mwh").alias("cons_mwh"),
-        F.sum("production_delta_mwh").alias("prod_mwh"),
-        F.sum("net_delta_mwh").alias("net_mwh"),
-        F.count(F.lit(1)).alias("reading_count"),
-        F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("valid_reading_count"),
-        F.sum(F.when(F.col("is_estimated"), 1).otherwise(0)).alias(
-            "estimated_reading_count"
-        ),
-        F.sum(F.when(F.col("is_error"), 1).otherwise(0)).alias("error_reading_count"),
-        F.max(F.col("has_solar").cast("int")).cast("boolean").alias("has_solar"),
+        F.sum("cons_mwh").alias("cons_mwh"),
+        F.sum("prod_mwh").alias("prod_mwh"),
+        F.sum("net_mwh").alias("net_mwh"),
+        F.sum("reading_count").alias("reading_count"),
+        F.sum("valid_reading_count").alias("valid_reading_count"),
+        F.sum("estimated_reading_count").alias("estimated_reading_count"),
+        F.sum("error_reading_count").alias("error_reading_count"),
+        F.max("has_solar").alias("has_solar"),
     )
     rate = dim_tariff_rates.select(
         F.col("base_rate_per_kwh").cast("double").alias("rate")
@@ -357,12 +374,13 @@ def fact_customer_billing_daily(
             F.sum("cons_mwh").alias("cons_mwh"),
             F.sum("prod_mwh").alias("prod_mwh"),
             F.sum("net_mwh").alias("net_mwh"),
-            F.countDistinct("meter_id").alias("meter_count"),
+            # (day, meter) rows are unique after the 1:1 join: count == distinct
+            F.count("meter_id").alias("meter_count"),
             F.sum("reading_count").alias("total_reading_count"),
             F.sum("valid_reading_count").alias("valid_reading_count"),
             F.sum("estimated_reading_count").alias("estimated_reading_count"),
             F.sum("error_reading_count").alias("error_reading_count"),
-            F.max(F.col("has_solar").cast("int")).cast("boolean").alias("has_solar"),
+            F.max("has_solar").alias("has_solar"),
         )
         .crossJoin(F.broadcast(rate))
     )
@@ -395,27 +413,18 @@ def fact_customer_billing_daily(
 
 
 def fact_grid_load_hourly(
-    stg: DataFrame, dim_meters: DataFrame, dim_grid_zones: DataFrame
+    rollup: DataFrame, dim_meters: DataFrame, dim_grid_zones: DataFrame
 ) -> DataFrame:
     """fact_grid_load_hourly.sql:25-119, DataFrame-first.
 
-    (hour, meter) rollup → broadcast dims → (hour, zone) re-agg with
-    capacity utilization and peak/critical flags (grid:85-104, guarded
-    on capacity > 0)."""
-    hourly_meter = stg.groupBy(
-        F.date_trunc("hour", "reading_timestamp").alias("load_hour"), "meter_id"
-    ).agg(
-        F.sum("consumption_delta_mwh").alias("cons_mwh"),
-        F.sum("production_delta_mwh").alias("prod_mwh"),
-        F.sum("net_delta_mwh").alias("net_mwh"),
-        F.count(F.lit(1)).alias("reading_count"),
-        F.sum(F.when(F.col("is_valid"), 1).otherwise(0)).alias("valid_reading_count"),
-    )
+    :func:`hourly_meter_rollup` → dims → (hour, zone) re-agg with capacity
+    utilization and peak/critical flags (grid:85-104, guarded on
+    capacity > 0)."""
     # dim_meters: no static broadcast hint (1M rows at reference scale;
     # AQE decides — see fact_customer_billing_daily). dim_grid_zones is
     # 20 rows: always broadcast.
     zone_level = (
-        hourly_meter.join(
+        rollup.join(
             dim_meters.select("meter_id", "grid_zone_id"),
             "meter_id",
             "inner",
@@ -432,7 +441,8 @@ def fact_grid_load_hourly(
             F.sum("cons_mwh").alias("cons_mwh"),
             F.sum("prod_mwh").alias("prod_mwh"),
             F.sum("net_mwh").alias("net_mwh"),
-            F.countDistinct("meter_id").alias("active_meter_count"),
+            # (hour, meter) rows are unique after the 1:1 join: count == distinct
+            F.count("meter_id").alias("active_meter_count"),
             F.sum("reading_count").alias("total_reading_count"),
             F.sum("valid_reading_count").alias("valid_reading_count"),
         )
@@ -470,41 +480,31 @@ def fact_grid_load_hourly(
 def build_all_marts(
     spark: SparkSession, readings: DataFrame, n_meters: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Rebuild both marts from raw readings sharing ONE staging pass.
+    """Rebuild both marts from raw readings sharing ONE rollup.
 
-    The reference recomputes the staging view per mart (dbt view
-    materialization, README.md:137 — a known trade-off); here staging
-    is persisted across the two mart builds, so the expensive
-    LAG-window shuffle over the fact table runs once. At warehouse
-    scale the same role is played by materializing stg to storage.
+    The reference recomputes and re-aggregates the staging view per
+    mart (dbt view materialization, README.md:137); here the (hour,
+    meter) rollup is persisted across both builds, so the LAG shuffle
+    and the per-reading aggregation run once and each mart reads a
+    quarter of staging's rows (15-minute readings). At warehouse scale
+    the same role is played by materializing the rollup to storage.
 
     Returns (billing, grid_load) — both eagerly materialized via the
-    shared persisted staging; callers still own writing them out.
+    shared persisted rollup; callers still own writing them out.
     """
-    # Persist only the columns the marts read — column pruning doesn't
-    # reach through a persist boundary, so project before caching.
-    stg = stg_transform(readings).select(
-        "reading_timestamp",
-        "meter_id",
-        "consumption_delta_mwh",
-        "production_delta_mwh",
-        "net_delta_mwh",
-        "is_valid",
-        "is_estimated",
-        "is_error",
-        "has_solar",
-    ).persist()
+    # The rollup holds only what the marts read: no projection needed.
+    rollup = hourly_meter_rollup(stg_transform(readings)).persist()
     try:
         dims = gen_dim_meters(spark, n_meters)
         billing = fact_customer_billing_daily(
-            stg,
+            rollup,
             dims,
             gen_dim_customers(spark, n_meters),
             gen_dim_tariff_rates(spark),
         ).localCheckpoint(eager=True)
         grid = fact_grid_load_hourly(
-            stg, dims, gen_dim_grid_zones(spark)
+            rollup, dims, gen_dim_grid_zones(spark)
         ).localCheckpoint(eager=True)
         return billing, grid
     finally:
-        stg.unpersist()
+        rollup.unpersist()

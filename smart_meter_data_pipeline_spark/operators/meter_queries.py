@@ -29,6 +29,7 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     gen_dim_meters,
     gen_dim_tariff_rates,
     gen_meter_readings,
+    hourly_meter_rollup,
     stg_transform,
 )
 from smart_meter_data_pipeline_spark.plans.registry import register
@@ -192,9 +193,8 @@ FROM stg""",
 
 
 def meter_billing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stg = stg_transform(gen_meter_readings(spark))
     return fact_customer_billing_daily(
-        stg,
+        hourly_meter_rollup(stg_transform(gen_meter_readings(spark))),
         gen_dim_meters(spark),
         gen_dim_customers(spark),
         gen_dim_tariff_rates(spark),
@@ -255,9 +255,10 @@ register("meter_billing_daily", _BILLING_SQL)(meter_billing_q)
 
 
 def meter_grid_load_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stg = stg_transform(gen_meter_readings(spark))
     return fact_grid_load_hourly(
-        stg, gen_dim_meters(spark), gen_dim_grid_zones(spark)
+        hourly_meter_rollup(stg_transform(gen_meter_readings(spark))),
+        gen_dim_meters(spark),
+        gen_dim_grid_zones(spark),
     )
 
 

@@ -7,8 +7,9 @@ dbt_project.yml:24-32).
 ``create_meter_views`` mirrors the dbt DAG: sources (raw readings +
 dims) → ``stg_meter_readings`` (view = recompute-per-query, S8) →
 ``fact_customer_billing_daily`` / ``fact_grid_load_hourly``. Marts are
-registered as views over the same builders the DataFrame path uses, so
-there is one definition of the semantics; materializing them as tables
+registered as views over the same builders the DataFrame path uses,
+fed the same ``hourly_meter_rollup`` of staging, so there is one
+definition of the semantics; materializing them as tables
 (S9) is the caller's ``spark.table(name).write.saveAsTable(...)``.
 """
 
@@ -23,6 +24,7 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     gen_dim_grid_zones,
     gen_dim_meters,
     gen_dim_tariff_rates,
+    hourly_meter_rollup,
     stg_transform,
 )
 
@@ -45,9 +47,10 @@ def create_meter_views(
     stg = stg_transform(readings)
     stg.createOrReplaceTempView("stg_meter_readings")
 
+    rollup = hourly_meter_rollup(stg)
     fact_customer_billing_daily(
-        stg, dim_meters, dim_customers, dim_rates
+        rollup, dim_meters, dim_customers, dim_rates
     ).createOrReplaceTempView("fact_customer_billing_daily")
-    fact_grid_load_hourly(stg, dim_meters, dim_zones).createOrReplaceTempView(
+    fact_grid_load_hourly(rollup, dim_meters, dim_zones).createOrReplaceTempView(
         "fact_grid_load_hourly"
     )

@@ -475,17 +475,11 @@ register("stream_sessionized_timeout", _sessionized_timeout_oracle())(
 )
 
 
-def stream_billing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's stated production path (README.md:137) end-to-
-    end: incremental stateful staging instead of a batch LAG rebuild,
-    feeding the UNCHANGED daily-billing mart builder. The oracle is
-    the batch billing mart's SQL — streaming state handoff, delta
-    reconstruction, dim joins, and charge math all land in one hash."""
+def _stateful_rollup(spark: SparkSession) -> DataFrame:
+    """The stateful streaming deltas, shaped like staging, through the
+    same ``hourly_meter_rollup`` the batch marts read."""
     from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
-        fact_customer_billing_daily,
-        gen_dim_customers,
-        gen_dim_meters,
-        gen_dim_tariff_rates,
+        hourly_meter_rollup,
     )
 
     deltas = _run_stateful_deltas(spark)
@@ -501,8 +495,24 @@ def stream_billing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("status") == "R").alias("is_error"),
         prod.isNotNull().alias("has_solar"),
     )
+    return hourly_meter_rollup(stg_like)
+
+
+def stream_billing_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's stated production path (README.md:137) end-to-
+    end: incremental stateful staging instead of a batch LAG rebuild,
+    feeding the UNCHANGED daily-billing mart builder. The oracle is
+    the batch billing mart's SQL — streaming state handoff, delta
+    reconstruction, dim joins, and charge math all land in one hash."""
+    from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
+        fact_customer_billing_daily,
+        gen_dim_customers,
+        gen_dim_meters,
+        gen_dim_tariff_rates,
+    )
+
     return fact_customer_billing_daily(
-        stg_like,
+        _stateful_rollup(spark),
         gen_dim_meters(spark),
         gen_dim_customers(spark),
         gen_dim_tariff_rates(spark),
@@ -537,18 +547,10 @@ def stream_grid_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_dim_meters,
     )
 
-    deltas = _run_stateful_deltas(spark)
-    cons, prod = F.col("consumption_delta_mwh"), F.col("production_delta_mwh")
-    stg_like = deltas.select(
-        "reading_timestamp",
-        "meter_id",
-        "consumption_delta_mwh",
-        "production_delta_mwh",
-        (cons - F.coalesce(prod, F.lit(0))).alias("net_delta_mwh"),
-        (F.col("status") == "V").alias("is_valid"),
-    )
     return fact_grid_load_hourly(
-        stg_like, gen_dim_meters(spark), gen_dim_grid_zones(spark)
+        _stateful_rollup(spark),
+        gen_dim_meters(spark),
+        gen_dim_grid_zones(spark),
     ).localCheckpoint(eager=True)
 
 

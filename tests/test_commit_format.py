@@ -2,8 +2,10 @@
 passes through.
 
 Each writer runs once on a tiny table. The first test pins the keys of
-the commit it publishes, its ``count`` and ``dates``, and the
-``stats``/``blooms`` of the files it adds: a writer may spell out a key
+the commit it publishes, its ``count`` and ``dates`` (the dates of the
+rows its added files hold, so none when a delete drops whole files and
+adds none, as it does when each row sits in a file of its own), and
+the ``stats``/``blooms`` of the files it adds: a writer may spell out a key
 it used to leave out only with the empty value every reader defaults it
 to (``removed: []``, ``blooms: {}``), and may never drop a key or change
 a value. The hook tests make every writer's pre-publish hook raise
@@ -51,6 +53,7 @@ COUNTS = {
     "shallow_clone": 0,
 }
 DAY = ["2024-03-01"]
+DELETES = {"delete_keys", "delete_where"}
 CHAIN = {"version", "tables", "committed_at"}
 TABLE_PAYLOAD = {"added", "removed", "count", "dates", "schema", "stats"}
 
@@ -70,6 +73,16 @@ def _check_keys(commit: dict, pinned: set, extra_ok=()) -> None:
     assert pinned <= keys, sorted(pinned - keys)
     for k in keys - pinned - set(extra_ok):
         assert k in EMPTY and commit[k] == EMPTY[k], (k, commit[k])
+
+
+def _added_dates(spark, t: ManifestTable, commit: dict) -> list[str]:
+    """The distinct dates of the rows in the commit's added files."""
+    if not commit["added"]:
+        return []
+    paths = [os.path.join(t.data_dir, f) for f in commit["added"]]
+    added = spark.read.parquet(*paths)
+    days = added.select(F.to_date("reading_timestamp").cast("string")).distinct()
+    return sorted(r[0] for r in days.collect())
 
 
 def _check_indexes(t: ManifestTable, commit: dict) -> None:
@@ -119,14 +132,20 @@ def test_every_writer_keeps_the_commit_format(spark, tmp_path):
 
     assert set(published) == set(PINNED)
     for name, commit in published.items():
+        table = clone if name == "shallow_clone" else t
         # the merged base maps each file to the commit that added it
         extra_ok = {"added_numbers"} if name == "compact_log" else ()
         _check_keys(commit, PINNED[name], extra_ok)
         rows = sum(s["#rows"] for s in commit["stats"].values())
         assert commit.get("count", 0) == counts.get(name, rows), name
-        assert commit["dates"] == ([] if name == "alter_drop_column" else DAY)
-        _check_indexes(clone if name == "shallow_clone" else t, commit)
-        assert commit["added"] or name == "alter_drop_column"
+        assert commit["dates"] == _added_dates(spark, table, commit), name
+        _check_indexes(table, commit)
+        if name in DELETES:
+            # whether the delete rewrote its files or dropped them whole
+            assert commit["removed"] and commit["removed_dates"] == DAY, name
+        else:
+            assert commit["added"] or name == "alter_drop_column", name
+    assert published["append"]["dates"] == DAY
     assert {r["meter_id"] for r in t.read(spark).collect()} == set(range(50))
 
 
@@ -159,9 +178,11 @@ def test_catalog_commits_keep_the_commit_format(spark, tmp_path):
         _check_keys(payload, TABLE_PAYLOAD, {"added_numbers"} if extra else ())
         # a payload's count is the rows its added files hold
         rows = sum(s["#rows"] for s in payload["stats"].values())
-        assert (payload["count"], payload["dates"]) == (rows, DAY)
+        assert payload["count"] == rows
+        assert payload["dates"] == _added_dates(spark, t, payload)
         _check_indexes(t, payload)
     assert chain[0]["tables"]["fact"]["count"] == 10
+    assert chain[0]["tables"]["fact"]["dates"] == DAY
     assert sorted(
         r["meter_id"] for r in cat.read(spark, "fact").collect()
     ) == [m for m in range(20) if m != 15]

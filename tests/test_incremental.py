@@ -21,6 +21,7 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     gen_dim_meters,
     gen_dim_tariff_rates,
     gen_meter_readings,
+    hourly_meter_rollup,
     stg_transform,
 )
 
@@ -73,9 +74,9 @@ def test_incremental_refresh_matches_full(spark, tmp_path):
     assert sorted(os.listdir(day3_part)) != day3_files
 
     # equality with the monolithic full rebuild
-    stg = stg_transform(readings)
+    rollup = hourly_meter_rollup(stg_transform(readings))
     full_billing = fact_customer_billing_daily(
-        stg, dims["dim_meters"], dims["dim_customers"], dims["dim_tariff_rates"]
+        rollup, dims["dim_meters"], dims["dim_customers"], dims["dim_tariff_rates"]
     )
     inc_billing = spark.read.parquet(billing_dir).select(*full_billing.columns)
     assert inc_billing.count() == full_billing.count()
@@ -83,7 +84,7 @@ def test_incremental_refresh_matches_full(spark, tmp_path):
     assert full_billing.exceptAll(inc_billing).count() == 0
 
     full_grid = fact_grid_load_hourly(
-        stg, dims["dim_meters"], dims["dim_grid_zones"]
+        rollup, dims["dim_meters"], dims["dim_grid_zones"]
     )
     inc_grid = spark.read.parquet(grid_dir).select(*full_grid.columns)
     assert inc_grid.count() == full_grid.count()
@@ -150,9 +151,9 @@ def test_backfill_invalidates_successor_day(spark, tmp_path):
     # marts must now equal a full rebuild over the post-backfill facts —
     # in particular day 3 (the successor), which the bug left stale
     post = spark.read.parquet(fact_dir).drop("reading_date")
-    stg = stg_transform(post)
+    rollup = hourly_meter_rollup(stg_transform(post))
     full_billing = fact_customer_billing_daily(
-        stg, dims["dim_meters"], dims["dim_customers"], dims["dim_tariff_rates"]
+        rollup, dims["dim_meters"], dims["dim_customers"], dims["dim_tariff_rates"]
     )
     inc_billing = spark.read.parquet(billing_dir).select(*full_billing.columns)
     assert inc_billing.exceptAll(full_billing).count() == 0
@@ -165,7 +166,7 @@ def test_backfill_invalidates_successor_day(spark, tmp_path):
     )
 
     full_grid = fact_grid_load_hourly(
-        stg, dims["dim_meters"], dims["dim_grid_zones"]
+        rollup, dims["dim_meters"], dims["dim_grid_zones"]
     )
     inc_grid = spark.read.parquet(grid_dir).select(*full_grid.columns)
     assert inc_grid.exceptAll(full_grid).count() == 0

@@ -77,6 +77,14 @@ _SMOKE_MUST = [
     "manifest_upsert_partial_roundtrip",
     "sample_weighted_priority",
     "stream_topk_users",
+    # every caller of the two mart builders, which all read one
+    # hourly_meter_rollup instead of staging: their oracles are the
+    # reference's unchanged mart SQL
+    "batch_billing_incremental",
+    "meter_billing_daily",
+    "meter_grid_load_hourly",
+    "stream_billing_incremental",
+    "stream_grid_incremental",
 ]
 
 SMOKE = sorted(set(_SMOKE_MUST) | set(ORACLE_CHECKED[::40]))

@@ -9,6 +9,7 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     gen_dim_meters,
     gen_dim_tariff_rates,
     gen_meter_readings,
+    hourly_meter_rollup,
     stg_transform,
 )
 from smart_meter_data_pipeline_spark.plans.views import create_meter_views
@@ -33,7 +34,7 @@ def test_sql_views_equal_dataframe_api(spark):
         "FROM fact_customer_billing_daily"
     )
     df_mart = fact_customer_billing_daily(
-        stg_transform(readings),
+        hourly_meter_rollup(stg_transform(readings)),
         gen_dim_meters(spark, 40),
         gen_dim_customers(spark, 40),
         gen_dim_tariff_rates(spark),
