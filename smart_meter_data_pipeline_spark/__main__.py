@@ -120,7 +120,7 @@ def _build_parser() -> argparse.ArgumentParser:
     asof = sub.add_parser(
         "asof",
         help="resolve TIMESTAMP AS OF to a commit version "
-        "(metadata-only; read the data with read(version=...))",
+        "(metadata-only; read the data with read_as_of(version=...))",
     )
     asof.add_argument("table_dir", help="ManifestTable directory")
     asof.add_argument(
@@ -159,7 +159,11 @@ def main(argv: list[str] | None = None) -> int:
         # maintain.
         import os
 
-        from smart_meter_data_pipeline_spark.sources import manifest as mf
+        from smart_meter_data_pipeline_spark.sources import (
+            manifest as mf,
+            manifest_services,
+            manifest_timetravel,
+        )
 
         commits_dir = os.path.join(args.table_dir, mf.COMMITS_DIRNAME)
         if not os.path.isdir(commits_dir):
@@ -171,12 +175,12 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         t = mf.ManifestTable(args.table_dir)
         if args.cmd == "history":
-            for row in t.history():
+            for row in manifest_timetravel.history(t):
                 print(json.dumps(row))
             return 0
         if args.cmd == "asof":
             try:
-                v = t.version_asof(args.timestamp)
+                v = manifest_timetravel.version_asof(t, args.timestamp)
             except ValueError as e:
                 print(str(e), file=sys.stderr)
                 return 2
@@ -184,7 +188,7 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         if args.cmd == "clone":
             try:
-                c = mf.shallow_clone(t, args.target_dir)
+                c = manifest_services.shallow_clone(t, args.target_dir)
             except ValueError as e:
                 print(str(e), file=sys.stderr)
                 return 2
@@ -199,7 +203,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
         try:
-            res = mf.restore_version(t, args.version)
+            res = manifest_timetravel.restore_version(t, args.version)
         except ValueError as e:
             print(str(e), file=sys.stderr)
             return 2
@@ -213,7 +217,10 @@ def main(argv: list[str] | None = None) -> int:
         # report a successful no-op maintenance run.
         import os
 
-        from smart_meter_data_pipeline_spark.sources import manifest as mf
+        from smart_meter_data_pipeline_spark.sources import (
+            manifest as mf,
+            manifest_services,
+        )
 
         commits = os.path.join(args.table_dir, mf.COMMITS_DIRNAME)
         if not os.path.isdir(commits):
@@ -233,7 +240,7 @@ def main(argv: list[str] | None = None) -> int:
             cluster = [
                 c.strip() for c in args.cluster_by.split(",") if c.strip()
             ]
-            optimized = mf.optimize_table(
+            optimized = manifest_services.optimize_table(
                 t,
                 get_spark("smart-meter-maintain"),
                 small_file_bytes=args.optimize_small_bytes,
@@ -243,9 +250,11 @@ def main(argv: list[str] | None = None) -> int:
             )
         dropped_col = None
         if args.drop_column:
-            dropped_col = mf.alter_drop_column(t, args.drop_column)
+            dropped_col = manifest_services.alter_drop_column(
+                t, args.drop_column
+            )
         merged = mf.compact_log(t, keep_last=args.keep_last)
-        swept = mf.vacuum_unreferenced(
+        swept = manifest_services.vacuum_unreferenced(
             t, ttl_s=args.vacuum_ttl_s, dry_run=args.vacuum_dry_run
         )
         print(

@@ -33,6 +33,35 @@ from smart_meter_data_pipeline_spark.operators.meter_pipeline import (
     stg_transform,
 )
 from smart_meter_data_pipeline_spark.plans.registry import register
+from smart_meter_data_pipeline_spark.sources.manifest import (
+    PK,
+    ManifestTable,
+    compact_log,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_cow import (
+    delete_keys,
+    delete_where,
+    upsert,
+    upsert_if_newer,
+    upsert_partial,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
+    alter_drop_column,
+    optimize_table,
+    shallow_clone,
+    vacuum_unreferenced,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    read_where,
+    skipping_report,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_timetravel import (
+    change_feed,
+    consistent_snapshot,
+    read_as_of,
+    restore_version,
+    version_asof,
+)
 
 # ---------------------------------------------------------------------------
 # DuckDB twins of the generators and staging
@@ -488,9 +517,6 @@ def manifest_cow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_cow_q_")
     try:
@@ -505,11 +531,11 @@ def manifest_cow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("correction_source", F.lit("restated"))
         )
-        t.upsert(spark, restated)
+        upsert(t, spark, restated)
         doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
             "reading_timestamp", "meter_id"
         )
-        t.delete_keys(spark, doomed)
+        delete_keys(t, spark, doomed)
         final = t.read(spark).select(
             "reading_timestamp",
             "meter_id",
@@ -548,16 +574,13 @@ def manifest_upsert_partial_roundtrip(
     production must CARRY FORWARD from the current image) plus one
     genuinely new key (NULL in every unspecified column). One hash
     over the final table proves restatement, carry-forward, and
-    new-key insertion at once (sources/manifest.py upsert_partial —
+    new-key insertion at once (sources/manifest_cow.py upsert_partial —
     the ``UPDATE SET col = source.col`` half of Delta MERGE the plain
     wholesale upsert rejects)."""
     import os
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_up_part_q_")
     try:
@@ -576,7 +599,7 @@ def manifest_upsert_partial_roundtrip(
             F.lit(777).cast("int").alias("meter_id"),
             F.lit("N").alias("status"),
         )
-        res = t.upsert_partial(spark, partial.unionByName(new_key))
+        res = upsert_partial(t, spark, partial.unionByName(new_key))
         n_restated = sum(
             1 for m_ in range(1, N_METERS + 1) if m_ % 9 == 2
         )
@@ -622,9 +645,6 @@ def manifest_upsert_if_newer_roundtrip(
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_if_newer_q_")
     try:
@@ -675,8 +695,8 @@ def manifest_upsert_if_newer_roundtrip(
             .unionByName(tie)
             .unionByName(new_row)
         )
-        res = t.upsert_if_newer(
-            spark, batch, "reading_timestamp", pk=pk
+        res = upsert_if_newer(
+            t, spark, batch, "reading_timestamp", pk=pk
         )
         if res != {"updated": 100, "inserted": 1, "skipped_stale": 50}:
             raise AssertionError(
@@ -829,7 +849,7 @@ FROM fact f JOIN dim d USING (meter_id)""",
 def manifest_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPTIMIZE under the oracle gate: land the generator day as many
     small commits (micro-batch ingest shape), bin-pack the files with
-    :func:`~.manifest.optimize_table`, and return the packed table —
+    :func:`~.manifest_services.optimize_table`, and return the packed table —
     against the PLAIN generator oracle, so any row the rewrite lost,
     duplicated, or altered breaks the hash. Also asserts the file
     count actually shrank (a no-op "optimize" would still hash
@@ -838,10 +858,6 @@ def manifest_optimize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        optimize_table,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_opt_q_")
     try:
@@ -886,10 +902,6 @@ def manifest_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        restore_version,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_restore_q_")
     try:
@@ -900,15 +912,15 @@ def manifest_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reading_consumption_milliwatts",
             F.col("reading_consumption_milliwatts") + F.lit(10007),
         )
-        t.upsert(spark, restated)
+        upsert(t, spark, restated)
         doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
             "reading_timestamp", "meter_id"
         )
-        t.delete_keys(spark, doomed)
+        delete_keys(t, spark, doomed)
         res = restore_version(t, 0)
         if not (res["files_readded"] > 0 and res["files_removed"] > 0):
             raise AssertionError(f"restore moved no references: {res}")
-        n_v2 = t.read(spark, version=2).count()
+        n_v2 = read_as_of(t, spark, version=2).count()
         n_expected_v2 = readings.filter(
             F.col("meter_id") % 11 != 5
         ).count()
@@ -943,9 +955,6 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_cdf_q_")
     try:
@@ -956,12 +965,12 @@ def manifest_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reading_consumption_milliwatts",
             F.col("reading_consumption_milliwatts") + F.lit(10007),
         )
-        t.upsert(spark, restated)
+        upsert(t, spark, restated)
         doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
             "reading_timestamp", "meter_id"
         )
-        t.delete_keys(spark, doomed)
-        feed = t.change_feed(spark, 0, 2).select(
+        delete_keys(t, spark, doomed)
+        feed = change_feed(t, spark, 0, 2).select(
             "reading_timestamp",
             "meter_id",
             "reading_consumption_milliwatts",
@@ -1017,9 +1026,6 @@ def manifest_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_ivm_q_")
     try:
@@ -1039,13 +1045,13 @@ def manifest_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reading_consumption_milliwatts",
             F.col("reading_consumption_milliwatts") + F.lit(10007),
         )
-        t.upsert(spark, restated)
+        upsert(t, spark, restated)
         doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
             "reading_timestamp", "meter_id"
         )
-        t.delete_keys(spark, doomed)
+        delete_keys(t, spark, doomed)
 
-        feed = t.change_feed(spark, 0, 2)
+        feed = change_feed(t, spark, 0, 2)
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), 1
         ).otherwise(-1)
@@ -1112,16 +1118,13 @@ def manifest_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
       (or a read that dropped/duplicated rows) breaks the hash.
 
     Timestamp resolution is metadata-only (one commit-log listing, no
-    data IO), same as read(version=) — sources/manifest.py
-    version_asof."""
+    data IO), same as read_as_of(version=) —
+    sources/manifest_timetravel.py version_asof."""
     import os
     import shutil
     import tempfile
     import time as _time
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_asof_q_")
     try:
@@ -1134,23 +1137,23 @@ def manifest_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, readings.filter(F.col("meter_id") % 2 == 1)
         )
         ts0 = t.snapshot()[0]["committed_at"]
-        if t.version_asof(ts0) != 0:
+        if version_asof(t, ts0) != 0:
             raise AssertionError(
-                f"asof(ts0) resolved to {t.version_asof(ts0)}, not 0"
+                f"asof(ts0) resolved to {version_asof(t, ts0)}, not 0"
             )
-        n_v0 = t.read(spark, asof=ts0).count()
+        n_v0 = read_as_of(t, spark, asof=ts0).count()
         n_even = readings.filter(F.col("meter_id") % 2 == 0).count()
         if n_v0 != n_even:
             raise AssertionError(
                 f"asof v0 read {n_v0} rows, expected {n_even}"
             )
         try:
-            t.version_asof(ts0 - 3600.0)
+            version_asof(t, ts0 - 3600.0)
         except ValueError:
             pass
         else:
             raise AssertionError("pre-first-commit asof did not raise")
-        return t.read(spark, asof=_time.time()).localCheckpoint(eager=True)
+        return read_as_of(t, spark, asof=_time.time()).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1176,7 +1179,7 @@ def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-path zone-map data skipping under the oracle gate: land
     the generator day, OPTIMIZE ZORDER on the PK so per-file
     (meter_id, reading_timestamp) ranges are narrow, then
-    ``read(where={meter: range, ts: range})`` — a 2-D slice read that
+    ``read_where(where={meter: range, ts: range})`` — a 2-D slice read that
 
     - asserts the zone maps actually SKIPPED files
       (``skipping_report``: files_read < files_live),
@@ -1199,10 +1202,6 @@ def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        optimize_table,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_skip_q_")
     try:
@@ -1218,10 +1217,10 @@ def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo_ts = _dt.datetime(2024, 1, 1, 10, 0, 0)
         hi_ts = _dt.datetime(2024, 1, 1, 13, 45, 0)
         where = {"meter_id": (40, 90), "reading_timestamp": (lo_ts, hi_ts)}
-        rep = t.skipping_report(where)
+        rep = skipping_report(t, where)
         if not (0 < rep["files_read"] < rep["files_live"]):
             raise AssertionError(f"zone maps skipped nothing: {rep}")
-        n_pruned = t.read(spark, where=where).count()
+        n_pruned = read_where(t, spark, where=where).count()
         n_plain = (
             t.read(spark)
             .filter(F.col("meter_id").between(40, 90))
@@ -1233,13 +1232,13 @@ def manifest_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"pruned read {n_pruned} rows != filtered {n_plain}"
             )
         open_where = {"meter_id": (150, None)}
-        n_open = t.read(spark, where=open_where).count()
+        n_open = read_where(t, spark, where=open_where).count()
         n_open_plain = t.read(spark).filter("meter_id >= 150").count()
         if n_open != n_open_plain:
             raise AssertionError(
                 f"open-ended read {n_open} != {n_open_plain}"
             )
-        return t.read(spark, where=where).localCheckpoint(eager=True)
+        return read_where(t, spark, where=where).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1268,7 +1267,7 @@ def manifest_dict_skipping_read(
     the generator day with a derived ``tariff_plan`` STRING column
     (meter_id % 4 → four plans), appended one plan per batch so each
     file's recorded distinct-value dictionary is a single plan, then
-    ``read(where_in={tariff_plan: ['timeofuse']})`` — a categorical
+    ``read_where(where_in={tariff_plan: ['timeofuse']})`` — a categorical
     point lookup that
 
     - asserts the dictionaries actually SKIPPED files
@@ -1291,9 +1290,6 @@ def manifest_dict_skipping_read(
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_dict_q_")
     try:
@@ -1308,10 +1304,10 @@ def manifest_dict_skipping_read(
             t.idempotent_append(
                 spark, readings.filter(F.col("tariff_plan") == plan)
             )
-        rep = t.skipping_report(where_in={"tariff_plan": ["timeofuse"]})
+        rep = skipping_report(t, where_in={"tariff_plan": ["timeofuse"]})
         if not (0 < rep["files_read"] < rep["files_live"]):
             raise AssertionError(f"dictionaries skipped nothing: {rep}")
-        pruned = t.read(spark, where_in={"tariff_plan": ["timeofuse"]})
+        pruned = read_where(t, spark, where_in={"tariff_plan": ["timeofuse"]})
         n_plain = (
             t.read(spark)
             .filter(F.col("tariff_plan") == "timeofuse")
@@ -1357,9 +1353,6 @@ def manifest_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_bloom_q_")
     try:
@@ -1378,24 +1371,25 @@ def manifest_bloom_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         lookup = [5, 14]
         # negative control: hash-sharded ranges overlap, stats keep all
-        rep_stats = t.skipping_report(
+        rep_stats = skipping_report(
+            t,
             where={"meter_id": (min(lookup), max(lookup))}
         )
         if rep_stats["files_skipped"] != 0:
             raise AssertionError(
                 f"hash shards should defeat zone maps: {rep_stats}"
             )
-        rep = t.skipping_report(where_in={"meter_id": lookup})
+        rep = skipping_report(t, where_in={"meter_id": lookup})
         if rep["files_read"] != 2:
             raise AssertionError(f"bloom kept {rep} files, wanted 2")
-        n_pruned = t.read(spark, where_in={"meter_id": lookup}).count()
+        n_pruned = read_where(t, spark, where_in={"meter_id": lookup}).count()
         n_plain = (
             t.read(spark).filter(F.col("meter_id").isin(lookup)).count()
         )
         if n_pruned != n_plain:
             raise AssertionError(f"{n_pruned} != {n_plain}")
-        return t.read(
-            spark, where_in={"meter_id": lookup}
+        return read_where(
+            t, spark, where_in={"meter_id": lookup}
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -1423,11 +1417,6 @@ def manifest_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        delete_where,
-        optimize_table,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_ret_q_")
     try:
@@ -1484,10 +1473,6 @@ def manifest_drop_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        alter_drop_column,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_dropcol_q_")
     try:
@@ -1497,7 +1482,7 @@ def manifest_drop_column_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         alter_drop_column(t, "reading_production_milliwatts")
         if sorted(t._files(t.snapshot())) != files_before:
             raise AssertionError("drop-column moved data files")
-        pre = t.read(spark, version=0)
+        pre = read_as_of(t, spark, version=0)
         if "reading_production_milliwatts" not in pre.columns:
             raise AssertionError("time travel lost the dropped column")
         return t.read(spark).localCheckpoint(eager=True)
@@ -1637,11 +1622,6 @@ def manifest_clone_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        PK,
-        ManifestTable,
-        shallow_clone,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_clone_q_")
     try:
@@ -1661,7 +1641,7 @@ def manifest_clone_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("meter_id") % 2 == 0)
             .select(*PK)
         )
-        clone.delete_keys(spark, doomed)
+        delete_keys(clone, spark, doomed)
         n_total = readings.count()
         if src.read(spark).count() != n_total:
             raise AssertionError("clone mutation leaked into the source")
@@ -1796,10 +1776,6 @@ def manifest_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        optimize_table,
-    )
 
     cols = ["meter_id", "reading_consumption_milliwatts"]
     workdir = tempfile.mkdtemp(prefix="manifest_zorder_q_")
@@ -1872,10 +1848,6 @@ def manifest_hilbert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        optimize_table,
-    )
 
     cols = ["meter_id", "reading_consumption_milliwatts"]
     slice_pred = {
@@ -1923,13 +1895,13 @@ def manifest_hilbert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"hilbert left {c} wide: mean width {mean_w} of "
                     f"span {span}"
                 )
-        rep = t.skipping_report(where=slice_pred)
+        rep = skipping_report(t, where=slice_pred)
         if rep["files_read"] > rep["files_live"] // 2:
             raise AssertionError(
                 f"hilbert layout skipped too little on the 2-D "
                 f"slice: {rep}"
             )
-        return t.read(spark, where=slice_pred).localCheckpoint(
+        return read_where(t, spark, where=slice_pred).localCheckpoint(
             eager=True
         )
     finally:
@@ -1970,9 +1942,6 @@ def manifest_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_ivmjoin_q_")
     dim_pk = ["meter_id"]
@@ -2006,18 +1975,18 @@ def manifest_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "reading_consumption_milliwatts",
             F.col("reading_consumption_milliwatts") + F.lit(10007),
         )
-        a.upsert(spark, restated)                      # ΔA
+        upsert(a, spark, restated)                      # ΔA
         moved = dim.filter(F.col("meter_id") % 9 == 2).withColumn(
             "zone", F.col("zone") + F.lit(100)
         )
-        b.upsert(spark, moved, pk=dim_pk)              # ΔB
+        upsert(b, spark, moved, pk=dim_pk)              # ΔB
 
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), 1
         ).otherwise(-1)
         # leg 1: ΔA ⋈ B_old (the dim BEFORE its change)
-        da = a.change_feed(spark, 0, 1).withColumn("w", sign)
-        b_old = b.read(spark, version=0).select("meter_id", "zone")
+        da = change_feed(a, spark, 0, 1).withColumn("w", sign)
+        b_old = read_as_of(b, spark, version=0).select("meter_id", "zone")
         leg1 = (
             da.join(F.broadcast(b_old), "meter_id")
             .groupBy("zone")
@@ -2029,7 +1998,7 @@ def manifest_ivm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # leg 2: A_new ⋈ ΔB (fact AFTER its change, changed dim rows)
-        db = b.change_feed(spark, 0, 1, pk=dim_pk).withColumn("w", sign)
+        db = change_feed(b, spark, 0, 1, pk=dim_pk).withColumn("w", sign)
         a_new = a.read(spark).select(
             "meter_id", "reading_consumption_milliwatts"
         )
@@ -2182,10 +2151,6 @@ def manifest_consistent_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import time as _time
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        consistent_snapshot,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_consis_q_")
     try:
@@ -2403,11 +2368,6 @@ def manifest_vacuum_roundtrip(
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        compact_log,
-        vacuum_unreferenced,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_vacuum_q_")
     try:
@@ -2418,7 +2378,7 @@ def manifest_vacuum_roundtrip(
             "reading_consumption_milliwatts",
             F.col("reading_consumption_milliwatts") + F.lit(10007),
         )
-        t.upsert(spark, restated)
+        upsert(t, spark, restated)
         if vacuum_unreferenced(t, ttl_s=0.0, dry_run=True):
             raise AssertionError(
                 "vacuum would sweep files still referenced by history"
@@ -2544,9 +2504,6 @@ def manifest_cdc_replica_roundtrip(
     import shutil
     import tempfile
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_cdc_replica_q_")
     try:
@@ -2561,16 +2518,16 @@ def manifest_cdc_replica_roundtrip(
             )
             .withColumn("correction_source", F.lit("restated"))
         )
-        leader.upsert(spark, restated)
+        upsert(leader, spark, restated)
         doomed = readings.filter(F.col("meter_id") % 11 == 5).select(
             "reading_timestamp", "meter_id"
         )
-        leader.delete_keys(spark, doomed)
+        delete_keys(leader, spark, doomed)
 
         follower = ManifestTable(os.path.join(workdir, "follower"))
         n_versions = len(leader.snapshot())
         for v in range(n_versions):
-            feed = leader.change_feed(spark, v - 1, v)
+            feed = change_feed(leader, spark, v - 1, v)
             if feed is None:
                 continue
             feed = feed.localCheckpoint(eager=True)
@@ -2581,12 +2538,12 @@ def manifest_cdc_replica_roundtrip(
                 if follower.read(spark) is None:
                     follower.idempotent_append(spark, upserts)
                 else:
-                    follower.upsert(spark, upserts)
+                    upsert(follower, spark, upserts)
             deletes = feed.filter(
                 F.col("_change_type") == "delete"
             ).select("reading_timestamp", "meter_id")
             if deletes.limit(1).count():
-                follower.delete_keys(spark, deletes)
+                delete_keys(follower, spark, deletes)
         final = follower.read(spark).select(
             "reading_timestamp",
             "meter_id",
@@ -2646,10 +2603,6 @@ def manifest_index_point_read(
     from smart_meter_data_pipeline_spark.sources.index import (
         index_point_read,
         refresh_index,
-    )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        optimize_table,
     )
 
     workdir = tempfile.mkdtemp(prefix="manifest_idx_q_")
@@ -2740,9 +2693,6 @@ def manifest_index_gc_roundtrip(
         refresh_index,
         vacuum_index,
     )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_idx_gc_q_")
     try:
@@ -2756,7 +2706,7 @@ def manifest_index_gc_roundtrip(
         up = day1.filter(F.col("meter_id") % 9 == 2).withColumn(
             "status", F.lit("P")
         )
-        t.upsert(spark, up)
+        upsert(t, spark, up)
         refresh_index(t, spark, "account_code", posting_partitions=4)
         rep = vacuum_index(t, spark, "account_code")
         if rep["postings_removed"] == 0:
@@ -2980,10 +2930,6 @@ def manifest_index_retention_lifecycle(
         refresh_index,
         vacuum_index,
     )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-        delete_where,
-    )
 
     workdir = tempfile.mkdtemp(prefix="manifest_idx_retention_q_")
     try:
@@ -3102,9 +3048,6 @@ def catalog_sliced_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from smart_meter_data_pipeline_spark.sources.catalog import Catalog
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        ManifestTable,
-    )
 
     workdir = tempfile.mkdtemp(prefix="catalog_slice_q_")
     try:

@@ -63,8 +63,20 @@ from smart_meter_data_pipeline_spark.sources.manifest import (
     ManifestTable,
     _publish,
     _record,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_cow import (
+    _batch_key_ranges,
+    _count_and_dates,
+    _rel,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
     _refuse_branch_commits,
     _sweep_unreferenced,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    _filter_rows,
+    _key_ranges,
+    _prune_by_stats,
 )
 
 CATALOG_DIRNAME = "_catalog"
@@ -152,35 +164,16 @@ class Catalog:
         if not files:
             return None
         schema = ManifestTable._evolved_schema(commits)
-        row_filters = []
         if where or where_in:
-            key_ranges: dict[str, tuple] = {}
-            for col, (lo, hi) in (where or {}).items():
-                key_ranges[col] = (
-                    lo if lo is not None else -(2**62),
-                    hi if hi is not None else 2**62,
-                )
-                if lo is not None:
-                    row_filters.append(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    row_filters.append(F.col(col) <= F.lit(hi))
-            for col, vals in (where_in or {}).items():
-                vals = [v for v in vals if v is not None]
-                row_filters.append(F.col(col).isin(vals))
-                if vals and col not in key_ranges:
-                    key_ranges[col] = (min(vals), max(vals))
-            files = t._prune_by_stats(files, commits, key_ranges)
+            files = _prune_by_stats(
+                t, files, commits, _key_ranges(where, where_in)
+            )
             if not files:
                 if schema is not None:
                     return spark.createDataFrame([], schema)
                 files = t._files(commits)[:1]
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(*files)
-        for f in row_filters:
-            df = df.filter(f)
-        return df
+        df = t._read_files(spark, files, schema)
+        return _filter_rows(df, where, where_in)
 
     def skipping_report(
         self,
@@ -195,18 +188,7 @@ class Catalog:
         t = self.table_handle(name)
         commits = self._table_commits(name)
         files = t._files(commits)
-        key_ranges = {
-            col: (
-                lo if lo is not None else -(2**62),
-                hi if hi is not None else 2**62,
-            )
-            for col, (lo, hi) in (where or {}).items()
-        }
-        for col, vals in (where_in or {}).items():
-            vals = [v for v in vals if v is not None]
-            if vals and col not in key_ranges:
-                key_ranges[col] = (min(vals), max(vals))
-        kept = t._prune_by_stats(files, commits, key_ranges)
+        kept = _prune_by_stats(t, files, commits, _key_ranges(where, where_in))
         return {
             "files_live": len(files),
             "files_read": len(kept),
@@ -305,7 +287,7 @@ def optimize_catalog_table(
         else:
             packed = src_df.repartition(int(n_out))
         staged = t._stage(packed)
-        count, dates = t._count_and_dates(spark, staged)
+        count, dates = _count_and_dates(t, spark, staged)
         fence = ManifestTable._fence(numbered)
         record = _record(
             t,
@@ -515,7 +497,7 @@ class CatalogTxn:
                 t._remove_staged_file(r)
         removed_chain = {r for r in removed if r not in prior_added}
         kept = [f for f in prior_added if f not in removed]
-        count, dates = t._count_and_dates(spark, kept + staged)
+        count, dates = _count_and_dates(t, spark, kept + staged)
         self._payloads[name] = _record(
             t,
             staged,
@@ -656,8 +638,8 @@ class CatalogTxn:
                 for c in t.stats_columns
                 if c in pk and c in clean.columns
             ]
-            key_ranges = t._batch_key_ranges(clean, stat_cols)
-            cand = t._prune_by_stats(cand, commits, key_ranges)
+            key_ranges = _batch_key_ranges(clean, stat_cols)
+            cand = _prune_by_stats(t, cand, commits, key_ranges)
             staged: list[str] = []
             removed_rel: list[str] = []
             n_matched = 0
@@ -681,7 +663,7 @@ class CatalogTxn:
                         .collect()
                     ]
                     removed_rel = sorted(
-                        t._rel(u) for u in affected
+                        _rel(t, u) for u in affected
                     )
                     survivors = (
                         tagged.filter(F.col("_file").isin(affected))
@@ -736,8 +718,8 @@ class CatalogTxn:
                 for c in t.stats_columns
                 if c in pk and c in in_keys.columns
             ]
-            key_ranges = t._batch_key_ranges(in_keys, stat_cols)
-            cand = t._prune_by_stats(files, commits, key_ranges)
+            key_ranges = _batch_key_ranges(in_keys, stat_cols)
+            cand = _prune_by_stats(t, files, commits, key_ranges)
             if not cand:
                 return 0
             schema = ManifestTable._evolved_schema(commits)
@@ -755,7 +737,7 @@ class CatalogTxn:
                 r["_file"]
                 for r in matched.select("_file").distinct().collect()
             ]
-            removed_rel = sorted(t._rel(u) for u in affected)
+            removed_rel = sorted(_rel(t, u) for u in affected)
             survivors = (
                 tagged.filter(F.col("_file").isin(affected))
                 .join(in_keys.select(*pk), pk, "left_anti")
@@ -809,7 +791,7 @@ class CatalogTxn:
             r["_file"]
             for r in matched.select("_file").distinct().collect()
         ]
-        removed_rel = sorted(t._rel(u) for u in affected)
+        removed_rel = sorted(_rel(t, u) for u in affected)
         survivors = (
             tagged.filter(F.col("_file").isin(affected))
             .filter(

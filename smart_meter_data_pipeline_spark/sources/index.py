@@ -47,9 +47,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smart_meter_data_pipeline_spark.sources.manifest import (
-    ManifestTable,
+from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+from smart_meter_data_pipeline_spark.sources.manifest_cow import delete_keys
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
     optimize_table,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    read_where,
+    skipping_report,
 )
 
 INDEXES_DIRNAME = "_indexes"
@@ -319,7 +324,7 @@ def index_candidate_files(
     shared core of :func:`index_point_read` and
     :func:`text_index_search` (``index_name`` selects which posting
     table; default the exact-value index), also consulted by
-    ``ManifestTable.read(where_in=...)`` (round 12) so plain reads
+    ``manifest_skipping.read_where(where_in=...)`` (round 12) so reads
     get posting-exact pruning without the dedicated API. Returns
     ``(absolute file paths, report)``. CURRENT-only by contract: a
     time-travel read must not consult the index (vacuum_index keeps
@@ -352,12 +357,10 @@ def index_candidate_files(
     posting_rep = {"files_live": 0, "files_read": 0}
     n_capped = 0
     if vals and indexed_live:
-        idx_df = idx.read(spark, where_in={"v": vals})
+        idx_df = read_where(idx, spark, where_in={"v": vals})
         if idx_df is not None:
             if want_report:
-                posting_rep = idx.skipping_report(
-                    where_in={"v": vals}
-                )
+                posting_rep = skipping_report(idx, where_in={"v": vals})
             cap = (
                 df_cap
                 if df_cap is not None
@@ -409,7 +412,7 @@ def index_point_read(
     ``posting_files_read``) the same way ``skipping_report`` does for
     the metadata indexes.
 
-    The posting lookup itself goes through ``read(where_in=...)`` so
+    The posting lookup itself goes through ``read_where(where_in=...)`` so
     the posting table's ``v`` zone maps prune posting FILES before a
     row is touched; the postings collect is bounded by the files that
     actually contain the looked-up values — the point-lookup regime
@@ -480,9 +483,9 @@ def text_index_search(
     capped: set[str] = set()
     posting_rep = {"files_live": 0, "files_read": 0}
     if toks and indexed_live:
-        idx_df = idx.read(spark, where_in={"v": toks})
+        idx_df = read_where(idx, spark, where_in={"v": toks})
         if idx_df is not None:
-            posting_rep = idx.skipping_report(where_in={"v": toks})
+            posting_rep = skipping_report(idx, where_in={"v": toks})
             # df-cap (round 13): a stopword-frequency token is posted
             # in ~every file — its posting list collect would be
             # O(n_files) driver-side and prune nothing. Count per
@@ -499,7 +502,7 @@ def text_index_search(
             )
             uncapped = [t for t in toks if t not in capped]
             if uncapped:
-                sub = idx.read(spark, where_in={"v": uncapped})
+                sub = read_where(idx, spark, where_in={"v": uncapped})
                 if sub is not None:
                     for r in (
                         sub.select("v", "rel_file")
@@ -589,7 +592,7 @@ def vacuum_index(
     stale = idx_df.join(
         F.broadcast(live_df), "rel_file", "left_anti"
     ).select("v", "rel_file")
-    n = idx.delete_keys(spark, stale, pk=["v", "rel_file"])
+    n = delete_keys(idx, spark, stale, pk=["v", "rel_file"])
     if n:
         # Stamp the chain head this vacuum's live set came from: a
         # reader on an OLDER snapshot may hold files whose postings

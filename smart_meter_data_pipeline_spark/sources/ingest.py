@@ -11,12 +11,18 @@ Spark primitives:
 - status default 'V' (:58, :125) and ``arrived_at`` stamping (:116).
 - S5/T1 idempotent batched sink (:104-114 ``ON CONFLICT DO NOTHING``):
   dedup within the batch on the PK (reading_timestamp, meter_id), then
-  anti-join against the target's *overlapping date partitions only* —
-  partition pruning keeps the existing-keys scan proportional to the
-  batch's time range, not the table size, which is what makes this
-  viable on a 100 TB fact table. (On a Delta/Iceberg deployment this
-  whole function is a single ``MERGE WHEN NOT MATCHED INSERT``; plain
-  parquet is used here because the test container has no Delta.)
+  anti-join against the keys already stored on the batch's dates. The
+  date filter prunes the key SCAN to the batch's ``reading_date``
+  partitions, but ``spark.read.parquet(target)`` first lists every date
+  partition of the table; and the scan reads every key already on
+  those dates, so the k-th micro-batch of a day reads the keys the
+  batches before it landed that day. (On a Delta/Iceberg deployment
+  this whole function is a single ``MERGE WHEN NOT MATCHED INSERT``;
+  plain parquet is used here because the test container has no Delta.)
+- When one batch holds two different payloads for one PK, exactly one
+  row lands, and which one is unspecified here (``dropDuplicates``
+  keeps an arbitrary row); in the reference the first row inserted
+  wins. A later redelivery of either payload lands nothing.
 """
 
 from __future__ import annotations
@@ -146,12 +152,14 @@ def idempotent_append(spark: SparkSession, batch: DataFrame, target: str) -> int
     """Duplicate-safe append: the Spark expression of
     ``INSERT ... ON CONFLICT (reading_timestamp, meter_id) DO NOTHING``.
 
-    1. in-batch dedup on the PK,
-    2. anti-join against existing keys *from overlapping date
-       partitions only* (the target is partitioned by ``reading_date``,
-       mirroring the reference's 1-day hypertable chunks,
-       01_create_schema.sql:98-101 — the key scan prunes to the
-       batch's dates),
+    1. in-batch dedup on the PK (an arbitrary row of a conflicting
+       pair survives),
+    2. anti-join against the existing keys of the batch's dates (the
+       target is partitioned by ``reading_date``, mirroring the
+       reference's 1-day hypertable chunks,
+       01_create_schema.sql:98-101): the read lists every date
+       partition, then the filter prunes the scan to the batch's
+       dates, where it reads every key landed so far,
     3. append, partitioned by date.
 
     Steps 1-3 run as one write job. Returns the number of rows

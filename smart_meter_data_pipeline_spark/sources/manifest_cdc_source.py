@@ -4,7 +4,7 @@ numbers play the Kafka offset), each micro-batch delivers exactly the
 files the commits in its offset range ADDED, and checkpoint recovery
 replays deterministically because a batch is a pure function of its
 offset range over immutable commits. This is the post-image CDC feed
-(the streaming form of ``ManifestTable.diff``): appends and the added
+(the streaming form of ``manifest_timetravel.diff``): appends and the added
 half of copy-on-write mutations stream through; removals are metadata
 the batch consumer handles (same contract as ``diff``).
 

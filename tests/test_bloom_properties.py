@@ -7,6 +7,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    _prune_by_bloom,
+)
 
 
 def _bitmap(values):
@@ -86,7 +89,7 @@ def test_dict_prune_exact_membership(tmp_path_factory, file_dicts, probe):
 
     files = [_os.path.join(t.data_dir, r) for r in commits[0]["added"]]
     kept = set(
-        t._prune_by_bloom(files, commits, {"plan": sorted(probe)})
+        _prune_by_bloom(t, files, commits, {"plan": sorted(probe)})
     )
     for r, vals in zip(rels, file_dicts):
         f = _os.path.join(t.data_dir, r)
@@ -117,10 +120,10 @@ def test_dict_and_int_probes_never_cross_encodings(tmp_path):
     ]
     files = [_os.path.join(t.data_dir, "s/a.parquet")]
     # int probe on the STRING column: no prune (wrong encoding)
-    assert t._prune_by_bloom(files, commits, {"plan": [7]}) == files
+    assert _prune_by_bloom(t, files, commits, {"plan": [7]}) == files
     # string probe on the INT column: no prune (wrong encoding)
-    assert t._prune_by_bloom(files, commits, {"meter": ["7"]}) == files
+    assert _prune_by_bloom(t, files, commits, {"meter": ["7"]}) == files
     # right-typed probes behave: bloom miss prunes, dict miss prunes
-    assert t._prune_by_bloom(files, commits, {"plan": ["basic"]}) == []
-    present = t._prune_by_bloom(files, commits, {"meter": [7]})
+    assert _prune_by_bloom(t, files, commits, {"plan": ["basic"]}) == []
+    present = _prune_by_bloom(t, files, commits, {"meter": [7]})
     assert present == files

@@ -12,6 +12,7 @@ from smart_meter_data_pipeline_spark.sources.catalog import Catalog
 from smart_meter_data_pipeline_spark.sources.manifest import (
     CommitConflictError,
 )
+from smart_meter_data_pipeline_spark.sources.manifest_cow import upsert
 
 
 def _facts(spark, lo, hi, day=1):
@@ -805,8 +806,8 @@ def test_catalog_table_view_refuses_direct_writes(spark, cat):
     with pytest.raises(TypeError, match="read/maintenance-only"):
         view.idempotent_append(spark, _facts(spark, 100, 110, day=2))
     with pytest.raises(TypeError, match="read/maintenance-only"):
-        view.upsert(
-            spark, _facts(spark, 0, 5).withColumn("v", F.lit(0))
+        upsert(
+            view, spark, _facts(spark, 0, 5).withColumn("v", F.lit(0))
         )
     # reads and index maintenance stay fully functional
     assert view.read(spark).count() == 100

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from smart_meter_data_pipeline_spark.__main__ import main
+from smart_meter_data_pipeline_spark.sources.manifest_cow import upsert
 
 
 def test_cli_list(capsys):
@@ -51,7 +52,8 @@ def test_cli_history_and_restore(spark, tmp_path, capsys):
     tdir = str(tmp_path / "fact")
     t = mf.ManifestTable(tdir)
     t.idempotent_append(spark, _valid_batch(spark, 1, 11))
-    t.upsert(
+    upsert(
+        t,
         spark,
         _valid_batch(spark, 5, 8).withColumn(
             "reading_consumption_milliwatts", F.lit(7777)

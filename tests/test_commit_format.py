@@ -26,6 +26,19 @@ from smart_meter_data_pipeline_spark.sources.catalog import (
     optimize_catalog_table,
 )
 from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+from smart_meter_data_pipeline_spark.sources.manifest_cow import (
+    delete_keys,
+    delete_where,
+    upsert,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
+    alter_drop_column,
+    optimize_table,
+    shallow_clone,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_timetravel import (
+    restore_version,
+)
 
 RECORD = {"version", "added", "count", "dates", "schema", "stats", "blooms",
           "committed_at"}
@@ -109,21 +122,21 @@ def test_every_writer_keeps_the_commit_format(spark, tmp_path):
     t.idempotent_append(spark, _rows(spark, 0, 20))
     record("append")
     t.idempotent_append(spark, _rows(spark, 20, 40))
-    t.upsert(spark, _rows(spark, 5, 8, consumption=99))
+    upsert(t, spark, _rows(spark, 5, 8, consumption=99))
     record("upsert")
-    t.delete_keys(spark, _rows(spark, 30, 31).select(*manifest.PK))
+    delete_keys(t, spark, _rows(spark, 30, 31).select(*manifest.PK))
     record("delete_keys")
-    manifest.delete_where(t, spark, "meter_id", 10, 12)
+    delete_where(t, spark, "meter_id", 10, 12)
     record("delete_where")
-    manifest.optimize_table(t, spark)
+    optimize_table(t, spark)
     record("optimize_table")
-    manifest.restore_version(t, 1)
+    restore_version(t, 1)
     record("restore_version")
-    manifest.alter_drop_column(t, "reading_production_milliwatts")
+    alter_drop_column(t, "reading_production_milliwatts")
     record("alter_drop_column")
     # the tail commit compact_log keeps
     t.idempotent_append(spark, _rows(spark, 40, 50))
-    clone = manifest.shallow_clone(t, str(tmp_path / "clone"))
+    clone = shallow_clone(t, str(tmp_path / "clone"))
     published["shallow_clone"] = clone.snapshot()[0]
     merged = sum(c.get("count", 0) for c in t.snapshot()[:8])
     assert manifest.compact_log(t, keep_last=1) == 8
@@ -198,16 +211,16 @@ def _kill():
 
 TABLE_WRITERS = {
     "append": lambda spark, t: t.idempotent_append(spark, _rows(spark, 30, 40)),
-    "upsert": lambda spark, t: t.upsert(spark, _rows(spark, 5, 8, 99)),
-    "delete_keys": lambda spark, t: t.delete_keys(
-        spark, _rows(spark, 5, 8).select(*manifest.PK)
+    "upsert": lambda spark, t: upsert(t, spark, _rows(spark, 5, 8, 99)),
+    "delete_keys": lambda spark, t: delete_keys(
+        t, spark, _rows(spark, 5, 8).select(*manifest.PK)
     ),
-    "delete_where": lambda spark, t: manifest.delete_where(
+    "delete_where": lambda spark, t: delete_where(
         t, spark, "meter_id", 0, 12
     ),
-    "optimize_table": lambda spark, t: manifest.optimize_table(t, spark),
-    "restore_version": lambda spark, t: manifest.restore_version(t, 0),
-    "alter_drop_column": lambda spark, t: manifest.alter_drop_column(
+    "optimize_table": lambda spark, t: optimize_table(t, spark),
+    "restore_version": lambda spark, t: restore_version(t, 0),
+    "alter_drop_column": lambda spark, t: alter_drop_column(
         t, "reading_production_milliwatts"
     ),
     "compact_log": lambda spark, t: manifest.compact_log(t, keep_last=1),

@@ -14,6 +14,34 @@ import time
 import pytest
 
 from smart_meter_data_pipeline_spark.sources import ingest, manifest
+from smart_meter_data_pipeline_spark.sources.manifest_cow import (
+    _batch_key_ranges,
+    delete_keys,
+    delete_where,
+    upsert,
+    upsert_if_newer,
+    upsert_partial,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
+    alter_drop_column,
+    optimize_table,
+    shallow_clone,
+    vacuum_unreferenced,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    _prune_by_stats,
+    read_where,
+    skipping_report,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_timetravel import (
+    change_feed,
+    diff,
+    history,
+    read_as_of,
+    restore_version,
+    schema_history,
+    version_asof,
+)
 
 
 GOOD = {
@@ -282,22 +310,22 @@ def test_time_travel_reads_are_stable_snapshots(spark, table_dir):
     t = manifest.ManifestTable(table_dir)
     t.idempotent_append(spark, _valid_batch(spark, 1, 11))     # v0: 10
     t.idempotent_append(spark, _valid_batch(spark, 11, 31))    # v1: +20
-    v0_before = t.read(spark, version=0).count()
+    v0_before = read_as_of(t, spark, version=0).count()
     t.idempotent_append(spark, _valid_batch(spark, 31, 36))    # v2: +5
 
     assert t.read(spark).count() == 35
-    assert t.read(spark, version=0).count() == 10 == v0_before
-    assert t.read(spark, version=1).count() == 30
-    assert t.read(spark, version=2).count() == 35
+    assert read_as_of(t, spark, version=0).count() == 10 == v0_before
+    assert read_as_of(t, spark, version=1).count() == 30
+    assert read_as_of(t, spark, version=2).count() == 35
     # meters visible at v1 are exactly 1-30
     got = {
-        r["meter_id"] for r in t.read(spark, version=1).collect()
+        r["meter_id"] for r in read_as_of(t, spark, version=1).collect()
     }
     assert got == set(range(1, 31))
     with pytest.raises(ValueError):
-        t.read(spark, version=3)
+        read_as_of(t, spark, version=3)
     with pytest.raises(ValueError):
-        t.read(spark, version=-1)
+        read_as_of(t, spark, version=-1)
 
 
 def test_diff_is_the_change_data_feed(spark, table_dir):
@@ -308,21 +336,21 @@ def test_diff_is_the_change_data_feed(spark, table_dir):
     t.idempotent_append(spark, _valid_batch(spark, 11, 31))   # v1: +11-30
     t.idempotent_append(spark, _valid_batch(spark, 31, 36))   # v2: +31-35
 
-    d01 = {r["meter_id"] for r in t.diff(spark, 0, 1).collect()}
+    d01 = {r["meter_id"] for r in diff(t, spark, 0, 1).collect()}
     assert d01 == set(range(11, 31))
-    d02 = {r["meter_id"] for r in t.diff(spark, 0, 2).collect()}
+    d02 = {r["meter_id"] for r in diff(t, spark, 0, 2).collect()}
     assert d02 == set(range(11, 36))
     # from the empty table: everything up to v0
-    dm10 = {r["meter_id"] for r in t.diff(spark, -1, 0).collect()}
+    dm10 = {r["meter_id"] for r in diff(t, spark, -1, 0).collect()}
     assert dm10 == set(range(1, 11))
     # empty range
-    assert t.diff(spark, 1, 1) is None
+    assert diff(t, spark, 1, 1) is None
     with pytest.raises(ValueError):
-        t.diff(spark, 2, 3)
+        diff(t, spark, 2, 3)
     with pytest.raises(ValueError):
-        t.diff(spark, -2, 0)
+        diff(t, spark, -2, 0)
 
-    hist = t.history()
+    hist = history(t)
     assert [h["version"] for h in hist] == [0, 1, 2]
     assert all(h["n_files"] >= 1 for h in hist)
 
@@ -398,13 +426,13 @@ def test_vacuum_sweeps_only_stale_unreferenced_stages(spark, table_dir):
     leaked = t._stage(_valid_batch(spark, 100, 105))
     leak_dir = os.path.join(t.data_dir, os.path.dirname(leaked[0]))
     # fresh → protected by TTL
-    assert manifest.vacuum_unreferenced(t, ttl_s=3600) == 0
+    assert vacuum_unreferenced(t, ttl_s=3600) == 0
     assert os.path.isdir(leak_dir)
     # aged (file-level mtimes) → swept; referenced data untouched
     old = _time.time() - 7200
     for fname in os.listdir(leak_dir):
         os.utime(os.path.join(leak_dir, fname), (old, old))
-    assert manifest.vacuum_unreferenced(t, ttl_s=3600) >= 1
+    assert vacuum_unreferenced(t, ttl_s=3600) >= 1
     assert not os.path.isdir(leak_dir)
     assert t.read(spark).count() == 10
 
@@ -430,7 +458,7 @@ def test_vacuum_refuses_leftover_branch_commits(spark, table_dir):
         )
     for dry_run in (False, True):
         with pytest.raises(ValueError, match="branch 'audit' has commits"):
-            manifest.vacuum_unreferenced(t, ttl_s=3600, dry_run=dry_run)
+            vacuum_unreferenced(t, ttl_s=3600, dry_run=dry_run)
     for f in branch_files:
         assert os.path.exists(os.path.join(t.data_dir, f))
     assert t.read(spark).count() == 10
@@ -464,8 +492,8 @@ def test_compaction_never_reuses_commit_numbers(spark, table_dir):
     assert names[-1] == "0000000006.json"
     assert t.read(spark).count() == 70
     # positional time travel still walks the current log order
-    assert t.read(spark, version=0).count() == 40  # the merged base
-    assert t.diff(spark, 2, 3).count() == 10  # the new commit only
+    assert read_as_of(t, spark, version=0).count() == 40  # the merged base
+    assert diff(t, spark, 2, 3).count() == 10  # the new commit only
 
 
 def test_put_if_absent_missing_dir_is_lost_race(tmp_path):
@@ -630,12 +658,12 @@ def test_recover_interrupted_legacy_compaction(spark, table_dir):
 
     # vacuum on a handle from before the crash refuses to run
     with pytest.raises(RuntimeError, match="refusing to vacuum"):
-        manifest.vacuum_unreferenced(t, ttl_s=0)
+        vacuum_unreferenced(t, ttl_s=0)
 
     reopened = manifest.ManifestTable(table_dir)
     assert reopened.read(spark).count() == 10
     assert not os.path.isdir(reopened.commits_dir + ".old")
-    assert manifest.vacuum_unreferenced(reopened, ttl_s=0) == 0
+    assert vacuum_unreferenced(reopened, ttl_s=0) == 0
 
 
 def _read_vals(spark, t):
@@ -661,7 +689,7 @@ def test_upsert_updates_matches_and_inserts_rest(spark, table_dir):
     restated, _ = ingest.split_valid(
         ingest.classify(ingest.parse_messages(raw))
     )
-    res = t.upsert(spark, restated)
+    res = upsert(t, spark, restated)
     assert res == {"updated": 6, "inserted": 5}  # 15-20 match, 21-25 new
 
     vals = _read_vals(spark, t)
@@ -673,11 +701,11 @@ def test_upsert_updates_matches_and_inserts_rest(spark, table_dir):
     # time travel: version 0 still shows the original values
     v0 = {
         (r["meter_id"], r["reading_consumption_milliwatts"])
-        for r in t.read(spark, version=0).collect()
+        for r in read_as_of(t, spark, version=0).collect()
     }
     assert v0 == {(m, 1500) for m in range(1, 21)}
     # history exposes the rewrite
-    assert t.history()[-1]["n_removed"] >= 1
+    assert history(t)[-1]["n_removed"] >= 1
 
 
 @pytest.mark.slow
@@ -691,12 +719,12 @@ def test_delete_keys_then_reinsert_lands(spark, table_dir):
     doomed = _valid_batch(spark, 10, 16).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, doomed) == 6
+    assert delete_keys(t, spark, doomed) == 6
     left = {r["meter_id"] for r in t.read(spark).collect()}
     assert left == set(range(1, 31)) - set(range(10, 16))
     # deleting the same keys again is a no-op, no commit added
     n_commits = len(t.snapshot())
-    assert t.delete_keys(spark, doomed) == 0
+    assert delete_keys(t, spark, doomed) == 0
     assert len(t.snapshot()) == n_commits
 
     # delete-then-reinsert: the append sees them as fresh
@@ -731,7 +759,7 @@ def test_mutation_loses_race_to_append_and_retries(spark, table_dir):
     restated, _ = ingest.split_valid(
         ingest.classify(ingest.parse_messages(raw))
     )
-    res = t.upsert(spark, restated)
+    res = upsert(t, spark, restated)
     t._pre_publish_hook = None
     assert res == {"updated": 6, "inserted": 0}
 
@@ -758,7 +786,7 @@ def test_compaction_nets_out_removed_files_then_vacuum_reclaims(
         t.idempotent_append(spark, _valid_batch(spark, lo, lo + 10))
     # delete ALL rows of the second commit's file(s)
     dead = _valid_batch(spark, 11, 21).select("reading_timestamp", "meter_id")
-    assert t.delete_keys(spark, dead) == 10
+    assert delete_keys(t, spark, dead) == 10
     assert t.read(spark).count() == 20
 
     commits = t.snapshot()
@@ -782,7 +810,7 @@ def test_compaction_nets_out_removed_files_then_vacuum_reclaims(
     for root, _dirs, fnames in os.walk(t.data_dir):
         for fname in fnames:
             os.utime(os.path.join(root, fname), (old, old))
-    swept = manifest.vacuum_unreferenced(t, ttl_s=3600)
+    swept = vacuum_unreferenced(t, ttl_s=3600)
     assert swept >= 1
     for f in removed:
         assert not os.path.exists(os.path.join(t.data_dir, f))
@@ -817,7 +845,7 @@ def test_schema_evolution_additive_columns(spark, table_dir):
         assert rows[m] == m / 100.0
 
     # time travel to v0 shows the ORIGINAL schema (no quality_score)
-    assert "quality_score" not in t.read(spark, version=0).columns
+    assert "quality_score" not in read_as_of(t, spark, version=0).columns
 
     # type change on an existing column is refused
     bad = _valid_batch(spark, 30, 35).withColumn(
@@ -854,7 +882,7 @@ def test_schema_evolution_through_upsert(spark, table_dir):
         ingest.classify(ingest.parse_messages(raw))
     )
     restated = restated.withColumn("correction_source", F.lit("manual"))
-    res = t.upsert(spark, restated)
+    res = upsert(t, spark, restated)
     assert res == {"updated": 6, "inserted": 0}
 
     df = t.read(spark)
@@ -889,7 +917,7 @@ def test_optimize_bin_packs_small_files(spark, table_dir):
     n_files_before = sum(len(c["added"]) for c in t.snapshot())
     n_versions_before = len(t.snapshot())
 
-    res = manifest.optimize_table(t, spark, small_file_bytes=32 << 20)
+    res = optimize_table(t, spark, small_file_bytes=32 << 20)
     assert res["files_rewritten"] == n_files_before
     assert 0 < res["files_created"] < n_files_before
 
@@ -900,10 +928,10 @@ def test_optimize_bin_packs_small_files(spark, table_dir):
     assert len(live) == res["files_created"]
     # pre-optimize version still reads (old files intact on disk)
     assert (
-        t.read(spark, version=n_versions_before - 1).count() == len(before)
+        read_as_of(t, spark, version=n_versions_before - 1).count() == len(before)
     )
     # idempotent: nothing small left to pack (single output file)
-    res2 = manifest.optimize_table(t, spark, small_file_bytes=32 << 20)
+    res2 = optimize_table(t, spark, small_file_bytes=32 << 20)
     assert res2["files_rewritten"] == 0
 
     # dedup still exact against the packed layout (1-100 committed)
@@ -916,7 +944,7 @@ def test_optimize_bin_packs_small_files(spark, table_dir):
     for root, _dirs, fnames in os.walk(t.data_dir):
         for fname in fnames:
             os.utime(os.path.join(root, fname), (old, old))
-    assert manifest.vacuum_unreferenced(t, ttl_s=3600) >= n_files_before
+    assert vacuum_unreferenced(t, ttl_s=3600) >= n_files_before
     assert t.read(spark).count() == len(before) + 19 + 5
 
 
@@ -944,7 +972,7 @@ def test_optimize_loses_fence_race_to_append_and_retries(spark, table_dir):
 
     manifest._put_if_absent = racing_put
     try:
-        res = manifest.optimize_table(t, spark, small_file_bytes=32 << 20)
+        res = optimize_table(t, spark, small_file_bytes=32 << 20)
     finally:
         manifest._put_if_absent = real_put
     assert res["rounds"] == 2  # first publish lost, retry won
@@ -991,18 +1019,18 @@ def test_changed_dates_sees_deletes_and_skips_optimize(spark, table_dir):
     dead = batch_on("2024-03-02", 1, 11).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, dead) == 10
+    assert delete_keys(t, spark, dead) == 10
     assert changed_dates_since(spark, t, v_base) == [dt.date(2024, 3, 2)]
 
     # optimize rewrites every remaining small file — rows unchanged,
     # so the refresh driver must see nothing new
     v_after_delete = len(t.snapshot()) - 1
-    res = manifest.optimize_table(t, spark, small_file_bytes=32 << 20)
+    res = optimize_table(t, spark, small_file_bytes=32 << 20)
     assert res["files_rewritten"] > 0
     assert changed_dates_since(spark, t, v_after_delete) == []
     # and an upsert's restated date still surfaces
     restated = batch_on("2024-03-01", 5, 8)
-    t.upsert(spark, restated)
+    upsert(t, spark, restated)
     assert changed_dates_since(
         spark, t, len(t.snapshot()) - 2
     ) == [dt.date(2024, 3, 1)]
@@ -1041,7 +1069,7 @@ def test_read_dates_prunes_files_from_metadata(spark, table_dir):
     dead = batch_on("2024-03-02", 1, 6).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, dead) == 5
+    assert delete_keys(t, spark, dead) == 5
     assert t.read(spark, dates=[dt.date(2024, 3, 2)]).count() == 15
     # round 10: a committed table with zero matching files reads as an
     # EMPTY frame (schema known), not None — same contract as a table
@@ -1070,7 +1098,7 @@ def test_file_skipping_stats_prune_mutation_scans(spark, table_dir):
 
     live = t._files(commits)
     # a delete targeting meters 5001-5050 must prune ALL low-range files
-    pruned = t._prune_by_stats(live, commits, {"meter_id": (5001, 5050)})
+    pruned = _prune_by_stats(t, live, commits, {"meter_id": (5001, 5050)})
     low_files = set(commits[0]["added"])
     assert all(
         os.path.relpath(f, t.data_dir) not in low_files for f in pruned
@@ -1079,7 +1107,7 @@ def test_file_skipping_stats_prune_mutation_scans(spark, table_dir):
     # legacy commits without stats are never skipped
     no_stats = [dict(c, stats={}) for c in commits]
     assert (
-        t._prune_by_stats(live, no_stats, {"meter_id": (5001, 5050)})
+        _prune_by_stats(t, live, no_stats, {"meter_id": (5001, 5050)})
         == live
     )
     # legacy single-column entries ([min, max] lists) still prune
@@ -1093,15 +1121,15 @@ def test_file_skipping_stats_prune_mutation_scans(spark, table_dir):
         )
         for c in commits
     ]
-    assert t._prune_by_stats(
-        live, legacy, {"meter_id": (5001, 5050)}
+    assert _prune_by_stats(
+        t, live, legacy, {"meter_id": (5001, 5050)}
     ) == pruned
 
     # end-to-end: the pruned delete is still exact
     doomed = _valid_batch(spark, 5001, 5051).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, doomed) == 50
+    assert delete_keys(t, spark, doomed) == 50
     left = {r["meter_id"] for r in t.read(spark).collect()}
     assert left == set(range(1, 101)) | set(range(5051, 5101))
 
@@ -1136,13 +1164,13 @@ def test_concurrent_upserts_serialize_cleanly(spark, table_dir):
             return
         fired.append(True)
         other = manifest.ManifestTable(table_dir)
-        assert other.upsert(spark, restate(1, 6, 1111)) == {
+        assert upsert(other, spark, restate(1, 6, 1111)) == {
             "updated": 5,
             "inserted": 0,
         }
 
     t._pre_publish_hook = land_other_upsert
-    assert t.upsert(spark, restate(10, 16, 2222)) == {
+    assert upsert(t, spark, restate(10, 16, 2222)) == {
         "updated": 6,
         "inserted": 0,
     }
@@ -1185,7 +1213,7 @@ def test_optimize_cluster_by_tightens_stats_and_skipping(spark, table_dir):
         ),
     )
 
-    res = manifest.optimize_table(
+    res = optimize_table(
         t,
         spark,
         small_file_bytes=32 << 20,
@@ -1197,7 +1225,7 @@ def test_optimize_cluster_by_tightens_stats_and_skipping(spark, table_dir):
     assert 2 <= res["files_created"] <= 4
     commits = t.snapshot()
     live = t._files(commits)
-    pruned = t._prune_by_stats(live, commits, {"meter_id": (1, 100)})
+    pruned = _prune_by_stats(t, live, commits, {"meter_id": (1, 100)})
     # post-clustering: the low-range probe touches a strict subset
     assert len(pruned) < len(live)
     # contents identical, ranges near-disjoint
@@ -1213,7 +1241,7 @@ def test_optimize_cluster_by_tightens_stats_and_skipping(spark, table_dir):
     doomed = _valid_batch(spark, 9001, 9101).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, doomed) == 100
+    assert delete_keys(t, spark, doomed) == 100
     assert t.read(spark).count() == 100
 
 
@@ -1228,7 +1256,7 @@ def test_upsert_rejects_batch_missing_table_columns(spark, table_dir):
 
     partial = _valid_batch(spark, 5, 8).drop("status")
     with pytest.raises(ValueError, match="missing table columns"):
-        t.upsert(spark, partial)
+        upsert(t, spark, partial)
 
     # nothing committed, nothing nulled
     df = t.read(spark)
@@ -1251,7 +1279,7 @@ def test_diff_reads_under_evolved_schema(spark, table_dir):
     )
     t.idempotent_append(spark, evolved)  # v1: adds a column
 
-    feed = t.diff(spark, -1, 1)
+    feed = diff(t, spark, -1, 1)
     assert "quality_score" in feed.columns
     rows = {r["meter_id"]: r["quality_score"] for r in feed.collect()}
     assert len(rows) == 20
@@ -1259,7 +1287,7 @@ def test_diff_reads_under_evolved_schema(spark, table_dir):
     assert all(rows[m] == m / 100.0 for m in range(11, 21))
 
     # a sub-range that ends before the evolution sees the old schema
-    assert "quality_score" not in t.diff(spark, -1, 0).columns
+    assert "quality_score" not in diff(t, spark, -1, 0).columns
 
 
 def test_file_stats_non_integer_column_skips_not_breaks(spark, table_dir):
@@ -1342,8 +1370,8 @@ def test_changed_dates_is_metadata_only_and_mutation_exact(
     )
     # v1: upsert restating two d1 meters — survivors carry d3 rows,
     # but d3 is NOT a changed date of this commit
-    res = t.upsert(
-        spark, batch_on_days([("2024-03-01", 1), ("2024-03-01", 2)])
+    res = upsert(
+        t, spark, batch_on_days([("2024-03-01", 1), ("2024-03-01", 2)])
     )
     assert res["updated"] == 2
     assert changed_dates_since(spark, t, 0) == [dt.date(2024, 3, 1)]
@@ -1361,7 +1389,7 @@ def test_changed_dates_is_metadata_only_and_mutation_exact(
     for root, _, names in os.walk(t.data_dir):
         for n in names:
             os.utime(os.path.join(root, n), (old, old))
-    manifest.vacuum_unreferenced(t, ttl_s=3600)
+    vacuum_unreferenced(t, ttl_s=3600)
     assert changed_dates_since(spark, t, -1) == [
         dt.date(2024, 3, 1),
         dt.date(2024, 3, 3),
@@ -1389,9 +1417,9 @@ def test_restore_version_rolls_back_and_keeps_history(spark, table_dir):
     restated = _valid_batch(spark, 5, 8).withColumn(
         "reading_consumption_milliwatts", F.lit(9999)
     )
-    t.upsert(spark, restated)                                 # v2
+    upsert(t, spark, restated)                                 # v2
 
-    res = manifest.restore_version(t, 0)                      # v3
+    res = restore_version(t, 0)                      # v3
     assert res["restored_version"] == 0
     assert res["files_removed"] > 0 and res["files_readded"] > 0
 
@@ -1405,7 +1433,7 @@ def test_restore_version_rolls_back_and_keeps_history(spark, table_dir):
     # history intact: v2 still time-travels to the post-upsert state
     v2 = {
         r["meter_id"]: r["reading_consumption_milliwatts"]
-        for r in t.read(spark, version=2).collect()
+        for r in read_as_of(t, spark, version=2).collect()
     }
     assert len(v2) == 20 and v2[5] == 9999
 
@@ -1413,7 +1441,7 @@ def test_restore_version_rolls_back_and_keeps_history(spark, table_dir):
     assert changed_dates_since(spark, t, 2) == [dt.date(2024, 3, 1)]
 
     # restoring to the restored state is a no-op commit-wise
-    assert manifest.restore_version(t, 3) == {
+    assert restore_version(t, 3) == {
         "files_readded": 0,
         "files_removed": 0,
         "restored_version": 3,
@@ -1456,10 +1484,10 @@ def test_restore_surfaces_dates_a_reverted_delete_emptied(spark, table_dir):
     dead = batch_on("2024-03-02", 1, 11).select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, dead) == 10                    # v2
+    assert delete_keys(t, spark, dead) == 10                    # v2
     v_after_delete = len(t.snapshot()) - 1
 
-    manifest.restore_version(t, 1)                             # v3
+    restore_version(t, 1)                             # v3
     assert t.read(spark).count() == 20  # 03-02 resurrected
 
     changed = changed_dates_since(spark, t, v_after_delete)
@@ -1476,14 +1504,14 @@ def test_restore_refuses_missing_target_files(spark, table_dir):
     t = manifest.ManifestTable(table_dir)
     t.idempotent_append(spark, _valid_batch(spark, 1, 11))    # v0
     restated = _valid_batch(spark, 1, 11)
-    t.upsert(spark, restated)                                 # v1 rewrites all
+    upsert(t, spark, restated)                                 # v1 rewrites all
     v0_files = t._files(t.snapshot()[:1])
     live = set(t._files(t.snapshot()))
     dead = [f for f in v0_files if f not in live]
     assert dead  # the CoW originals v1 removed
     os.remove(dead[0])
     with pytest.raises(ValueError, match="vacuumed"):
-        manifest.restore_version(t, 0)
+        restore_version(t, 0)
 
 
 def test_multi_column_stats_prune_on_any_disjoint_column(spark, table_dir):
@@ -1513,7 +1541,8 @@ def test_multi_column_stats_prune_on_any_disjoint_column(spark, table_dir):
     live = t._files(commits)
     # meter range hits BOTH commits, but the consumption range only
     # matches the low batch -> the second column prunes the hi files
-    pruned = t._prune_by_stats(
+    pruned = _prune_by_stats(
+        t,
         live,
         commits,
         {
@@ -1528,7 +1557,7 @@ def test_multi_column_stats_prune_on_any_disjoint_column(spark, table_dir):
     assert len(pruned) < len(live)
     # end-to-end: a consumption-targeted delete stays exact
     doomed = lo.limit(10).select("reading_timestamp", "meter_id")
-    assert t.delete_keys(spark, doomed) == 10
+    assert delete_keys(t, spark, doomed) == 10
     assert t.read(spark).count() == 90
 
 
@@ -1546,14 +1575,14 @@ def test_change_feed_classifies_row_level_changes(spark, table_dir):
     restated = _valid_batch(spark, 5, 9).withColumn(
         "reading_consumption_milliwatts", F.lit(9999)
     )
-    t.upsert(spark, restated)                                    # v1
+    upsert(t, spark, restated)                                    # v1
     doomed = _valid_batch(spark, 3, 4).select(
         "reading_timestamp", "meter_id"
     )
-    t.delete_keys(spark, doomed)                                 # v2
+    delete_keys(t, spark, doomed)                                 # v2
     t.idempotent_append(spark, _valid_batch(spark, 30, 33))      # v3
 
-    feed = t.change_feed(spark, 0, 3)
+    feed = change_feed(t, spark, 0, 3)
     rows = [
         (r["meter_id"], r["_change_type"],
          r["reading_consumption_milliwatts"])
@@ -1574,13 +1603,13 @@ def test_change_feed_classifies_row_level_changes(spark, table_dir):
     assert {m for m, _, _ in rows} == {3, 30, 31, 32, 5, 6, 7, 8}
 
     # full-history feed from empty: everything an insert
-    full = t.change_feed(spark, -1, 0)
+    full = change_feed(t, spark, -1, 0)
     assert (
         full.filter(full._change_type != "insert").count() == 0
         and full.count() == 20
     )
     # identical snapshots: no feed
-    assert t.change_feed(spark, 3, 3) is None
+    assert change_feed(t, spark, 3, 3) is None
 
 
 def test_change_feed_spans_schema_evolution(spark, table_dir):
@@ -1593,9 +1622,9 @@ def test_change_feed_spans_schema_evolution(spark, table_dir):
     evolved = _valid_batch(spark, 5, 8).withColumn(
         "correction_source", F.lit("manual")
     )
-    t.upsert(spark, evolved)                                     # v1
+    upsert(t, spark, evolved)                                     # v1
 
-    feed = t.change_feed(spark, 0, 1)
+    feed = change_feed(t, spark, 0, 1)
     rows = {
         (r["meter_id"], r["_change_type"]): r["correction_source"]
         for r in feed.collect()
@@ -1635,14 +1664,16 @@ def test_check_constraints_gate_every_write_path(spark, table_dir):
     assert len(t.snapshot()) == 1  # nothing committed
 
     with pytest.raises(ValueError, match="CHECK"):
-        t.upsert(
+        upsert(
+            t,
             spark,
             good.withColumn("status", F.lit("BOGUS")),
         )
     assert t.read(spark).count() == 10
 
     # clean upsert passes the gate
-    res = t.upsert(
+    res = upsert(
+        t,
         spark,
         _valid_batch(spark, 5, 8).withColumn(
             "reading_consumption_milliwatts", F.lit(7)
@@ -1685,7 +1716,7 @@ def test_deterministic_append_lands_between_restore_validate_and_publish(
             )
 
     t._pre_publish_hook = land_competitor
-    res = manifest.restore_version(t, 0)
+    res = restore_version(t, 0)
     t._pre_publish_hook = None
     assert res["restored_version"] == 0
     assert fired["n"] == 2  # first publish lost, retry won
@@ -1693,7 +1724,7 @@ def test_deterministic_append_lands_between_restore_validate_and_publish(
     assert meters == list(range(1, 11))  # v1 AND the raced append gone
     # the raced append still time-travels (history preserved)
     n_commits = len(t.snapshot())
-    assert t.read(spark, version=n_commits - 2).count() == 26
+    assert read_as_of(t, spark, version=n_commits - 2).count() == 26
 
 
 def test_timestamp_asof_resolution(spark, table_dir):
@@ -1710,20 +1741,20 @@ def test_timestamp_asof_resolution(spark, table_dir):
     snaps = t.snapshot()
     stamps = [c["committed_at"] for c in snaps]
     assert stamps == sorted(stamps)
-    assert t.version_asof(stamps[0]) == 0
-    assert t.version_asof(stamps[1]) == 1
-    assert t.version_asof(stamps[2] + 1e6) == 2
-    assert t.read(spark, asof=stamps[1]).count() == 20
+    assert version_asof(t, stamps[0]) == 0
+    assert version_asof(t, stamps[1]) == 1
+    assert version_asof(t, stamps[2] + 1e6) == 2
+    assert read_as_of(t, spark, asof=stamps[1]).count() == 20
     with pytest.raises(ValueError):
-        t.version_asof(stamps[0] - 3600.0)
+        version_asof(t, stamps[0] - 3600.0)
     with pytest.raises(ValueError):
-        t.read(spark, version=1, asof=stamps[1])
+        read_as_of(t, spark, version=1, asof=stamps[1])
     # compaction: merged base inherits the last merged stamp
     manifest.compact_log(t, keep_last=1)
     snaps2 = t.snapshot()
     assert snaps2[0]["committed_at"] == stamps[1]
-    assert t.version_asof(stamps[1]) == 0
-    assert t.read(spark, asof=stamps[2]).count() == 30
+    assert version_asof(t, stamps[1]) == 0
+    assert read_as_of(t, spark, asof=stamps[2]).count() == 30
 
 
 # -- shallow clone ----------------------------------------------------------
@@ -1734,7 +1765,7 @@ def test_shallow_clone_reads_source_without_copy(spark, tmp_path):
     src.idempotent_append(spark, _valid_batch(spark, 0, 40))
     src.idempotent_append(spark, _valid_batch(spark, 40, 60))
 
-    clone = manifest.shallow_clone(src, str(tmp_path / "clone"))
+    clone = shallow_clone(src, str(tmp_path / "clone"))
     got = {r["meter_id"] for r in clone.read(spark).collect()}
     assert got == set(range(60))
     # zero data files copied — the clone's data dir holds nothing
@@ -1751,13 +1782,13 @@ def test_shallow_clone_reads_source_without_copy(spark, tmp_path):
 def test_shallow_clone_diverges_in_isolation(spark, tmp_path):
     src = manifest.ManifestTable(str(tmp_path / "src"))
     src.idempotent_append(spark, _valid_batch(spark, 0, 50))
-    clone = manifest.shallow_clone(src, str(tmp_path / "clone"))
+    clone = shallow_clone(src, str(tmp_path / "clone"))
 
     # mutate the CLONE: delete + append must not touch the source
     doomed = (
         clone.read(spark).filter("meter_id < 10").select(*manifest.PK)
     )
-    clone.delete_keys(spark, doomed)
+    delete_keys(clone, spark, doomed)
     clone.idempotent_append(spark, _valid_batch(spark, 100, 110))
     assert {r["meter_id"] for r in clone.read(spark).collect()} == (
         set(range(10, 50)) | set(range(100, 110))
@@ -1771,7 +1802,7 @@ def test_shallow_clone_diverges_in_isolation(spark, tmp_path):
     )
 
     # the clone's vacuum never deletes source bytes
-    removed = manifest.vacuum_unreferenced(clone, ttl_s=0.0)
+    removed = vacuum_unreferenced(clone, ttl_s=0.0)
     assert {r["meter_id"] for r in src.read(spark).collect()} == set(
         range(70)
     )
@@ -1781,8 +1812,8 @@ def test_shallow_clone_materializes_via_optimize(spark, tmp_path):
     src = manifest.ManifestTable(str(tmp_path / "src"))
     for lo, hi in ((0, 20), (20, 40), (40, 60)):
         src.idempotent_append(spark, _valid_batch(spark, lo, hi))
-    clone = manifest.shallow_clone(src, str(tmp_path / "clone"))
-    manifest.optimize_table(clone, spark)
+    clone = shallow_clone(src, str(tmp_path / "clone"))
+    optimize_table(clone, spark)
     # all live files are now LOCAL to the clone
     live = clone._files(clone.snapshot())
     for p in live:
@@ -1799,12 +1830,12 @@ def test_shallow_clone_refuses_nonempty_target_and_empty_source(
 ):
     src = manifest.ManifestTable(str(tmp_path / "src"))
     with pytest.raises(ValueError, match="empty table"):
-        manifest.shallow_clone(src, str(tmp_path / "c0"))
+        shallow_clone(src, str(tmp_path / "c0"))
     src.idempotent_append(spark, _valid_batch(spark, 0, 10))
     tgt = manifest.ManifestTable(str(tmp_path / "c1"))
     tgt.idempotent_append(spark, _valid_batch(spark, 0, 5))
     with pytest.raises(ValueError, match="not empty"):
-        manifest.shallow_clone(src, str(tmp_path / "c1"))
+        shallow_clone(src, str(tmp_path / "c1"))
 
 
 def test_upsert_never_prunes_by_non_pk_stats_or_bloom(spark, tmp_path):
@@ -1847,7 +1878,7 @@ def test_upsert_never_prunes_by_non_pk_stats_or_bloom(spark, tmp_path):
             ).repartition(1),
         )
         # restate a low-v row with a v far outside its file's range
-        res = t.upsert(spark, mk([(base, 0, 5000)]))
+        res = upsert(t, spark, mk([(base, 0, 5000)]))
         assert res == {"updated": 1, "inserted": 0}, kwargs
         df = t.read(spark)
         assert df.count() == 10, kwargs
@@ -1932,16 +1963,16 @@ def test_timestamp_stats_prune_time_sliced_mutations(spark, tmp_path):
             dt2.datetime(2024, 3, 1, 11, 5),
         ),
     }
-    assert len(t_ts._prune_by_stats(files, commits, ranges)) == 1
+    assert len(_prune_by_stats(t_ts, files, commits, ranges)) == 1
     # meter-only ranges keep both files (identical meter spans)
     assert (
-        len(t_ts._prune_by_stats(files, commits, {"meter_id": (1, 5)}))
+        len(_prune_by_stats(t_ts, files, commits, {"meter_id": (1, 5)}))
         == 2
     )
 
     # end to end: the time-sliced delete is correct and exact
     doomed = mk(11, 1, 6).select("reading_timestamp", "meter_id")
-    assert t_ts.delete_keys(spark, doomed) == 5
+    assert delete_keys(t_ts, spark, doomed) == 5
     assert len(t_ts.snapshot()[-1]["removed"]) == 1
     assert t_ts.read(spark).count() == 35
 
@@ -1981,7 +2012,7 @@ def test_batch_key_ranges_timestamp_is_tz_independent(spark):
     )
 
     def ranges():
-        return manifest.ManifestTable._batch_key_ranges(
+        return _batch_key_ranges(
             keys, ["reading_timestamp", "meter_id"]
         )
 
@@ -2034,9 +2065,9 @@ def test_read_where_skips_files_and_matches_filter(spark, tmp_path):
     result must equal the unpruned filter row-for-row. Timestamp
     ranges prune through the epoch-micros stats the same way."""
     t = _skip_table(spark, tmp_path, ["meter_id", "reading_timestamp"])
-    rep = t.skipping_report({"meter_id": (25, 44)})
+    rep = skipping_report(t, {"meter_id": (25, 44)})
     assert rep == {"files_live": 16, "files_read": 3, "files_skipped": 13}
-    got = t.read(spark, where={"meter_id": (25, 44)})
+    got = read_where(t, spark, where={"meter_id": (25, 44)})
     want = t.read(spark).filter("meter_id BETWEEN 25 AND 44")
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -2045,17 +2076,17 @@ def test_read_where_skips_files_and_matches_filter(spark, tmp_path):
     import datetime as dt
 
     lo, hi = dt.datetime(2024, 3, 1, 3), dt.datetime(2024, 3, 1, 5, 59)
-    rep_ts = t.skipping_report({"reading_timestamp": (lo, hi)})
+    rep_ts = skipping_report(t, {"reading_timestamp": (lo, hi)})
     assert rep_ts["files_read"] == 3
-    assert t.read(
-        spark, where={"reading_timestamp": (lo, hi)}
+    assert read_where(
+        t, spark, where={"reading_timestamp": (lo, hi)}
     ).count() == 30
     # open-ended bound still prunes on its bounded side
-    rep_open = t.skipping_report({"meter_id": (140, None)})
+    rep_open = skipping_report(t, {"meter_id": (140, None)})
     assert rep_open["files_read"] == 2
-    assert t.read(spark, where={"meter_id": (140, None)}).count() == 20
+    assert read_where(t, spark, where={"meter_id": (140, None)}).count() == 20
     # pruned-to-empty returns an EMPTY frame, not None
-    empty = t.read(spark, where={"meter_id": (10_000, 20_000)})
+    empty = read_where(t, spark, where={"meter_id": (10_000, 20_000)})
     assert empty is not None and empty.count() == 0
     assert set(empty.columns) == {
         "reading_timestamp",
@@ -2071,13 +2102,14 @@ def test_read_where_non_stats_column_filters_but_keeps_all_files(spark, tmp_path
     optimization, never the correctness filter)."""
     t = _skip_table(spark, tmp_path, ["meter_id"])
     # v has no stats records: zero pruning, still filtered
-    rep = t.skipping_report({"v": (3, 3)})
+    rep = skipping_report(t, {"v": (3, 3)})
     assert rep["files_read"] == rep["files_live"] == 16
-    assert t.read(spark, where={"v": (3, 3)}).count() == 10
+    assert read_where(t, spark, where={"v": (3, 3)}).count() == 10
     # combined: the stats column prunes, the stats-free one filters
-    got = t.read(spark, where={"meter_id": (25, 44), "v": (3, 3)})
+    got = read_where(t, spark, where={"meter_id": (25, 44), "v": (3, 3)})
     assert got.count() == 10
-    assert t.skipping_report(
+    assert skipping_report(
+        t,
         {"meter_id": (25, 44), "v": (3, 3)}
     )["files_read"] == 3
 
@@ -2097,10 +2129,10 @@ def test_cow_mutations_on_dateless_tables(spark, tmp_path):
     )
     t.idempotent_append(spark, df, pk=["k"])
     up = df.filter("k < 10").withColumn("v", F.col("v") + 1000)
-    t.upsert(spark, up, pk=["k"])
+    upsert(t, spark, up, pk=["k"])
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got[0] == 1000 and got[50] == 100 and len(got) == 100
-    rep = manifest.delete_where(t, spark, "k", lo=90)
+    rep = delete_where(t, spark, "k", lo=90)
     assert rep["rows_deleted"] == 10
     assert t.read(spark).count() == 90
 
@@ -2132,27 +2164,27 @@ def test_string_zone_maps_prune_and_stay_exact(spark, tmp_path):
         spark, df, pk=["meter_id"], cluster_by=["code"],
         cluster_partitions=8,
     )
-    rep = t.skipping_report(where_in={"code": ["AC00017", "AC00091"]})
+    rep = skipping_report(t, where_in={"code": ["AC00017", "AC00091"]})
     assert rep["files_live"] == 8
     assert rep["files_read"] < 8
-    got = t.read(spark, where_in={"code": ["AC00017", "AC00091"]})
+    got = read_where(t, spark, where_in={"code": ["AC00017", "AC00091"]})
     assert sorted(r.code for r in got.collect()) == [
         "AC00017", "AC00091",
     ]
     # string RANGE predicate prunes too, result equals plain filter
-    rng = t.read(spark, where={"code": ("AC00700", "AC00710")})
+    rng = read_where(t, spark, where={"code": ("AC00700", "AC00710")})
     assert rng.count() == 11
-    rep2 = t.skipping_report(where={"code": ("AC00700", "AC00710")})
+    rep2 = skipping_report(t, where={"code": ("AC00700", "AC00710")})
     assert 0 < rep2["files_read"] < 8
     # open-ended string bound: numeric sentinel is type-incompatible
     # with the string record — no pruning, correct rows, no raise
-    half = t.read(spark, where={"code": ("AC00400", None)})
+    half = read_where(t, spark, where={"code": ("AC00400", None)})
     assert half.count() == 400
     # delete_where on string bounds: clean error, not a TypeError
     with pytest.raises(ValueError, match="delete_where bounds"):
-        manifest.delete_where(t, spark, "code", lo="AC00100")
+        delete_where(t, spark, "code", lo="AC00100")
     # numeric retention on a table CARRYING string stats still works
-    rep3 = manifest.delete_where(t, spark, "meter_id", hi=99)
+    rep3 = delete_where(t, spark, "meter_id", hi=99)
     assert rep3["rows_deleted"] == 100
     assert t.read(spark).count() == 700
 
@@ -2179,29 +2211,30 @@ def test_read_where_in_bloom_point_lookup(spark, tmp_path):
         ).repartition(1)
         t.idempotent_append(spark, df)
     # zone maps: overlapping ranges keep all 8 files
-    assert t.skipping_report(where={"meter_id": (3, 30)})[
+    assert skipping_report(t, where={"meter_id": (3, 30)})[
         "files_read"
     ] == 8
     # blooms: {3, 30} lives in shards 3 and 6 only
-    rep = t.skipping_report(where_in={"meter_id": [3, 30]})
+    rep = skipping_report(t, where_in={"meter_id": [3, 30]})
     assert rep == {"files_live": 8, "files_read": 2, "files_skipped": 6}
-    got = t.read(spark, where_in={"meter_id": [3, 30]})
+    got = read_where(t, spark, where_in={"meter_id": [3, 30]})
     want = t.read(spark).filter("meter_id IN (3, 30)")
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
     # combined range + point set composes; empty IN-list reads nothing
-    both = t.read(
+    both = read_where(
+        t,
         spark,
         where={"reading_timestamp": (dt.datetime(2024, 3, 1), None)},
         where_in={"meter_id": [3]},
     )
     assert both.count() == 1
-    assert t.read(spark, where_in={"meter_id": []}).count() == 0
+    assert read_where(t, spark, where_in={"meter_id": []}).count() == 0
     # a value absent everywhere: blooms prune every file, empty frame
-    rep_none = t.skipping_report(where_in={"meter_id": [10_000]})
+    rep_none = skipping_report(t, where_in={"meter_id": [10_000]})
     assert rep_none["files_read"] == 0
-    assert t.read(spark, where_in={"meter_id": [10_000]}).count() == 0
+    assert read_where(t, spark, where_in={"meter_id": [10_000]}).count() == 0
 
 
 @pytest.mark.slow
@@ -2227,7 +2260,7 @@ def test_delete_where_drops_whole_files_metadata_only(spark, tmp_path):
     live_before = set(t._files(t.snapshot()))
     # delete everything before 03:15 — hours 0-2 fully covered,
     # hour 3 straddles, hours 4-7 disjoint
-    res = manifest.delete_where(
+    res = delete_where(
         t,
         spark,
         "reading_timestamp",
@@ -2247,10 +2280,10 @@ def test_delete_where_drops_whole_files_metadata_only(spark, tmp_path):
     live_after = set(t._files(t.snapshot()))
     assert len(live_before & live_after) == 4
     # time travel still sees the pre-delete rows
-    assert t.read(spark, version=7).count() == 240
+    assert read_as_of(t, spark, version=7).count() == 240
     # no-op delete commits nothing
     n_commits = len(t.snapshot())
-    assert manifest.delete_where(
+    assert delete_where(
         t, spark, "meter_id", lo=10_000
     ) == {"files_dropped": 0, "files_rewritten": 0, "rows_deleted": 0}
     assert len(t.snapshot()) == n_commits
@@ -2294,7 +2327,7 @@ def test_delete_where_stats_first_zero_driver_footer_io(
         )
 
     monkeypatch.setattr(pq, "read_metadata", boom)
-    res = manifest.delete_where(
+    res = delete_where(
         t,
         spark,
         "reading_timestamp",
@@ -2344,7 +2377,7 @@ def test_delete_where_statless_column_falls_back_distributed(
         )
 
     monkeypatch.setattr(pq, "read_metadata", guarded)
-    res = manifest.delete_where(t, spark, "v", hi=99)
+    res = delete_where(t, spark, "v", hi=99)
     monkeypatch.setattr(pq, "read_metadata", real)
     # file k=0 (v 0..9) drops whole; k=1 (100..109), k=2 disjoint
     assert res == {
@@ -2374,7 +2407,7 @@ def test_delete_where_missing_live_file_fails_fast(spark, tmp_path):
     victim = t._files(t.snapshot())[0]
     os.unlink(victim)
     with pytest.raises(FileNotFoundError, match="live file missing"):
-        manifest.delete_where(t, spark, "meter_id", hi=100)
+        delete_where(t, spark, "meter_id", hi=100)
 
 
 def test_delete_where_null_rows_survive(spark, tmp_path):
@@ -2395,7 +2428,7 @@ def test_delete_where_null_rows_survive(spark, tmp_path):
             "reading_timestamp timestamp, meter_id bigint, v bigint",
         ).repartition(1),
     )
-    res = manifest.delete_where(t, spark, "v", lo=0, hi=1000)
+    res = delete_where(t, spark, "v", lo=0, hi=1000)
     assert res["files_dropped"] == 0 and res["files_rewritten"] == 1
     assert res["rows_deleted"] == 16
     left = t.read(spark)
@@ -2433,7 +2466,7 @@ def test_delete_where_guards_and_race(spark, tmp_path):
 
     t._pre_publish_hook = hook
     try:
-        res = manifest.delete_where(t, spark, "meter_id", lo=0, hi=9)
+        res = delete_where(t, spark, "meter_id", lo=0, hi=9)
     finally:
         t._pre_publish_hook = None
     assert res["rows_deleted"] == 10
@@ -2458,18 +2491,18 @@ def test_alter_drop_column_metadata_only(spark, tmp_path):
     t.idempotent_append(spark, df)
     v_pre = len(t.snapshot()) - 1
     files_before = set(t._files(t.snapshot()))
-    manifest.alter_drop_column(t, "v")
+    alter_drop_column(t, "v")
     # metadata-only: same data files, column gone from reads
     assert set(t._files(t.snapshot())) == files_before
     assert "v" not in t.read(spark).columns
     assert t.read(spark).count() == 20
     # time travel still sees it
-    assert "v" in t.read(spark, version=v_pre).columns
+    assert "v" in read_as_of(t, spark, version=v_pre).columns
     # guards
     with pytest.raises(ValueError, match="pk column"):
-        manifest.alter_drop_column(t, "meter_id")
+        alter_drop_column(t, "meter_id")
     with pytest.raises(ValueError, match="does not exist"):
-        manifest.alter_drop_column(t, "nope")
+        alter_drop_column(t, "nope")
     # type-changing re-add rejected; same-type re-add works
     bad = spark.createDataFrame(
         [(dt.datetime(2024, 3, 2), 100, "s")],
@@ -2490,7 +2523,7 @@ def test_alter_drop_column_metadata_only(spark, tmp_path):
     # soft delete until files rewrite)
     assert got.filter("v IS NOT NULL").count() == 21
     # drop again, compact, guard still enforced post-compaction
-    manifest.alter_drop_column(t, "v")
+    alter_drop_column(t, "v")
     assert manifest.compact_log(t, keep_last=1) > 0
     assert "v" not in t.read(spark).columns
     with pytest.raises(ValueError, match="ALTER-dropped"):
@@ -2506,16 +2539,16 @@ def test_vacuum_dry_run_lists_without_deleting(spark, tmp_path):
         "reading_timestamp timestamp, meter_id bigint, v double",
     )
     t.idempotent_append(spark, df)
-    t.upsert(spark, df.withColumn("v", df.v + 1))
-    t.upsert(spark, df.withColumn("v", df.v + 2))
+    upsert(t, spark, df.withColumn("v", df.v + 1))
+    upsert(t, spark, df.withColumn("v", df.v + 2))
     assert manifest.compact_log(t, keep_last=1) == 2
-    would = manifest.vacuum_unreferenced(t, ttl_s=0.0, dry_run=True)
+    would = vacuum_unreferenced(t, ttl_s=0.0, dry_run=True)
     assert isinstance(would, list) and len(would) >= 1
     # nothing deleted
     assert all(
         os.path.exists(os.path.join(t.data_dir, rel)) for rel in would
     )
-    swept = manifest.vacuum_unreferenced(t, ttl_s=0.0)
+    swept = vacuum_unreferenced(t, ttl_s=0.0)
     assert swept == len(would)
     assert not any(
         os.path.exists(os.path.join(t.data_dir, rel)) for rel in would
@@ -2605,8 +2638,8 @@ def test_schema_history_tracks_adds_and_drops(spark, tmp_path):
             " v double, note string",
         ),
     )
-    manifest.alter_drop_column(t, "v")
-    hist = manifest.schema_history(t)
+    alter_drop_column(t, "v")
+    hist = schema_history(t)
     assert hist == [
         {
             "version": 0,
@@ -2642,12 +2675,12 @@ def test_double_column_stats_enable_read_skipping_and_retention(
             ).repartition(1),
         )
     # zone maps on the double column: files are value-disjoint
-    rep = t.skipping_report(where={"v": (100.0, 199.0)})
+    rep = skipping_report(t, where={"v": (100.0, 199.0)})
     assert rep == {"files_live": 4, "files_read": 1, "files_skipped": 3}
-    got = t.read(spark, where={"v": (100.0, 199.0)})
+    got = read_where(t, spark, where={"v": (100.0, 199.0)})
     assert got.count() == 10
     # retention DELETE drops the fully-covered double-range file whole
-    res = manifest.delete_where(t, spark, "v", lo=0.0, hi=105.5)
+    res = delete_where(t, spark, "v", lo=0.0, hi=105.5)
     assert res == {
         "files_dropped": 1,
         "files_rewritten": 1,
@@ -2683,7 +2716,7 @@ def test_manifest_cdc_streams_evolved_schema(spark, tmp_path):
             " v double, note string",
         ),
     )
-    manifest.alter_drop_column(t, "v")
+    alter_drop_column(t, "v")
 
     sink = str(tmp_path / "sink")
     q = (
@@ -2711,9 +2744,13 @@ def test_read_skipping_survives_compaction_and_optimize(spark, tmp_path):
     files — read(where=) skips correctly before and after both."""
     import datetime as dt
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
-        compact_log,
+    from smart_meter_data_pipeline_spark.sources.manifest import compact_log
+    from smart_meter_data_pipeline_spark.sources.manifest_services import (
         optimize_table,
+    )
+    from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+        read_where,
+        skipping_report,
     )
 
     t = manifest.ManifestTable(
@@ -2732,17 +2769,17 @@ def test_read_skipping_survives_compaction_and_optimize(spark, tmp_path):
             ).repartition(1),
         )
     where = {"meter_id": (25, 44)}
-    assert t.skipping_report(where)["files_read"] == 3
+    assert skipping_report(t, where)["files_read"] == 3
     assert compact_log(t, keep_last=2) == 6
-    rep = t.skipping_report(where)
+    rep = skipping_report(t, where)
     assert rep["files_read"] == 3, rep  # stats survived the merge
-    assert t.read(spark, where=where).count() == 20
+    assert read_where(t, spark, where=where).count() == 20
     optimize_table(
         t, spark, target_partitions=4, cluster_by=["meter_id"]
     )
-    rep2 = t.skipping_report(where)
+    rep2 = skipping_report(t, where)
     assert rep2["files_live"] == 4 and rep2["files_read"] <= 2, rep2
-    assert t.read(spark, where=where).count() == 20
+    assert read_where(t, spark, where=where).count() == 20
 
 
 def test_upsert_partial_carries_forward_unspecified_columns(spark, tmp_path):
@@ -2769,8 +2806,8 @@ def test_upsert_partial_carries_forward_unspecified_columns(spark, tmp_path):
         "reading_timestamp timestamp, meter_id bigint, v double",
     )
     with pytest.raises(ValueError, match="missing table columns"):
-        t.upsert(spark, partial)
-    res = t.upsert_partial(spark, partial)
+        upsert(t, spark, partial)
+    res = upsert_partial(t, spark, partial)
     assert res == {"updated": 1, "inserted": 1}
     got = {r["meter_id"]: (r["v"], r["tag"]) for r in t.read(spark).collect()}
     assert got[3] == (999.0, "tag3")   # v updated, tag carried forward
@@ -2783,7 +2820,7 @@ def test_upsert_partial_carries_forward_unspecified_columns(spark, tmp_path):
         "reading_timestamp timestamp, meter_id bigint,"
         " v double, tag string",
     )
-    assert t.upsert_partial(spark, full) == {"updated": 1, "inserted": 0}
+    assert upsert_partial(t, spark, full) == {"updated": 1, "inserted": 0}
     assert t.read(spark).filter("meter_id = 5").collect()[0]["tag"] == "newtag"
 
 
@@ -2819,7 +2856,7 @@ def test_upsert_if_newer_drops_stale_rows(spark, tmp_path):
         ],
         "reading_timestamp timestamp, meter_id bigint, v double",
     )
-    res = t.upsert_if_newer(spark, late, "reading_timestamp", pk=pk)
+    res = upsert_if_newer(t, spark, late, "reading_timestamp", pk=pk)
     assert res == {"updated": 2, "inserted": 1, "skipped_stale": 1}
     got = {r["meter_id"]: r["v"] for r in t.read(spark).collect()}
     assert got[1] == 10.0      # stale row dropped
@@ -2847,7 +2884,8 @@ def test_upsert_timestamp_free_pk_never_date_prunes(spark, tmp_path):
         pk=pk,
     )
     # restate meter 1 onto a DIFFERENT calendar date
-    res = t.upsert(
+    res = upsert(
+        t,
         spark,
         spark.createDataFrame(
             [(dt.datetime(2024, 4, 15), 1, 6.0)],
@@ -2892,7 +2930,8 @@ def test_upsert_partial_reenriches_after_concurrent_write(spark, tmp_path):
     def hook():
         if fired["n"] == 0:
             fired["n"] = 1
-            manifest.ManifestTable(t.table_dir).upsert(
+            upsert(
+                manifest.ManifestTable(t.table_dir),
                 spark,
                 spark.createDataFrame(
                     [(ts, 7, 1.0, "concurrent")],
@@ -2903,7 +2942,7 @@ def test_upsert_partial_reenriches_after_concurrent_write(spark, tmp_path):
 
     t._pre_publish_hook = hook
     try:
-        res = t.upsert_partial(spark, partial)
+        res = upsert_partial(t, spark, partial)
     finally:
         t._pre_publish_hook = None
     assert fired["n"] == 1
@@ -2942,7 +2981,8 @@ def test_upsert_if_newer_refilters_after_concurrent_write(
     def hook():
         if fired["n"] == 0:
             fired["n"] = 1
-            manifest.ManifestTable(t.table_dir).upsert(
+            upsert(
+                manifest.ManifestTable(t.table_dir),
                 spark,
                 spark.createDataFrame(
                     [(dt.datetime(2024, 3, 9), 1, 9.0)],
@@ -2954,7 +2994,7 @@ def test_upsert_if_newer_refilters_after_concurrent_write(
 
     t._pre_publish_hook = hook
     try:
-        res = t.upsert_if_newer(spark, batch, "reading_timestamp", pk=pk)
+        res = upsert_if_newer(t, spark, batch, "reading_timestamp", pk=pk)
     finally:
         t._pre_publish_hook = None
     assert fired["n"] == 1

@@ -10,7 +10,16 @@ import datetime as dt
 from smart_meter_data_pipeline_spark.sources.manifest import (
     ManifestTable,
     compact_log,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_cow import delete_keys
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
     shallow_clone,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    _prune_by_bloom,
+    _prune_by_stats,
+    read_where,
+    skipping_report,
 )
 
 TS = dt.datetime(2024, 1, 1)
@@ -49,13 +58,13 @@ def test_blooms_recorded_and_prune_point_lookups(spark, tmp_path):
     assert all("meter_id" in b for b in blooms.values())
     files = t._files(commits)
     # stats cannot prune: every file overlaps the probe key's range
-    stats_kept = t._prune_by_stats(files, commits, {"meter_id": (4, 4)})
+    stats_kept = _prune_by_stats(t, files, commits, {"meter_id": (4, 4)})
     assert len(stats_kept) == 4
     # meter 4 = j=1, f=0 -> lives ONLY in file 0; the bloom must keep
     # exactly the file(s) whose bitmap can contain it (>=1, and with
     # 32K bits / 160 keys, false positives are overwhelmingly unlikely
     # to keep all four)
-    bloom_kept = t._prune_by_bloom(files, commits, {"meter_id": [4]})
+    bloom_kept = _prune_by_bloom(t, files, commits, {"meter_id": [4]})
     assert 1 <= len(bloom_kept) < 4
     # correctness floor: the true file is never pruned
     truth = [
@@ -65,8 +74,8 @@ def test_blooms_recorded_and_prune_point_lookups(spark, tmp_path):
     ]
     assert set(truth) <= set(bloom_kept)
     # unknown key: every bit test may fail -> possibly zero files kept
-    kept_missing = t._prune_by_bloom(
-        files, commits, {"meter_id": [10**9 + 7]}
+    kept_missing = _prune_by_bloom(
+        t, files, commits, {"meter_id": [10**9 + 7]}
     )
     assert len(kept_missing) <= 1  # at most an FP
 
@@ -77,7 +86,7 @@ def test_bloom_pruned_cow_delete_correct_and_bounded(spark, tmp_path):
     keys = t.read(spark).filter("meter_id = 4").select(
         "reading_timestamp", "meter_id"
     )
-    assert t.delete_keys(spark, keys) == 1
+    assert delete_keys(t, spark, keys) == 1
     assert t.read(spark).count() == n_before - 1
     assert t.read(spark).filter("meter_id = 4").count() == 0
     # the CoW commit rewrote exactly one file
@@ -91,12 +100,12 @@ def test_bloom_survives_compaction_and_clone(spark, tmp_path):
     assert compact_log(t, keep_last=1) > 0
     commits = t.snapshot()
     files = t._files(commits)
-    kept = t._prune_by_bloom(files, commits, {"meter_id": [4]})
+    kept = _prune_by_bloom(t, files, commits, {"meter_id": [4]})
     assert 1 <= len(kept) < 4
     clone = shallow_clone(t, str(tmp_path / "clone"))
     ccommits = clone.snapshot()
     cfiles = clone._files(ccommits)
-    ckept = clone._prune_by_bloom(cfiles, ccommits, {"meter_id": [4]})
+    ckept = _prune_by_bloom(clone, cfiles, ccommits, {"meter_id": [4]})
     assert 1 <= len(ckept) < 4
     assert clone.bloom_columns == ["meter_id"]
 
@@ -110,7 +119,7 @@ def test_bloom_off_by_default_and_optional(spark, tmp_path):
     assert c.get("blooms") == {}
     # pruning with no records keeps everything
     files = t._files(t.snapshot())
-    assert t._prune_by_bloom(files, t.snapshot(), {"meter_id": [1]}) == files
+    assert _prune_by_bloom(t, files, t.snapshot(), {"meter_id": [1]}) == files
 
 
 # ---------------------------------------------------------------------------
@@ -150,21 +159,21 @@ def test_dict_recorded_and_prunes_string_lookup(spark, tmp_path):
     assert all(r["plan"] in (["basic"], ["tou"], ["solar"]) for r in recorded.values())
     files = t._files(commits)
     # the dictionary is EXACT membership: exactly one file survives
-    kept = t._prune_by_bloom(files, commits, {"plan": ["tou"]})
+    kept = _prune_by_bloom(t, files, commits, {"plan": ["tou"]})
     assert len(kept) == 1
     # two-value lookup keeps exactly the two matching files
-    kept2 = t._prune_by_bloom(files, commits, {"plan": ["tou", "solar"]})
+    kept2 = _prune_by_bloom(t, files, commits, {"plan": ["tou", "solar"]})
     assert len(kept2) == 2
     # unknown value keeps nothing
-    assert t._prune_by_bloom(files, commits, {"plan": ["nope"]}) == []
+    assert _prune_by_bloom(t, files, commits, {"plan": ["nope"]}) == []
 
 
 @pytest.mark.slow
 def test_dict_read_equals_plain_filter(spark, tmp_path):
     t = _plan_table(spark, tmp_path)
-    rep = t.skipping_report(where_in={"plan": ["solar"]})
+    rep = skipping_report(t, where_in={"plan": ["solar"]})
     assert rep["files_skipped"] == 2 and rep["files_read"] == 1
-    pruned = t.read(spark, where_in={"plan": ["solar"]})
+    pruned = read_where(t, spark, where_in={"plan": ["solar"]})
     plain = t.read(spark).filter("plan = 'solar'")
     assert sorted(r.meter_id for r in pruned.collect()) == sorted(
         r.meter_id for r in plain.collect()
@@ -187,10 +196,10 @@ def test_dict_high_cardinality_file_records_nothing(spark, tmp_path):
     # and the unprunable read is still correct
     files = t._files(t.snapshot())
     assert (
-        t._prune_by_bloom(files, t.snapshot(), {"plan": ["plan_3"]})
+        _prune_by_bloom(t, files, t.snapshot(), {"plan": ["plan_3"]})
         == files
     )
-    assert t.read(spark, where_in={"plan": ["plan_3"]}).count() == 1
+    assert read_where(t, spark, where_in={"plan": ["plan_3"]}).count() == 1
 
 
 @pytest.mark.slow
@@ -198,11 +207,11 @@ def test_dict_survives_compaction_and_clone_and_reopen(spark, tmp_path):
     t = _plan_table(spark, tmp_path)
     assert compact_log(t, keep_last=1) > 0
     files = t._files(t.snapshot())
-    assert len(t._prune_by_bloom(files, t.snapshot(), {"plan": ["tou"]})) == 1
+    assert len(_prune_by_bloom(t, files, t.snapshot(), {"plan": ["tou"]})) == 1
     clone = shallow_clone(t, str(tmp_path / "dclone"))
     cfiles = clone._files(clone.snapshot())
     assert (
-        len(clone._prune_by_bloom(cfiles, clone.snapshot(), {"plan": ["tou"]}))
+        len(_prune_by_bloom(clone, cfiles, clone.snapshot(), {"plan": ["tou"]}))
         == 1
     )
     assert clone.dict_columns == ["plan"]
@@ -234,13 +243,13 @@ def test_dict_and_bloom_coexist_per_file(spark, tmp_path):
     files = t._files(t.snapshot())
     # int lookup rides the bitmap, string lookup rides the list —
     # together they prune to the single intersecting file (or none)
-    kept = t._prune_by_bloom(
-        files, t.snapshot(), {"meter_id": [5], "plan": ["basic"]}
+    kept = _prune_by_bloom(
+        t, files, t.snapshot(), {"meter_id": [5], "plan": ["basic"]}
     )
     assert len(kept) == 1
     assert (
-        t._prune_by_bloom(
-            files, t.snapshot(), {"meter_id": [5], "plan": ["tou"]}
+        _prune_by_bloom(
+            t, files, t.snapshot(), {"meter_id": [5], "plan": ["tou"]}
         )
         == []
     )

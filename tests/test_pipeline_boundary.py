@@ -3,8 +3,10 @@
 
 The ingest → staging → marts path must load without the query
 registry: importing it registers nothing and pulls in no ``plans``
-module, nor the table reader, catalog or index modules, and the
-modules it does load stay within a line budget. Every commit
+module, nor the table reader, catalog, index or manifest feature
+modules, and the modules it does load stay within a line budget. The
+manifest commit-log core imports none of its feature modules, and each
+feature module imports on its own. Every commit
 to a table log or the catalog chain goes through one function,
 ``manifest._publish``, the only put-if-absent caller. The registry side is checked here too: every
 name in ``registry._PRIORITY`` is registered after ``load_all()``, and
@@ -32,10 +34,19 @@ PIPELINE_MODULES = [
     "operators.meter_pipeline",
 ]
 
+# Features of the manifest table, each a module that imports the
+# commit-log core (sources/manifest.py) and is never imported by it.
+MANIFEST_FEATURE_MODULES = [
+    "sources.manifest_cow",
+    "sources.manifest_skipping",
+    "sources.manifest_timetravel",
+    "sources.manifest_services",
+]
+
 # The pipeline's closure: the lines of every package module that
 # importing PIPELINE_MODULES loads. Growing it past this bound is a
 # deliberate change: raise the bound and record why.
-CLOSURE_MAX_LINES = 4284
+CLOSURE_MAX_LINES = 2336
 CLOSURE_MAX_MODULES = 10
 
 _PROBE = """
@@ -75,9 +86,14 @@ def test_pipeline_imports_load_no_registry():
     plans = [n for n in loaded if n.startswith("smart_meter_data_pipeline_spark.plans")]
     assert plans == []
     assert "smart_meter_data_pipeline_spark.operators.meter_queries" not in loaded
-    # the two sinks need neither the batch table reader nor the catalog
-    # and index machinery that sits on top of the manifest table
-    for module in ("sources.readers", "sources.catalog", "sources.index"):
+    # the two sinks need neither the batch table reader nor the catalog,
+    # index and feature machinery that sits on top of the manifest table
+    for module in (
+        "sources.readers",
+        "sources.catalog",
+        "sources.index",
+        *MANIFEST_FEATURE_MODULES,
+    ):
         assert f"smart_meter_data_pipeline_spark.{module}" not in loaded
 
 
@@ -85,6 +101,70 @@ def test_pipeline_closure_line_budget():
     lines = _closure()
     assert len(lines) <= CLOSURE_MAX_MODULES, sorted(lines)
     assert sum(lines.values()) <= CLOSURE_MAX_LINES, lines
+
+
+def _package_imports(path: str, top_level_only: bool = False) -> set[str]:
+    """The package modules ``path`` imports, relative to the package
+    (``sources.txn``), lazy imports inside functions included unless
+    ``top_level_only``."""
+    package = "smart_meter_data_pipeline_spark"
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    nodes = tree.body if top_level_only else ast.walk(tree)
+    out = set()
+    for node in nodes:
+        if isinstance(node, ast.ImportFrom) and node.module:
+            if node.module == f"{package}.sources":
+                out |= {f"sources.{a.name}" for a in node.names}
+            elif node.module.startswith(f"{package}."):
+                out.add(node.module[len(package) + 1 :])
+        elif isinstance(node, ast.Import):
+            out |= {
+                a.name[len(package) + 1 :]
+                for a in node.names
+                if a.name.startswith(f"{package}.")
+            }
+    return out
+
+
+def _module_path(module: str) -> str:
+    return os.path.join(
+        ROOT, "smart_meter_data_pipeline_spark", *module.split(".")
+    ) + ".py"
+
+
+def test_manifest_core_imports_no_feature_module():
+    """The commit-log core imports, even lazily, only the flock helper
+    and the constraint checks' expectation shapes."""
+    imported = _package_imports(_module_path("sources.manifest"))
+    assert imported <= {"sources.txn", "operators.expectations"}
+
+
+def test_manifest_feature_modules_import_alone_without_cycles():
+    """Each feature module imports in a fresh interpreter, and the
+    module-level imports reachable from it form no cycle."""
+    for module in MANIFEST_FEATURE_MODULES:
+        subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                f"import smart_meter_data_pipeline_spark.{module}",
+            ],
+            cwd=ROOT,
+            env={**os.environ, "PYTHONPATH": ROOT},
+            check=True,
+            timeout=300,
+        )
+
+        def visit(mod: str, stack: tuple) -> None:
+            assert mod not in stack, f"import cycle {stack + (mod,)}"
+            path = _module_path(mod)
+            if not os.path.exists(path):  # a package __init__
+                return
+            for dep in _package_imports(path, top_level_only=True):
+                visit(dep, stack + (mod,))
+
+        visit(module, ())
 
 
 def _put_callers_and_commit_dicts() -> tuple[set, set]:

@@ -17,6 +17,10 @@ from pyspark.sql import functions as F
 
 from smart_meter_data_pipeline_spark.operators.common import dsum, guarded_pct
 from smart_meter_data_pipeline_spark.operators.meter_pipeline import _M31, _u
+from smart_meter_data_pipeline_spark.sources.manifest_cow import delete_where
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    read_where,
+)
 
 _SETTINGS = dict(
     max_examples=5,
@@ -420,7 +424,7 @@ def test_delete_where_equals_filter_property(
         ).repartition(1)
         t.idempotent_append(spark, df)
 
-    res = manifest.delete_where(t, spark, "v", lo=lo, hi=hi)
+    res = delete_where(t, spark, "v", lo=lo, hi=hi)
     want = [
         r for r in rows if r[2] is None or not (lo <= r[2] <= hi)
     ]
@@ -488,11 +492,11 @@ def test_read_where_equals_filter_property(
         )
     if use_in:
         in_set = list(range(lo, min(hi, lo + 5) + 1))
-        got = t.read(spark, where_in={"meter_id": in_set})
+        got = read_where(t, spark, where_in={"meter_id": in_set})
         want = [r for r in rows if r[1] in set(in_set)]
     else:
-        got = t.read(
-            spark, where={"meter_id": (lo, hi), "v": (lo, None)}
+        got = read_where(
+            t, spark, where={"meter_id": (lo, hi), "v": (lo, None)}
         )
         want = [
             r

@@ -14,6 +14,14 @@ from smart_meter_data_pipeline_spark.sources.index import (
     refresh_index,
 )
 from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+from smart_meter_data_pipeline_spark.sources.manifest_cow import upsert
+from smart_meter_data_pipeline_spark.sources.manifest_skipping import (
+    read_where,
+    skipping_report,
+)
+from smart_meter_data_pipeline_spark.sources.manifest_timetravel import (
+    read_as_of,
+)
 
 TS = dt.datetime(2024, 1, 1)
 
@@ -82,7 +90,7 @@ def test_index_survives_cow_rewrite(spark, tmp_path):
     up = t.read(spark).filter("meter_id = 17").withColumn(
         "v", F.col("v") + 1_000_000
     )
-    t.upsert(spark, up)
+    upsert(t, spark, up)
     out, rep = index_point_read(t, spark, "meter_id", [17])
     assert rep["files_unindexed"] > 0
     rows = out.collect()
@@ -215,12 +223,12 @@ def test_plain_read_where_in_consults_posting_index(spark, tmp_path):
     n_live = len(t._files(t.snapshot()))
     refresh_index(t, spark, "account_code")
     probe = ["AC00017", "AC00091"]
-    got = t.read(spark, where_in={"account_code": probe})
+    got = read_where(t, spark, where_in={"account_code": probe})
     assert len(got.inputFiles()) < n_live
     # observability: the spark-armed skipping report sees the same
     # posting-pruned candidate count the read actually opened
-    rep = t.skipping_report(
-        where_in={"account_code": probe}, spark=spark
+    rep = skipping_report(
+        t, where_in={"account_code": probe}, spark=spark
     )
     assert rep["files_read"] == len(got.inputFiles())
     assert rep["files_live"] == n_live
@@ -229,7 +237,7 @@ def test_plain_read_where_in_consults_posting_index(spark, tmp_path):
         map(tuple, want.collect())
     )
     # time travel ignores the index: full candidate set
-    tt = t.read(spark, version=0, where_in={"account_code": probe})
+    tt = read_as_of(t, spark, version=0, where_in={"account_code": probe})
     assert len(tt.inputFiles()) == n_live
     assert tt.count() == got.count()
 
@@ -250,7 +258,7 @@ def test_vacuum_index_drops_stale_postings(spark, tmp_path):
     up = t.read(spark).filter("meter_id = 17").withColumn(
         "v", F.col("v") + 1_000_000
     )
-    t.upsert(spark, up)
+    upsert(t, spark, up)
     refresh_index(t, spark, "meter_id")
     rep = vacuum_index(t, spark, "meter_id")
     assert rep["postings_removed"] > 0
@@ -345,7 +353,7 @@ def test_text_index_modes_skipping_staleness(spark, tmp_path):
     up = t.read(spark).filter("doc_id < 10").withColumn(
         "text", F.lit("alpha beta needle edited")
     )
-    t.upsert(spark, up, pk=["doc_id"])
+    upsert(t, spark, up, pk=["doc_id"])
     refresh_text_index(t, spark, "text")
     gc = vacuum_index(t, spark, "text", index_name="text__tokens")
     assert gc["postings_removed"] > 0
@@ -596,7 +604,7 @@ def test_maintain_index_composition(spark, tmp_path):
     up = t.read(spark).filter("meter_id = 17").withColumn(
         "v", F.col("v") + 1
     )
-    t.upsert(spark, up)
+    upsert(t, spark, up)
     r3 = maintain_index(
         spark=spark, table=t, column="meter_id",
         posting_partitions=4, max_posting_files=8,
@@ -633,7 +641,7 @@ def test_bare_vacuum_guards_older_snapshots(spark, tmp_path):
     up = t.read(spark).filter("meter_id = 17").withColumn(
         "v", F.col("v") + 1
     )
-    t.upsert(spark, up)
+    upsert(t, spark, up)
     # ...and a bare vacuum (no refresh!) GCs their postings
     rep = vacuum_index(t, spark, "meter_id")
     assert rep["postings_removed"] > 0
@@ -664,7 +672,7 @@ def test_maintain_index_vacuums_after_metadata_only_retention(
     from smart_meter_data_pipeline_spark.sources.index import (
         maintain_index,
     )
-    from smart_meter_data_pipeline_spark.sources.manifest import (
+    from smart_meter_data_pipeline_spark.sources.manifest_cow import (
         delete_where,
     )
 

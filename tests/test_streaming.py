@@ -661,6 +661,67 @@ def test_stream_stamps_one_arrived_at_per_micro_batch(spark, tmp_path, sink):
     assert stamps[False] != stamps[True]
 
 
+@pytest.mark.parametrize("sink", ["lock", "manifest"])
+def test_stream_conflicting_payloads_for_one_key_land_once(
+    spark, tmp_path, sink
+):
+    """One micro-batch holds two different payloads for one
+    (reading_timestamp, meter_id) key. Exactly one row lands for the
+    key, carrying one of the two payloads (which one is unspecified);
+    a later micro-batch redelivering either payload lands nothing. On
+    the manifest sink the commits' row counts sum to the distinct
+    keys."""
+    import json
+
+    from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+
+    src = tmp_path / "msgs"
+    target = str(tmp_path / "fact")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(src)
+
+    def message(meter: int, consumption: int) -> str:
+        return json.dumps(
+            {
+                "meter_id": meter,
+                "reading_timestamp": "2024-01-01T00:15:00",
+                "reading_consumption_milliwatts": consumption,
+                "status": "V",
+            }
+        )
+
+    payloads = (1000, 2000)  # meter 1's two payloads for one key
+    lines = [message(1, payloads[0])]
+    lines += [message(m, 10 * m) for m in range(2, 6)]
+    lines += [message(1, payloads[1])]
+    (src / "f0.txt").write_text("\n".join(lines) + "\n")
+
+    def drain():
+        start_ingest_stream(
+            spark, str(src / "*.txt"), target, ckpt, sink=sink
+        ).awaitTermination()
+        fact = (
+            ManifestTable(target).read(spark)
+            if sink == "manifest"
+            else spark.read.parquet(target)
+        )
+        keys = fact.select("reading_timestamp", "meter_id").distinct().count()
+        landed = [
+            r["reading_consumption_milliwatts"]
+            for r in fact.filter(F.col("meter_id") == 1).collect()
+        ]
+        return fact.count(), keys, landed
+
+    n_rows, n_keys, landed = drain()
+    assert n_rows == n_keys == 5
+    assert len(landed) == 1 and landed[0] in payloads
+    for i, consumption in enumerate(payloads):
+        (src / f"redelivery{i}.txt").write_text(message(1, consumption) + "\n")
+        assert drain() == (5, 5, landed)
+    if sink == "manifest":
+        assert sum(c["count"] for c in ManifestTable(target).snapshot()) == 5
+
+
 def test_stream_rejects_unknown_sink(spark, tmp_path):
     """A mistyped sink fails before any query starts, instead of
     falling through to the lock sink."""

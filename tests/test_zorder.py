@@ -8,8 +8,8 @@ import pytest
 
 import datetime as dt
 
-from smart_meter_data_pipeline_spark.sources.manifest import (
-    ManifestTable,
+from smart_meter_data_pipeline_spark.sources.manifest import ManifestTable
+from smart_meter_data_pipeline_spark.sources.manifest_services import (
     optimize_table,
 )
 
@@ -151,7 +151,7 @@ def test_hilbert_key_matches_reference_xy2d(spark):
     transform exactly (bijective, unit-step-adjacent curve)."""
     import random
 
-    from smart_meter_data_pipeline_spark.sources.manifest import (
+    from smart_meter_data_pipeline_spark.sources.manifest_services import (
         Z_BITS,
         _hilbert_column,
     )
