@@ -13,12 +13,14 @@ the reference's assorted entry points (producer loop, consumer loop,
     python -m smart_meter_data_pipeline_spark restore <table_dir> <version>
     python -m smart_meter_data_pipeline_spark asof <table_dir> <unix_ts>
     python -m smart_meter_data_pipeline_spark clone <table_dir> <target_dir>
+    python -m smart_meter_data_pipeline_spark cds-archive
 
 ``run`` executes any registered query (the full SURVEY §2 + LLM-ops
 registry); ``marts`` is the ``dbt run`` twin (rebuild staging + both
 marts); ``test`` is the ``dbt test`` twin (the declared data-quality
 gates, non-zero exit on failure — reference: dbt schema tests,
-SURVEY.md §5).
+SURVEY.md §5). ``cds-archive`` builds the driver JVM's class-data-sharing
+archive now instead of at the first ``get_spark`` (see ``session``).
 """
 
 from __future__ import annotations
@@ -137,11 +139,33 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     clone.add_argument("table_dir", help="source ManifestTable directory")
     clone.add_argument("target_dir", help="empty clone target directory")
+
+    sub.add_parser(
+        "cds-archive",
+        help="build the driver JVM's class-data-sharing archive if it is "
+        "missing, failed or incomplete; prints its path and size",
+    )
     return p
 
 
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
+
+    if args.cmd == "cds-archive":
+        import os
+
+        from smart_meter_data_pipeline_spark.cds_build import build_cds_archive
+
+        found = build_cds_archive(retry=True)
+        if found is None:
+            print(
+                "no archive: the build failed (see its .log) or this JDK, "
+                "Spark conf dir or cache cannot use one",
+                file=sys.stderr,
+            )
+            return 1
+        print(json.dumps({"archive": found[0], "bytes": os.path.getsize(found[0])}))
+        return 0
 
     from smart_meter_data_pipeline_spark.plans import registry
 

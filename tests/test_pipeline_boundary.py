@@ -45,8 +45,10 @@ MANIFEST_FEATURE_MODULES = [
 
 # The pipeline's closure: the lines of every package module that
 # importing PIPELINE_MODULES loads. Growing it past this bound is a
-# deliberate change: raise the bound and record why.
-CLOSURE_MAX_LINES = 2336
+# deliberate change: raise the bound and record why. Raised by the 126
+# lines session.py gained to start the driver JVM from a class-data-
+# sharing archive (the archive's build lives in cds_build, outside).
+CLOSURE_MAX_LINES = 2462
 CLOSURE_MAX_MODULES = 10
 
 _PROBE = """
@@ -87,8 +89,10 @@ def test_pipeline_imports_load_no_registry():
     assert plans == []
     assert "smart_meter_data_pipeline_spark.operators.meter_queries" not in loaded
     # the two sinks need neither the batch table reader nor the catalog,
-    # index and feature machinery that sits on top of the manifest table
+    # index and feature machinery that sits on top of the manifest table;
+    # the session loads the archive builder only to build an archive
     for module in (
+        "cds_build",
         "sources.readers",
         "sources.catalog",
         "sources.index",
